@@ -198,12 +198,13 @@ def winnowing_fingerprints(
     # least() over w unrolled element_at lookups == array_min(slice):
     # both are the lexicographic min of the same non-null strings, and
     # the unroll skips a fresh w-element array allocation per window
-    # (the word_shingles element_at rationale; interpreted HOF lambda)
-    fps = F.transform(
-        win_idx,
-        lambda j: F.least(*[F.element_at(hashes, j + k) for k in range(w)]),
-    )
-    return F.array_distinct(fps)
+    # (the word_shingles element_at rationale; interpreted HOF lambda).
+    # least() needs two or more arguments, so w == 1 is a plain lookup.
+    def window_min(j: Column) -> Column:
+        picks = [F.element_at(hashes, j + off) for off in range(w)]
+        return picks[0] if w == 1 else F.least(*picks)
+
+    return F.array_distinct(F.transform(win_idx, window_min))
 
 
 def winnowing_fingerprint_rows(

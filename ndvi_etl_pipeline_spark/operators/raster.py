@@ -16,12 +16,14 @@ Payload encoding: row-major float32, little-endian, NaN = "cell
 absent/nodata". BinaryType keeps the bytes opaque to Catalyst (no
 per-pixel serialization cost through shuffles).
 
-GeoTIFF: `write_geotiff`/`read_geotiff` implement a minimal but REAL
-single-band float32 GeoTIFF (striped, uncompressed, ModelPixelScale +
-ModelTiepoint + GeoKey EPSG + GDAL nodata tags) in pure Python, so
-the K1 sink works in this container; when rasterio is installed the
-same entry points delegate to it (deflate + overviews like
-compute_ndvi.py:73-88).
+GeoTIFF: `write_geotiff`/`read_geotiff`/`decode_geotiff_bytes` are
+thin entry points into the engine's one pure-Python TIFF codec
+(operators/tiff.py). `write_geotiff` writes a single-band float32
+GeoTIFF (striped, uncompressed, ModelPixelScale + ModelTiepoint +
+GeoKey EPSG + GDAL nodata tags); the K1 product sinks write the
+reference's tiled/deflate/predictor-3 profile (`REFERENCE_PROFILE`,
+compute_ndvi.py:73-88); the readers take any layout the codec
+decodes.
 
 Reference parity: decode/encode = S4/K1 (compute_ndvi.py:38-44,73-88,
 load_to_postgis.py:189-192); the NDVI tile kernel = P1-P6
@@ -30,7 +32,6 @@ load_to_postgis.py:189-192); the NDVI tile kernel = P1-P6
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -39,12 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:  # optional fast path; not present in this container
-    import rasterio  # type: ignore
-
-    HAVE_RASTERIO = True
-except ImportError:
-    HAVE_RASTERIO = False
+from . import tiff as TF
 
 DEFAULT_TILE = 256
 NODATA = -9999.0
@@ -646,25 +642,13 @@ def tile_viz_products(
 
 
 # ---------------------------------------------------------------------------
-# minimal real GeoTIFF (pure Python): single band float32, striped
+# GeoTIFF files: single-band float32 through the one codec (tiff.py)
 # ---------------------------------------------------------------------------
 
-_TIFF_TAGS = {
-    "ImageWidth": 256,
-    "ImageLength": 257,
-    "BitsPerSample": 258,
-    "Compression": 259,
-    "Photometric": 262,
-    "StripOffsets": 273,
-    "SamplesPerPixel": 277,
-    "RowsPerStrip": 278,
-    "StripByteCounts": 279,
-    "SampleFormat": 339,
-    "ModelPixelScale": 33550,
-    "ModelTiepoint": 33922,
-    "GeoKeyDirectory": 34735,
-    "GDALNodata": 42113,
-}
+# The reference's storage profile (compute_ndvi.py:79-84): tiled
+# 256×256, deflate, floating-point predictor 3 — byte planes compress
+# far better than raw floats on smooth rasters.
+REFERENCE_PROFILE = {"compression": "deflate", "predictor": 3, "tile": DEFAULT_TILE}
 
 
 def write_geotiff(
@@ -675,383 +659,43 @@ def write_geotiff(
     epsg: int = 4326,
     nodata: float = NODATA,
 ) -> None:
-    """Write a single-band float32 GeoTIFF. Delegates to rasterio
-    (deflate, tiled — the reference's profile) when available, else
-    uses the built-in pure-Python writer (uncompressed, striped, with
-    ModelPixelScale/ModelTiepoint/GeoKey EPSG/GDAL nodata — readable
-    by GDAL/QGIS)."""
-    a = np.ascontiguousarray(arr, dtype=np.float32)
-    if HAVE_RASTERIO:
-        from rasterio.transform import from_origin
-
-        profile = {
-            "driver": "GTiff",
-            "dtype": "float32",
-            "width": a.shape[1],
-            "height": a.shape[0],
-            "count": 1,
-            "crs": f"EPSG:{epsg}",
-            "transform": from_origin(origin[0], origin[1], pixel_size[0], pixel_size[1]),
-            "nodata": nodata,
-            "tiled": True,
-            "blockxsize": 256,
-            "blockysize": 256,
-            "compress": "deflate",
-            "predictor": 3,
-        }
-        with rasterio.open(path, "w", **profile) as dst:
-            dst.write(a, 1)
-        return
-
-    h, w = a.shape
-    data = a.tobytes()
-    nodata_ascii = f"{nodata:g}\x00".encode()
-    # GeoKeys: model type 2 (geographic), raster type 1 (pixel-is-area),
-    # geographic CRS = epsg
-    geokeys = [
-        (1, 1, 0, 3),       # version, rev, minor, number of keys
-        (1024, 0, 1, 2),    # GTModelTypeGeoKey = geographic
-        (1025, 0, 1, 1),    # GTRasterTypeGeoKey = area
-        (2048, 0, 1, epsg), # GeographicTypeGeoKey
-    ]
-    geokey_shorts = [v for row in geokeys for v in row]
-
-    # layout: header(8) | IFD | out-of-line values | pixel data
-    n_tags = 14
-    ifd_off = 8
-    ifd_size = 2 + n_tags * 12 + 4
-    val_off = ifd_off + ifd_size
-
-    out_of_line: list[bytes] = []
-
-    def defer(payload: bytes) -> int:
-        nonlocal val_off
-        off = val_off
-        out_of_line.append(payload)
-        val_off += len(payload) + (len(payload) % 2)
-        return off
-
-    pixel_scale = defer(struct.pack("<3d", pixel_size[0], pixel_size[1], 0.0))
-    tiepoint = defer(struct.pack("<6d", 0.0, 0.0, 0.0, origin[0], origin[1], 0.0))
-    geokey_off = defer(struct.pack(f"<{len(geokey_shorts)}H", *geokey_shorts))
-    nodata_off = defer(nodata_ascii)
-    data_off = val_off
-
-    def tag(code: int, ttype: int, count: int, value: int) -> bytes:
-        return struct.pack("<HHII", code, ttype, count, value)
-
-    tags = [
-        tag(_TIFF_TAGS["ImageWidth"], 3, 1, w),
-        tag(_TIFF_TAGS["ImageLength"], 3, 1, h),
-        tag(_TIFF_TAGS["BitsPerSample"], 3, 1, 32),
-        tag(_TIFF_TAGS["Compression"], 3, 1, 1),
-        tag(_TIFF_TAGS["Photometric"], 3, 1, 1),
-        tag(_TIFF_TAGS["StripOffsets"], 4, 1, data_off),
-        tag(_TIFF_TAGS["SamplesPerPixel"], 3, 1, 1),
-        tag(_TIFF_TAGS["RowsPerStrip"], 3, 1, h),
-        tag(_TIFF_TAGS["StripByteCounts"], 4, 1, len(data)),
-        tag(_TIFF_TAGS["SampleFormat"], 3, 1, 3),
-        tag(_TIFF_TAGS["ModelPixelScale"], 12, 3, pixel_scale),
-        tag(_TIFF_TAGS["ModelTiepoint"], 12, 6, tiepoint),
-        tag(_TIFF_TAGS["GeoKeyDirectory"], 3, len(geokey_shorts), geokey_off),
-        tag(_TIFF_TAGS["GDALNodata"], 2, len(nodata_ascii), nodata_off),
-    ]
+    """Write a single-band float32 GeoTIFF: one uncompressed strip with
+    ModelPixelScale/ModelTiepoint/GeoKey EPSG/GDAL nodata tags —
+    readable by GDAL/QGIS."""
+    blob = TF.write_tiff(
+        np.asarray(arr, dtype=np.float32),
+        origin=origin, pixel_size=pixel_size, epsg=epsg, nodata=nodata,
+    )
     with open(path, "wb") as fh:
-        fh.write(b"II*\x00" + struct.pack("<I", ifd_off))
-        fh.write(struct.pack("<H", n_tags))
-        fh.write(b"".join(tags))
-        fh.write(struct.pack("<I", 0))  # next IFD
-        pos = ifd_off + ifd_size
-        for payload in out_of_line:
-            fh.write(payload)
-            pos += len(payload)
-            if len(payload) % 2:
-                fh.write(b"\x00")
-                pos += 1
-        fh.write(data)
-
-
-_TILE_TAGS = {
-    "Predictor": 317,
-    "TileWidth": 322,
-    "TileLength": 323,
-    "TileOffsets": 324,
-    "TileByteCounts": 325,
-}
-
-
-def _fp_predictor_encode(a: np.ndarray) -> bytes:
-    """TIFF predictor 3 (floating-point horizontal differencing) for
-    one tile: per scanline, bytes regroup into significance planes
-    (MSB plane first, per the libtiff fpDiff layout for little-endian
-    data) and then byte-difference horizontally. Pure numpy."""
-    th, tw = a.shape
-    raw = np.ascontiguousarray(a, dtype="<f4").view(np.uint8).reshape(th, tw, 4)
-    planes = raw[:, :, ::-1]  # byte 0 = most significant
-    rows = np.ascontiguousarray(planes.transpose(0, 2, 1)).reshape(th, 4 * tw)
-    diff = rows.copy()
-    diff[:, 1:] = rows[:, 1:] - rows[:, :-1]  # uint8 wraparound
-    return diff.tobytes()
-
-
-def _fp_predictor_decode(buf: bytes, th: int, tw: int) -> np.ndarray:
-    d = np.frombuffer(buf, dtype=np.uint8).reshape(th, 4 * tw)
-    acc = np.cumsum(d, axis=1, dtype=np.uint64).astype(np.uint8)
-    planes = acc.reshape(th, 4, tw).transpose(0, 2, 1)  # (th, tw, 4) MSB-first
-    le = np.ascontiguousarray(planes[:, :, ::-1]).reshape(th, tw * 4)
-    return np.frombuffer(le.tobytes(), dtype="<f4").reshape(th, tw)
-
-
-def write_geotiff_tiled(
-    arr: np.ndarray,
-    path: str,
-    origin: tuple[float, float] = (0.0, 0.0),
-    pixel_size: tuple[float, float] = (1.0, 1.0),
-    epsg: int = 4326,
-    nodata: float = NODATA,
-    tile: int = 256,
-    predictor: int = 3,
-) -> None:
-    """The reference's exact storage profile (compute_ndvi.py:79-84) in
-    pure Python: tiled 256×256, deflate, predictor 3 (floating-point
-    differencing — byte planes compress dramatically better for smooth
-    float rasters), float32, GDAL nodata tag. `decode_geotiff_bytes`
-    reads it back; layout follows the TIFF 6 + libtiff conventions so
-    GDAL/QGIS can too."""
-    import zlib
-
-    a = np.ascontiguousarray(arr, dtype=np.float32)
-    h, w = a.shape
-    tiles_down = -(-h // tile)
-    tiles_across = -(-w // tile)
-    payloads: list[bytes] = []
-    for ty in range(tiles_down):
-        for tx in range(tiles_across):
-            block = np.full((tile, tile), np.float32(nodata), dtype=np.float32)
-            sub = a[ty * tile : (ty + 1) * tile, tx * tile : (tx + 1) * tile]
-            block[: sub.shape[0], : sub.shape[1]] = sub
-            raw = _fp_predictor_encode(block) if predictor == 3 else block.tobytes()
-            payloads.append(zlib.compress(raw, 6))
-
-    nodata_ascii = f"{nodata:g}\x00".encode()
-    geokeys = [(1, 1, 0, 3), (1024, 0, 1, 2), (1025, 0, 1, 1), (2048, 0, 1, epsg)]
-    geokey_shorts = [v for row in geokeys for v in row]
-    n_tiles = len(payloads)
-
-    n_tags = 16
-    ifd_off = 8
-    ifd_size = 2 + n_tags * 12 + 4
-    val_off = ifd_off + ifd_size
-    out_of_line: list[bytes] = []
-
-    def defer(payload: bytes) -> int:
-        nonlocal val_off
-        off = val_off
-        out_of_line.append(payload)
-        val_off += len(payload) + (len(payload) % 2)
-        return off
-
-    pixel_scale = defer(struct.pack("<3d", pixel_size[0], pixel_size[1], 0.0))
-    tiepoint = defer(struct.pack("<6d", 0.0, 0.0, 0.0, origin[0], origin[1], 0.0))
-    geokey_off = defer(struct.pack(f"<{len(geokey_shorts)}H", *geokey_shorts))
-    nodata_off = defer(nodata_ascii)
-    counts_off = defer(struct.pack(f"<{n_tiles}I", *[len(p) for p in payloads]))
-    # tile offsets depend on where data starts: after the offsets array
-    offsets_pos = val_off
-    val_off += n_tiles * 4 + ((n_tiles * 4) % 2)
-    data_start = val_off
-    tile_offsets, pos = [], data_start
-    for p in payloads:
-        tile_offsets.append(pos)
-        pos += len(p)
-    out_of_line.append(struct.pack(f"<{n_tiles}I", *tile_offsets))
-
-    def tag(code: int, ttype: int, count: int, value: int) -> bytes:
-        return struct.pack("<HHII", code, ttype, count, value)
-
-    def scalar_or_off(values_off: int, count: int, first: int) -> int:
-        return first if count == 1 else values_off
-
-    tags = [
-        tag(_TIFF_TAGS["ImageWidth"], 3, 1, w),
-        tag(_TIFF_TAGS["ImageLength"], 3, 1, h),
-        tag(_TIFF_TAGS["BitsPerSample"], 3, 1, 32),
-        tag(_TIFF_TAGS["Compression"], 3, 1, 8),  # deflate
-        tag(_TIFF_TAGS["Photometric"], 3, 1, 1),
-        tag(_TIFF_TAGS["SamplesPerPixel"], 3, 1, 1),
-        tag(_TILE_TAGS["Predictor"], 3, 1, predictor),
-        tag(_TIFF_TAGS["SampleFormat"], 3, 1, 3),
-        tag(_TILE_TAGS["TileWidth"], 3, 1, tile),
-        tag(_TILE_TAGS["TileLength"], 3, 1, tile),
-        tag(
-            _TILE_TAGS["TileOffsets"], 4, n_tiles,
-            scalar_or_off(offsets_pos, n_tiles, tile_offsets[0]),
-        ),
-        tag(
-            _TILE_TAGS["TileByteCounts"], 4, n_tiles,
-            scalar_or_off(counts_off, n_tiles, len(payloads[0])),
-        ),
-        tag(_TIFF_TAGS["ModelPixelScale"], 12, 3, pixel_scale),
-        tag(_TIFF_TAGS["ModelTiepoint"], 12, 6, tiepoint),
-        tag(_TIFF_TAGS["GeoKeyDirectory"], 3, len(geokey_shorts), geokey_off),
-        tag(_TIFF_TAGS["GDALNodata"], 2, len(nodata_ascii), nodata_off),
-    ]
-    tags.sort(key=lambda t: struct.unpack_from("<H", t)[0])  # TIFF requires sorted tags
-    with open(path, "wb") as fh:
-        fh.write(b"II*\x00" + struct.pack("<I", ifd_off))
-        fh.write(struct.pack("<H", n_tags))
-        fh.write(b"".join(tags))
-        fh.write(struct.pack("<I", 0))
-        for payload in out_of_line:
-            fh.write(payload)
-            if len(payload) % 2:
-                fh.write(b"\x00")
-        for p in payloads:
-            fh.write(p)
+        fh.write(blob)
 
 
 def read_geotiff(path: str) -> tuple[np.ndarray, dict]:
-    """Read a single-band float32 GeoTIFF written by `write_geotiff`
-    (or rasterio when installed). Returns (array, metadata)."""
-    if HAVE_RASTERIO:
-        with rasterio.open(path) as src:
-            arr = src.read(1)
-            t = src.transform
-            return arr, {
-                "origin": (t.c, t.f),
-                "pixel_size": (t.a, -t.e),
-                "epsg": src.crs.to_epsg() if src.crs else None,
-                "nodata": src.nodata,
-            }
-
+    """Read a single-band GeoTIFF file; see `decode_geotiff_bytes`.
+    Returns (array, metadata)."""
     with open(path, "rb") as fh:
-        buf = fh.read()
-    return decode_geotiff_bytes(buf)
+        return decode_geotiff_bytes(fh.read())
 
 
 def decode_geotiff_bytes(buf: "bytes | memoryview") -> tuple[np.ndarray, dict]:
     """Bytes-level decode for `binaryFile` scans (S4): GeoTIFF content
-    → (float array, metadata).
+    → (float array, {epsg, nodata, origin, pixel_size}).
 
-    Two-tier: the fast path decodes the engine's own write profile
-    (little-endian, single IFD, float32, plain/deflate) with minimal
-    branching; anything else — uint16 DN bands, LZW, multi-strip,
-    big-endian, overview IFD chains, i.e. the real Landsat C2L2
-    envelope — falls through to the general pure-Python codec
-    (operators/tiff.py), with integer samples cast to float32 exactly
-    as the reference's kernel does on read (compute_ndvi.py:43-44).
+    Reads everything operators/tiff.py reads — the engine's own
+    striped and tiled profiles and the real Landsat C2L2 envelope
+    (uint16 DN bands, LZW, multi-strip, big-endian, BigTIFF). Integer
+    samples are cast to float32 exactly as the reference's kernel does
+    on read (compute_ndvi.py:43-44); float32 comes back little-endian.
 
     Accepts any buffer-protocol object (bytes, memoryview, Arrow
-    buffer view) — the Arrow fast path hands in a zero-copy
-    memoryview of the columnar payload."""
-    try:
-        return _decode_geotiff_fast(buf)
-    except (ValueError, KeyError, struct.error):
-        from . import tiff as TF
-
-        arr, meta = TF.decode_tiff(buf)
-        if arr.dtype.kind != "f":
-            arr = arr.astype(np.float32)
-        elif arr.dtype.itemsize == 4:
-            arr = np.ascontiguousarray(arr, dtype="<f4")
-        meta = {
-            k: meta.get(k) for k in ("epsg", "nodata", "origin", "pixel_size")
-        }
-        return arr, meta
-
-
-def _decode_geotiff_fast(buf: "bytes | memoryview") -> tuple[np.ndarray, dict]:
-    if bytes(buf[:4]) != b"II*\x00":
-        raise ValueError("not a little-endian TIFF")
-    (ifd_off,) = struct.unpack_from("<I", buf, 4)
-    (n_tags,) = struct.unpack_from("<H", buf, ifd_off)
-    tags: dict[int, tuple[int, int, int]] = {}
-    for i in range(n_tags):
-        code, ttype, count, value = struct.unpack_from(
-            "<HHII", buf, ifd_off + 2 + i * 12
-        )
-        tags[code] = (ttype, count, value)
-
-    def short_or_long(code: int) -> int:
-        return tags[code][2]
-
-    def long_array(code: int) -> list[int]:
-        ttype, count, value = tags[code]
-        if count == 1:
-            return [value]
-        return list(struct.unpack_from(f"<{count}I", buf, value))
-
-    w = short_or_long(_TIFF_TAGS["ImageWidth"])
-    h = short_or_long(_TIFF_TAGS["ImageLength"])
-    compression = short_or_long(_TIFF_TAGS["Compression"]) if _TIFF_TAGS[
-        "Compression"
-    ] in tags else 1
-
-    # guards: anything outside the engine's own write profile goes to
-    # the general codec (operators/tiff.py) via the caller's fallback
-    bits = short_or_long(_TIFF_TAGS["BitsPerSample"]) if _TIFF_TAGS["BitsPerSample"] in tags else 32
-    # TIFF defaults SampleFormat to 1 (unsigned int) when absent; the
-    # fast path REQUIRES an explicit =3 (IEEE float, as write_geotiff
-    # emits). Defaulting to 3 here would reinterpret a 32-bit integer
-    # TIFF that legally omits the tag as '<f4' garbage instead of
-    # falling through to the general codec (tiff.py defaults it to 1).
-    sfmt = short_or_long(_TIFF_TAGS["SampleFormat"]) if _TIFF_TAGS["SampleFormat"] in tags else 1
-    if bits != 32 or sfmt != 3:
-        raise ValueError("fast path handles explicit float32 only")
-    if compression not in (1, 8):
-        raise ValueError("fast path handles none/deflate only")
-
-    if _TILE_TAGS["TileWidth"] in tags:  # tiled layout (write_geotiff_tiled)
-        import zlib
-
-        tw = short_or_long(_TILE_TAGS["TileWidth"])
-        th = short_or_long(_TILE_TAGS["TileLength"])
-        predictor = (
-            short_or_long(_TILE_TAGS["Predictor"]) if _TILE_TAGS["Predictor"] in tags else 1
-        )
-        offs = long_array(_TILE_TAGS["TileOffsets"])
-        cnts = long_array(_TILE_TAGS["TileByteCounts"])
-        tiles_across = -(-w // tw)
-        arr = np.empty((h, w), dtype="<f4")
-        for i, (o, c) in enumerate(zip(offs, cnts)):
-            raw = buf[o : o + c]
-            if compression == 8:
-                raw = zlib.decompress(raw)
-            block = (
-                _fp_predictor_decode(raw, th, tw)
-                if predictor == 3
-                else np.frombuffer(raw, dtype="<f4").reshape(th, tw)
-            )
-            ty, tx = divmod(i, tiles_across)
-            ys, xs = ty * th, tx * tw
-            arr[ys : min(ys + th, h), xs : min(xs + tw, w)] = block[
-                : min(th, h - ys), : min(tw, w - xs)
-            ]
-    else:
-        if tags[_TIFF_TAGS["StripOffsets"]][1] != 1 or compression != 1:
-            raise ValueError("fast path handles one uncompressed strip only")
-        off = short_or_long(_TIFF_TAGS["StripOffsets"])
-        nbytes = short_or_long(_TIFF_TAGS["StripByteCounts"])
-        arr = np.frombuffer(buf, dtype="<f4", count=nbytes // 4, offset=off).reshape(h, w)
-    meta: dict = {"epsg": None, "nodata": None, "origin": None, "pixel_size": None}
-    if _TIFF_TAGS["ModelPixelScale"] in tags:
-        _, _, v = tags[_TIFF_TAGS["ModelPixelScale"]]
-        sx, sy, _ = struct.unpack_from("<3d", buf, v)
-        meta["pixel_size"] = (sx, sy)
-    if _TIFF_TAGS["ModelTiepoint"] in tags:
-        _, _, v = tags[_TIFF_TAGS["ModelTiepoint"]]
-        vals = struct.unpack_from("<6d", buf, v)
-        meta["origin"] = (vals[3], vals[4])
-    if _TIFF_TAGS["GeoKeyDirectory"] in tags:
-        _, count, v = tags[_TIFF_TAGS["GeoKeyDirectory"]]
-        shorts = struct.unpack_from(f"<{count}H", buf, v)
-        for j in range(4, count, 4):
-            if shorts[j] == 2048:
-                meta["epsg"] = shorts[j + 3]
-    if _TIFF_TAGS["GDALNodata"] in tags:
-        _, count, v = tags[_TIFF_TAGS["GDALNodata"]]
-        meta["nodata"] = float(bytes(buf[v : v + count]).split(b"\x00")[0])
-    return arr.copy(), meta
+    buffer view) — the Arrow scan hands in a zero-copy memoryview of
+    the columnar payload."""
+    arr, meta = TF.decode_tiff(buf)
+    if arr.dtype.kind != "f":
+        arr = arr.astype(np.float32)
+    elif arr.dtype.itemsize == 4:
+        arr = np.ascontiguousarray(arr, dtype="<f4")
+    return arr, {k: meta[k] for k in ("epsg", "nodata", "origin", "pixel_size")}
 
 
 # ---------------------------------------------------------------------------
@@ -1064,15 +708,15 @@ def _band_array_from_tiff(buf, nodata_to_nan: bool, overview_level: int = 0) -> 
         # COG/Landsat pyramid: read a reduced-resolution IFD instead of
         # the full band — the cheap path for previews/coarse stats.
         # Clamps to the deepest available level (GDAL semantics).
-        from . import tiff as TF
-
         levels = TF.decode_tiff_ifds(buf)
         arr, meta = levels[min(overview_level, len(levels) - 1)]
     else:
         arr, meta = decode_geotiff_bytes(buf)
-    a = arr.astype(np.float32)
+    # decode_geotiff_bytes and decode_tiff_ifds return fresh arrays, so
+    # the nodata mask can write in place
+    a = arr.astype(np.float32, copy=False)
     if nodata_to_nan and meta.get("nodata") is not None:
-        a = np.where(a == np.float32(meta["nodata"]), np.nan, a)
+        a[a == np.float32(meta["nodata"])] = np.nan
     return a
 
 
@@ -1520,11 +1164,11 @@ def export_scene_geotiffs(
     pixel_size: tuple[float, float] = (1.0, 1.0),
     epsg: int = 4326,
     nodata: float = NODATA,
-    profile: str = "striped",
 ) -> DataFrame:
     """Assemble each scene's tiles into one mosaic and write
-    `<scene_id>_NDVI.tif` — the reference's per-scene product
-    (compute_ndvi.py:73-88) as a distributed applyInPandas sink
+    `<scene_id>_NDVI.tif` in the reference's tiled/deflate/predictor-3
+    profile — the reference's per-scene product (compute_ndvi.py:73-88)
+    as a distributed applyInPandas sink
     (scenes write in parallel from executors; `out_dir` must be
     shared storage on a cluster). Returns (scene_id, path, height,
     width, n_bytes) receipts."""
@@ -1555,9 +1199,12 @@ def export_scene_geotiffs(
             ] = arr
         out = np.where(np.isnan(mosaic), np.float32(nodata), mosaic)
         path = os.path.join(out_dir, f"{scene_id}_NDVI.tif")
-        writer = write_geotiff_tiled if profile == "tiled" else write_geotiff
-        writer(out, path, origin=(min_x, min_y), pixel_size=pixel_size,
-               epsg=epsg, nodata=nodata)
+        blob = TF.write_tiff(
+            out, origin=(min_x, min_y), pixel_size=pixel_size, epsg=epsg,
+            nodata=nodata, **REFERENCE_PROFILE,
+        )
+        with open(path, "wb") as fh:
+            fh.write(blob)
         return pd.DataFrame(
             {
                 "scene_id": [scene_id],
@@ -1610,9 +1257,12 @@ def export_pixel_geotiffs(
         )
         out = np.where(np.isnan(arr), np.float32(nodata), arr)
         path = os.path.join(out_dir, f"{scene_id}{suffix}.tif")
-        write_geotiff_tiled(
-            out, path, origin=origin, pixel_size=pixel_size, epsg=epsg, nodata=nodata
+        blob = TF.write_tiff(
+            out, origin=origin, pixel_size=pixel_size, epsg=epsg, nodata=nodata,
+            **REFERENCE_PROFILE,
         )
+        with open(path, "wb") as fh:
+            fh.write(blob)
         return pd.DataFrame(
             {
                 "scene_id": [scene_id],

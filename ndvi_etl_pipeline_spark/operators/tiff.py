@@ -1,15 +1,13 @@
-"""General pure-Python TIFF/GeoTIFF codec — the real-world
-compatibility tier of the raster source (SURVEY §2.1 S4).
+"""The engine's TIFF/GeoTIFF codec: every raster byte the engine reads
+or writes goes through this module (SURVEY §2.1 S4, K1).
 
-The engine's own write path (operators/raster.py) emits a narrow
-profile: little-endian, single IFD, float32, uncompressed strips or
-deflate+predictor-3 tiles. The reference, however, reads arbitrary
-rasterio/GDAL products (`compute_ndvi.py:38-44`), and real Landsat
-Collection-2 Level-2 bands are uint16 DN rasters with LZW or deflate
-compression, strip- or tile-organized, frequently carrying overview
-IFDs. This module decodes that envelope without GDAL:
+The reference reads arbitrary rasterio/GDAL products
+(`compute_ndvi.py:38-44`), and real Landsat Collection-2 Level-2 bands
+are uint16 DN rasters with LZW or deflate compression, strip- or
+tile-organized, frequently carrying overview IFDs. This module decodes
+that envelope without GDAL:
 
-- both byte orders ("II*\\0" and "MM\\0*");
+- both byte orders ("II*\\0" and "MM\\0*"), classic TIFF and BigTIFF;
 - the full IFD chain (primary + overview IFDs → `decode_tiff_ifds`);
 - strip-organized files (RowsPerStrip < height, offset/count arrays)
   and tile-organized files;
@@ -21,12 +19,16 @@ IFDs. This module decodes that envelope without GDAL:
   floating-point differencing (3).
 
 Decoding is per-strip/per-tile and vectorized (numpy cumsum for the
-predictors); the LZW inner loop is pure Python over codes, which is
+predictors); uncompressed chunks are read as zero-copy views of the
+input buffer. The LZW inner loop is pure Python over codes, which is
 fine at the tile/strip granularity the scan kernels feed it (the
-Arrow boundary batches files, not pixels). The writer exists to
-fabricate spec-conformant fixtures for every branch (the container
-has no rasterio to make goldens with) and to round-trip-test the
-decoder; production writes stay on operators/raster.py's profile.
+Arrow boundary batches files, not pixels).
+
+`write_tiff` is the one encoder. operators/raster.py writes the
+engine's products through it: striped uncompressed float32
+(`write_geotiff`) and the reference's tiled 256 / deflate /
+predictor-3 profile (compute_ndvi.py:79-84). Its other layouts
+fabricate spec-conformant fixtures for every decoder branch.
 """
 
 from __future__ import annotations
@@ -306,9 +308,11 @@ def _undo_predictor(
     raise ValueError(f"unsupported predictor {predictor}")
 
 
-def _apply_predictor(block: np.ndarray, predictor: int) -> bytes:
+def _apply_predictor(block: np.ndarray, predictor: int) -> "bytes | memoryview":
+    """The chunk's bytes, differenced; predictor 1 is a zero-copy view
+    of the (C-contiguous) block."""
     if predictor == 1:
-        return block.tobytes()
+        return memoryview(np.ascontiguousarray(block)).cast("B")
     if predictor == 2:
         diff = block.copy()
         diff[:, 1:] = block[:, 1:] - block[:, :-1]  # modular wraparound
@@ -327,11 +331,14 @@ def _apply_predictor(block: np.ndarray, predictor: int) -> bytes:
     raise ValueError(f"unsupported predictor {predictor}")
 
 
-def _decompress(raw: bytes, compression: int) -> bytes:
+def _decompress(raw: memoryview, compression: int):
+    """One chunk's payload. Uncompressed chunks stay views of the file
+    buffer; a truncated one fails later in `np.frombuffer`'s size
+    check."""
     if compression == 1:
         return raw
     if compression == 5:
-        return lzw_decode(raw)
+        return lzw_decode(bytes(raw))
     if compression in (8, 32946):  # Deflate / legacy Deflate
         return zlib.decompress(raw)
     raise ValueError(f"unsupported compression {compression}")
@@ -356,6 +363,7 @@ def decode_ifd(buf, en: str, tags, big: bool = False) -> tuple[np.ndarray, dict]
     out_dt = np.dtype(f"<f{dt.itemsize}") if predictor == 3 else dt
 
     arr = np.zeros((h, w), dtype=out_dt)
+    view = memoryview(buf)
     if T_TILE_WIDTH in tags:
         tw = int(_tag1b(buf, en, tags, T_TILE_WIDTH))
         th = int(_tag1b(buf, en, tags, T_TILE_LENGTH))
@@ -363,7 +371,7 @@ def decode_ifd(buf, en: str, tags, big: bool = False) -> tuple[np.ndarray, dict]
         cnts = _tag_valuesb(buf, en, tags, T_TILE_BYTE_COUNTS)
         tiles_across = -(-w // tw)
         for i, (o, c) in enumerate(zip(offs, cnts)):
-            raw = _decompress(bytes(buf[o : o + c]), compression)
+            raw = _decompress(view[o : o + c], compression)
             if predictor == 3:
                 block = _undo_predictor(
                     np.frombuffer(raw, dtype=np.uint8).reshape(th, tw * dt.itemsize),
@@ -387,7 +395,7 @@ def decode_ifd(buf, en: str, tags, big: bool = False) -> tuple[np.ndarray, dict]
         for i, (o, c) in enumerate(zip(offs, cnts)):
             ys = i * rps
             nrows = min(rps, h - ys)
-            raw = _decompress(bytes(buf[o : o + c]), compression)
+            raw = _decompress(view[o : o + c], compression)
             if predictor == 3:
                 block = _undo_predictor(
                     np.frombuffer(raw, dtype=np.uint8).reshape(nrows, w * dt.itemsize),
@@ -439,7 +447,7 @@ def decode_tiff_ifds(buf) -> list[tuple[np.ndarray, dict]]:
 
 
 # ---------------------------------------------------------------------------
-# writer (fixtures + round-trip tests)
+# writer
 # ---------------------------------------------------------------------------
 
 _SFMT_FOR_KIND = {"u": 1, "i": 2, "f": 3}
@@ -452,6 +460,7 @@ def write_tiff(
     compression: str = "none",
     predictor: int = 1,
     rows_per_strip: int | None = None,
+    tile: int | None = None,
     big_endian: bool = False,
     bigtiff: bool = False,
     origin: tuple[float, float] | None = (0.0, 0.0),
@@ -461,16 +470,20 @@ def write_tiff(
     overviews: list[np.ndarray] | None = None,
 ) -> bytes:
     """Serialize a 2-D array (plus optional overview arrays as chained
-    IFDs) as a spec-conformant striped TIFF in any supported
-    dtype/compression/predictor/endian combination. Used to fabricate
-    the exact layouts real Landsat products use (uint16 + LZW +
-    predictor 2, multi-strip, overview IFDs) so the decoder's every
-    branch has a golden."""
+    IFDs) as a spec-conformant TIFF in any supported
+    dtype/compression/predictor/endian combination.
+
+    Layout: strips of `rows_per_strip` rows (default: one strip), or,
+    when `tile` is set, tile×tile blocks in row-major tile order with
+    the edge tiles zero-padded (TIFF 6 §15; the spec wants `tile` to
+    be a multiple of 16). Geo tags (ModelPixelScale, ModelTiepoint,
+    GeoKey EPSG, GDAL nodata) go on the primary IFD only."""
     en = ">" if big_endian else "<"
     comp = _COMP_CODE[compression]
     images = [np.asarray(arr)] + [np.asarray(o) for o in (overviews or [])]
 
     order = b"MM" if big_endian else b"II"
+    ptr_fmt = en + ("Q" if bigtiff else "I")
     if bigtiff:
         # version 43: offset size 8, constant 0, uint64 first-IFD ptr
         header = order + struct.pack(en + "HHHQ", 43, 8, 0, 0)
@@ -478,7 +491,7 @@ def write_tiff(
         header = order + struct.pack(en + "HI", 42, 0)
     chunks: list[bytes] = [header]
     pos = len(header)
-    ifd_offsets: list[int] = []
+    ifd_chunks: list[tuple[int, int]] = []  # (index in chunks, file offset)
 
     def emit(b: bytes) -> int:
         nonlocal pos
@@ -496,32 +509,33 @@ def write_tiff(
         kind = a.dtype.kind
         if kind not in _SFMT_FOR_KIND:
             raise ValueError(f"unsupported dtype {a.dtype}")
-        rps = min(rows_per_strip or h, h)
-        strips: list[bytes] = []
-        for ys in range(0, h, rps):
-            block = a[ys : ys + rps]
-            if predictor == 3:
-                raw = _apply_predictor(block, 3)
-            elif predictor == 2:
-                raw = _apply_predictor(block, 2)
-            else:
-                raw = block.tobytes()
+        if tile:
+            blocks = []
+            for ys in range(0, h, tile):
+                for xs in range(0, w, tile):
+                    sub = a[ys : ys + tile, xs : xs + tile]
+                    blocks.append(
+                        np.pad(sub, ((0, tile - sub.shape[0]), (0, tile - sub.shape[1])))
+                    )
+        else:
+            rps = min(rows_per_strip or h, h)
+            blocks = [a[ys : ys + rps] for ys in range(0, h, rps)]
+        payloads: list[bytes] = []
+        for block in blocks:
+            raw = _apply_predictor(block, predictor)
             if comp == 5:
                 raw = lzw_encode(raw)
             elif comp == 8:
                 raw = zlib.compress(raw, 6)
-            strips.append(raw)
-        strip_offs = [emit(s) for s in strips]
-        strip_cnts = [len(s) for s in strips]
-
-        def pack_vals(fmt: str, vals) -> bytes:
-            return struct.pack(en + f"{len(vals)}{fmt}", *vals)
+            payloads.append(raw)
+        offs = [emit(p) for p in payloads]
+        cnts = [len(p) for p in payloads]
 
         tags: list[tuple[int, int, int, bytes]] = []  # (code, type, count, raw)
 
         def add(code: int, ttype: int, vals) -> None:
-            fmt = _TYPE_FMT[ttype]
-            tags.append((code, ttype, len(vals), pack_vals(fmt, vals)))
+            raw = struct.pack(en + f"{len(vals)}{_TYPE_FMT[ttype]}", *vals)
+            tags.append((code, ttype, len(vals), raw))
 
         if level > 0:
             add(T_NEW_SUBFILE_TYPE, 4, [1])  # reduced-resolution image
@@ -529,11 +543,17 @@ def write_tiff(
         add(T_IMAGE_LENGTH, 3, [h])
         add(T_BITS_PER_SAMPLE, 3, [a.dtype.itemsize * 8])
         add(T_COMPRESSION, 3, [comp])
-        tags.append((262, 3, 1, pack_vals("H", [1])))  # Photometric: BlackIsZero
-        add(T_STRIP_OFFSETS, 4, strip_offs)
-        tags.append((277, 3, 1, pack_vals("H", [1])))  # SamplesPerPixel
-        add(T_ROWS_PER_STRIP, 3, [rps])
-        add(T_STRIP_BYTE_COUNTS, 4, strip_cnts)
+        add(262, 3, [1])  # Photometric: BlackIsZero
+        add(277, 3, [1])  # SamplesPerPixel
+        if tile:
+            add(T_TILE_WIDTH, 3, [tile])
+            add(T_TILE_LENGTH, 3, [tile])
+            add(T_TILE_OFFSETS, 4, offs)
+            add(T_TILE_BYTE_COUNTS, 4, cnts)
+        else:
+            add(T_STRIP_OFFSETS, 4, offs)
+            add(T_ROWS_PER_STRIP, 3, [rps])
+            add(T_STRIP_BYTE_COUNTS, 4, cnts)
         if predictor != 1:
             add(T_PREDICTOR, 3, [predictor])
         add(T_SAMPLE_FORMAT, 3, [_SFMT_FOR_KIND[kind]])
@@ -554,7 +574,6 @@ def write_tiff(
 
         tags.sort(key=lambda t: t[0])
         inline_cap = 8 if bigtiff else 4
-        off_fmt = en + ("Q" if bigtiff else "I")
         cnt_fmt = en + ("Q" if bigtiff else "I")
         # out-of-line payloads first, then the IFD itself
         entries: list[bytes] = []
@@ -562,29 +581,21 @@ def write_tiff(
             if len(raw) <= inline_cap:
                 value_bytes = raw.ljust(inline_cap, b"\x00")
             else:
-                off = emit(raw)
-                value_bytes = struct.pack(off_fmt, off)
+                value_bytes = struct.pack(ptr_fmt, emit(raw))
             entries.append(
                 struct.pack(en + "HH", code, ttype)
                 + struct.pack(cnt_fmt, count)
                 + value_bytes
             )
-        if bigtiff:
-            ifd = struct.pack(en + "Q", len(entries)) + b"".join(entries) + b"\x00" * 8
-        else:
-            ifd = struct.pack(en + "H", len(entries)) + b"".join(entries) + b"\x00" * 4
-        ifd_offsets.append(emit(ifd))
+        n_fmt = en + ("Q" if bigtiff else "H")
+        ifd = struct.pack(n_fmt, len(entries)) + b"".join(entries)
+        ifd_chunks.append((len(chunks), pos))
+        emit(ifd + struct.pack(ptr_fmt, 0))
 
-    blob = bytearray(b"".join(chunks))
-    # link header → first IFD, then chain each IFD to the next
-    cnt_sz, ent_sz, ptr_fmt = (8, 20, en + "Q") if bigtiff else (2, 12, en + "I")
-    struct.pack_into(ptr_fmt, blob, 8 if bigtiff else 4, ifd_offsets[0])
-    for i, off in enumerate(ifd_offsets):
-        if bigtiff:
-            n_entries = struct.unpack_from(en + "Q", blob, off)[0]
-        else:
-            n_entries = struct.unpack_from(en + "H", blob, off)[0]
-        next_ptr_at = off + cnt_sz + int(n_entries) * ent_sz
-        nxt = ifd_offsets[i + 1] if i + 1 < len(ifd_offsets) else 0
-        struct.pack_into(ptr_fmt, blob, next_ptr_at, nxt)
-    return bytes(blob)
+    # every pointer is the last field of its (small) chunk: the header
+    # points at the first IFD, each IFD at the next, the last at 0
+    ptr_size = struct.calcsize(ptr_fmt)
+    targets = [off for _, off in ifd_chunks] + [0]
+    for idx, nxt in zip([0] + [i for i, _ in ifd_chunks], targets):
+        chunks[idx] = chunks[idx][:-ptr_size] + struct.pack(ptr_fmt, nxt)
+    return b"".join(chunks)

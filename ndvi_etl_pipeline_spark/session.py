@@ -35,7 +35,15 @@ def get_spark(
     Local mode honors ``SPARK_GRAFT_CPUS`` (default: all cores). On a
     real cluster, pass ``master=None`` and submit via spark-submit —
     the builder then inherits the cluster manager's settings.
+
+    An already-running session is returned as it is, confs untouched:
+    the builder would otherwise overwrite its runtime SQL confs (e.g.
+    ``spark.sql.shuffle.partitions``) with this call's defaults, so an
+    in-process CLI run would silently re-tune its caller's session.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"

@@ -275,3 +275,29 @@ def test_cli_geojson_aoi_dissolve(spark, tmp_path):
     assert rc == 0
     assert spark.read.parquet(str(out / "aois")).count() == 1
     assert spark.read.parquet(str(out / "ndvi_clipped")).count() == 1
+
+
+def test_cli_in_process_keeps_caller_session_confs(spark, tmp_path):
+    """An in-process CLI run reuses the caller's session without
+    re-tuning it: `get_spark` leaves a running session's confs alone
+    instead of resetting shuffle partitions to its own default."""
+    import os
+
+    from ndvi_etl_pipeline_spark.__main__ import main
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    # a value neither of get_spark's defaults (SPARK_GRAFT_CPUS, the
+    # core count) resolves to
+    defaults = {os.environ.get("SPARK_GRAFT_CPUS"), str(os.cpu_count())}
+    probe = next(str(n) for n in range(5, 64) if str(n) not in defaults)
+    spark.conf.set(key, probe)
+    try:
+        rc = main(
+            ["--scenes", str(tmp_path / "scenes"), "--out", str(tmp_path / "out"),
+             "--demo", "1"]
+        )
+        assert rc == 0
+        assert spark.conf.get(key) == probe
+    finally:
+        spark.conf.set(key, before)

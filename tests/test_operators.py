@@ -179,6 +179,27 @@ def test_winnowing_detects_partial_overlap(spark):
     assert not fps[3] & fps[2]
 
 
+
+def test_winnowing_window_of_one_keeps_every_kgram(spark):
+    """w = 1: every window is one k-gram, so the fingerprints are all
+    distinct k-gram hashes (8-hex md5 prefixes of the normalized
+    text)."""
+    import hashlib
+
+    from ndvi_etl_pipeline_spark.functions.text import winnowing_fingerprints
+
+    text, k = "Abra cadabra, abra!", 4
+    norm = "abra cadabra abra"
+    want = {
+        hashlib.md5(norm[i : i + k].encode()).hexdigest()[:8]
+        for i in range(len(norm) - k + 1)
+    }
+    (row,) = spark.createDataFrame([(1, text)], ["doc_id", "text"]).select(
+        winnowing_fingerprints("text", k=k, w=1).alias("fps")
+    ).collect()
+    assert len(row.fps) == len(want)
+    assert set(row.fps) == want
+
 def test_connected_components_chain_and_island(spark):
     from ndvi_etl_pipeline_spark.operators.dedup import connected_components
 

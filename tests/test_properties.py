@@ -14,10 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ndvi_etl_pipeline_spark.functions.geo import _ray_cast_numpy
-from ndvi_etl_pipeline_spark.operators.raster import (
-    _fp_predictor_decode,
-    _fp_predictor_encode,
-)
+from ndvi_etl_pipeline_spark.operators import tiff as TF
 from ndvi_etl_pipeline_spark.operators.warp import bilinear_sample
 
 finite_f = st.floats(
@@ -80,7 +77,8 @@ def test_fp_predictor_inverts(h, w, seed):
     rng = np.random.default_rng(seed)
     a = rng.normal(size=(h, w)).astype(np.float32)
     a[rng.random(size=(h, w)) < 0.1] = np.nan
-    back = _fp_predictor_decode(_fp_predictor_encode(a), h, w)
+    diff = np.frombuffer(TF._apply_predictor(a, 3), dtype=np.uint8).reshape(h, 4 * w)
+    back = TF._undo_predictor(diff, 3, fp_itemsize=4)
     np.testing.assert_array_equal(back, a)
 
 
@@ -106,31 +104,46 @@ def test_bilinear_exact_on_affine_fields(gy, gx, c, seed):
     assert np.all(np.abs(got - want) <= 1e-9 * scale)
 
 
-@settings(max_examples=30, deadline=None)
+@settings(max_examples=40, deadline=None)
 @given(
     h=st.integers(min_value=1, max_value=70),
     w=st.integers(min_value=1, max_value=70),
     seed=st.integers(min_value=0, max_value=2**31 - 1),
     tiled=st.booleans(),
+    dtype=st.sampled_from(["float32", "uint16"]),
+    differencing=st.booleans(),
+    compression=st.sampled_from(["none", "lzw", "deflate"]),
 )
-def test_geotiff_roundtrip_any_shape(h, w, seed, tiled, tmp_path_factory):
+def test_geotiff_roundtrip_any_shape(
+    h, w, seed, tiled, dtype, differencing, compression, tmp_path_factory
+):
+    """Striped: `write_geotiff` → `read_geotiff`. Tiled: `write_tiff`'s
+    tile layout over dtype × predictor × compression → the same
+    decoder (`decode_geotiff_bytes`, integer samples cast to float32)."""
     from ndvi_etl_pipeline_spark.operators.raster import (
+        NODATA,
+        decode_geotiff_bytes,
         read_geotiff,
         write_geotiff,
-        write_geotiff_tiled,
     )
 
     rng = np.random.default_rng(seed)
-    a = rng.normal(size=(h, w)).astype(np.float32) * 1000
-    a[rng.random(size=(h, w)) < 0.05] = np.nan
-    d = tmp_path_factory.mktemp("gt")
-    p = str(d / "x.tif")
-    if tiled:
-        write_geotiff_tiled(a, p, tile=32)
+    if dtype == "float32":
+        a = rng.normal(size=(h, w)).astype(np.float32) * 1000
+        a[rng.random(size=(h, w)) < 0.05] = np.nan
     else:
+        a = rng.integers(0, 65536, size=(h, w), dtype=np.uint16)
+    if tiled:
+        predictor = (3 if dtype == "float32" else 2) if differencing else 1
+        blob = TF.write_tiff(
+            a, tile=32, compression=compression, predictor=predictor, nodata=NODATA
+        )
+        back, meta = decode_geotiff_bytes(blob)
+    else:
+        p = str(tmp_path_factory.mktemp("gt") / "x.tif")
         write_geotiff(a, p)
-    back, meta = read_geotiff(p)
-    np.testing.assert_array_equal(back, a)
+        back, meta = read_geotiff(p)
+    np.testing.assert_array_equal(back, a.astype(np.float32))
     assert not math.isnan(meta["nodata"])
 
 

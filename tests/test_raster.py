@@ -1,10 +1,13 @@
 """Raster codec tier: tile⇄pixel roundtrip, tile-path NDVI parity with
 the (oracle-checked) pixel path, and the pure-Python GeoTIFF codec."""
 
+from pathlib import Path
+
 import numpy as np
 import pyspark.sql.functions as F
 
 from ndvi_etl_pipeline_spark.operators import raster
+from ndvi_etl_pipeline_spark.operators import tiff as TF
 from ndvi_etl_pipeline_spark.plans.queries import (
     derived_pixels,
     q_ndvi_scene_stats,
@@ -81,6 +84,38 @@ def test_geotiff_roundtrip(tmp_path):
     assert meta["nodata"] == raster.NODATA
     assert meta["origin"] == (25.1, 60.6)
     assert meta["pixel_size"] == (0.1, 0.1)
+
+
+def _seeded_band(seed, h, w):
+    """The arrays behind the committed seed_*.tif goldens."""
+    rng = np.random.default_rng(seed)
+    a = (rng.normal(size=(h, w)) * 1000).astype(np.float32)
+    a[rng.random((h, w)) < 0.07] = np.nan
+    return a
+
+
+def test_seed_written_goldens_decode_identically():
+    """Files written by the engine's earlier, separate GeoTIFF writers
+    (a striped uncompressed band, and a tile=32 deflate/predictor-3
+    band, both odd-sized with NaN cells) still decode pixel-identically,
+    with their geo metadata, through the one codec."""
+    fixtures = Path(__file__).parent / "fixtures"
+    cases = [
+        ("seed_striped_float32.tif", _seeded_band(20260101, 37, 23),
+         {"epsg": 32635, "origin": (25.1, 60.6), "pixel_size": (0.1, 0.25)}),
+        ("seed_tiled_deflate_fp3.tif", _seeded_band(20260102, 45, 71),
+         {"epsg": 3857, "origin": (-12.5, 44.0), "pixel_size": (30.0, 30.0)}),
+    ]
+    for name, want, geo in cases:
+        back, meta = raster.read_geotiff(str(fixtures / name))
+        assert back.dtype == np.dtype("<f4")
+        np.testing.assert_array_equal(back, want)
+        assert meta == {**geo, "nodata": raster.NODATA}
+
+
+def _write_tiled(arr, path, **kw):
+    with open(path, "wb") as fh:
+        fh.write(TF.write_tiff(np.asarray(arr, np.float32), nodata=raster.NODATA, **kw))
 
 
 def test_export_scene_geotiffs(spark, sf_dir, tmp_path):
@@ -272,8 +307,8 @@ def test_tiled_deflate_geotiff_roundtrip(tmp_path):
     smooth[::11, ::7] = np.nan
 
     p_tiled = str(tmp_path / "tiled.tif")
-    raster.write_geotiff_tiled(smooth, p_tiled, origin=(25.1, 60.6),
-                               pixel_size=(0.1, 0.1), epsg=32635)
+    _write_tiled(smooth, p_tiled, origin=(25.1, 60.6), pixel_size=(0.1, 0.1),
+                 epsg=32635, **raster.REFERENCE_PROFILE)
     back, meta = raster.read_geotiff(p_tiled)
     np.testing.assert_array_equal(back, smooth)
     assert meta["epsg"] == 32635
@@ -289,7 +324,7 @@ def test_tiled_deflate_geotiff_roundtrip(tmp_path):
 
     # predictor=1 path also roundtrips
     p1 = str(tmp_path / "p1.tif")
-    raster.write_geotiff_tiled(smooth, p1, predictor=1)
+    _write_tiled(smooth, p1, compression="deflate", tile=256)
     back1, _ = raster.read_geotiff(p1)
     np.testing.assert_array_equal(back1, smooth)
 
@@ -299,16 +334,22 @@ def test_tiled_deflate_geotiff_roundtrip(tmp_path):
 
 
 def test_export_tiled_profile(spark, sf_dir, tmp_path):
-    """K1 with the reference's tiled-deflate profile end to end."""
+    """K1 writes the reference's tiled-deflate-predictor-3 profile end
+    to end."""
     ndvi_tiles = _ndvi_tiles(spark, sf_dir)
-    receipts = raster.export_scene_geotiffs(
-        ndvi_tiles, str(tmp_path), profile="tiled"
-    ).collect()
+    receipts = raster.export_scene_geotiffs(ndvi_tiles, str(tmp_path)).collect()
     assert receipts
     for r in receipts:
         arr, meta = raster.read_geotiff(r.path)
         assert arr.shape == (r.height, r.width)
         assert meta["nodata"] == raster.NODATA
+        with open(r.path, "rb") as fh:
+            blob = fh.read()
+        en, _, ifds = TF.parse_tiff_ifds(blob)
+        tags = ifds[0]
+        assert TF._tag1(blob, en, tags, TF.T_TILE_WIDTH) == 256
+        assert TF._tag1(blob, en, tags, TF.T_COMPRESSION) == 8
+        assert TF._tag1(blob, en, tags, TF.T_PREDICTOR) == 3
 
 
 def test_scan_handles_tiled_profile_files(spark, tmp_path):
@@ -321,8 +362,9 @@ def test_scan_handles_tiled_profile_files(spark, tmp_path):
         nir = rng.integers(0, 60000, size=(70, 90)).astype(np.float32)
         raster.write_geotiff(red, str(tmp_path / "a" / f"{s}_red.tif"))
         raster.write_geotiff(nir, str(tmp_path / "a" / f"{s}_nir.tif"))
-        raster.write_geotiff_tiled(red, str(tmp_path / "b" / f"{s}_red.tif"), tile=32)
-        raster.write_geotiff_tiled(nir, str(tmp_path / "b" / f"{s}_nir.tif"), tile=32)
+        profile = {**raster.REFERENCE_PROFILE, "tile": 32}
+        _write_tiled(red, str(tmp_path / "b" / f"{s}_red.tif"), **profile)
+        _write_tiled(nir, str(tmp_path / "b" / f"{s}_nir.tif"), **profile)
 
     def stats(d):
         return {

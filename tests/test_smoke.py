@@ -10,3 +10,25 @@ def test_all_tables_readable(spark, sf_dir):
         df = load_table(spark, name, sf_dir)
         assert len(df.columns) > 0
         assert df.limit(1).count() == 1
+
+
+def test_stale_slow_list_entries_are_reported(tmp_path):
+    """conftest flags slow_tests.txt entries that match no collected
+    test in a collected (or deleted) file, and ignores files this run
+    did not collect."""
+    from conftest import stale_slow_ids
+
+    (tmp_path / "tests").mkdir()
+    for name in ("test_a.py", "test_b.py"):
+        (tmp_path / "tests" / name).write_text("")
+    slow = {
+        "tests/test_a.py::test_kept",
+        "tests/test_a.py::test_renamed",
+        "tests/test_b.py::test_not_collected_this_run",
+        "tests/test_gone.py::test_deleted_file",
+    }
+    nodeids = ["tests/test_a.py::test_kept", "tests/test_a.py::test_fast"]
+    assert stale_slow_ids(slow, nodeids, str(tmp_path)) == [
+        "tests/test_a.py::test_renamed",
+        "tests/test_gone.py::test_deleted_file",
+    ]

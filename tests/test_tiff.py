@@ -124,10 +124,9 @@ def test_roundtrip_matrix(dtype, compression, predictor, big_endian):
 
 
 def test_raster_decode_falls_back_to_general_codec():
-    """operators/raster.py::decode_geotiff_bytes must transparently
-    decode the uint16-LZW golden (casting DN → float32, the
-    reference's read-time cast, compute_ndvi.py:43-44) while keeping
-    the fast path for the engine's own profile."""
+    """operators/raster.py::decode_geotiff_bytes decodes the
+    uint16-LZW golden, casting DN → float32 (the reference's read-time
+    cast, compute_ndvi.py:43-44)."""
     from ndvi_etl_pipeline_spark.operators.raster import decode_geotiff_bytes
 
     rng = np.random.default_rng(20220606)
@@ -142,10 +141,10 @@ def test_raster_decode_falls_back_to_general_codec():
 
 def test_int32_without_sampleformat_not_misread_as_float():
     """A 32-bit integer TIFF may legally OMIT SampleFormat (optional
-    tag, spec default 1 = unsigned int). The raster fast path must not
-    default the absent tag to 3 (float) — that would satisfy its
-    bits==32/sfmt==3 guard and reinterpret the integer payload as
-    '<f4' garbage instead of falling through to the general codec."""
+    tag, spec default 1 = unsigned int). decode_geotiff_bytes must not
+    default the absent tag to 3 (float) — that would reinterpret the
+    integer payload as '<f4' garbage instead of casting the integers
+    to float32."""
     import struct
 
     from ndvi_etl_pipeline_spark.operators.raster import decode_geotiff_bytes
@@ -154,7 +153,7 @@ def test_int32_without_sampleformat_not_misread_as_float():
     a = rng.integers(0, 2**31 - 1, size=(19, 13), dtype=np.uint32)
     blob = bytearray(TF.write_tiff(a, compression="none"))
     # surgically drop the SampleFormat (339) entry: overwrite its code
-    # with an unknown private tag both decoders skip
+    # with an unknown private tag the decoder skips
     ifd_off = struct.unpack_from("<I", blob, 4)[0]
     n = struct.unpack_from("<H", blob, ifd_off)[0]
     hit = False
@@ -226,8 +225,8 @@ def test_bigtiff_roundtrip_with_overview(big_endian):
 
 
 def test_bigtiff_through_raster_scan_fallback():
-    """decode_geotiff_bytes must route BigTIFF through the general
-    codec (the fast path only reads classic II*\\0)."""
+    """decode_geotiff_bytes reads BigTIFF (version 43) as well as
+    classic TIFF."""
     from ndvi_etl_pipeline_spark.operators.raster import decode_geotiff_bytes
 
     rng = np.random.default_rng(4)
