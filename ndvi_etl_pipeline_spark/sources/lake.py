@@ -542,8 +542,8 @@ def _rec_sig(path: str, version: int):
     return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
-def _cache_put(cache: dict, key, val) -> None:
-    if len(cache) >= _SNAP_CACHE_MAX:
+def _cache_put(cache: dict, key, val, cap: int | None = None) -> None:
+    if len(cache) >= (_SNAP_CACHE_MAX if cap is None else cap):
         cache.pop(next(iter(cache)))
     cache[key] = val
 
@@ -1097,6 +1097,29 @@ def _write_data_files(
     return entries
 
 
+def _local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side `rows` (tuples or Rows in `schema` field order; may
+    be empty) as an Arrow-backed LocalRelation.
+
+    Why: `spark.createDataFrame(<python list>)` pickles the rows into
+    an RDD, so every job touching the relation plans `Scan
+    ExistingRDD` and starts a Python-worker stage. A pyarrow table
+    lands as a `LocalTableScan` instead: collecting a projection of it
+    runs no job (Catalyst folds the projection into the local rows),
+    and broadcasting it ships no Python RDD."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 #: Reserved column names DV bookkeeping rides on; user tables must
 #: not use them (asserted at dv-delete time).
 _DV_FILE, _DV_POS = "__dv_file", "__dv_pos"
@@ -1135,14 +1158,38 @@ def _dv_keying(spark: SparkSession) -> str:
 #: string path.
 _DV_SAFE_PATH = re.compile(r"^[A-Za-z0-9/._=~-]+$")
 _DV_URI_PREFIX: dict[str, str | None] = {}
-_DV_HASH_OK: dict[tuple, bool] = {}
+
+#: The DV caches are FIFO-bounded (`_cache_put`). The two entry-set
+#: caches (_DV_HASHES, _DV_PACK) are keyed on a snapshot's whole file
+#: list, so a long-running writer (a streaming sink commits per batch)
+#: would otherwise grow them O(commits x files); they share the
+#: snapshot caches' bound. The per-file footer cache is bounded well
+#: above any one snapshot's file count so a single read never
+#: thrashes it.
+_DV_FILE_ROWS_MAX = 1 << 16
+_DV_HASHES: dict[tuple, dict | None] = {}
+
+
+def _dv_raw_hashes(spark: SparkSession, raws: dict[str, str]) -> dict:
+    """{entry rel -> Spark's xxhash64 of its predicted raw file path}.
+    Spark computes the hash — the SAME expression the table side
+    evaluates per row — so there is one hash implementation and no
+    driver/executor mismatch to over- or under-delete rows. The
+    relation is local, so this collect runs no job."""
+    return dict(
+        _local_df(
+            spark, sorted(raws.items()), f"{_DV_FILE} string, __dv_raw string"
+        )
+        .select(_DV_FILE, F.xxhash64("__dv_raw"))
+        .collect()
+    )
 
 
 def _dv_hash_map(spark: SparkSession, path: str, rels: list[str]):
-    """(entry rel -> xxhash64 of the RAW `_metadata.file_path` string
-    that file will report) mapping DataFrame for hash-keyed DV
-    anti-joins — or None when the fast path cannot be trusted and the
-    read must fall back to the decoded-string keying.
+    """{entry rel -> xxhash64 of the RAW `_metadata.file_path` string
+    that file will report} for hash-keyed DV anti-joins — or None when
+    the fast path cannot be trusted and the read must fall back to the
+    decoded-string keying.
 
     Why: the in-debt DV read's measured dominator at 600 M rows is
     the per-row url_decode/regexp normalization chain of
@@ -1157,9 +1204,12 @@ def _dv_hash_map(spark: SparkSession, path: str, rels: list[str]):
     - every entry path must be in `_DV_SAFE_PATH` (chars a file URI
       reports verbatim), so prefix+abspath is exact for ALL files,
       not just the probed one;
-    - the hash map must be collision-free (checked once per entry
-      set with a manifest-scale aggregate; a 64-bit collision would
-      over-delete rows of an unrelated file).
+    - the hashes must be collision-free across the entry set, checked
+      on the driver over the collected map (cached per entry set; a
+      64-bit collision would over-delete rows of an unrelated file).
+
+    A probe that raises or finds no row is not cached: that read falls
+    back, and the next one probes again.
     """
     if _dv_keying(spark) == "decoded":
         return None
@@ -1176,69 +1226,69 @@ def _dv_hash_map(spark: SparkSession, path: str, rels: list[str]):
                 .limit(1)
                 .collect()
             )
-            raw = row[0][0] if row else None
         except Exception:
-            raw = None
+            return None
+        if not row:
+            return None
+        raw = row[0][0]
         _DV_URI_PREFIX[root] = (
-            raw[: len(raw) - len(probe)]
-            if raw and raw.endswith(probe)
-            else None
+            raw[: len(raw) - len(probe)] if raw.endswith(probe) else None
         )
     pref = _DV_URI_PREFIX[root]
     if pref is None:
         return None
-    hm = spark.createDataFrame(
-        [(r, pref + a) for r, a in zip(rels, abss)],
-        f"{_DV_FILE} string, __dv_raw string",
-    ).select(_DV_FILE, F.xxhash64("__dv_raw").alias(_DV_H))
     # key on the rels tuple ITSELF (not its Python hash): a hash
     # collision between two rel sets would silently serve the wrong
     # answer — here over/under-deleting rows (round-9 ADVICE)
     key = (root, tuple(rels))
-    if key not in _DV_HASH_OK:
-        c = hm.agg(
-            F.count(F.lit(1)).alias("n"), F.countDistinct(_DV_H).alias("d")
-        ).first()
-        _DV_HASH_OK[key] = c.n == c.d
-    return hm if _DV_HASH_OK[key] else None
+    if key in _DV_HASHES:
+        return _DV_HASHES[key]
+    hashes = _dv_raw_hashes(spark, {r: pref + a for r, a in zip(rels, abss)})
+    if len(set(hashes.values())) != len(hashes):
+        hashes = None
+    _cache_put(_DV_HASHES, key, hashes)
+    return hashes
 
 
 _DV_PACK: dict[tuple, tuple | None] = {}
 #: num_rows per ABSOLUTE file path, from the parquet footer. Files in
-#: a committed snapshot are immutable, so this never invalidates; the
-#: sentinel None records an unreadable footer. Caching per FILE (not
-#: per entry subset) means distinct pruned subsets of one table share
-#: the footer walk instead of re-reading shared files (round-9 ADVICE).
-_DV_FILE_ROWS: dict[str, int | None] = {}
+#: a committed snapshot are immutable, so an entry never invalidates;
+#: an unreadable footer is not cached (the next read retries it).
+#: Caching per FILE (not per entry subset) means distinct pruned
+#: subsets of one table share the footer walk instead of re-reading
+#: shared files.
+_DV_FILE_ROWS: dict[str, int] = {}
 
 
 def _dv_posbits(path: str, rels: list[str]) -> int | None:
     """Bits needed to hold any row ordinal of any entry file: max over
     files of bit_length(num_rows - 1), from parquet footer metadata
     alone (O(#files) driver work, footer reads cached per file). None
-    when a footer is unreadable — packing is then unavailable and the
-    read keys on the two-column form."""
+    when a footer is unreadable — packing is then unavailable for
+    this read and it keys on the two-column form."""
     root = os.path.abspath(path)
     import pyarrow.parquet as pq
 
     mx = 1
     for r in rels:
         p = r if os.path.isabs(r) else os.path.join(root, r)
-        if p not in _DV_FILE_ROWS:
-            try:
-                _DV_FILE_ROWS[p] = pq.ParquetFile(p).metadata.num_rows
-            except Exception:
-                _DV_FILE_ROWS[p] = None
-        n = _DV_FILE_ROWS[p]
+        n = _DV_FILE_ROWS.get(p)
         if n is None:
-            return None
+            try:
+                n = pq.ParquetFile(p).metadata.num_rows
+            except Exception:
+                return None
+            _cache_put(_DV_FILE_ROWS, p, n, _DV_FILE_ROWS_MAX)
         mx = max(mx, n)
     return max((mx - 1).bit_length(), 1)
 
 
-def _dv_pack_base(spark: SparkSession, path: str, rels: list[str], hm):
+def _dv_pack_base(
+    spark: SparkSession, path: str, rels: list[str], hashes: dict
+):
     """(posbits, hash mask, {entry rel -> packed base}) for the
     SINGLE-long exact DV key, or None when packing cannot be verified.
+    `hashes` is `_dv_hash_map`'s verified {rel -> xxhash64} map.
 
     Why: a BroadcastHashJoin whose key is ONE long probes Spark's
     LongHashedRelation (primitive open-addressing map); two long keys
@@ -1259,25 +1309,26 @@ def _dv_pack_base(spark: SparkSession, path: str, rels: list[str], hm):
     truncation collision, ordinal width leaving no hash bits) returns
     None and the read falls back to the two-column keying. Top bit is
     always 0 (posbits + hashbits = 63), so the packed key is
-    non-negative and overflow-free."""
+    non-negative and overflow-free. An unreadable footer is not
+    cached, so a later read packs once the footer reads."""
     if _dv_keying(spark) != "auto":
         return None
     root = os.path.abspath(path)
     key = (root, tuple(rels))
     if key in _DV_PACK:
         return _DV_PACK[key]
-    out = None
     posbits = _dv_posbits(path, rels)
-    if posbits is not None and posbits < 63:
+    if posbits is None:
+        return None
+    out = None
+    if posbits < 63:
         mask = (1 << (63 - posbits)) - 1
         # python & on a negative (two's-complement) long equals the
         # JVM's bigint AND for a non-negative mask — same bit pattern
-        bases = {
-            r[_DV_FILE]: (r[_DV_H] & mask) << posbits for r in hm.collect()
-        }
+        bases = {r: (h & mask) << posbits for r, h in hashes.items()}
         if len(set(bases.values())) == len(bases):
             out = (posbits, mask, bases)
-    _DV_PACK[key] = out
+    _cache_put(_DV_PACK, key, out)
     return out
 
 #: Above this many live deletion-vector rows the read path stops
@@ -1389,7 +1440,7 @@ def _read_entries(
     dvs = (manifest.get("dvs") or []) if apply_dvs else []
     want_meta = keep_meta or bool(dvs)
     if not entries:
-        out = spark.createDataFrame([], log_schema)
+        out = _local_df(spark, [], log_schema)
         if keep_meta:
             out = out.withColumn(_DV_FILE, F.lit(None).cast("string"))
             out = out.withColumn(_DV_POS, F.lit(None).cast("bigint"))
@@ -1496,7 +1547,8 @@ def _read_entries(
             # through a broadcast manifest-scale map and ORs in the
             # ordinal; the table side packed at the scan.
             posbits, mask, bases = dv_pack
-            base_df = spark.createDataFrame(
+            base_df = _local_df(
+                spark,
                 sorted(bases.items()),
                 f"{_DV_FILE} string, __dv_base bigint",
             )
@@ -1516,7 +1568,12 @@ def _read_entries(
             # past it the anti-join sheds the hint and shuffles
             # (lake_maintain's max_dv_rows drain compacts long
             # before).
-            dv_keys = dv_df.join(F.broadcast(dv_hash), [_DV_FILE]).select(
+            hash_df = _local_df(
+                spark,
+                sorted(dv_hash.items()),
+                f"{_DV_FILE} string, {_DV_H} bigint",
+            )
+            dv_keys = dv_df.join(F.broadcast(hash_df), [_DV_FILE]).select(
                 _DV_H, _DV_POS
             )
             if n_dv <= _DV_FID_BROADCAST_MAX_ROWS:
@@ -1541,7 +1598,8 @@ def _read_entries(
             # planner shuffles; lake_maintain's max_dv_rows drain
             # compacts long before that.
             fid = "__dv_fid"
-            id_df = spark.createDataFrame(
+            id_df = _local_df(
+                spark,
                 [(r, i) for i, r in enumerate(rels)],
                 f"{_DV_FILE} string, {fid} int",
             )
@@ -2089,8 +2147,8 @@ def _plan_files_spark(
         if pr is not None:
             keep = keep & ~F.coalesce(pr, F.lit(False))
     if removed:
-        rm_df = spark.createDataFrame(
-            [(p,) for p in sorted(removed)], "path string"
+        rm_df = _local_df(
+            spark, [(p,) for p in sorted(removed)], "path string"
         )
         df = df.join(F.broadcast(rm_df), "path", "left_anti")
     rows = df.filter(keep).select(
@@ -2482,7 +2540,7 @@ def lake_read_cdf(
                 T.StructField("_commit_version", T.IntegerType()),
             ]
         )
-        return spark.createDataFrame([], empty)
+        return _local_df(spark, [], empty)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .lake import (
     _latest_version,
+    _local_df,
     _read_manifest,
     lake_delete,
     lake_delete_keys,
@@ -185,8 +186,8 @@ def _table_path(name: str, tables: dict[str, str]) -> str:
 
 
 def _dml_result(spark: SparkSession, op: str, version: int) -> DataFrame:
-    return spark.createDataFrame(
-        [Row(op=op, version=int(version))], "op string, version bigint"
+    return _local_df(
+        spark, [Row(op=op, version=int(version))], "op string, version bigint"
     )
 
 
@@ -629,7 +630,8 @@ def _run_maintenance(
             )
             for h in hist
         ]
-        return spark.createDataFrame(
+        return _local_df(
+            spark,
             rows,
             "version bigint, op string, ts double, n_rows_delta bigint",
         )
@@ -651,7 +653,8 @@ def _run_maintenance(
         if m.group(2) is not None:
             kwargs["retention_seconds"] = float(m.group(2)) * 3600.0
         deleted = lake_vacuum(path, **kwargs)
-        return spark.createDataFrame(
+        return _local_df(
+            spark,
             [Row(op="vacuum", n_deleted=len(deleted))],
             "op string, n_deleted bigint",
         )

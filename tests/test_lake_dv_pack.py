@@ -8,7 +8,8 @@ LongHashedRelation fast path; two long keys force UnsafeHashedRelation
 (per-probe UnsafeRow projection + byte compare), measured ~10x slower
 per row at 60 M rows (tools/bench_dv_decomp.py). The packing must
 never trade that speed for correctness — these tests pin the verified
-fallbacks."""
+fallbacks, the bounded caches behind them, and the driver-side maps
+built as local relations (`_local_df`), which plan no job."""
 
 import pyspark.sql.functions as F
 
@@ -189,3 +190,162 @@ def test_packed_keep_meta_chained_deletes(spark, tmp_path):
     assert got == [k for k in range(1, 30, 2) if k % 3 != 0]
     cols = lake_read(spark, t).columns
     assert "__dv_k" not in cols and "__dv_h" not in cols
+
+
+def _entry_files(t):
+    import os
+
+    m = L._read_manifest(t, L._latest_version(t))
+    return {os.path.join(t, L._entry_rel(e)) for e in m["files"]}
+
+
+def test_unreadable_footer_is_not_cached(spark, tmp_path, monkeypatch):
+    """A footer read that fails once must cost packing for that read
+    only: the next read re-reads the footer and packs."""
+    import pyarrow.parquet as pq
+
+    t = str(tmp_path / "t")
+    lake_write(_df(spark, [(i, "v") for i in range(40)]).coalesce(2), t)
+    lake_delete(spark, t, F.col("k") % 4 == 0, strategy="dv")
+    files, real, failed = _entry_files(t), pq.ParquetFile, []
+
+    def flaky(src, *a, **kw):
+        if not failed and src in files:
+            failed.append(src)
+            raise OSError("transient footer read failure")
+        return real(src, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", flaky)
+    want = [k for k in range(40) if k % 4]
+    first = lake_read(spark, t)
+    assert failed and "__dv_k" not in _plan(first)
+    assert sorted(r.k for r in first.collect()) == want
+    second = lake_read(spark, t)
+    assert "__dv_k" in _plan(second)
+    assert sorted(r.k for r in second.collect()) == want
+
+
+def test_failed_uri_probe_is_not_cached(spark, tmp_path, monkeypatch):
+    """A URI-prefix probe that raises once falls back to decoded keying
+    for that read only; the next read probes again and packs."""
+    from pyspark.sql import DataFrameReader
+
+    t = str(tmp_path / "t")
+    lake_write(_df(spark, [(i, "v") for i in range(20)]).coalesce(1), t)
+    lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
+    files, real, failed = _entry_files(t), DataFrameReader.parquet, []
+
+    def flaky(self, *paths, **kw):
+        if not failed and len(paths) == 1 and paths[0] in files:
+            failed.append(paths[0])
+            raise OSError("transient probe failure")
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", flaky)
+    want = list(range(1, 20, 2))
+    first = lake_read(spark, t)
+    assert failed and "UrlCodec" in _plan(first)
+    assert sorted(r.k for r in first.collect()) == want
+    second = lake_read(spark, t)
+    assert "__dv_k" in _plan(second)
+    assert sorted(r.k for r in second.collect()) == want
+
+
+def test_dv_caches_are_bounded(spark, tmp_path, monkeypatch):
+    """Every commit makes a new entry set; after bound + 1 distinct
+    sets the entry-set caches and the per-file footer cache hold at
+    most their bound, and every read is still exact."""
+    monkeypatch.setattr(L, "_SNAP_CACHE_MAX", 2)
+    monkeypatch.setattr(L, "_DV_FILE_ROWS_MAX", 3)
+    for name in ("_DV_HASHES", "_DV_PACK", "_DV_FILE_ROWS"):
+        monkeypatch.setattr(L, name, {})
+    t = str(tmp_path / "t")
+    lake_write(_df(spark, [(i, "v") for i in range(10)]).coalesce(1), t)
+    lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
+    want = set(range(1, 10, 2))
+    for n in range(L._SNAP_CACHE_MAX + 1):
+        lo = 10 * (n + 1)
+        lake_write(_df(spark, [(i, "v") for i in range(lo, lo + 10)]), t)
+        want |= set(range(lo, lo + 10))
+        df = lake_read(spark, t)
+        assert "__dv_k" in _plan(df)
+        assert sorted(r.k for r in df.collect()) == sorted(want)
+    assert len(L._DV_HASHES) <= L._SNAP_CACHE_MAX
+    assert len(L._DV_PACK) <= L._SNAP_CACHE_MAX
+    assert len(L._DV_FILE_ROWS) <= L._DV_FILE_ROWS_MAX
+
+
+def test_full_hash_collision_falls_back_to_decoded(
+    spark, tmp_path, monkeypatch
+):
+    """Two entry files whose full 64-bit raw-path hashes collide must
+    not be hash-keyed at all (a DV row of one would delete the same
+    ordinal of the other): the read takes decoded-string keying."""
+    t = str(tmp_path / "t")
+    lake_write(_df(spark, [(i, "v") for i in range(60)]).coalesce(3), t)
+    lake_delete(spark, t, F.col("k") % 3 == 0, strategy="dv")
+    real = L._dv_raw_hashes
+
+    def colliding(spark, raws):
+        hashes = real(spark, raws)
+        first = next(iter(hashes.values()))
+        return {r: first for r in hashes}
+
+    monkeypatch.setattr(L, "_dv_raw_hashes", colliding)
+    df = lake_read(spark, t)
+    plan = _plan(df)
+    assert "__dv_h" not in plan and "__dv_k" not in plan
+    assert "UrlCodec" in plan
+    assert sorted(r.k for r in df.collect()) == [
+        k for k in range(60) if k % 3
+    ]
+
+
+def test_dv_read_planning_runs_no_job(spark, tmp_path):
+    """Once a table's URI prefix is known, planning a DV read over a
+    new entry set — hash map, collision check, pack bases — launches
+    no Spark job and no plan node scans a Python RDD."""
+    t = str(tmp_path / "t")
+    lake_write(_df(spark, [(i, "v") for i in range(60)]).coalesce(3), t)
+    lake_delete(spark, t, F.col("k") % 2 == 0, strategy="dv")
+    lake_read(spark, t).collect()  # probes and caches the URI prefix
+    lake_delete(spark, t, F.col("k") % 3 == 0, strategy="dv")
+    # an append makes an entry set no cache has seen
+    lake_write(_df(spark, [(i, "v") for i in range(60, 70)]), t)
+    sc = spark.sparkContext
+    group = f"dv-plan-{tmp_path.name}"
+    sc.setJobGroup(group, "plan a DV read")
+    try:
+        df = lake_read(spark, t)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    qe = df._jdf.queryExecution()
+    assert "__dv_k" in qe.optimizedPlan().toString()
+    assert "ExistingRDD" not in qe.executedPlan().toString()
+    assert sorted(r.k for r in df.collect()) == [
+        k for k in range(60) if k % 2 and k % 3
+    ] + list(range(60, 70))
+
+
+def test_local_df_matches_create_dataframe(spark):
+    """`_local_df` is a drop-in for `createDataFrame(list, schema)` on
+    the types its callers pass: same schema, same rows, None kept,
+    Row input, DDL or StructType schema, and the empty list."""
+    from pyspark.sql import Row
+
+    ddl = "s string, i int, b bigint, d double"
+    rows = [("a", 1, 2**40, 0.5), (None, None, None, None), ("c", -3, 7, 1e300)]
+    cases = [
+        (rows, ddl),
+        ([Row(s="x", i=4, b=5, d=6.0)], ddl),
+        ([], ddl),
+        (rows, spark._parse_ddl(ddl)),
+        ([], spark._parse_ddl(ddl)),
+    ]
+    for data, schema in cases:
+        got = L._local_df(spark, data, schema)
+        ref = spark.createDataFrame(data, schema)
+        assert got.schema == ref.schema
+        assert got.collect() == ref.collect()

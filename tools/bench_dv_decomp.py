@@ -70,6 +70,7 @@ def main() -> int:
         _DV_SCHEMA,
         _dv_hash_map,
         _latest_version,
+        _local_df,
         _read_manifest,
         lake_delete,
         lake_read,
@@ -153,8 +154,11 @@ def main() -> int:
         .collect()
     )
 
-    hm = _dv_hash_map(spark, table, rels)
-    assert hm is not None
+    hashes = _dv_hash_map(spark, table, rels)
+    assert hashes is not None
+    hm = _local_df(
+        spark, sorted(hashes.items()), f"{_DV_FILE} string, __dv_h bigint"
+    )
     dv_keys = dv_df.join(F.broadcast(hm), [_DV_FILE]).select(
         "__dv_h", _DV_POS
     )
