@@ -155,7 +155,7 @@ def lsh_bands(
     (LongHashedRelation fast path for hashed joins; single 8-byte
     sort key for sort-merge) instead of an (int, string) pair —
     the same ~10x-per-probe win measured for the DV anti-join
-    (tools/bench_dv_decomp.py). Wide configurations that cannot pack
+    at 60 M rows. Wide configurations that cannot pack
     keep the md5-string key (band_idx then distinguishes bands).
     """
     rows_per_band = num_hashes // bands

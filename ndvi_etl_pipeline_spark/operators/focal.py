@@ -29,22 +29,11 @@ from collections.abc import Callable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
-from .warp import TILE_STRIP_SCHEMA
+from .warp import WARP_TILE_SCHEMA, _halo_canvas, _halo_strips
 
-FOCAL_TILE_SCHEMA = T.StructType(
-    [
-        T.StructField("scene_id", T.StringType()),
-        T.StructField("tile_y", T.IntegerType()),
-        T.StructField("tile_x", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("y0", T.IntegerType()),
-        T.StructField("x0", T.IntegerType()),
-        T.StructField("data", T.BinaryType()),
-    ]
-)
+# tile form without band or partials — the tiled warp's output rows
+FOCAL_TILE_SCHEMA = WARP_TILE_SCHEMA
 
 
 def focal_mean_3x3(canvas: np.ndarray) -> np.ndarray:
@@ -86,76 +75,23 @@ def focal_map_tiled(
     5×5 ⇒ halo 2). Input tiles must be the codec's uniform tile grid
     (pixels_to_tiles pads edge tiles to full size with NaN).
 
-    Cites operators/warp.py::warp_bilinear_tiled for the exchange
-    pattern; this is the same two-stage plan with an identity
-    destination mapping.
+    Shares operators/warp.py::warp_bilinear_tiled's halo exchange
+    (`_halo_strips` + `_halo_canvas`); this is the same two-stage plan
+    with an identity destination mapping.
     """
     first = tiles.select("height").first()
     if first is None:
         return tiles.sparkSession.createDataFrame([], FOCAL_TILE_SCHEMA)
-    P = int(first.height)
-    if not 0 < halo < P:
-        raise ValueError(f"halo must be in (0, {P}), got {halo}")
-
-    def emit(batches):
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=np.float32).reshape(
-                    row.height, row.width
-                )
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        rty, rtx = row.tile_y + dy, row.tile_x + dx
-                        if rty < 0 or rtx < 0:
-                            continue
-                        if dy == 0:
-                            rs, re = 0, row.height
-                        elif dy == -1:
-                            rs, re = 0, halo
-                        else:
-                            rs, re = row.height - halo, row.height
-                        if dx == 0:
-                            cs, ce = 0, row.width
-                        elif dx == -1:
-                            cs, ce = 0, halo
-                        else:
-                            cs, ce = row.width - halo, row.width
-                        strip = np.ascontiguousarray(arr[rs:re, cs:ce])
-                        rows.append(
-                            {
-                                "scene_id": row.scene_id,
-                                "recv_ty": rty,
-                                "recv_tx": rtx,
-                                "y0": row.y0 + rs,
-                                "x0": row.x0 + cs,
-                                "height": strip.shape[0],
-                                "width": strip.shape[1],
-                                "data": strip.tobytes(),
-                            }
-                        )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    strips = tiles.mapInPandas(emit, schema=TILE_STRIP_SCHEMA)
+    if not 0 < halo < first.height:
+        raise ValueError(f"halo must be in (0, {first.height}), got {halo}")
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         scene_id, rty, rtx = key
-        empty = pd.DataFrame(columns=[f.name for f in FOCAL_TILE_SCHEMA])
         # a receiver with no full-size strip is a phantom neighbor
         # index past the grid edge (dy/dx overshoot) — drop it
-        if not ((pdf["height"] == P) & (pdf["width"] == P)).any():
-            return empty
-        oy, ox = int(rty) * P - halo, int(rtx) * P - halo
-        canvas = np.full((P + 2 * halo, P + 2 * halo), np.nan, dtype=np.float64)
-        for row in pdf.itertuples(index=False):
-            a = np.frombuffer(row.data, dtype=np.float32).reshape(
-                row.height, row.width
-            )
-            canvas[
-                row.y0 - oy : row.y0 - oy + row.height,
-                row.x0 - ox : row.x0 - ox + row.width,
-            ] = a
+        if not ((pdf["height"] == pdf["tile"]) & (pdf["width"] == pdf["tile"])).any():
+            return pd.DataFrame(columns=[f.name for f in FOCAL_TILE_SCHEMA])
+        canvas, P, _, _ = _halo_canvas(key, pdf, halo)
         core = kernel(canvas)
         if core.shape != (P, P):
             raise ValueError(
@@ -177,6 +113,6 @@ def focal_map_tiled(
             ]
         )
 
-    return strips.groupBy("scene_id", "recv_ty", "recv_tx").applyInPandas(
+    return _halo_strips(tiles, halo).groupBy("scene_id", "recv_ty", "recv_tx").applyInPandas(
         assemble, schema=FOCAL_TILE_SCHEMA
     )

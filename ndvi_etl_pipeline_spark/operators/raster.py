@@ -14,7 +14,9 @@ The engine carries rasters in two representations:
 
 Payload encoding: row-major float32, little-endian, NaN = "cell
 absent/nodata". BinaryType keeps the bytes opaque to Catalyst (no
-per-pixel serialization cost through shuffles).
+per-pixel serialization cost through shuffles). Every narrow tile
+kernel crosses into Python through one helper, `_map_rows`
+(`mapInArrow`, payloads read in place as zero-copy memoryviews).
 
 GeoTIFF: `write_geotiff`/`read_geotiff`/`decode_geotiff_bytes` are
 thin entry points into the engine's one pure-Python TIFF codec
@@ -31,8 +33,6 @@ load_to_postgis.py:189-192); the NDVI tile kernel = P1-P6
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -74,6 +74,126 @@ NDVI_TILE_SCHEMA = T.StructType(
         T.StructField("sum_ndvi", T.DoubleType()),
     ]
 )
+
+
+# ---------------------------------------------------------------------------
+# the Arrow tile-kernel boundary: every narrow kernel crosses it here
+# ---------------------------------------------------------------------------
+
+
+def _tile(buf, h: int, w: int) -> np.ndarray:
+    """A float32 tile payload as an (h, w) array view — no copy."""
+    return np.frombuffer(buf, dtype=np.float32).reshape(h, w)
+
+
+def _record_batch(rows: list[tuple], schema):
+    """Output row tuples (in `schema` field order) → one Arrow record
+    batch. A column whose first value is a numpy array holds one array
+    per row; each row then stands for that many output rows with its
+    scalar fields repeated — how a tile explodes to pixels."""
+    import pyarrow as pa
+
+    if not rows:
+        return pa.RecordBatch.from_pylist([], schema=schema)
+    cols = list(zip(*rows))
+    sizes = next(
+        (np.fromiter(map(len, c), np.int64, len(c)) for c in cols if isinstance(c[0], np.ndarray)),
+        None,
+    )
+    arrays = []
+    for c, f in zip(cols, schema):
+        if sizes is None:
+            v = list(c)
+        elif isinstance(c[0], np.ndarray):
+            v = np.concatenate(c)
+        else:
+            v = np.repeat(np.asarray(c, dtype=object), sizes)
+        arrays.append(pa.array(v, type=f.type))
+    return pa.record_batch(arrays, schema=schema)
+
+
+def _map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """The one Python boundary of the narrow tile kernels: `mapInArrow`
+    over `df`, calling `fn(row)` per input row and gathering the output
+    row tuples it returns (in `schema` order) into one record batch per
+    input batch, typed by the Arrow twin of `schema`.
+
+    `row` is a namedtuple of the row's fields as Python values, except
+    binary columns, which arrive as zero-copy memoryviews of the Arrow
+    buffer — read a payload with `_tile`, never as a bytes copy. Select
+    only the columns the kernel reads: every column crosses."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    names = df.columns
+
+    def run(batches):
+        from collections import namedtuple
+
+        import pyarrow as pa
+
+        Row = namedtuple("Row", names)
+        for batch in batches:
+            cols = [
+                [None if v is None else memoryview(v) for v in (s.as_buffer() for s in c)]
+                if pa.types.is_binary(c.type)
+                else c.to_pylist()
+                for c in batch.columns
+            ]
+            rows = [out for vals in zip(*cols) for out in fn(Row(*vals))]
+            yield _record_batch(rows, arrow_schema)
+
+    return df.mapInArrow(run, schema=schema)
+
+
+def _pool2(a: np.ndarray) -> np.ndarray:
+    """NaN-aware 2×2 average pooling (float64); a block with no valid
+    cell stays NaN."""
+    h, w = a.shape
+    blocks = a.reshape(h // 2, 2, w // 2, 2)
+    with np.errstate(invalid="ignore"):
+        s = np.nansum(blocks, axis=(1, 3))
+        c = np.sum(~np.isnan(blocks), axis=(1, 3))
+        return np.divide(s, c, out=np.full(s.shape, np.nan), where=c > 0)
+
+
+def _ring_mask(rings):
+    """The one AOI tile mask: `mask(y0, x0, h, w)` → the (h, w) bool
+    membership of that tile extent's pixel centres in an even-odd RING
+    SET (a polygon plus its holes, or a dissolved multi-feature AOI).
+
+    Membership is the parity of per-ring ray casts over the whole set,
+    so holes cut cavities and islands re-include exactly; a bbox
+    prefilter skips the ray cast outside the set's extent. Masks are
+    cached per extent — a tile grid repeats its extents scene after
+    scene. Rings are [(x, y), ...] point lists or flat [x0, y0, ...]
+    arrays; `mask.bbox` is the set's (minx, miny, maxx, maxy)."""
+    from ..functions.geo import _ray_cast_numpy
+
+    flats = [np.asarray(r, dtype=np.float64).ravel() for r in rings]
+    minx = min(float(f[0::2].min()) for f in flats)
+    miny = min(float(f[1::2].min()) for f in flats)
+    maxx = max(float(f[0::2].max()) for f in flats)
+    maxy = max(float(f[1::2].max()) for f in flats)
+    cache: dict[tuple[int, int, int, int], np.ndarray] = {}
+
+    def mask(y0: int, x0: int, h: int, w: int) -> np.ndarray:
+        key = (y0, x0, h, w)
+        hit = cache.get(key)
+        if hit is None:
+            px = np.broadcast_to(np.arange(x0, x0 + w, dtype=np.float64), (h, w)).ravel()
+            py = np.repeat(np.arange(y0, y0 + h, dtype=np.float64), w)
+            inside = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
+            idx = np.nonzero(inside)[0]
+            parity = np.zeros(idx.shape[0], dtype=bool)
+            for flat in flats:
+                parity ^= _ray_cast_numpy(px[idx], py[idx], flat)
+            inside[idx] = parity
+            hit = cache[key] = inside.reshape(h, w)
+        return hit
+
+    mask.bbox = (minx, miny, maxx, maxy)
+    return mask
 
 
 # ---------------------------------------------------------------------------
@@ -126,44 +246,32 @@ def pixels_to_tiles(
 def tiles_to_pixels(tiles: DataFrame, value_name: str = "value") -> DataFrame:
     """Unpack tiles back to pixel rows, dropping NaN (absent) cells.
 
-    mapInPandas — a narrow, streaming transformation: no shuffle, each
-    tile expands independently, so the expansion pipelines into
-    whatever consumes it.
+    A narrow, streaming transformation: no shuffle, each tile expands
+    independently (vectorized, one numpy block per tile), so the
+    expansion pipelines into whatever consumes it.
     """
-    has_band = "band" in tiles.columns
-    fields = [T.StructField("scene_id", T.StringType())]
-    if has_band:
-        fields.append(T.StructField("band", T.StringType()))
-    fields += [
-        T.StructField("y", T.IntegerType()),
-        T.StructField("x", T.IntegerType()),
-        T.StructField(value_name, T.DoubleType()),
-    ]
-    out_schema = T.StructType(fields)
+    keys = ["scene_id", "band"] if "band" in tiles.columns else ["scene_id"]
+    out_schema = T.StructType(
+        [T.StructField(k, T.StringType()) for k in keys]
+        + [
+            T.StructField("y", T.IntegerType()),
+            T.StructField("x", T.IntegerType()),
+            T.StructField(value_name, T.DoubleType()),
+        ]
+    )
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=np.float32).reshape(
-                    row.height, row.width
-                )
-                yy, xx = np.nonzero(~np.isnan(arr))
-                cols = {"scene_id": row.scene_id}
-                if has_band:
-                    cols["band"] = row.band
-                cols.update(
-                    {
-                        "y": (yy + row.y0).astype(np.int32),
-                        "x": (xx + row.x0).astype(np.int32),
-                        value_name: arr[yy, xx].astype(np.float64),
-                    }
-                )
-                frames.append(pd.DataFrame(cols))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def unpack(row):
+        arr = _tile(row.data, row.height, row.width)
+        yy, xx = np.nonzero(~np.isnan(arr))
+        yield (
+            *row[: len(keys)],
+            (yy + row.y0).astype(np.int32),
+            (xx + row.x0).astype(np.int32),
+            arr[yy, xx].astype(np.float64),
+        )
 
-    return tiles.mapInPandas(unpack, schema=out_schema)
+    cols = [*keys, "height", "width", "y0", "x0", "data"]
+    return _map_rows(tiles.select(*cols), unpack, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -195,51 +303,33 @@ def tile_ndvi(band_tiles: DataFrame, red_band: str = "red", nir_band: str = "nir
         n = n.withColumnRenamed(c, f"n_{c}")
     joined = r.join(n, ["scene_id", "tile_y", "tile_x"], "inner")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                red = np.frombuffer(row.r_data, dtype=np.float32).reshape(
-                    row.r_height, row.r_width
-                )
-                nir = np.frombuffer(row.n_data, dtype=np.float32).reshape(
-                    row.n_height, row.n_width
-                )
-                if red.shape != nir.shape:  # P7 grid-compat guard
-                    raise ValueError(
-                        f"grid mismatch for {row.scene_id} tile "
-                        f"({row.tile_y},{row.tile_x}): {red.shape} vs {nir.shape}"
-                    )
-                present = ~np.isnan(red) & ~np.isnan(nir)
-                valid = present & (red != 0) & (nir != 0)
-                red_sr = red.astype(np.float64) * SCALE + OFFSET
-                nir_sr = nir.astype(np.float64) * SCALE + OFFSET
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    ndvi = (nir_sr - red_sr) / (nir_sr + red_sr + EPS)
-                ndvi = np.clip(ndvi, -1.0, 1.0)
-                out = np.full(red.shape, np.nan, dtype=np.float32)
-                out[valid] = ndvi[valid].astype(np.float32)
-                rows.append(
-                    {
-                        "scene_id": row.scene_id,
-                        "tile_y": row.tile_y,
-                        "tile_x": row.tile_x,
-                        "height": row.r_height,
-                        "width": row.r_width,
-                        "y0": row.r_y0,
-                        "x0": row.r_x0,
-                        "data": out.tobytes(),
-                        "n_pixels": int(present.sum()),
-                        "n_valid": int(valid.sum()),
-                        # float64 sum of the float32 ndvi values, matching
-                        # what the pixel path feeds Spark's avg()
-                        "sum_ndvi": float(ndvi[valid].astype(np.float32).astype(np.float64).sum()),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(row):
+        red = _tile(row.r_data, row.r_height, row.r_width)
+        nir = _tile(row.n_data, row.n_height, row.n_width)
+        if red.shape != nir.shape:  # P7 grid-compat guard
+            raise ValueError(
+                f"grid mismatch for {row.scene_id} tile "
+                f"({row.tile_y},{row.tile_x}): {red.shape} vs {nir.shape}"
+            )
+        present = ~np.isnan(red) & ~np.isnan(nir)
+        valid = present & (red != 0) & (nir != 0)
+        red_sr = red.astype(np.float64) * SCALE + OFFSET
+        nir_sr = nir.astype(np.float64) * SCALE + OFFSET
+        with np.errstate(invalid="ignore", divide="ignore"):
+            ndvi = (nir_sr - red_sr) / (nir_sr + red_sr + EPS)
+        ndvi = np.clip(ndvi, -1.0, 1.0)
+        out = np.full(red.shape, np.nan, dtype=np.float32)
+        out[valid] = ndvi[valid].astype(np.float32)
+        yield (
+            row.scene_id, row.tile_y, row.tile_x, row.r_height, row.r_width,
+            row.r_y0, row.r_x0, out.tobytes(),
+            int(present.sum()), int(valid.sum()),
+            # float64 sum of the float32 ndvi values, matching what the
+            # pixel path feeds Spark's avg()
+            float(ndvi[valid].astype(np.float32).astype(np.float64).sum()),
+        )
 
-    return joined.mapInPandas(kernel, schema=NDVI_TILE_SCHEMA)
+    return _map_rows(joined, kernel, NDVI_TILE_SCHEMA)
 
 
 def tile_scene_stats(ndvi_tiles: DataFrame) -> DataFrame:
@@ -273,11 +363,9 @@ def tile_composite(ndvi_tiles: DataFrame, label: str = COMPOSITE_LABEL) -> DataF
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tile_y, tile_x, y0, x0, th, tw = (int(v) for v in key)
-        merged = np.frombuffer(pdf["data"].iloc[0], dtype=np.float32).reshape(th, tw)
+        merged = _tile(pdf["data"].iloc[0], th, tw)
         for buf in pdf["data"].iloc[1:]:
-            merged = np.fmax(
-                merged, np.frombuffer(buf, dtype=np.float32).reshape(th, tw)
-            )
+            merged = np.fmax(merged, _tile(buf, th, tw))
         valid = ~np.isnan(merged)
         return pd.DataFrame(
             [
@@ -339,79 +427,65 @@ def tile_clip_stats_rings(ndvi_tiles: DataFrame, rings) -> DataFrame:
     under both an exterior and its hole. bbox pruning uses the bbox of
     all rings (holes lie inside their exteriors, so this equals the
     union's bbox)."""
-    from ..functions.geo import _ray_cast_numpy, polygon_bbox
+    return _clip_stats(ndvi_tiles, [(0, rings)], ("scene_id",))
 
-    boxes = [polygon_bbox(r) for r in rings]
-    minx = min(b[0] for b in boxes)
-    miny = min(b[1] for b in boxes)
-    maxx = max(b[2] for b in boxes)
-    maxy = max(b[3] for b in boxes)
-    flats = [
-        np.asarray([c for pt in r for c in pt], dtype=np.float64) for r in rings
+
+MULTI_CLIP_SCHEMA = T.StructType(
+    [
+        T.StructField("scene_id", T.StringType()),
+        T.StructField("aoi_id", T.IntegerType()),
+        T.StructField("n_in_aoi", T.LongType()),
+        T.StructField("sum_ndvi", T.DoubleType()),
     ]
+)
 
-    # Sargable tile-extent × polygon-bbox intersection (J3 shape).
-    pruned = ndvi_tiles.filter(
-        (F.col("x0") <= F.lit(maxx))
-        & (F.col("x0") + F.col("width") - 1 >= F.lit(minx))
-        & (F.col("y0") <= F.lit(maxy))
-        & (F.col("y0") + F.col("height") - 1 >= F.lit(miny))
-    )
 
-    part_schema = T.StructType(
-        [
-            T.StructField("scene_id", T.StringType()),
-            T.StructField("n_in_aoi", T.LongType()),
-            T.StructField("sum_ndvi", T.DoubleType()),
-        ]
-    )
+def tile_clip_stats_multi(ndvi_tiles: DataFrame, aois) -> DataFrame:
+    """J2+A1 generalized to MANY AOIs — the reference's actual product
+    shape (ndvi_clipped is keyed (full_id, aoi_id), 002_schema.sql:
+    UNIQUE(full_id,aoi_id)): per-(scene, aoi) masked means in one pass.
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[tuple[int, int, int, int], tuple[np.ndarray, np.ndarray]] = {}
+    `aois` is [(aoi_id, ring), ...]. JVM-side prune keeps tiles whose
+    extent intersects ANY AOI bbox (an OR of sargable comparisons);
+    the kernel evaluates each AOI's ray-cast mask per surviving tile,
+    cached per (tile-extent, aoi). Broadcast of the AOI list rides the
+    closure — the same "broadcast the small side" decision as J2, now
+    with |aois| polygons instead of one. Output shuffles |tiles|×|aois
+    overlapping| partial rows — never pixels.
+    """
+    return _clip_stats(ndvi_tiles, [(a, [r]) for a, r in aois], ("scene_id", "aoi_id"))
 
-        def grid_mask(y0: int, x0: int, h: int, w: int) -> np.ndarray:
-            key = (y0, x0, h, w)
-            hit = cache.get(key)
-            if hit is None:
-                xs = np.arange(x0, x0 + w, dtype=np.float64)
-                ys = np.arange(y0, y0 + h, dtype=np.float64)
-                px = np.broadcast_to(xs, (h, w)).ravel()
-                py = np.repeat(ys, w)
-                inside = (
-                    (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-                )
-                inside_idx = np.nonzero(inside)[0]
-                parity = np.zeros(inside_idx.shape[0], dtype=bool)
-                for flat in flats:
-                    parity ^= _ray_cast_numpy(
-                        px[inside_idx], py[inside_idx], flat
-                    )
-                inside[inside_idx] = parity
-                hit = inside.reshape(h, w)
-                cache[key] = hit
-            return hit
 
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=np.float32).reshape(
-                    row.height, row.width
-                )
-                m = grid_mask(row.y0, row.x0, row.height, row.width) & ~np.isnan(arr)
-                n = int(m.sum())
-                if n:
-                    rows.append(
-                        {
-                            "scene_id": row.scene_id,
-                            "n_in_aoi": n,
-                            "sum_ndvi": float(arr[m].astype(np.float64).sum()),
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+def _clip_stats(ndvi_tiles: DataFrame, aois, by: tuple[str, ...]) -> DataFrame:
+    """The one tile clip kernel behind the three `tile_clip_stats*`
+    entry points: `aois` is [(aoi_id, rings), ...] with an even-odd
+    ring set per AOI; partial (count, sum) rows per (tile, aoi) are
+    summed over `by`."""
+    masks = {int(a): _ring_mask(rings) for a, rings in aois}
 
-    partials = pruned.mapInPandas(kernel, schema=part_schema)
-    return partials.groupBy("scene_id").agg(
+    # Sargable tile-extent × AOI-bbox intersection (J3 shape).
+    cond = None
+    for minx, miny, maxx, maxy in (m.bbox for m in masks.values()):
+        c = (
+            (F.col("x0") <= F.lit(maxx))
+            & (F.col("x0") + F.col("width") - 1 >= F.lit(minx))
+            & (F.col("y0") <= F.lit(maxy))
+            & (F.col("y0") + F.col("height") - 1 >= F.lit(miny))
+        )
+        cond = c if cond is None else (cond | c)
+    pruned = ndvi_tiles.filter(cond).select("scene_id", "y0", "x0", "height", "width", "data")
+
+    def kernel(row):
+        arr = _tile(row.data, row.height, row.width)
+        finite = ~np.isnan(arr)
+        for aoi_id, mask in masks.items():
+            m = mask(row.y0, row.x0, row.height, row.width) & finite
+            n = int(m.sum())
+            if n:
+                yield (row.scene_id, aoi_id, n, float(arr[m].astype(np.float64).sum()))
+
+    partials = _map_rows(pruned, kernel, MULTI_CLIP_SCHEMA)
+    return partials.groupBy(*by).agg(
         F.sum("n_in_aoi").alias("n_in_aoi"),
         (F.sum("sum_ndvi") / F.sum("n_in_aoi")).alias("mean_ndvi"),
     )
@@ -421,7 +495,7 @@ def tile_overviews(
     ndvi_tiles: DataFrame, factors: tuple[int, ...] = (2, 4, 8, 16, 32)
 ) -> DataFrame:
     """A6 overview pyramid in tile form: NaN-aware average pooling
-    inside each tile, all levels emitted in ONE narrow mapInPandas
+    inside each tile, all levels emitted in ONE narrow Arrow kernel
     pass — zero shuffles, versus one groupBy shuffle per level in the
     pixel-form cascade (`overviews.overview_cascade`).
 
@@ -435,59 +509,31 @@ def tile_overviews(
     out_schema = T.StructType(
         [T.StructField("factor", T.IntegerType())] + list(TILE_SCHEMA)
     ).add("n_valid", T.LongType())
+
+    def kernel(row):
+        prev, prev_f = _tile(row.data, row.height, row.width).astype(np.float64), 1
+        for f in factors:
+            step = f // prev_f
+            assert (
+                step * prev_f == f
+                and step & (step - 1) == 0
+                and prev.shape[0] % step == 0
+                and prev.shape[1] % step == 0
+            ), "factors must be successive power-of-2 multiples dividing the tile"
+            for _ in range(step.bit_length() - 1):
+                prev = _pool2(prev)
+            prev_f = f
+            payload = prev.astype(np.float32)
+            yield (
+                f, row.scene_id, row.band, row.tile_y, row.tile_x,
+                payload.shape[0], payload.shape[1], row.y0 // f, row.x0 // f,
+                payload.tobytes(), int(np.sum(~np.isnan(payload))),
+            )
+
     # TILE_SCHEMA includes 'band'; NDVI tiles have none — emit ''.
-    has_band = "band" in ndvi_tiles.columns
-
-    def pool2(a: np.ndarray) -> np.ndarray:
-        h, w = a.shape
-        blocks = a.reshape(h // 2, 2, w // 2, 2)
-        with np.errstate(invalid="ignore"):
-            s = np.nansum(blocks, axis=(1, 3))
-            c = np.sum(~np.isnan(blocks), axis=(1, 3))
-            mean = np.divide(s, c, out=np.full(s.shape, np.nan), where=c > 0)
-        return mean
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=np.float32).reshape(
-                    row.height, row.width
-                ).astype(np.float64)
-                prev, prev_f = arr, 1
-                for f in factors:
-                    step = f // prev_f
-                    assert (
-                        step * prev_f == f
-                        and step & (step - 1) == 0
-                        and prev.shape[0] % step == 0
-                        and prev.shape[1] % step == 0
-                    ), "factors must be successive power-of-2 multiples dividing the tile"
-                    for _ in range(step.bit_length() - 1):
-                        prev = pool2(prev)
-                    prev_f = f
-                    payload = prev.astype(np.float32)
-                    rows.append(
-                        {
-                            "factor": f,
-                            "scene_id": row.scene_id,
-                            "band": getattr(row, "band", ""),
-                            "tile_y": row.tile_y,
-                            "tile_x": row.tile_x,
-                            "height": payload.shape[0],
-                            "width": payload.shape[1],
-                            "y0": row.y0 // f,
-                            "x0": row.x0 // f,
-                            "data": payload.tobytes(),
-                            "n_valid": int(np.sum(~np.isnan(payload))),
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    src = ndvi_tiles if has_band else ndvi_tiles.withColumn("band", F.lit(""))
-    cols = ["scene_id", "band", "tile_y", "tile_x", "height", "width", "y0", "x0", "data"]
-    return src.select(*cols).mapInPandas(kernel, schema=out_schema)
+    band = F.col("band") if "band" in ndvi_tiles.columns else F.lit("").alias("band")
+    cols = ["scene_id", band, "tile_y", "tile_x", "height", "width", "y0", "x0", "data"]
+    return _map_rows(ndvi_tiles.select(*cols), kernel, out_schema)
 
 
 VIZ_SCHEMA = T.StructType(
@@ -519,26 +565,13 @@ def tile_viz_products(
     native codec (operators/multimodal.py::encode_png). NaN/nodata
     pixels render as byte 0.
 
-    Scale shape: the mask+pool stage is a narrow mapInPandas (no
+    Scale shape: the mask+pool stage is a narrow Arrow kernel (no
     shuffle); the single shuffle groups factor²-reduced tiles per
     scene, so assembling a 16k×16k scene at factor 8 moves ~16 MB of
     floats, never full-resolution pixels."""
-    from ..functions.geo import _ray_cast_numpy, polygon_bbox
-
     if factor & (factor - 1) or factor < 1:
         raise ValueError("factor must be a power of two")
-
-    flats = None
-    if rings:
-        flats = [
-            np.asarray([c for pt in r for c in pt], dtype=np.float64)
-            for r in rings
-        ]
-        boxes = [polygon_bbox(r) for r in rings]
-        minx = min(b[0] for b in boxes)
-        miny = min(b[1] for b in boxes)
-        maxx = max(b[2] for b in boxes)
-        maxy = max(b[3] for b in boxes)
+    mask = _ring_mask(rings) if rings else None
 
     reduced_schema = T.StructType(
         [
@@ -551,62 +584,28 @@ def tile_viz_products(
         ]
     )
 
-    def pool2(a: np.ndarray) -> np.ndarray:
-        h, w = a.shape
-        blocks = a.reshape(h // 2, 2, w // 2, 2)
-        with np.errstate(invalid="ignore"):
-            s = np.nansum(blocks, axis=(1, 3))
-            c = np.sum(~np.isnan(blocks), axis=(1, 3))
-            return np.divide(s, c, out=np.full(s.shape, np.nan), where=c > 0)
+    def reduce_kernel(row):
+        arr = _tile(row.data, row.height, row.width).astype(np.float64)
+        if mask is not None:
+            arr = np.where(mask(row.y0, row.x0, row.height, row.width), arr, np.nan)
+        # NaN-pad edge tiles up to a factor multiple; padded cells pool
+        # as "no valid source" and render as nodata
+        ph = -arr.shape[0] % factor
+        pw = -arr.shape[1] % factor
+        if ph or pw:
+            arr = np.pad(arr, ((0, ph), (0, pw)), constant_values=np.nan)
+        for _ in range(factor.bit_length() - 1):
+            arr = _pool2(arr)
+        yield (
+            row.scene_id, row.y0 // factor, row.x0 // factor,
+            arr.shape[0], arr.shape[1], arr.astype(np.float32).tobytes(),
+        )
 
-    def reduce_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = (
-                    np.frombuffer(row.data, dtype=np.float32)
-                    .reshape(row.height, row.width)
-                    .astype(np.float64)
-                )
-                if flats is not None:
-                    xs = np.arange(row.x0, row.x0 + row.width, dtype=np.float64)
-                    ys = np.arange(row.y0, row.y0 + row.height, dtype=np.float64)
-                    px = np.broadcast_to(xs, arr.shape).ravel()
-                    py = np.repeat(ys, row.width)
-                    inside = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-                    idx = np.nonzero(inside)[0]
-                    parity = np.zeros(idx.shape[0], dtype=bool)
-                    for flat in flats:
-                        parity ^= _ray_cast_numpy(px[idx], py[idx], flat)
-                    inside[idx] = parity
-                    arr = np.where(inside.reshape(arr.shape), arr, np.nan)
-                # NaN-pad edge tiles up to a factor multiple; padded
-                # cells pool as "no valid source" and render as nodata
-                ph = -arr.shape[0] % factor
-                pw = -arr.shape[1] % factor
-                if ph or pw:
-                    arr = np.pad(
-                        arr, ((0, ph), (0, pw)), constant_values=np.nan
-                    )
-                red = arr
-                for _ in range(factor.bit_length() - 1):
-                    red = pool2(red)
-                rows.append(
-                    {
-                        "scene_id": row.scene_id,
-                        "y0": row.y0 // factor,
-                        "x0": row.x0 // factor,
-                        "height": red.shape[0],
-                        "width": red.shape[1],
-                        "data": red.astype(np.float32).tobytes(),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    reduced = ndvi_tiles.select(
-        "scene_id", "y0", "x0", "height", "width", "data"
-    ).mapInPandas(reduce_kernel, schema=reduced_schema)
+    reduced = _map_rows(
+        ndvi_tiles.select("scene_id", "y0", "x0", "height", "width", "data"),
+        reduce_kernel,
+        reduced_schema,
+    )
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         from .multimodal import encode_png
@@ -615,10 +614,9 @@ def tile_viz_products(
         W = int((pdf["x0"] + pdf["width"]).max())
         canvas = np.full((H, W), np.nan, dtype=np.float64)
         for row in pdf.itertuples(index=False):
-            a = np.frombuffer(row.data, dtype=np.float32).reshape(
-                row.height, row.width
+            canvas[row.y0 : row.y0 + row.height, row.x0 : row.x0 + row.width] = _tile(
+                row.data, row.height, row.width
             )
-            canvas[row.y0 : row.y0 + row.height, row.x0 : row.x0 + row.width] = a
         valid = ~np.isnan(canvas)
         byte = np.zeros(canvas.shape, dtype=np.uint8)
         with np.errstate(invalid="ignore"):
@@ -721,8 +719,8 @@ def _band_array_from_tiff(buf, nodata_to_nan: bool, overview_level: int = 0) -> 
 
 
 def _file_tile_rows(path: str, buf, tile: int, nodata_to_nan: bool, overview_level: int = 0):
-    """One GeoTIFF's bytes → TILE_SCHEMA row tuples (shared by the
-    pandas and Arrow scan kernels, so both produce identical rows)."""
+    """One GeoTIFF's bytes → TILE_SCHEMA row tuples: the band split
+    into tile×tile blocks, edge blocks NaN-padded."""
     import os
 
     stem = os.path.basename(path).rsplit(".", 1)[0]
@@ -740,33 +738,11 @@ def _file_tile_rows(path: str, buf, tile: int, nodata_to_nan: bool, overview_lev
             )
 
 
-_TILE_ARROW_NAMES = [f.name for f in TILE_SCHEMA]
-
-
-def _tile_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("scene_id", pa.string()),
-            pa.field("band", pa.string()),
-            pa.field("tile_y", pa.int32()),
-            pa.field("tile_x", pa.int32()),
-            pa.field("height", pa.int32()),
-            pa.field("width", pa.int32()),
-            pa.field("y0", pa.int32()),
-            pa.field("x0", pa.int32()),
-            pa.field("data", pa.binary()),
-        ]
-    )
-
-
 def scan_geotiffs(
     spark,
     path_glob: str,
     tile: int = DEFAULT_TILE,
     nodata_to_nan: bool = True,
-    use_arrow: bool = True,
     overview_level: int = 0,
     on_error: str = "raise",
 ) -> DataFrame:
@@ -778,11 +754,10 @@ def scan_geotiffs(
     from files ≫ cores, which is the 100 TB shape (thousands of
     scenes × 2 bands).
 
-    Default path is `mapInArrow`: the file payload crosses the
-    JVM→Python boundary as an Arrow buffer and is decoded through a
-    zero-copy memoryview — no per-cell Python bytes materialization,
-    no pandas block manager on either side of the kernel. The
-    `use_arrow=False` pandas path is kept for parity testing.
+    The file payload crosses the JVM→Python boundary as an Arrow
+    buffer and is decoded through a zero-copy memoryview — no per-cell
+    Python bytes materialization, no pandas block manager on either
+    side of the kernel.
 
     ``overview_level > 0`` reads that reduced-resolution IFD from the
     file's pyramid instead of the full band (clamped to the deepest
@@ -798,53 +773,15 @@ def scan_geotiffs(
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
     binf = spark.read.format("binaryFile").load(path_glob).select("path", "content")
 
-    if use_arrow:
-        def decode_arrow(batches):
-            import pyarrow as pa
+    def decode(row):
+        try:
+            return list(_file_tile_rows(row.path, row.content, tile, nodata_to_nan, overview_level))
+        except Exception:
+            if on_error == "raise":
+                raise
+            return []  # quarantined: no tiles from this file
 
-            schema = _tile_arrow_schema()
-            for batch in batches:
-                paths = batch.column(0).to_pylist()
-                contents = batch.column(1)
-                cols: list[list] = [[] for _ in _TILE_ARROW_NAMES]
-                for i, p in enumerate(paths):
-                    mv = memoryview(contents[i].as_buffer())
-                    try:
-                        rows = list(
-                            _file_tile_rows(p, mv, tile, nodata_to_nan, overview_level)
-                        )
-                    except Exception:
-                        if on_error == "raise":
-                            raise
-                        continue  # quarantined: no tiles from this file
-                    for row in rows:
-                        for acc, v in zip(cols, row):
-                            acc.append(v)
-                if cols[0]:
-                    yield pa.record_batch(
-                        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-                        schema=schema,
-                    )
-
-        return binf.mapInArrow(decode_arrow, schema=TILE_SCHEMA)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    rows.extend(
-                        _file_tile_rows(
-                            r.path, bytes(r.content), tile, nodata_to_nan, overview_level
-                        )
-                    )
-                except Exception:
-                    if on_error == "raise":
-                        raise
-            if rows:
-                yield pd.DataFrame(rows, columns=_TILE_ARROW_NAMES)
-
-    return binf.mapInPandas(decode, schema=TILE_SCHEMA)
+    return _map_rows(binf, decode, TILE_SCHEMA)
 
 
 def scan_scene_ndvi(
@@ -856,7 +793,7 @@ def scan_scene_ndvi(
     on_error: str = "raise",
 ) -> DataFrame:
     """Fused S4+J1+P1-P6: binaryFile scan → pair band FILES per scene
-    → decode both bands and emit NDVI tiles in one applyInPandas
+    → decode both bands and emit NDVI tiles in one applyInArrow
     kernel.
 
     The general codec path (`scan_geotiffs` → `tile_ndvi`) shuffles
@@ -903,21 +840,15 @@ def read_path_bytes(paths_df: DataFrame, path_col: str = "path") -> DataFrame:
     single-node envelope); object-store paths would swap the `open`
     for the store's client exactly like sources/stac.py's
     `http_fetcher`."""
-    import pandas as pd
 
-    def read(batches):
-        for pdf in batches:
-            out_p, out_c = [], []
-            for p in pdf[path_col]:
-                local = p[7:] if p.startswith("file://") else p
-                local = local if not local.startswith("file:") else local[5:]
-                with open(local, "rb") as fh:
-                    out_p.append(p)
-                    out_c.append(fh.read())
-            yield pd.DataFrame({"path": out_p, "content": out_c})
+    def read(row):
+        local = row.path[7:] if row.path.startswith("file://") else row.path
+        local = local if not local.startswith("file:") else local[5:]
+        with open(local, "rb") as fh:
+            yield (row.path, fh.read())
 
-    return paths_df.select(F.col(path_col).alias("path")).mapInPandas(
-        read, schema=PATH_BYTES_SCHEMA
+    return _map_rows(
+        paths_df.select(F.col(path_col).alias("path")), read, PATH_BYTES_SCHEMA
     )
 
 
@@ -945,41 +876,17 @@ def scan_geotiff_status(spark, path_glob: str) -> DataFrame:
 
     binf = spark.read.format("binaryFile").load(path_glob).select("path", "content")
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                stem = os.path.basename(r.path).rsplit(".", 1)[0]
-                scene_id, _, band = stem.rpartition("_")
-                try:
-                    arr, _meta = decode_geotiff_bytes(bytes(r.content))
-                    rows.append(
-                        {
-                            "path": r.path,
-                            "scene_id": scene_id or stem,
-                            "band": band,
-                            "ok": True,
-                            "error": None,
-                            "height": int(arr.shape[0]),
-                            "width": int(arr.shape[1]),
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001 — E1: row, not raise
-                    rows.append(
-                        {
-                            "path": r.path,
-                            "scene_id": scene_id or stem,
-                            "band": band,
-                            "ok": False,
-                            "error": f"{type(e).__name__}: {e}"[:200],
-                            "height": None,
-                            "width": None,
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    def probe(row):
+        stem = os.path.basename(row.path).rsplit(".", 1)[0]
+        scene_id, _, band = stem.rpartition("_")
+        try:
+            arr, _meta = decode_geotiff_bytes(row.content)
+        except Exception as e:  # noqa: BLE001 — E1: row, not raise
+            yield (row.path, scene_id or stem, band, False, f"{type(e).__name__}: {e}"[:200], None, None)
+        else:
+            yield (row.path, scene_id or stem, band, True, None, int(arr.shape[0]), int(arr.shape[1]))
 
-    return binf.mapInPandas(probe, schema=SCAN_STATUS_SCHEMA)
+    return _map_rows(binf, probe, SCAN_STATUS_SCHEMA)
 
 
 BAND_FILENAME_PATTERN = r"^(.+)_([A-Za-z0-9]+)\.tif$"
@@ -1006,29 +913,6 @@ def parse_band_files(binary_df: DataFrame) -> DataFrame:
     return parse_band_names(binary_df, keep=("content",))
 
 
-_NDVI_TILE_NAMES = [f.name for f in NDVI_TILE_SCHEMA]
-
-
-def _ndvi_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("scene_id", pa.string()),
-            pa.field("tile_y", pa.int32()),
-            pa.field("tile_x", pa.int32()),
-            pa.field("height", pa.int32()),
-            pa.field("width", pa.int32()),
-            pa.field("y0", pa.int32()),
-            pa.field("x0", pa.int32()),
-            pa.field("data", pa.binary()),
-            pa.field("n_pixels", pa.int64()),
-            pa.field("n_valid", pa.int64()),
-            pa.field("sum_ndvi", pa.float64()),
-        ]
-    )
-
-
 def _scene_ndvi_rows(
     scene_id: str,
     by_band: dict,
@@ -1037,8 +921,7 @@ def _scene_ndvi_rows(
     nir_band: str,
     on_error: str,
 ) -> list[tuple]:
-    """One scene's band buffers → NDVI_TILE_SCHEMA row tuples (shared
-    by the pandas and Arrow kernels — identical math, identical rows).
+    """One scene's band buffers → NDVI_TILE_SCHEMA row tuples.
 
     Per-TILE math: identical elementwise results to a whole-scene
     pass, but the float64 intermediates live per 256² tile (~3 MB
@@ -1100,7 +983,6 @@ def scene_ndvi_from_bands(
     red_band: str = "red",
     nir_band: str = "nir",
     on_error: str = "raise",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The fused kernel over an already-parsed (scene_id, band,
     content) relation — shared by the batch glob scan and the
@@ -1112,45 +994,29 @@ def scene_ndvi_from_bands(
     the job — one bad file cannot kill a 100 TB run. The default
     'raise' is strict (fail fast, the right mode for tests/dev).
 
-    Default path is `applyInArrow`: each scene's band payloads arrive
-    as Arrow buffers read through zero-copy memoryviews, and tile
-    payloads leave as an Arrow batch — pandas never touches the
-    ~100 MB binary cells. `use_arrow=False` keeps the pandas kernel
-    for parity testing."""
+    Runs as `applyInArrow`: each scene's band payloads arrive as Arrow
+    buffers read through zero-copy memoryviews, and tile payloads
+    leave as an Arrow batch — pandas never touches the ~100 MB binary
+    cells."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
+    arrow_schema = to_arrow_schema(NDVI_TILE_SCHEMA)
 
-    if use_arrow:
-        def kernel_arrow(key, table):
-            import pyarrow as pa
+    def kernel(key, table):
+        import pyarrow as pa
 
-            scene_id = key[0].as_py() if hasattr(key[0], "as_py") else key[0]
-            bands = table.column("band").to_pylist()
-            contents = table.column("content")
-            by_band = {
-                b: memoryview(contents[i].as_buffer()) for i, b in enumerate(bands)
-            }
-            rows = _scene_ndvi_rows(
-                scene_id, by_band, tile, red_band, nir_band, on_error
-            )
-            schema = _ndvi_arrow_schema()
-            cols = list(zip(*rows)) if rows else [[] for _ in schema]
-            return pa.table(
-                [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
-                schema=schema,
-            )
-
-        return parsed.groupBy("scene_id").applyInArrow(
-            kernel_arrow, schema=NDVI_TILE_SCHEMA
-        )
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (scene_id,) = key
-        by_band = {b: bytes(c) for b, c in zip(pdf["band"], pdf["content"])}
+        scene_id = key[0].as_py()
+        contents = table.column("content")
+        by_band = {
+            b: memoryview(contents[i].as_buffer())
+            for i, b in enumerate(table.column("band").to_pylist())
+        }
         rows = _scene_ndvi_rows(scene_id, by_band, tile, red_band, nir_band, on_error)
-        return pd.DataFrame(rows, columns=_NDVI_TILE_NAMES)
+        return pa.Table.from_batches([_record_batch(rows, arrow_schema)])
 
-    return parsed.groupBy("scene_id").applyInPandas(kernel, schema=NDVI_TILE_SCHEMA)
+    return parsed.groupBy("scene_id").applyInArrow(kernel, schema=NDVI_TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1192,7 +1058,7 @@ def export_scene_geotiffs(
         min_x = int(pdf["x0"].min())
         mosaic = np.full((max_y - min_y, max_x - min_x), np.nan, dtype=np.float32)
         for row in pdf.itertuples(index=False):
-            arr = np.frombuffer(row.data, dtype=np.float32).reshape(row.height, row.width)
+            arr = _tile(row.data, row.height, row.width)
             mosaic[
                 row.y0 - min_y : row.y0 - min_y + row.height,
                 row.x0 - min_x : row.x0 - min_x + row.width,
@@ -1274,93 +1140,3 @@ def export_pixel_geotiffs(
         )
 
     return pixels.groupBy("scene_id").applyInPandas(assemble, schema=schema)
-
-
-MULTI_CLIP_SCHEMA = T.StructType(
-    [
-        T.StructField("scene_id", T.StringType()),
-        T.StructField("aoi_id", T.IntegerType()),
-        T.StructField("n_in_aoi", T.LongType()),
-        T.StructField("sum_ndvi", T.DoubleType()),
-    ]
-)
-
-
-def tile_clip_stats_multi(ndvi_tiles: DataFrame, aois) -> DataFrame:
-    """J2+A1 generalized to MANY AOIs — the reference's actual product
-    shape (ndvi_clipped is keyed (full_id, aoi_id), 002_schema.sql:
-    UNIQUE(full_id,aoi_id)): per-(scene, aoi) masked means in one pass.
-
-    `aois` is [(aoi_id, ring), ...]. JVM-side prune keeps tiles whose
-    extent intersects ANY AOI bbox (an OR of sargable comparisons);
-    the kernel evaluates each AOI's ray-cast mask per surviving tile,
-    cached per (tile-extent, aoi). Broadcast of the AOI list rides the
-    closure — the same "broadcast the small side" decision as J2, now
-    with |aois| polygons instead of one. Output shuffles |tiles|×|aois
-    overlapping| partial rows — never pixels.
-    """
-    from ..functions.geo import _ray_cast_numpy, polygon_bbox
-
-    bboxes = {int(a): polygon_bbox(r) for a, r in aois}
-    flats = {
-        int(a): np.asarray([c for pt in r for c in pt], dtype=np.float64)
-        for a, r in aois
-    }
-
-    cond = None
-    for minx, miny, maxx, maxy in bboxes.values():
-        c = (
-            (F.col("x0") <= F.lit(maxx))
-            & (F.col("x0") + F.col("width") - 1 >= F.lit(minx))
-            & (F.col("y0") <= F.lit(maxy))
-            & (F.col("y0") + F.col("height") - 1 >= F.lit(miny))
-        )
-        cond = c if cond is None else (cond | c)
-    pruned = ndvi_tiles.filter(cond)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-
-        def mask_for(aoi_id: int, y0: int, x0: int, h: int, w: int) -> np.ndarray:
-            key = (aoi_id, y0, x0, h, w)
-            hit = cache.get(key)
-            if hit is None:
-                minx, miny, maxx, maxy = bboxes[aoi_id]
-                xs = np.arange(x0, x0 + w, dtype=np.float64)
-                ys = np.arange(y0, y0 + h, dtype=np.float64)
-                px = np.broadcast_to(xs, (h, w)).ravel()
-                py = np.repeat(ys, w)
-                inside = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-                idx = np.nonzero(inside)[0]
-                inside[idx] = _ray_cast_numpy(px[idx], py[idx], flats[aoi_id])
-                hit = inside.reshape(h, w)
-                cache[key] = hit
-            return hit
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=np.float32).reshape(
-                    row.height, row.width
-                )
-                finite = ~np.isnan(arr)
-                for aoi_id in bboxes:
-                    m = mask_for(aoi_id, row.y0, row.x0, row.height, row.width) & finite
-                    n = int(m.sum())
-                    if n:
-                        rows.append(
-                            {
-                                "scene_id": row.scene_id,
-                                "aoi_id": aoi_id,
-                                "n_in_aoi": n,
-                                "sum_ndvi": float(arr[m].astype(np.float64).sum()),
-                            }
-                        )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    partials = pruned.mapInPandas(kernel, schema=MULTI_CLIP_SCHEMA)
-    return partials.groupBy("scene_id", "aoi_id").agg(
-        F.sum("n_in_aoi").alias("n_in_aoi"),
-        (F.sum("sum_ndvi") / F.sum("n_in_aoi")).alias("mean_ndvi"),
-    )

@@ -94,13 +94,7 @@ def grid_spatial_join(
     return exact.drop("cell_x", "cell_y")
 
 
-def tile_clip_stats_table(
-    tiles: DataFrame,
-    aois: DataFrame,
-    tile_size: int,
-    ring_col: str = "ring",
-    aoi_id_col: str = "aoi_id",
-) -> DataFrame:
+def tile_clip_stats_table(tiles: DataFrame, aois: DataFrame, tile_size: int) -> DataFrame:
     """J2+A1 with the AOIs as a TABLE, in TILE form: the raster twin
     of `grid_spatial_join`. Because tiles already sit on a uniform
     grid, the blocking cell size IS the tile size — `cover_cells`
@@ -112,69 +106,42 @@ def tile_clip_stats_table(
     `tile_clip_stats_multi`'s plan-literal OR-of-bboxes prune and
     closure-broadcast AOI dict do not.
 
+    `aois` carries an integer `aoi_id` and a flat `ring` array.
     Output: (scene_id, aoi_id, n_in_aoi, mean_ndvi) — n over non-NaN
     in-polygon pixels, float32 payload semantics identical to the
     literal path.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    from ..functions.geo import _ray_cast_numpy
+    from .raster import MULTI_CLIP_SCHEMA, _map_rows, _ring_mask, _tile
 
     cells = (
-        cover_cells(aois, ring_col, float(tile_size))
+        cover_cells(aois, "ring", float(tile_size))
         .withColumnRenamed("cell_x", "tile_x")
         .withColumnRenamed("cell_y", "tile_y")
-        .select("tile_y", "tile_x", aoi_id_col, ring_col)
+        .select("tile_y", "tile_x", "aoi_id", "ring")
     )
-    cand = tiles.join(cells, ["tile_y", "tile_x"])
-
-    partial_schema = T.StructType(
-        [
-            T.StructField("scene_id", T.StringType()),
-            T.StructField("aoi_id", T.IntegerType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.DoubleType()),
-        ]
+    cand = tiles.join(cells, ["tile_y", "tile_x"]).select(
+        "scene_id", "y0", "x0", "height", "width", "data", "aoi_id", "ring"
     )
 
-    def kernel(batches):
-        cache: dict = {}
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=np.float32).reshape(
-                    row.height, row.width
-                )
-                ring = np.asarray(row.ring, dtype=np.float64)
-                key = (row.y0, row.x0, row.height, row.width, ring.tobytes())
-                m = cache.get(key)
-                if m is None:
-                    xs = np.arange(row.x0, row.x0 + row.width, dtype=np.float64)
-                    ys = np.arange(row.y0, row.y0 + row.height, dtype=np.float64)
-                    px = np.broadcast_to(xs, (row.height, row.width)).ravel()
-                    py = np.repeat(ys, row.width)
-                    m = _ray_cast_numpy(px, py, ring).reshape(row.height, row.width)
-                    cache[key] = m
-                sel = m & ~np.isnan(arr)
-                n = int(sel.sum())
-                if n:
-                    rows.append(
-                        {
-                            "scene_id": row.scene_id,
-                            "aoi_id": int(getattr(row, "aoi_id")),
-                            "n": n,
-                            # float64 sum of float32 values — same
-                            # accumulation as the literal tile path
-                            "s": float(arr[sel].astype(np.float64).sum()),
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    masks: dict[tuple, object] = {}  # one cached mask builder per ring
 
-    partials = cand.mapInPandas(kernel, schema=partial_schema)
+    def kernel(row):
+        arr = _tile(row.data, row.height, row.width)
+        ring = tuple(row.ring)
+        if ring not in masks:
+            masks[ring] = _ring_mask([ring])
+        mask = masks[ring]
+        sel = mask(row.y0, row.x0, row.height, row.width) & ~np.isnan(arr)
+        n = int(sel.sum())
+        if n:
+            # float64 sum of float32 values — same accumulation as the
+            # literal tile path
+            yield (row.scene_id, int(row.aoi_id), n, float(arr[sel].astype(np.float64).sum()))
+
+    partials = _map_rows(cand, kernel, MULTI_CLIP_SCHEMA)
     return partials.groupBy("scene_id", "aoi_id").agg(
-        F.sum("n").alias("n_in_aoi"),
-        (F.sum("s") / F.sum("n")).alias("mean_ndvi"),
+        F.sum("n_in_aoi").alias("n_in_aoi"),
+        (F.sum("sum_ndvi") / F.sum("n_in_aoi")).alias("mean_ndvi"),
     )

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .raster import _map_rows, _tile
+
 PIXEL_OUT_SCHEMA = T.StructType(
     [
         T.StructField("scene_id", T.StringType()),
@@ -261,8 +263,61 @@ TILE_STRIP_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
         T.StructField("width", T.IntegerType()),
         T.StructField("data", T.BinaryType()),
+        # the sender's tile size P: receivers read the grid from their
+        # group, so building the plan needs no look at the data
+        T.StructField("tile", T.IntegerType()),
     ]
 )
+
+
+def _halo_strips(tiles: DataFrame, halo: int) -> DataFrame:
+    """The halo exchange's narrow emission: every tile sends its own
+    core to itself and `halo`-wide edge strips (corners included) to
+    its 8 neighbors, as TILE_STRIP_SCHEMA rows keyed by the receiving
+    tile. Group the result by (scene_id, recv_ty, recv_tx) and rebuild
+    each receiver's padded canvas with `_halo_canvas`."""
+
+    def emit(row):
+        arr = _tile(row.data, row.height, row.width)
+        for dy in (-1, 0, 1):
+            for dx in (-1, 0, 1):
+                rty, rtx = row.tile_y + dy, row.tile_x + dx
+                if rty < 0 or rtx < 0:
+                    continue
+                # part of THIS tile inside the receiver's padded extent
+                if dy == 0:
+                    rs, re = 0, row.height
+                elif dy == -1:  # receiver above: my first halo rows
+                    rs, re = 0, halo
+                else:  # receiver below: my last halo rows
+                    rs, re = row.height - halo, row.height
+                if dx == 0:
+                    cs, ce = 0, row.width
+                elif dx == -1:
+                    cs, ce = 0, halo
+                else:
+                    cs, ce = row.width - halo, row.width
+                yield (
+                    row.scene_id, rty, rtx, row.y0 + rs, row.x0 + cs,
+                    re - rs, ce - cs, arr[rs:re, cs:ce].tobytes(), row.height,
+                )
+
+    cols = ["scene_id", "tile_y", "tile_x", "height", "width", "y0", "x0", "data"]
+    return _map_rows(tiles.select(*cols), emit, TILE_STRIP_SCHEMA)
+
+
+def _halo_canvas(key: tuple, pdf: pd.DataFrame, halo: int) -> tuple[np.ndarray, int, int, int]:
+    """One receiver group of `_halo_strips` → (canvas, P, oy, ox): the
+    float64 (P+2·halo)² canvas around tile (recv_ty, recv_tx), NaN
+    where no strip arrived, with (oy, ox) its top-left pixel."""
+    _, rty, rtx = key
+    P = int(pdf["tile"].iloc[0])
+    oy, ox = int(rty) * P - halo, int(rtx) * P - halo
+    canvas = np.full((P + 2 * halo, P + 2 * halo), np.nan, dtype=np.float64)
+    for row in pdf.itertuples(index=False):
+        canvas[row.y0 - oy : row.y0 - oy + row.height,
+               row.x0 - ox : row.x0 - ox + row.width] = _tile(row.data, row.height, row.width)
+    return canvas, P, oy, ox
 
 
 WARP_TILE_SCHEMA = T.StructType(
@@ -286,7 +341,6 @@ def warp_bilinear_tiled(
     scale_y: float,
     scale_x: float,
     output: str = "pixels",
-    tile_size: int | None = None,
 ) -> DataFrame:
     """Halo-exchange tiled warp — the scale path for scenes too large
     for the per-scene canvas (SURVEY §4.2 item 3's "only if needed"
@@ -319,59 +373,10 @@ def warp_bilinear_tiled(
     if scale_y <= 0 or scale_x <= 0:
         raise ValueError("scales must be positive")
 
-    # Callers that built the tiles know P — passing it keeps this
-    # operator fully lazy (no .first() action at plan-build time).
-    if tile_size is not None:
-        P = int(tile_size)
-    else:
-        r = tiles.select("height").first()
-        P = int(r.height)
     halo = 2
+    strips = _halo_strips(tiles, halo)
 
-    def emit(batches):
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=np.float32).reshape(
-                    row.height, row.width
-                )
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        rty, rtx = row.tile_y + dy, row.tile_x + dx
-                        if rty < 0 or rtx < 0:
-                            continue
-                        # part of THIS tile inside receiver's padded extent
-                        if dy == 0:
-                            rs, re = 0, row.height
-                        elif dy == -1:  # receiver above: my first halo rows
-                            rs, re = 0, halo
-                        else:  # receiver below: my last halo rows
-                            rs, re = row.height - halo, row.height
-                        if dx == 0:
-                            cs, ce = 0, row.width
-                        elif dx == -1:
-                            cs, ce = 0, halo
-                        else:
-                            cs, ce = row.width - halo, row.width
-                        strip = np.ascontiguousarray(arr[rs:re, cs:ce])
-                        rows.append(
-                            {
-                                "scene_id": row.scene_id,
-                                "recv_ty": rty,
-                                "recv_tx": rtx,
-                                "y0": row.y0 + rs,
-                                "x0": row.x0 + cs,
-                                "height": strip.shape[0],
-                                "width": strip.shape[1],
-                                "data": strip.tobytes(),
-                            }
-                        )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    strips = tiles.mapInPandas(emit, schema=TILE_STRIP_SCHEMA)
-
-    def _dst_range(rt: int, scale: float, out_n: int) -> tuple[int, int]:
+    def _dst_range(rt: int, P: int, scale: float, out_n: int) -> tuple[int, int]:
         """Destination indices whose source CENTER lies in source tile
         rt: (d+0.5)·scale − 0.5 ∈ [rt·P, (rt+1)·P)."""
         import math
@@ -382,17 +387,12 @@ def warp_bilinear_tiled(
 
     def assemble_and_warp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         scene_id, rty, rtx = key
-        oy, ox = int(rty) * P - halo, int(rtx) * P - halo
-        canvas = np.full((P + 2 * halo, P + 2 * halo), np.nan, dtype=np.float64)
-        for row in pdf.itertuples(index=False):
-            a = np.frombuffer(row.data, dtype=np.float32).reshape(row.height, row.width)
-            canvas[row.y0 - oy : row.y0 - oy + row.height,
-                   row.x0 - ox : row.x0 - ox + row.width] = a
+        canvas, P, oy, ox = _halo_canvas(key, pdf, halo)
 
         schema = WARP_TILE_SCHEMA if output == "tiles" else PIXEL_OUT_SCHEMA
         empty = pd.DataFrame(columns=[f.name for f in schema])
-        y_lo, y_hi = _dst_range(int(rty), scale_y, out_height)
-        x_lo, x_hi = _dst_range(int(rtx), scale_x, out_width)
+        y_lo, y_hi = _dst_range(int(rty), P, scale_y, out_height)
+        x_lo, x_hi = _dst_range(int(rtx), P, scale_x, out_width)
         if y_lo >= y_hi or x_lo >= x_hi:
             return empty
         dys = np.arange(y_lo, y_hi)

@@ -99,9 +99,7 @@ def q_warp_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiles = pixels_to_tiles(
         nv.withColumn("band", F.lit("ndvi")), tile=32, value_col="ndvi"
     ).drop("band")
-    out = warp_bilinear_tiled(
-        tiles, out_height=80, out_width=80, scale_y=1.25, scale_x=1.25, tile_size=32
-    )
+    out = warp_bilinear_tiled(tiles, out_height=80, out_width=80, scale_y=1.25, scale_x=1.25)
     return out.select("scene_id", "y", "x", F.round("v", 6).alias("v"))
 
 

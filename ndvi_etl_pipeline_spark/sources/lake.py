@@ -1193,7 +1193,7 @@ def _dv_hash_map(spark: SparkSession, path: str, rels: list[str]):
 
     Why: the in-debt DV read's measured dominator at 600 M rows is
     the per-row url_decode/regexp normalization chain of
-    `_dv_meta_cols` (4.5x a plain scan in tools/bench_dv_micro.py;
+    `_dv_meta_cols` (4.5x a plain scan;
     `xxhash64(_metadata.file_path)` on the raw string is +6%). So the
     table side hashes the RAW path — no decode, no string join — and
     the driver predicts each file's raw form as `prefix + abspath`,
@@ -1294,8 +1294,8 @@ def _dv_pack_base(
     LongHashedRelation (primitive open-addressing map); two long keys
     force the UnsafeHashedRelation path — per probe an UnsafeRow
     projection plus byte-wise hash/compare — measured ~10x slower per
-    row on a 60 M-row anti-join (tools/bench_dv_decomp.py: 0.52 s vs
-    7.7 s on identical range inputs). So the (file, ordinal) pair is
+    row on a 60 M-row anti-join (0.52 s vs 7.7 s
+    on identical range inputs). So the (file, ordinal) pair is
     packed losslessly into one 64-bit key:
 
         key = (xxhash64(raw file path) & mask) << posbits | ordinal
@@ -1468,7 +1468,7 @@ def _read_entries(
             # exists when something will consume it (keep_meta
             # callers, or the decoded-keying fallback): its
             # url_decode/regexp chain is the measured per-row
-            # dominator of the in-debt read (tools/bench_dv_micro.py)
+            # dominator of the in-debt read (4.5x a plain scan)
             extra = []
             if keep_meta or dv_hash is None:
                 extra.append(rel.alias(_DV_FILE))
@@ -1542,7 +1542,7 @@ def _read_entries(
         if dv_pack is not None:
             # Packed regime (default): ONE exact long key per side —
             # the anti-join probes the LongHashedRelation fast path
-            # (bench_dv_decomp: ~10x the two-long-key probe). The
+            # (measured ~10x the two-long-key probe). The
             # build side maps DV rel strings to verified packed bases
             # through a broadcast manifest-scale map and ORs in the
             # ordinal; the table side packed at the scan.

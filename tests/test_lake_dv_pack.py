@@ -6,7 +6,7 @@ the three keying modes, and every fallback arm.
 Why this exists: a BroadcastHashJoin keyed on ONE long probes Spark's
 LongHashedRelation fast path; two long keys force UnsafeHashedRelation
 (per-probe UnsafeRow projection + byte compare), measured ~10x slower
-per row at 60 M rows (tools/bench_dv_decomp.py). The packing must
+per row at 60 M rows. The packing must
 never trade that speed for correctness — these tests pin the verified
 fallbacks, the bounded caches behind them, and the driver-side maps
 built as local relations (`_local_df`), which plan no job."""

@@ -232,42 +232,62 @@ def test_scan_scene_ndvi_matches_codec_path(spark, tmp_path):
     }
 
 
-def test_arrow_and_pandas_kernels_agree(spark, tmp_path):
-    """The mapInArrow/applyInArrow fast paths must emit bit-identical
-    rows to the pandas kernels they replace — same tiles, same
-    payload bytes, same partial aggregates."""
+def test_arrow_scan_kernels_match_numpy_oracle(spark, tmp_path):
+    """The Arrow scan kernels against numpy on the source arrays:
+    `scan_geotiffs` tiles are each band's NaN-padded tile×tile blocks,
+    byte for byte, and `scene_ndvi_from_bands` payloads and per-tile
+    partials follow the P1-P6 formula on those blocks."""
+    tile = 32
     rng = np.random.default_rng(11)
+    bands = {}
     for i in range(2):
         scene = f"AR{i:02d}_20220601"
-        red = rng.integers(0, 30000, size=(70, 90)).astype(np.float32)
-        nir = rng.integers(0, 60000, size=(70, 90)).astype(np.float32)
-        raster.write_geotiff(red, str(tmp_path / f"{scene}_red.tif"))
-        raster.write_geotiff(nir, str(tmp_path / f"{scene}_nir.tif"))
+        for band, hi in (("red", 30000), ("nir", 60000)):
+            a = rng.integers(0, hi, size=(70, 90)).astype(np.float32)
+            raster.write_geotiff(a, str(tmp_path / f"{scene}_{band}.tif"))
+            bands[scene, band] = a
 
-    def tile_set(df):
-        return {
-            (r.scene_id, r.band, r.tile_y, r.tile_x, r.y0, r.x0, bytes(r.data))
-            for r in df.collect()
-        }
+    def blocks(a):
+        for y0 in range(0, a.shape[0], tile):
+            for x0 in range(0, a.shape[1], tile):
+                blk = np.full((tile, tile), np.nan, dtype=np.float32)
+                sub = a[y0 : y0 + tile, x0 : x0 + tile]
+                blk[: sub.shape[0], : sub.shape[1]] = sub
+                yield y0 // tile, x0 // tile, y0, x0, blk
 
-    arrow_scan = raster.scan_geotiffs(spark, str(tmp_path), tile=32, use_arrow=True)
-    pandas_scan = raster.scan_geotiffs(spark, str(tmp_path), tile=32, use_arrow=False)
-    assert tile_set(arrow_scan) == tile_set(pandas_scan)
+    want_tiles = {
+        (s, b, ty, tx, y0, x0, tile, tile, blk.tobytes())
+        for (s, b), a in bands.items()
+        for ty, tx, y0, x0, blk in blocks(a)
+    }
+    got_tiles = {
+        (r.scene_id, r.band, r.tile_y, r.tile_x, r.y0, r.x0, r.height, r.width, bytes(r.data))
+        for r in raster.scan_geotiffs(spark, str(tmp_path), tile=tile).collect()
+    }
+    assert got_tiles == want_tiles
 
-    parsed = raster.parse_band_files(
-        spark.read.format("binaryFile").load(str(tmp_path))
-    )
-
-    def ndvi_set(df):
-        return {
-            (r.scene_id, r.tile_y, r.tile_x, bytes(r.data), r.n_pixels, r.n_valid,
-             round(r.sum_ndvi, 9))
-            for r in df.collect()
-        }
-
-    a = raster.scene_ndvi_from_bands(parsed, tile=32, use_arrow=True)
-    p = raster.scene_ndvi_from_bands(parsed, tile=32, use_arrow=False)
-    assert ndvi_set(a) == ndvi_set(p)
+    want_ndvi = set()
+    for s in {s for s, _ in bands}:
+        for (ty, tx, y0, x0, red), (*_, nir) in zip(blocks(bands[s, "red"]), blocks(bands[s, "nir"])):
+            present = ~np.isnan(red) & ~np.isnan(nir)
+            valid = present & (red != 0) & (nir != 0)
+            red_sr = red.astype(np.float64) * raster.SCALE + raster.OFFSET
+            nir_sr = nir.astype(np.float64) * raster.SCALE + raster.OFFSET
+            with np.errstate(invalid="ignore", divide="ignore"):
+                ndvi = np.clip((nir_sr - red_sr) / (nir_sr + red_sr + raster.EPS), -1.0, 1.0)
+            out = np.full(red.shape, np.nan, dtype=np.float32)
+            out[valid] = ndvi[valid].astype(np.float32)
+            want_ndvi.add(
+                (s, ty, tx, y0, x0, out.tobytes(), int(present.sum()), int(valid.sum()),
+                 round(float(out[valid].astype(np.float64).sum()), 9))
+            )
+    parsed = raster.parse_band_files(spark.read.format("binaryFile").load(str(tmp_path)))
+    got_ndvi = {
+        (r.scene_id, r.tile_y, r.tile_x, r.y0, r.x0, bytes(r.data), r.n_pixels, r.n_valid,
+         round(r.sum_ndvi, 9))
+        for r in raster.scene_ndvi_from_bands(parsed, tile=tile).collect()
+    }
+    assert got_ndvi == want_ndvi
 
 
 def test_scan_scene_ndvi_quarantines_bad_scene(spark, tmp_path):

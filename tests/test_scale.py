@@ -197,10 +197,10 @@ def test_tile_clip_plan_prunes_before_python(spark, tmp_path):
     ring = [(5.0, 5.0), (60.0, 8.0), (58.0, 58.0), (8.0, 55.0)]
     plan = explain_str(raster.tile_clip_stats(ndvi, ring))
 
-    # plan prints parent-first: clip kernel (MapInPandas) must appear
+    # plan prints parent-first: clip kernel (MapInArrow) must appear
     # BEFORE (above) the bbox Filter, i.e. the Filter is its child —
     # pruning happens before bytes cross into Python.
-    map_idx = plan.index("MapInPandas")
+    map_idx = plan.index("MapInArrow")
     filt_idx = plan.index("Filter ")
     assert map_idx < filt_idx
     # the bbox predicate on the tile-extent columns is that Filter's
@@ -275,6 +275,17 @@ def test_no_row_python_udfs_anywhere(spark, sf_dir):
     for name in sample:
         plan = explain_str(REGISTRY[name].builder(spark, sf_dir))
         assert "BatchEvalPython" not in plan, name
+
+
+def test_audit_counts_arrow_python_nodes(spark):
+    """tools/audit_plans.py counts the Arrow-native Python nodes too: a
+    plan with one `mapInArrow` and one grouped `applyInArrow` has two
+    vectorized Python boundaries."""
+    from tools.audit_plans import audit_one
+
+    df = spark.range(8).mapInArrow(lambda batches: batches, "id long")
+    df = df.groupBy("id").applyInArrow(lambda table: table, "id long")
+    assert audit_one(df)["arrow_python_nodes"] == 2
 
 
 def test_tpch_dim_joins_broadcast(spark, sf_dir_oracle):

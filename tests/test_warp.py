@@ -133,6 +133,30 @@ def test_tiled_warp_tile_output_matches_pixels(spark, sf_dir):
         assert abs(got[k] - v) <= 1e-6, k
 
 
+def test_tiled_warp_planning_runs_no_job(spark, tmp_path):
+    """Building a `warp_bilinear_tiled` plan launches no Spark job:
+    receivers read the tile size from their strips, so the plan needs
+    no look at the data."""
+    from ndvi_etl_pipeline_spark.operators import raster
+    from ndvi_etl_pipeline_spark.operators.warp import warp_bilinear_tiled
+
+    px = spark.createDataFrame(
+        [("S", "ndvi", y, x, float(y + x)) for y in range(40) for x in range(40)],
+        "scene_id string, band string, y int, x int, dn double",
+    )
+    tiles = raster.pixels_to_tiles(px, tile=16).drop("band")
+    sc = spark.sparkContext
+    group = f"warp-plan-{tmp_path.name}"
+    sc.setJobGroup(group, "plan a tiled warp")
+    try:
+        out = warp_bilinear_tiled(tiles, 30, 30, 40 / 30, 40 / 30, output="tiles")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert out.count() > 0
+
+
 def test_nearest_sample_picks_cell_and_masks():
     """floor(coord+0.5) convention: .5 rounds up; out-of-range -> NaN;
     no blending ever (values are either exact source cells or NaN)."""

@@ -9,7 +9,8 @@ record:
 - pushed_filters     — parquet scans with non-empty PushedFilters
 - codegen_spans      — WholeStageCodegen regions
 - arrow_python_nodes — vectorized Python boundaries (MapInPandas /
-                       FlatMapGroupsInPandas / ArrowEvalPython)
+                       MapInArrow / FlatMapGroupsInPandas /
+                       FlatMapGroupsInArrow / ArrowEvalPython)
 - row_python_nodes   — row-at-a-time BatchEvalPython (MUST be zero:
                        the engine bans non-Arrow Python in plans)
 
@@ -121,7 +122,9 @@ def audit_one(df) -> dict:
         "codegen_spans": plan.count("WholeStageCodegen"),
         "arrow_python_nodes": (
             plan.count("MapInPandas")
+            + plan.count("MapInArrow")
             + plan.count("FlatMapGroupsInPandas")
+            + plan.count("FlatMapGroupsInArrow")
             + plan.count("ArrowEvalPython")
         ),
         "row_python_nodes": plan.count("BatchEvalPython"),
