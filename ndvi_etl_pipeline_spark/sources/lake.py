@@ -845,6 +845,76 @@ def _trunc_str_bounds(mn, mx):
     return mn, mx, truncated
 
 
+def _nan_last(v):
+    """Sort key ordering NaN above every number, as Spark's min/max do."""
+    return (v != v, v)
+
+
+def _parquet_files(root: str) -> list[str]:
+    """Every parquet file under `root`, sorted."""
+    return sorted(
+        os.path.join(r, f)
+        for r, _dirs, names in os.walk(root)
+        for f in names
+        if f.endswith(".parquet")
+    )
+
+
+def _footer_stats(file: str, cols=()) -> tuple[int, dict]:
+    """(row count, {col: [min, max]}) of one written parquet file, read
+    from its footer alone — the writer's own bookkeeping, so no commit
+    re-scans what it just wrote. Row-group bounds fold to one file
+    range (NaN sorts highest, as in Spark); bounds pass through
+    _json_safe and _trunc_str_bounds, a synthesized max recorded as a
+    third `1`. A column holding only nulls gets [None, None]. A column
+    holding values whose footer carries no min/max gets NO bound (the
+    file is never pruned on it): parquet-mr omits a string column's
+    when min and max together exceed 4 KiB, and the DataSource writer
+    omits a float column's when it holds NaN. An unreadable footer
+    raises — a commit must never publish a guessed count."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(file)
+    want = set(cols)
+    idx = {
+        md.schema.column(i).path: i
+        for i in range(md.num_columns)
+        if md.schema.column(i).path in want
+    }
+    bounds: dict = {c: None for c in idx}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c, i in idx.items():
+            if c not in bounds:
+                continue  # already unbounded
+            s = rg.column(i).statistics
+            if s is not None and s.has_min_max:
+                mn, mx = s.min, s.max
+                if bounds[c] is not None:
+                    mn = min(bounds[c][0], mn, key=_nan_last)
+                    mx = max(bounds[c][1], mx, key=_nan_last)
+                bounds[c] = (mn, mx)
+            elif s is None or not s.has_null_count or s.null_count < rg.num_rows:
+                del bounds[c]
+    stats = {}
+    for c, b in bounds.items():
+        mn, mx, trunc = _trunc_str_bounds(
+            *(_json_safe(v) for v in (b or (None, None)))
+        )
+        stats[c] = [mn, mx, 1] if trunc else [mn, mx]
+    return md.num_rows, stats
+
+
+def _stat_cols(schema: T.StructType, skip=()) -> list[str]:
+    """The orderable scalar columns whose per-file min/max the
+    manifest records."""
+    return [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, _STATS_TYPES) and f.name not in skip
+    ]
+
+
 def _partition_values(rel: str) -> dict[str, str | None]:
     """Parse `col=val` segments out of a table-relative file path
     (hive layout under data/<commit>/). Values are percent-decoded;
@@ -955,19 +1025,21 @@ def _write_data_files(
     bloom_cols: tuple[str, ...] = (),
     mapping: dict | None = None,
     optimize_write: bool = False,
-) -> list[dict]:
+) -> tuple[list[dict], int]:
     """Write df's rows as immutable parquet files under a fresh
-    commit-scoped subdir; return manifest entries
-    [{"path": rel, "stats": {col: [min, max]}, "partitions": {...}}].
-    Per-file column min/max (orderable scalar columns only) is the
-    file-skipping index: lake_read prunes files whose range provably
-    misses a predicate — Iceberg's manifest-stats design, the lever
-    that makes a 100 TB table readable without scanning it. Stats cost
-    one grouped aggregate over the just-written files. Partitioned
-    writes additionally record each file's exact partition-dir values
-    for identity/transform pruning; transform specs (bucket/truncate/
-    day/month/year) partition the LAYOUT on a derived dir column while
-    the source column stays in the data."""
+    commit-scoped subdir; return (manifest entries, rows written), the
+    entries [{"path": rel, "stats": {col: [min, max]}, "partitions":
+    {...}}]. Per-file column min/max (orderable scalar columns only)
+    is the file-skipping index: lake_read prunes files whose range
+    provably misses a predicate — Iceberg's manifest-stats design, the
+    lever that makes a 100 TB table readable without scanning it.
+    Stats and row counts come from each written file's parquet footer
+    (_footer_stats), so the write is the only job. A write that
+    produced no rows returns no entries and removes its commit dir.
+    Partitioned writes additionally record each file's exact
+    partition-dir values for identity/transform pruning; transform
+    specs (bucket/truncate/day/month/year) partition the LAYOUT on a
+    derived dir column while the source column stays in the data."""
     commit_id = uuid.uuid4().hex[:12]
     out = os.path.join(path, "data", commit_id)
     # below this point everything is PHYSICAL space: file columns,
@@ -993,45 +1065,20 @@ def _write_data_files(
     if dir_cols:
         w = w.partitionBy(*dir_cols)
     w.parquet(out)
-    rel = []
-    for root, _dirs, names in os.walk(out):
-        for f in sorted(names):
-            if f.endswith(".parquet"):
-                rel.append(
-                    os.path.relpath(os.path.join(root, f), path)
-                )
-    rel.sort()
-    stat_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, _STATS_TYPES) and f.name not in dir_cols
-    ]
-    stats_by_file: dict[str, dict] = {}
-    if rel and stat_cols:
-        spark = df.sparkSession
-        aggs = []
-        for c in stat_cols:
-            aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-        per_file = (
-            spark.read.parquet(out)
-            .groupBy(F.input_file_name().alias("src_file"))
-            .agg(*aggs)
-            .collect()
-        )
-        # key stats by TABLE-RELATIVE path, never basename: partitioned
-        # writes reuse part-<n>-<uuid> basenames across partition dirs,
-        # so a basename key silently collapses different files' stats
-        for r in per_file:
-            relp = os.path.relpath(_fs_path(r["src_file"]), os.path.abspath(path))
-            st = {}
-            for c in stat_cols:
-                mn, mx, trunc = _trunc_str_bounds(
-                    _json_safe(r[f"mn_{c}"]), _json_safe(r[f"mx_{c}"])
-                )
-                st[c] = [mn, mx, 1] if trunc else [mn, mx]
-            stats_by_file[relp] = st
+    stat_cols = _stat_cols(df.schema, skip=dir_cols)
+    # key everything by TABLE-RELATIVE path, never basename:
+    # partitioned writes reuse part-<n>-<uuid> basenames across
+    # partition dirs
+    footers = {
+        os.path.relpath(f, path): _footer_stats(f, stat_cols)
+        for f in _parquet_files(out)
+    }
+    rows = sum(n for n, _st in footers.values())
+    if not rows:
+        shutil.rmtree(out, ignore_errors=True)
+        return [], 0
     bloom_by_file: dict[str, dict] = {}
-    if rel and bloom_cols:
+    if bloom_cols:
         import base64
 
         spark = df.sparkSession
@@ -1083,8 +1130,8 @@ def _write_data_files(
                     "bits": base64.b64encode(bytes(bits)).decode(),
                 }
     entries = []
-    for p in rel:
-        e = {"path": p, "stats": stats_by_file.get(p, {})}
+    for p in sorted(footers):
+        e = {"path": p, "stats": footers[p][1]}
         try:  # size drives lake_maintain's small-file policy
             e["bytes"] = os.path.getsize(os.path.join(path, p))
         except OSError:
@@ -1094,7 +1141,7 @@ def _write_data_files(
         if bloom_cols:
             e["bloom"] = bloom_by_file.get(p, {})
         entries.append(e)
-    return entries
+    return entries, rows
 
 
 def _local_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -1355,26 +1402,21 @@ _DV_FID_BROADCAST_MAX_ROWS = 16_000_000
 def _dv_rows(path: str, dvs) -> int:
     """Total row count across DV parquet sets from footer metadata
     alone — O(#dv files) driver work, no data read."""
-    import pyarrow.parquet as pq
+    try:
+        return sum(_dir_rows(os.path.join(path, d)) for d in dvs)
+    except Exception:
+        # doubt: the set's true size is UNKNOWN and may be huge, so
+        # the sentinel must disable BOTH broadcast tiers (a
+        # _DV_BROADCAST_MAX_ROWS+1 sentinel sat under the fid tier's
+        # threshold and force-broadcast unknown-size sets)
+        return _DV_FID_BROADCAST_MAX_ROWS + 1
 
-    total = 0
-    for d in dvs:
-        droot = os.path.join(path, d)
-        for root, _dirs, names in os.walk(droot):
-            for f in names:
-                if f.endswith(".parquet"):
-                    try:
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_rows
-                    except Exception:
-                        # doubt: the set's true size is UNKNOWN and may
-                        # be huge, so the sentinel must disable BOTH
-                        # broadcast tiers (a _DV_BROADCAST_MAX_ROWS+1
-                        # sentinel sat under the fid tier's threshold
-                        # and force-broadcast unknown-size sets)
-                        return _DV_FID_BROADCAST_MAX_ROWS + 1
-    return total
+
+def _dir_rows(root: str) -> int:
+    """Exact row count of the parquet files under `root`, from their
+    footers (raises on an unreadable one, unlike _dv_rows' planning
+    sentinel)."""
+    return sum(_footer_stats(f)[0] for f in _parquet_files(root))
 
 
 def _dv_meta_cols(path: str):
@@ -1868,8 +1910,7 @@ def lake_write(
         _enforce_constraints(
             df, T.StructType.fromJson(prev["schema"]), enforced_cons
         )
-    n_rows = df.count()
-    files = _write_data_files(
+    files, n_rows = _write_data_files(
         df, path, part_by, bl_cols, mapping, optimize_write=optimize_write
     )
     if mode == "append":
@@ -2565,13 +2606,11 @@ def _dv_rewrite(src_root: str, dvs, translate, dst_root: str, tag: str) -> list[
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tables = []
-    for d in dvs:
-        droot = os.path.join(src_root, d)
-        for root, _dirs, names in os.walk(droot):
-            for f in sorted(names):
-                if f.endswith(".parquet"):
-                    tables.append(pq.read_table(os.path.join(root, f)))
+    tables = [
+        pq.read_table(f)
+        for d in dvs
+        for f in _parquet_files(os.path.join(src_root, d))
+    ]
     if not tables:
         return []
     t = pa.concat_tables(tables)
@@ -3340,14 +3379,9 @@ def _dv_files_touched(path: str, dv_dirs) -> set[str]:
 
     out: set[str] = set()
     for d in dv_dirs:
-        droot = os.path.join(path, d)
-        for root, _dirs, names in os.walk(droot):
-            for f in sorted(names):
-                if f.endswith(".parquet"):
-                    col = pq.read_table(
-                        os.path.join(root, f), columns=[_DV_FILE]
-                    ).column(_DV_FILE)
-                    out.update(col.unique().to_pylist())
+        for f in _parquet_files(os.path.join(path, d)):
+            col = pq.read_table(f, columns=[_DV_FILE]).column(_DV_FILE)
+            out.update(col.unique().to_pylist())
     return out
 
 
@@ -3514,12 +3548,14 @@ def _dv_delete_once(
     if clash:
         raise ValueError(f"table uses reserved DV column names {sorted(clash)}")
     df = _read_entries(spark, path, m, m["files"], keep_meta=True)
-    hits = select_hits(df).select(_DV_FILE, _DV_POS)
-    n = hits.count()
-    if n == 0:
-        return latest  # nothing matched: no new snapshot needed
     dv_rel = os.path.join("dv", uuid.uuid4().hex[:12])
-    hits.write.mode("error").parquet(os.path.join(path, dv_rel))
+    select_hits(df).select(_DV_FILE, _DV_POS).write.mode("error").parquet(
+        os.path.join(path, dv_rel)
+    )
+    n = _dir_rows(os.path.join(path, dv_rel))
+    if n == 0:
+        shutil.rmtree(os.path.join(path, dv_rel), ignore_errors=True)
+        return latest  # nothing matched: no new snapshot needed
     version = latest + 1
     manifest = {
         "version": version,
@@ -3628,15 +3664,11 @@ def lake_delete(
         part_by = tuple(m.get("partition_by") or ())
         bl_cols = tuple(m.get("bloom_cols") or ())
         survivors = _read_entries(spark, path, m, rewritten).filter(~predicate)
-        new_files = (
-            _stamp_spec(
-                _write_data_files(
-                    survivors, path, part_by, bl_cols, m.get("column_mapping")
-                ),
-                m,
-            )
-            if survivors.count()
-            else []
+        new_files = _stamp_spec(
+            _write_data_files(
+                survivors, path, part_by, bl_cols, m.get("column_mapping")
+            )[0],
+            m,
         )
         version = latest + 1
         manifest = {
@@ -3777,15 +3809,15 @@ def lake_merge(
             df.join(F.broadcast(key_df), list(keys), "left_semi").select(
                 _DV_FILE, _DV_POS
             ).write.mode("error").parquet(os.path.join(path, rel))
-            n_pre = _dv_rows(path, [rel])
+            n_pre = _dir_rows(os.path.join(path, rel))
             if n_pre == 0:
                 shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
             else:
                 pre_rel = rel
-        n_up = upd.count()
-        update_entries = _stamp_spec(
-            _write_data_files(upd, path, part_by, bl_cols, mapping), m
+        update_entries, n_up = _write_data_files(
+            upd, path, part_by, bl_cols, mapping
         )
+        _stamp_spec(update_entries, m)
         version = latest + 1
         manifest = {
             "version": version,
@@ -3870,18 +3902,16 @@ def lake_merge(
                 survivors = _read_entries(
                     spark, path, m, rewritten_entries
                 ).join(F.broadcast(key_df), list(keys), "left_anti")
-                if survivors.count():
-                    new_files += _stamp_spec(
-                        _write_data_files(
-                            survivors, path, part_by, bl_cols, mapping
-                        ),
-                        m,
-                    )
-        n_up = upd.count()
-        update_entries = _stamp_spec(
-            _write_data_files(upd, path, part_by, bl_cols, mapping), m
+                new_files += _stamp_spec(
+                    _write_data_files(
+                        survivors, path, part_by, bl_cols, mapping
+                    )[0],
+                    m,
+                )
+        update_entries, n_up = _write_data_files(
+            upd, path, part_by, bl_cols, mapping
         )
-        new_files += update_entries
+        new_files += _stamp_spec(update_entries, m)
         version = latest + 1
         manifest = {
             "version": version,
@@ -3965,14 +3995,12 @@ def lake_merge_insert_only(
                 .distinct()
             )
             new_rows = upd.join(F.broadcast(existing), list(keys), "left_anti")
-        n = new_rows.count()
-        if n == 0:
-            return latest  # every key already present: no snapshot
         part_by = tuple(m.get("partition_by") or ())
         bl_cols = tuple(m.get("bloom_cols") or ())
-        entries = _stamp_spec(
-            _write_data_files(new_rows, path, part_by, bl_cols, mapping), m
-        )
+        entries, n = _write_data_files(new_rows, path, part_by, bl_cols, mapping)
+        if n == 0:
+            return latest  # every key already present: no snapshot
+        _stamp_spec(entries, m)
         version = latest + 1
         manifest = {
             "version": version,
@@ -4118,7 +4146,7 @@ def lake_update(
         if m.get("constraints"):
             _enforce_constraints(changed, schema, m["constraints"])
         update_files = _stamp_spec(
-            _write_data_files(changed, path, part_by, bl_cols, mapping), m
+            _write_data_files(changed, path, part_by, bl_cols, mapping)[0], m
         )
         version = latest + 1
         manifest = {
@@ -4172,14 +4200,12 @@ def lake_update(
         if m.get("constraints"):
             _enforce_constraints(changed, schema, m["constraints"])
         update_files = _stamp_spec(
-            _write_data_files(changed, path, part_by, bl_cols, mapping), m
+            _write_data_files(changed, path, part_by, bl_cols, mapping)[0], m
         )
         carry = sub.filter(~cond)
-        new_files = list(update_files)
-        if carry.count():
-            new_files += _stamp_spec(
-                _write_data_files(carry, path, part_by, bl_cols, mapping), m
-            )
+        new_files = update_files + _stamp_spec(
+            _write_data_files(carry, path, part_by, bl_cols, mapping)[0], m
+        )
         version = latest + 1
         manifest = {
             "version": version,
@@ -4334,7 +4360,7 @@ def lake_compact(
         else:
             df = df.coalesce(num_files)
         files = _stamp_spec(
-            _write_data_files(df, path, part_by, bl_cols, m.get("column_mapping")),
+            _write_data_files(df, path, part_by, bl_cols, m.get("column_mapping"))[0],
             m,
         )
         version = latest + 1
@@ -4587,12 +4613,8 @@ def lake_vacuum(
     for dv_dir in sorted(cand_dv_dirs - kept_dv_dirs):
         if os.path.isabs(dv_dir):
             continue  # cloned DV set: lives in the source table
-        droot = os.path.join(path, dv_dir)
-        if os.path.isdir(droot):
-            for root, _dirs, names in os.walk(droot):
-                for f in sorted(names):
-                    if f.endswith(".parquet"):
-                        _rm(os.path.relpath(os.path.join(root, f), path))
+        for f in _parquet_files(os.path.join(path, dv_dir)):
+            _rm(os.path.relpath(f, path))
     # drop the history: delta segments and checkpoints below keep_from
     # (tagged anchors keep both)
     for v in range(keep_from):
@@ -4612,21 +4634,12 @@ def lake_vacuum(
     if deep:
         # full sweep for never-referenced staged files (lost commit
         # attempts) — the one orphan class a log diff cannot list
-        data_root = os.path.join(path, "data")
-        if os.path.isdir(data_root):
-            for root, _dirs, names in os.walk(data_root):
-                for f in sorted(names):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, path)
-                    if f.endswith(".parquet") and rel not in kept_files:
-                        _rm(rel)
-        dv_root = os.path.join(path, "dv")
-        if os.path.isdir(dv_root):
-            for root, _dirs, names in os.walk(dv_root):
-                for f in sorted(names):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, path)
-                    dv_dir = os.sep.join(rel.split(os.sep)[:2])  # dv/<uuid>
-                    if f.endswith(".parquet") and dv_dir not in kept_dv_dirs:
-                        _rm(rel)
+        for f in _parquet_files(os.path.join(path, "data")):
+            rel = os.path.relpath(f, path)
+            if rel not in kept_files:
+                _rm(rel)
+        for f in _parquet_files(os.path.join(path, "dv")):
+            rel = os.path.relpath(f, path)
+            if os.sep.join(rel.split(os.sep)[:2]) not in kept_dv_dirs:
+                _rm(rel)  # not a dv/<uuid> set any snapshot keeps
     return sorted(set(deleted))

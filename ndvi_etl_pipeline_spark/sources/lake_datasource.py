@@ -49,13 +49,16 @@ from .lake import (
     _entry_part_by,
     _entry_rel,
     _file_may_match,
+    _footer_stats,
     _latest_version,
+    _parquet_files,
     _parse_partition_spec,
     _partition_specs,
     _paths,
     _phys_where,
     _read_delta,
     _read_manifest,
+    _stat_cols,
 )
 
 
@@ -134,21 +137,15 @@ def _dv_positions(path, manifest, only_rels=None) -> dict[str, list[int]]:
         else pc.field("__dv_file").isin(sorted(only_rels))
     )
     for d in dvs:
-        droot = os.path.join(path, d)
-        for root, _dirs, names in os.walk(droot):
-            for f in sorted(names):
-                if not f.endswith(".parquet"):
-                    continue
-                t = pq.read_table(
-                    os.path.join(root, f),
-                    filters=flt,
-                    columns=["__dv_file", "__dv_pos"],
-                )
-                for fp, pos in zip(
-                    t.column("__dv_file").to_pylist(),
-                    t.column("__dv_pos").to_pylist(),
-                ):
-                    out.setdefault(fp, set()).add(pos)
+        for f in _parquet_files(os.path.join(path, d)):
+            t = pq.read_table(
+                f, filters=flt, columns=["__dv_file", "__dv_pos"]
+            )
+            for fp, pos in zip(
+                t.column("__dv_file").to_pylist(),
+                t.column("__dv_pos").to_pylist(),
+            ):
+                out.setdefault(fp, set()).add(pos)
     return {k: sorted(v) for k, v in out.items()}
 
 
@@ -624,47 +621,13 @@ class LakeStreamReader(DataSourceStreamReader):
 class LakeWriteMessage(WriterCommitMessage):
     """One task's staged files: manifest-ready entries (path, stats,
     and partition values for hive layouts) + the task's row count.
-    Stats are executor-computed while the data is hot (the same shape
-    _write_data_files records, so file skipping works on DataSource
-    writes too)."""
+    Stats are read back from each staged file's parquet footer by the
+    same helper lake_write uses (_footer_stats), so file skipping works
+    on DataSource writes too and both writers record one shape."""
 
     def __init__(self, files: list[dict], n_rows: int):
         self.files = files
         self.n_rows = n_rows
-
-
-_STATS_ARROW = ("int", "uint", "float", "double", "string", "large_string", "bool", "date")
-
-
-def _arrow_file_stats(table) -> dict:
-    """Per-column [min, max] for orderable scalar columns of one
-    staged Arrow table — computed executor-side while the data is hot
-    (cheaper than lake_write's post-hoc grouped aggregate)."""
-    import pyarrow.compute as pc
-
-    stats: dict = {}
-    for field in table.schema:
-        tname = str(field.type)
-        if not any(tname.startswith(p) for p in _STATS_ARROW):
-            continue
-        col = table.column(field.name)
-        if col.null_count == len(col):
-            stats[field.name] = [None, None]
-            continue
-        mm = pc.min_max(col)
-        mn, mx = mm["min"].as_py(), mm["max"].as_py()
-        from .lake import _trunc_str_bounds
-
-        mn, mx, trunc = _trunc_str_bounds(
-            mn if isinstance(mn, (int, float, str, bool)) or mn is None else str(mn),
-            mx if isinstance(mx, (int, float, str, bool)) or mx is None else str(mx),
-        )
-        rng = [
-            v if isinstance(v, (int, float, str, bool)) or v is None else str(v)
-            for v in (mn, mx)
-        ]
-        stats[field.name] = rng + [1] if trunc else rng
-    return stats
 
 
 class _LakeWriterCore:
@@ -696,6 +659,7 @@ class _LakeWriterCore:
         if not self._path:
             raise ValueError("lake sink requires option('path', ...)")
         self._schema_json = schema.json()
+        self._stat_cols = _stat_cols(schema)
         self._overwrite = overwrite
         self._commit_id = uuid.uuid4().hex[:12]
         # resolve the partition layout ON THE DRIVER, before executors
@@ -733,14 +697,29 @@ class _LakeWriterCore:
     # -- executor side ----------------------------------------------------
     def _stage(self, table, rel_dir: str) -> dict:
         """Write one Arrow table as one staged file; return its
-        manifest entry (stats computed on the stored columns)."""
+        manifest entry (stats read from the file's footer). Arrow's
+        footer statistics skip NaN, and Spark's row-group filter
+        trusts them — a [1.0, NaN] column stored with max 1.0 would
+        drop the NaN row from `score > 5` — so a float column holding
+        NaN is written without statistics, which also leaves it
+        unbounded in the manifest."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         rel = os.path.join(rel_dir, f"part-{uuid.uuid4().hex[:12]}.parquet")
         full = os.path.join(self._path, rel)
         os.makedirs(os.path.dirname(full), exist_ok=True)
-        pq.write_table(table, full)
-        return {"path": rel, "stats": _arrow_file_stats(table)}
+        with_stats = [
+            f.name
+            for f in table.schema
+            if not (
+                pa.types.is_floating(f.type)
+                and pc.any(pc.is_nan(table.column(f.name))).as_py()
+            )
+        ]
+        pq.write_table(table, full, write_statistics=with_stats)
+        return {"path": rel, "stats": _footer_stats(full, self._stat_cols)[1]}
 
     def write(self, iterator) -> LakeWriteMessage:
         import pyarrow as pa

@@ -262,7 +262,7 @@ def test_lake_concurrent_append_auto_retries(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "t")
     lake_write(_df(spark, [(1, "a")]), t)  # v0
 
-    winner_files = L._write_data_files(_df(spark, [(2, "b")]).coalesce(1), t)
+    winner_files, _ = L._write_data_files(_df(spark, [(2, "b")]).coalesce(1), t)
     real_commit = L._commit
     injected = {"done": False}
 
@@ -307,7 +307,7 @@ def test_lake_concurrent_delete_reruns_from_winner(spark, tmp_path, monkeypatch)
     lake_write(_df(spark, [(1, "a"), (14, "d")]).coalesce(1), t)  # v0
 
     # winner appends one MATCHING row (k=40) and one keeper (k=5)
-    winner_files = L._write_data_files(
+    winner_files, _ = L._write_data_files(
         _df(spark, [(5, "e"), (40, "x")]).coalesce(1), t
     )
     real_commit = L._commit
