@@ -12,12 +12,14 @@ DataFrame. Done naively this has two 100 TB-scale failure modes:
 2. **No failure truncation** — losing an executor late in the loop
    recomputes the entire history instead of the last round.
 
-`localCheckpoint` after every round fixes both: it materializes the
-round's result as RDD blocks and cuts the plan back to a scan of
-those blocks, so round k's plan is always "one step over a
-materialized relation" regardless of k. (Reliable `checkpoint()` to
-an HDFS dir is the cluster-production variant when executor loss must
-be survivable; the call-shape is identical.)
+A checkpoint after every round fixes both: it materializes the
+round's result and cuts the plan back to a scan of it, so round k's
+plan is always "one step over a materialized relation" regardless of
+k. When the SparkContext has a checkpoint directory
+(`sc.setCheckpointDir`, an HDFS/object-store path on a cluster) the
+cut is a reliable `checkpoint()` whose files survive executor loss;
+without one it is `localCheckpoint()`, whose executor-local blocks do
+not (a lost block fails the query).
 
 Generalized from `dedup.connected_components`'s loop (the engine's
 first iterative operator); `fixpoint` adds the convergence probe as a
@@ -64,6 +66,14 @@ def scoped_persist(df: DataFrame, slot: str) -> DataFrame:
     return out
 
 
+def _cut(df: DataFrame) -> DataFrame:
+    """Eager checkpoint: reliable when a checkpoint dir is set, local
+    otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def materialize(df: DataFrame) -> DataFrame:
     """Cut lineage NOW: compute `df` once and return a DataFrame that
     scans the materialized blocks.
@@ -77,9 +87,9 @@ def materialize(df: DataFrame) -> DataFrame:
     Prefer this over `.persist()` when the relation is reused many
     times at plan-BUILD time: persist keeps the full lineage in the
     plan (the optimizer still analyzes the whole tree per reuse);
-    localCheckpoint truncates it.
+    a checkpoint truncates it.
     """
-    return df.localCheckpoint(eager=True)
+    return _cut(df)
 
 
 def iterate(
@@ -91,7 +101,7 @@ def iterate(
     """Run a FIXED number of steps with periodic lineage truncation.
 
     `step(state, i)` returns the next state. Every `checkpoint_every`
-    rounds the state is localCheckpoint-ed, so the final plan depth is
+    rounds the state is checkpointed, so the final plan depth is
     O(checkpoint_every), not O(n). Use for fixed-step algorithms whose
     oracle replays the same trajectory (power iteration, Lloyd steps,
     median-polish sweeps).
@@ -99,7 +109,7 @@ def iterate(
     for i in range(n):
         state = step(state, i)
         if (i + 1) % checkpoint_every == 0 and i + 1 < n:
-            state = state.localCheckpoint(eager=True)
+            state = _cut(state)
     return state
 
 
@@ -119,7 +129,7 @@ def fixpoint(
     """
     prev: object = object()  # sentinel unequal to anything
     for _ in range(max_iter):
-        state = step(state).localCheckpoint(eager=True)
+        state = _cut(step(state))
         cur = fingerprint(state)
         if cur == prev:
             break

@@ -1,58 +1,80 @@
-"""Exact global-order analytics with a distributed execution mode.
+"""Exact global-order analytics: one sorted partition or a range plan.
 
 The class-3 catalog family (PLANS.md "exact-global-rank semantics")
 computes ntile / rank / row_number / running sums over a TOTAL order
 of all entities. Spark's `Window.orderBy(...)` with no partition spec
-is exact but moves every row to ONE partition — the right plan while
-the ordered side is an entity-sized aggregate, and the documented
-first cliff at 100× entity growth.
+is exact but moves every row to ONE partition — the cheapest plan
+while the ordered side is an entity-sized aggregate, and the
+documented first cliff at 100× entity growth.
 
-`global_ranked` keeps both plans behind one call:
+`global_ranked` keeps both plans behind one call and, unless told
+otherwise, picks one by the input's size:
 
-- ``distributed`` (default since round 10): the two-pass exact form —
-  ``repartitionByRange`` on the order key, a per-range local window,
-  and per-range offsets joined back by broadcast. No single-partition
-  exchange, no unpartitioned Window node anywhere in the plan; the
-  parallel sort is the plan you want at 100 TB. Results are
-  bit-identical to single mode (parity pinned per analytic and per
-  class-3 member in tests/test_rank_distributed.py), so the flip
-  changes zero declared results — it removes the 185 global-window
-  single-partition sorts the round-9 plan audit counted across 118
-  queries in the old default.
-- ``single`` (opt-in via the ``spark.ndvi_etl.rankMode`` session conf
-  or the `mode=` kwarg): the global Window expressions — the
-  one-partition plan DuckDB also runs; kept selectable for parity
-  testing and for entity-scale inputs where one sorted partition is
-  genuinely cheapest.
+- ``single``: the global Window expressions — one sorted partition,
+  the plan DuckDB also runs.
+- ``distributed``: the two-pass exact form — range ids from sampled
+  boundaries, a per-range local window, and per-range offsets joined
+  back by broadcast. No single-partition exchange and no unpartitioned
+  Window node anywhere in the plan.
+- The size rule (no `mode=` and no ``spark.ndvi_etl.rankMode``): the
+  pre-rank input's estimate, ``optimizedPlan().stats().sizeInBytes``
+  capped at the summed estimates of the plan's leaf relations, is
+  compared with one advisory partition,
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (64 MB by
+  default). Below it the input fits one post-shuffle partition and
+  ``single`` runs; at or above it ``distributed`` runs. The cap
+  matters because without CBO Spark estimates a join as the product
+  of its children: a few-thousand-row join of two small tables would
+  otherwise read as gigabytes. An unknown leaf estimate
+  (``spark.sql.defaultSizeInBytes``, i.e. Long.MaxValue) picks
+  ``distributed``. The check is driver-side and runs no job.
+  ``mode=`` and the session conf stay as explicit overrides. The
+  bound is Spark's own partition target; on a 4-core machine
+  (``local[4]``, a 3-column parquet input, row_number and a running
+  sum) the measured crossover sits there: single vs distributed took
+  3.6 vs 5.2 s at 32 MiB, 7.2 vs 7.4 s at 65 MiB, 11.1 vs 8.2 s at
+  97 MiB and 40 vs 28 s at 259 MiB.
 
 Why the distributed form is EXACT (not approximate):
 
-- RangePartitioning assigns rows with EQUAL sort keys to the same
-  partition, so rank/dense_rank ties never straddle a boundary and
-  ``local rank + (# rows in earlier ranges)`` is the global rank.
+- The range id ``__rank_pid`` is a function of the order key alone,
+  so rows with EQUAL keys land in the same range: rank/dense_rank ties
+  never straddle a boundary and ``local rank + (# rows in earlier
+  ranges)`` is the global rank.
 - Offsets are exact prefix sums of per-range counts/sums, computed
   with a triangular broadcast self-join over the P-row stats relation
-  (P = shuffle partitions) — deliberately NOT a window, so the plan
-  audit's `global_window_nodes` counter stays at zero in this mode.
+  — deliberately NOT a window, so the plan audit's
+  `global_window_nodes` counter stays at zero in this mode.
 - ntile(n) is a closed-form function of (global row_number, N, n):
   the first N mod n buckets take ceil(N/n) rows, the rest floor(N/n)
   — ANSI semantics, identical to the Window implementation.
-- Running sums stay bit-identical across modes when the summed column
-  is integral (the catalog's running sums are exact integer counts by
-  oracle-determinism design); float running sums are exact prefix
-  sums per range but may associate differently than a serial scan.
+- Integral running sums are bit-identical across modes (the catalog's
+  running sums are exact integer counts by oracle-determinism design).
+  Float running sums are exact prefix sums per range but associate
+  differently than a serial scan, so their last bits may change when
+  the size rule flips a query from one mode to the other.
 
-Every plan branch (local window, stats, stats-self-join) reads the
-SAME materialized (row, pid) partitions: the ranged data is pinned
-with a lazy localCheckpoint, so the range boundaries are sampled
-exactly once. This is load-bearing — relying on Catalyst's
-ReuseExchange instead is silently wrong the moment the branches prune
-different columns (the exchanges stop being canonically identical,
-each resamples its own boundaries, and the offsets shift ranks by a
-few rows; caught by the n=1000 parity test during development).
-tests/test_rank_distributed.py pins the plan shape: zero
-SinglePartition exchanges, zero unpartitioned Window nodes, one
-ExistingRDD scan.
+How the range ids stay fixed without a checkpoint: at plan build the
+order key is sampled once (``20 × P`` rows, a bounded TakeOrdered job,
+as Spark's own RangePartitioner samples) and P−1 boundary rows are
+folded into the plan as one literal array per key column.
+``__rank_pid`` is then a binary search over those arrays (log2 P
+steps folded into one expression, one array element per step) — a
+lexicographic comparison that honours each key's asc/desc direction,
+Spark's default null ordering (NULLS FIRST ascending, NULLS LAST
+descending) and SQL float ordering (NaN highest, -0.0 = 0.0) — and
+`repartitionById` sends range i to partition i. The ranged rows are
+cached (`iterate.scoped_persist`) so the local-window and stats
+branches read one computation of the input; any recomputation, of a
+lost cache block or a lost shuffle output, derives identical ids from
+the literals. (The earlier form pinned the ranged rows with a lazy
+localCheckpoint, whose lost blocks failed the query; sampling the
+boundaries inside each branch instead would let branches disagree.)
+tests/test_rank_distributed.py pins the plan shape (zero
+SinglePartition exchanges, zero unpartitioned Window nodes, no
+ExistingRDD scan, no range exchange), the block-loss recovery, one
+computation per level of a chained call and the generated code size
+at thousands of ranges.
 
 Reference parity: the reference has no ranking surface; this backs
 the catalog's scoring/segmentation queries (SURVEY.md §2.9 windows).
@@ -64,6 +86,9 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, TimestampType
+
+from .iterate import scoped_persist
 
 RANK_MODE_CONF = "spark.ndvi_etl.rankMode"
 
@@ -112,6 +137,7 @@ CLASS3_MEMBERS = (
 
 _PID = "__rank_pid"
 _LRN = "__rank_lrn"
+_CACHE_SLOTS = 64
 
 
 def _norm_order(order) -> list[tuple[Column, bool]]:
@@ -157,6 +183,120 @@ def _ntile_expr(rn: Column, total: Column, n: int) -> Column:
     in_head = _idiv(rn - 1, big) + 1  # == ceil(rn / big)
     in_tail = rem + _idiv(rn - head - 1, base) + 1
     return F.when(rn <= head, in_head).otherwise(in_tail).cast("int")
+
+
+def _size_mode(df: DataFrame) -> str:
+    """'single' when the input's estimated size, capped at its leaf
+    relations' total, is below one advisory partition, else
+    'distributed' (see the module docstring). Reads the optimizer's
+    estimates and the session conf — no job."""
+    jss = df.sparkSession._jsparkSession
+    sql_conf = df.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
+    bound = int(
+        jss.sessionState().conf().getConf(
+            sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+        )
+    )
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    read = sum(
+        int(str(leaves.apply(i).stats().sizeInBytes()))
+        for i in range(leaves.size())
+    )
+    size = min(int(str(plan.stats().sizeInBytes())), read)
+    return "single" if size < bound else "distributed"
+
+
+def _range_bounds(df: DataFrame, norm: list[tuple[Column, bool]], p: int):
+    """At most p-1 distinct boundary keys, ascending in the query's
+    sort order, from a uniform sample of 20·p rows (one bounded job).
+    Returns (n, arrays): one typed array literal per key column whose
+    i-th elements together form the i-th boundary key. Timestamps
+    travel as epoch micros, so no timezone conversion touches them on
+    the way through Python."""
+    cols, sort = [], []
+    for i, (c, asc) in enumerate(norm):
+        k = F.col(f"__k{i}")
+        cols.append(c.alias(f"__k{i}"))
+        sort.append(k.asc() if asc else k.desc())
+    keys = df.select(*cols)
+    dtypes = [f.dataType for f in keys.schema.fields]
+    moved = [
+        F.unix_micros(F.col(f"__k{i}")) if isinstance(t, TimestampType)
+        else F.col(f"__k{i}")
+        for i, t in enumerate(dtypes)
+    ]
+    sample = (
+        keys.orderBy(F.rand(17)).limit(20 * p).orderBy(*sort).select(*moved)
+    ).collect()
+    picked: list[tuple] = []
+    if sample:
+        for i in range(1, p):
+            b = tuple(sample[i * len(sample) // p])
+            if not picked or picked[-1] != b:
+                picked.append(b)
+
+    def typed(v, t) -> str:
+        # SQL text, one parse per array: a py4j call per element costs
+        # seconds at P in the thousands. A cast from the value's
+        # string form is exact; timestamps travel as epoch micros and
+        # binary as hex.
+        if v is None:
+            return f"CAST(NULL AS {t.simpleString()})"
+        if isinstance(t, TimestampType):
+            return f"timestamp_micros({int(v)})"
+        if isinstance(t, BinaryType):
+            return f"X'{bytes(v).hex()}'"
+        text = str(v).replace("\\", "\\\\").replace("'", "\\'")
+        return f"CAST('{text}' AS {t.simpleString()})"
+
+    arrays = [
+        F.expr("array(%s)" % ", ".join(typed(b[i], t) for b in picked))
+        for i, t in enumerate(dtypes)
+    ]
+    return len(picked), arrays
+
+
+def _range_id(norm: list[tuple[Column, bool]], n: int, arrays) -> Column:
+    """The range id of each row: the number of the n boundary keys
+    strictly before its key in the sort order, so equal keys get equal
+    ids. A binary search by powers of two folded over the steps with
+    `aggregate`: one expression whatever n is, reading one element of
+    every boundary array per step. (A comparison per boundary exceeds
+    the 64 KB codegen method limit at a thousand ranges; a projection
+    per step splits the Project that lets Spark plan a sort + limit
+    input as a top-k.)"""
+
+    def bound_before(i: Column) -> Column:
+        # boundary i < row lexicographically: strictly before on the
+        # first differing column, and not equal on all of them
+        out = F.lit(False)
+        for (c, asc), arr in reversed(list(zip(norm, arrays))):
+            b = F.element_at(arr, i)
+            # NULLS FIRST asc: a NULL precedes every non-NULL; NULLS
+            # LAST desc: follows it (c < b / c > b are NULL iff a side is)
+            before = (
+                F.coalesce(b < c, b.isNull() & c.isNotNull())
+                if asc
+                else F.coalesce(b > c, b.isNotNull() & c.isNull())
+            )
+            out = before | (b.eqNullSafe(c) & out)
+        return out
+
+    steps = []
+    step = 1 << (n.bit_length() - 1) if n else 0
+    while step:
+        steps.append(step)
+        step >>= 1
+    if not steps:
+        return F.lit(0)
+
+    def advance(pid: Column, step: Column) -> Column:
+        nxt = pid + step
+        hit = (nxt <= n) & bound_before(F.least(nxt, F.lit(n)))
+        return pid + F.when(hit, step).otherwise(0)
+
+    return F.aggregate(F.array(*map(F.lit, steps)), F.lit(0), advance)
 
 
 def global_ranked(
@@ -206,7 +346,10 @@ def global_ranked(
       (Pareto skylines, record tracking). Distributed: local
       exclusive running max combined with the prefix max of earlier
       ranges' partition maxima from the stats broadcast.
-    mode: 'single' | 'distributed'; default reads RANK_MODE_CONF.
+    mode: 'single' | 'distributed'; default reads RANK_MODE_CONF, and
+      without it the input's estimated size picks (module docstring).
+    num_partitions: ranges in distributed mode (default
+      spark.sql.shuffle.partitions).
     """
     ntile = dict(ntile or {})
     running_sums = dict(running_sums or {})
@@ -218,7 +361,7 @@ def global_ranked(
     sort = _sort_exprs(norm)
     spark = df.sparkSession
     if mode is None:
-        mode = spark.conf.get(RANK_MODE_CONF, "distributed")
+        mode = spark.conf.get(RANK_MODE_CONF, None) or _size_mode(df)
     if mode not in ("single", "distributed"):
         raise ValueError(f"unknown rank mode {mode!r}")
 
@@ -262,18 +405,19 @@ def global_ranked(
         spark.conf.get("spark.sql.shuffle.partitions", "200")
     )
     plain = [c for c, _ in norm]
-    parts = df.repartitionByRange(p, *sort).withColumn(
-        _PID, F.spark_partition_id()
-    )
-    # Pin the range assignment structurally: the stats branch and the
-    # data branch MUST see identical partition ids, but ReuseExchange
-    # only dedupes the range shuffle when both branches prune the same
-    # columns (a stats-side projection difference silently resamples
-    # the range boundaries — observed ±2 rank shifts). A lazy local
-    # checkpoint freezes (row, pid) once, at first action, and every
-    # branch reads the same materialized partitions; plan-build stays
-    # job-free.
-    parts = parts.localCheckpoint(eager=False)
+    n_bounds, arrays = _range_bounds(df, norm, p)
+    keyed = df.withColumn(_PID, _range_id(norm, n_bounds, arrays))
+    parts = keyed.repartitionById(n_bounds + 1, _PID)
+    # the local-window and stats branches prune different columns, so
+    # their range shuffles never match for ReuseExchange; without this
+    # cache each branch recomputes the input, and a chain of calls (an
+    # order key that is an earlier call's rank) doubles the earlier
+    # calls at every level. Lost cache blocks recompute from lineage.
+    # The slot is the plan's hash: a rebuilt plan replaces its own
+    # cache (it never reads rows an earlier build cached) and at most
+    # _CACHE_SLOTS caches stay live.
+    slot = parts._jdf.queryExecution().analyzed().semanticHash() % _CACHE_SLOTS
+    parts = scoped_persist(parts, f"global_ranked.{slot}")
 
     wloc = Window.partitionBy(_PID).orderBy(*sort)
     wlrun = wloc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -304,7 +448,7 @@ def global_ranked(
     # totals, global-sum partials, and — when lag/lead need the
     # cross-boundary handoff — each range's first/last row values
     # (computed from `loc` so the boundary rows follow the exact
-    # local sort; both branches read the same checkpointed parts)
+    # local sort).
     aggs = [F.count(F.lit(1)).alias("__cnt")]
     if dense_rank:
         aggs.append(F.countDistinct(F.struct(*plain)).alias("__dk"))
@@ -365,10 +509,21 @@ def global_ranked(
                 F.col(f"__b.__fst{i}"), F.when(after, F.col(f"__b.{_PID}"))
             ).alias(f"__nfst{i}")
         )
-    keep = [F.col(f"__a.{c}").alias(c) for c in stats.columns]
-    offsets = a.crossJoin(F.broadcast(b)).groupBy(*keep).agg(*off_aggs)
+    keep = [
+        F.any_value(F.col(f"__a.{c}")).alias(c) for c in stats.columns if c != _PID
+    ]
+    offsets = (
+        a.crossJoin(F.broadcast(b))
+        .groupBy(F.col(f"__a.{_PID}").alias(_PID))
+        .agg(*keep, *off_aggs)
+    )
 
-    out = loc.join(F.broadcast(offsets), _PID)
+    # every range id of `loc` has its stats row, so the left join keeps
+    # exactly the inner join's rows — and, the offsets being unique on
+    # __rank_pid, lets Catalyst drop the whole offsets branch from any
+    # consumer that reads none of the computed columns (a chained
+    # call's stats branch reads only the keys, not this call's ranks)
+    out = loc.join(F.broadcast(offsets), _PID, "left")
     grn = F.col("__off") + F.col(_LRN)
     if row_number:
         out = out.withColumn(row_number, grn.cast("int"))

@@ -8,12 +8,14 @@ threshold t" into prefix sums over the bucket axis.
 
 Scale shape — the part that matters at 100 TB: the data-sized stage
 is a single groupBy(bucket) with map-side partial aggregation, so the
-shuffle carries |buckets| rows (hundreds), not |rows|. The cumulative
-window that scans thresholds then runs over that bucket relation —
-the single-partition WindowExec it induces is over the BUCKET grid,
-a driver-visible constant, which is exactly how histogram-based
-learners make split finding communication-optimal (sufficient
-statistics are additive, so partials merge associatively).
+shuffle carries |buckets| rows (hundreds), not |rows|. The prefix
+sums that scan thresholds then run over that bucket relation through
+`rank.global_ranked(mode="single")` — one sorted partition of the
+BUCKET grid, a driver-visible constant at any data size (so no size
+estimate or rank-mode conf applies to it), which is exactly how
+histogram-based learners make split finding communication-optimal
+(sufficient statistics are additive, so partials merge
+associatively).
 
 Gini impurity for classification (binary label), variance reduction
 for regression — both from additive statistics only:
@@ -26,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .rank import global_ranked
 
 __all__ = ["gini_splits", "variance_splits", "boosted_stumps"]
 
@@ -66,13 +70,12 @@ def gini_splits(
         .groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("n"), F.sum("y").cast("bigint").alias("pos"))
     )
-    w = _cum()
-    cum = buckets.select(
-        "bucket",
-        F.sum("n").over(w).alias("n_l"),
-        F.sum("pos").over(w).alias("pos_l"),
-        F.sum("n").over(_tot()).alias("n_t"),
-        F.sum("pos").over(_tot()).alias("pos_t"),
+    cum = global_ranked(
+        buckets,
+        ["bucket"],
+        mode="single",
+        running_sums={"n_l": F.col("n"), "pos_l": F.col("pos")},
+        total_sums={"n_t": F.col("n"), "pos_t": F.col("pos")},
     )
 
     def gini(n, pos):
@@ -122,16 +125,12 @@ def variance_splits(
             F.sum(F.col("y") * F.col("y")).alias("ss"),
         )
     )
-    w = _cum()
-    tot = _tot()
-    cum = buckets.select(
-        "bucket",
-        F.sum("n").over(w).alias("n_l"),
-        F.sum("s").over(w).alias("s_l"),
-        F.sum("ss").over(w).alias("ss_l"),
-        F.sum("n").over(tot).alias("n_t"),
-        F.sum("s").over(tot).alias("s_t"),
-        F.sum("ss").over(tot).alias("ss_t"),
+    cum = global_ranked(
+        buckets,
+        ["bucket"],
+        mode="single",
+        running_sums={c + "_l": F.col(c) for c in ("n", "s", "ss")},
+        total_sums={c + "_t": F.col(c) for c in ("n", "s", "ss")},
     )
 
     def sse(n, s, ss):

@@ -2374,12 +2374,7 @@ def _cdf_preimage_parts(
     pre = spark.read.schema(_DV_SCHEMA).parquet(
         os.path.join(path, m["update_preimage_dv"])
     )
-    touched = {
-        r.f
-        for r in pre.select(F.col(_DV_FILE).alias("f"))
-        .distinct()
-        .collect()
-    }
+    touched = _dv_files_touched(path, [m["update_preimage_dv"]])
     pm = _read_manifest(path, v - 1)
     old_entries = [
         e for e in pm["files"] if _entry_rel(e) in touched
@@ -2485,15 +2480,10 @@ def lake_read_cdf(
                     *[os.path.join(path, d) for d in new_dvs]
                 )
                 # restrict the raw scan to the files the new DV rows
-                # actually touch (one tiny distinct job, ≤ #files
-                # rows) — without this the delete branch would scan
-                # the WHOLE snapshot per dv commit
-                touched = {
-                    r.f
-                    for r in dv_df.select(
-                        F.col(_DV_FILE).alias("f")
-                    ).distinct().collect()
-                }
+                # actually touch (a driver-side column read, no job) —
+                # without this the delete branch would scan the WHOLE
+                # snapshot per dv commit
+                touched = _dv_files_touched(path, new_dvs)
                 hit = [e for e in m["files"] if _entry_rel(e) in touched]
                 raw = _read_entries(
                     spark, path, {**m, "schema": to_m["schema"],
@@ -4106,11 +4096,7 @@ def lake_update(
         df.filter(cond).select(_DV_FILE, _DV_POS).write.mode("error").parquet(
             os.path.join(path, pre_rel)
         )
-        pre = spark.read.schema(_DV_SCHEMA).parquet(os.path.join(path, pre_rel))
-        hit_rel = {
-            r.f
-            for r in pre.select(F.col(_DV_FILE).alias("f")).distinct().collect()
-        }
+        hit_rel = _dv_files_touched(path, [pre_rel])
         if not hit_rel:
             shutil.rmtree(os.path.join(path, pre_rel), ignore_errors=True)
             return schema, None, hit_rel

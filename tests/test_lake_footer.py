@@ -19,6 +19,8 @@ from ndvi_etl_pipeline_spark.sources.lake import (
     lake_delete,
     lake_merge,
     lake_read,
+    lake_read_cdf,
+    lake_update,
     lake_write,
 )
 
@@ -226,3 +228,36 @@ def test_cow_merge_job_budget(spark, budget_table):
     m = L._read_manifest(t, L._latest_version(t))
     assert m["n_rows_delta"] == 60
     assert dict(_live(spark, t))[6] == 6.0 + 7.0
+
+
+def test_cow_update_job_budget(spark, budget_table):
+    """The hit files come from the landed preimage addresses by a
+    driver-side column read, not a Spark distinct job (11 → 9)."""
+    t = budget_table
+    assert _jobs(spark, lambda: lake_update(spark, t, {"v": "v + 100"},
+                                            F.col("k") % 100 == 8,
+                                            strategy="cow")) <= 9
+    live = dict(_live(spark, t))
+    assert len(live) == 6000 + 60 - 60 and live[8] == 8.0 + 100
+    assert L._read_manifest(t, L._latest_version(t))["n_rows_delta"] == 0
+
+
+def test_cdf_plan_build_runs_no_job(spark, budget_table):
+    """Building a change feed over a MoR merge, a DV delete, a COW
+    merge and a MoR update finds every touched-file set from the DV
+    footers: no Spark job before the first action."""
+    t = budget_table
+    lake_update(spark, t, {"v": "v + 100"}, F.col("k") % 100 == 9,
+                strategy="mor")
+    cdf = []
+    assert _jobs(spark, lambda: cdf.append(lake_read_cdf(spark, t, 1))) == 0
+    got = {}
+    for r in cdf[0].groupBy("_commit_version", "_change_type").count().collect():
+        got[(r["_commit_version"], r["_change_type"])] = r["count"]
+    # per commit: 60 rows updated (delete + insert), 60 deleted
+    assert got == {
+        (2, "delete"): 60, (2, "insert"): 60,
+        (3, "delete"): 60,
+        (4, "delete"): 60, (4, "insert"): 60,
+        (5, "delete"): 60, (5, "insert"): 60,
+    }

@@ -576,3 +576,38 @@ def test_asof_join_null_timestamps_never_match(spark):
     ).collect()}
     assert fwd[(1, t50)] == 9       # real forward match still works
     assert fwd[(1, None)] is None   # NULL left ts must not grab min rts
+
+
+def test_iterate_and_fixpoint_reliable_checkpoint_dir(spark, tmp_path):
+    """With a SparkContext checkpoint dir, iterate/fixpoint cut lineage
+    with a reliable checkpoint (files under the dir) and return what
+    the localCheckpoint default returns."""
+    from ndvi_etl_pipeline_spark.operators.iterate import fixpoint, iterate
+
+    def run():
+        start = spark.range(40).select(F.col("id").alias("x"))
+        it = iterate(
+            start,
+            lambda s, i: s.select(((F.col("x") * 3 + i) % 101).alias("x")),
+            5,
+        )
+        fp = fixpoint(
+            start,
+            lambda s: s.select(F.floor(F.col("x") / 2).cast("long").alias("x")),
+            lambda d: d.agg(F.sum("x")).first()[0],
+        )
+        return sorted(it.collect()), sorted(fp.collect())
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    ref = run()
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        got = run()
+    finally:
+        # SparkContext has no public unset: restore the empty Option
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert got == ref
+    assert any(p.is_file() for p in ckpt.rglob("*"))

@@ -11,6 +11,7 @@ from ndvi_etl_pipeline_spark.operators.scale import (
     write_bucketed,
 )
 from ndvi_etl_pipeline_spark.sources.testdata import load_table
+from tools.audit_plans import _sp_exchanges_nonagg, plan_as_run
 
 
 @pytest.fixture()
@@ -454,20 +455,13 @@ def test_selection_tier_plan_shapes(spark, sf_dir):
     from ndvi_etl_pipeline_spark.plans.queries import REGISTRY
 
     def plan_of(name):
-        return (
-            REGISTRY[name]
-            .builder(spark, sf_dir)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        return plan_as_run(REGISTRY[name].builder(spark, sf_dir))
 
-    # Under the round-10 distributed rank default the top-k + LM-join
-    # subplan sits below global_ranked's pinned localCheckpoint, so the
-    # top-level plan shows only the rank pass — assert the sort+limit
-    # shape under explicit single mode (where the whole plan is one
-    # tree) and the scale invariants (no single-partition exchange, no
-    # unpartitioned window) under the default.
+    # The top-k + LM-join subplan feeds global_ranked: assert the
+    # sort+limit shape under explicit single mode, and under explicit
+    # distributed mode the same subplan plus the scale invariants (no
+    # single-partition exchange that moves data, no unpartitioned
+    # window, no pinned ExistingRDD scan, no range exchange).
     from ndvi_etl_pipeline_spark.operators.rank import RANK_MODE_CONF
 
     spark.conf.set(RANK_MODE_CONF, "single")
@@ -477,10 +471,18 @@ def test_selection_tier_plan_shapes(spark, sf_dir):
         spark.conf.unset(RANK_MODE_CONF)
     assert "TakeOrderedAndProject" in p
     assert "BroadcastHashJoin" in p  # the 64-row LM join
-    p = plan_of("dsir_importance_topk")
-    final = p.split("== Initial Plan ==")[0]
-    assert "SinglePartition" not in final
-    for line in final.splitlines():
+    spark.conf.set(RANK_MODE_CONF, "distributed")
+    try:
+        p = plan_of("dsir_importance_topk")
+    finally:
+        spark.conf.unset(RANK_MODE_CONF)
+    assert "TakeOrderedAndProject" in p
+    # the input's one SinglePartition exchange feeds a scalar
+    # aggregate (the bucket LM totals: one row per partition)
+    assert _sp_exchanges_nonagg(p) == 0
+    assert "ExistingRDD" not in p
+    assert "rangepartitioning" not in p
+    for line in p.splitlines():
         if "Window [" in line and "WindowGroupLimit" not in line:
             assert "__rank_pid" in line, line
     # hard-negative mining scores via the Arrow kernel (driver-held

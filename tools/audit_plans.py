@@ -2,8 +2,8 @@
 """Machine-checked physical-plan audit over the whole query catalog.
 
 For every registered query (minus the iterative ones that execute
-driver-side loops at plan-build time), capture the executed plan and
-record:
+driver-side loops at plan-build time), capture the executed plan as
+`plan_as_run` prints it (each operator that runs, once) and record:
 
 - n_exchanges        — shuffle count
 - pushed_filters     — parquet scans with non-empty PushedFilters
@@ -18,7 +18,12 @@ Writes PLANS_AUDIT.json at the repo root and prints a summary. The
 ban on BatchEvalPython is also enforced by
 tests/test_scale.py::test_no_row_python_udfs_anywhere.
 
-Usage: python tools/audit_plans.py [--sf DIR]
+global_ranked runs its distributed form here unless --rank-mode says
+otherwise: at the audit's sf0.01 the size rule would pick the single
+global Window for almost every call, and the audit is about the plan
+that runs at scale.
+
+Usage: python tools/audit_plans.py [--sf DIR] [--rank-mode MODE]
 """
 
 from __future__ import annotations
@@ -40,6 +45,54 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 # post-checkpoint final-step plan, which is exactly the per-round
 # cost that matters at scale.
 EXECUTES_ON_BUILD: set[str] = set()
+
+
+_STAGE_WRAPPERS = {
+    "ShuffleQueryStageExec",
+    "BroadcastQueryStageExec",
+    "TableCacheQueryStageExec",
+    "ResultQueryStageExec",
+}
+
+
+def plan_as_run(df) -> str:
+    """`df`'s executed plan as text, one line per operator that runs,
+    indented three columns per tree level: an adaptive plan shows its
+    current plan (the final one once it ran), and a cached relation's
+    plan shows under its first scan only. Spark's own plan text adds
+    AQE's initial plan to every adaptive plan, cached ones included,
+    and repeats a cached plan under every scan of the cache although
+    it runs once — with nested caches that text grows exponentially
+    and counts operators that never run."""
+    jvm = df.sparkSession._jvm
+    fields = df.sparkSession._jsparkSession.sessionState().conf().maxToStringFields()
+    seen: set[int] = set()
+    lines: list[str] = []
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node, depth: int) -> None:
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), depth)
+        if kind in _STAGE_WRAPPERS:
+            return walk(node.plan(), depth)
+        if kind in ("WholeStageCodegenExec", "InputAdapter"):
+            return walk(node.child(), depth)
+        lines.append(("   " * (depth - 1) + "+- " if depth else "") + node.verboseString(fields))
+        if kind == "InMemoryRelation":
+            key = jvm.java.lang.System.identityHashCode(node.cacheBuilder())
+            if key in seen:
+                return
+            seen.add(key)
+        # inner children: subqueries, a cache scan's relation and its
+        # cached plan, a recursive CTE's anchor and step
+        for sub in seq(node.innerChildren()) + seq(node.children()):
+            walk(sub, depth + 1)
+
+    walk(df._jdf.queryExecution().executedPlan(), 0)
+    return "\n".join(lines)
 
 
 def _bracket_groups(s: str) -> list[str]:
@@ -110,7 +163,7 @@ def _sp_exchanges_nonagg(plan: str) -> int:
 
 
 def audit_one(df) -> dict:
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_as_run(df)
     # shuffles only: 'BroadcastExchange ...' and 'ReusedExchange [...]'
     # both contain the bare 'Exchange ' substring but move no shuffle
     # data — counting them inflated the audit for every broadcast join
@@ -147,9 +200,10 @@ def main() -> int:
     ap.add_argument(
         "--rank-mode",
         choices=("single", "distributed"),
-        default=None,
-        help="set spark.ndvi_etl.rankMode for the session (audits the "
-        "class-3 exact-rank family's distributed plans)",
+        default="distributed",
+        help="set spark.ndvi_etl.rankMode for the session (default "
+        "distributed: the audit counts the scale plan, not the plan the "
+        "input size picks at this sf)",
     )
     ap.add_argument(
         "--only", nargs="*", default=None, help="audit just these queries"
@@ -170,8 +224,7 @@ def main() -> int:
     from ndvi_etl_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="audit_plans", shuffle_partitions=16)
-    if args.rank_mode:
-        spark.conf.set("spark.ndvi_etl.rankMode", args.rank_mode)
+    spark.conf.set("spark.ndvi_etl.rankMode", args.rank_mode)
     out: dict[str, dict] = {}
     violations = []
     todo = sorted(Q.REGISTRY.items())
