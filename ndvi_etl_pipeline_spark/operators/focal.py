@@ -27,9 +27,9 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from .arrow_kernels import map_groups
 from .warp import WARP_TILE_SCHEMA, _halo_canvas, _halo_strips
 
 # tile form without band or partials — the tiled warp's output rows
@@ -80,39 +80,23 @@ def focal_map_tiled(
     with an identity destination mapping.
     """
     first = tiles.select("height").first()
-    if first is None:
-        return tiles.sparkSession.createDataFrame([], FOCAL_TILE_SCHEMA)
-    if not 0 < halo < first.height:
+    if first is not None and not 0 < halo < first.height:
         raise ValueError(f"halo must be in (0, {first.height}), got {halo}")
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, g):
         scene_id, rty, rtx = key
         # a receiver with no full-size strip is a phantom neighbor
         # index past the grid edge (dy/dx overshoot) — drop it
-        if not ((pdf["height"] == pdf["tile"]) & (pdf["width"] == pdf["tile"])).any():
-            return pd.DataFrame(columns=[f.name for f in FOCAL_TILE_SCHEMA])
-        canvas, P, _, _ = _halo_canvas(key, pdf, halo)
+        if not ((g.height == g.tile) & (g.width == g.tile)).any():
+            return
+        canvas, P, _, _ = _halo_canvas(key, g, halo)
         core = kernel(canvas)
         if core.shape != (P, P):
             raise ValueError(
                 f"kernel returned {core.shape}, expected {(P, P)} "
                 f"(must consume exactly halo={halo} per edge)"
             )
-        return pd.DataFrame(
-            [
-                {
-                    "scene_id": scene_id,
-                    "tile_y": int(rty),
-                    "tile_x": int(rtx),
-                    "height": P,
-                    "width": P,
-                    "y0": int(rty) * P,
-                    "x0": int(rtx) * P,
-                    "data": core.astype(np.float32).tobytes(),
-                }
-            ]
-        )
+        yield scene_id, rty, rtx, P, P, rty * P, rtx * P, core.astype(np.float32).tobytes()
 
-    return _halo_strips(tiles, halo).groupBy("scene_id", "recv_ty", "recv_tx").applyInPandas(
-        assemble, schema=FOCAL_TILE_SCHEMA
-    )
+    strips = _halo_strips(tiles, halo)
+    return map_groups(strips, ["scene_id", "recv_ty", "recv_tx"], assemble, FOCAL_TILE_SCHEMA)

@@ -14,9 +14,11 @@ The engine carries rasters in two representations:
 
 Payload encoding: row-major float32, little-endian, NaN = "cell
 absent/nodata". BinaryType keeps the bytes opaque to Catalyst (no
-per-pixel serialization cost through shuffles). Every narrow tile
-kernel crosses into Python through one helper, `_map_rows`
-(`mapInArrow`, payloads read in place as zero-copy memoryviews).
+per-pixel serialization cost through shuffles). Every tile kernel
+crosses into Python through operators/arrow_kernels.py: `map_rows`
+for the narrow kernels (`mapInArrow`), `map_groups` for the grouped
+ones (`applyInArrow`). Payloads are read in place as zero-copy
+memoryviews; pandas touches neither side.
 
 GeoTIFF: `write_geotiff`/`read_geotiff`/`decode_geotiff_bytes` are
 thin entry points into the engine's one pure-Python TIFF codec
@@ -35,12 +37,12 @@ load_to_postgis.py:189-192); the NDVI tile kernel = P1-P6
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import tiff as TF
+from .arrow_kernels import as_tile, map_groups, map_rows
 
 DEFAULT_TILE = 256
 NODATA = -9999.0
@@ -74,76 +76,6 @@ NDVI_TILE_SCHEMA = T.StructType(
         T.StructField("sum_ndvi", T.DoubleType()),
     ]
 )
-
-
-# ---------------------------------------------------------------------------
-# the Arrow tile-kernel boundary: every narrow kernel crosses it here
-# ---------------------------------------------------------------------------
-
-
-def _tile(buf, h: int, w: int) -> np.ndarray:
-    """A float32 tile payload as an (h, w) array view — no copy."""
-    return np.frombuffer(buf, dtype=np.float32).reshape(h, w)
-
-
-def _record_batch(rows: list[tuple], schema):
-    """Output row tuples (in `schema` field order) → one Arrow record
-    batch. A column whose first value is a numpy array holds one array
-    per row; each row then stands for that many output rows with its
-    scalar fields repeated — how a tile explodes to pixels."""
-    import pyarrow as pa
-
-    if not rows:
-        return pa.RecordBatch.from_pylist([], schema=schema)
-    cols = list(zip(*rows))
-    sizes = next(
-        (np.fromiter(map(len, c), np.int64, len(c)) for c in cols if isinstance(c[0], np.ndarray)),
-        None,
-    )
-    arrays = []
-    for c, f in zip(cols, schema):
-        if sizes is None:
-            v = list(c)
-        elif isinstance(c[0], np.ndarray):
-            v = np.concatenate(c)
-        else:
-            v = np.repeat(np.asarray(c, dtype=object), sizes)
-        arrays.append(pa.array(v, type=f.type))
-    return pa.record_batch(arrays, schema=schema)
-
-
-def _map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
-    """The one Python boundary of the narrow tile kernels: `mapInArrow`
-    over `df`, calling `fn(row)` per input row and gathering the output
-    row tuples it returns (in `schema` order) into one record batch per
-    input batch, typed by the Arrow twin of `schema`.
-
-    `row` is a namedtuple of the row's fields as Python values, except
-    binary columns, which arrive as zero-copy memoryviews of the Arrow
-    buffer — read a payload with `_tile`, never as a bytes copy. Select
-    only the columns the kernel reads: every column crosses."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    names = df.columns
-
-    def run(batches):
-        from collections import namedtuple
-
-        import pyarrow as pa
-
-        Row = namedtuple("Row", names)
-        for batch in batches:
-            cols = [
-                [None if v is None else memoryview(v) for v in (s.as_buffer() for s in c)]
-                if pa.types.is_binary(c.type)
-                else c.to_pylist()
-                for c in batch.columns
-            ]
-            rows = [out for vals in zip(*cols) for out in fn(Row(*vals))]
-            yield _record_batch(rows, arrow_schema)
-
-    return df.mapInArrow(run, schema=schema)
 
 
 def _pool2(a: np.ndarray) -> np.ndarray:
@@ -214,33 +146,20 @@ def pixels_to_tiles(
     scale, so the same code holds at 100 TB.
     """
 
-    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, g):
         scene_id, band, tile_y, tile_x = key
-        y0, x0 = int(tile_y) * tile, int(tile_x) * tile
+        y0, x0 = tile_y * tile, tile_x * tile
         arr = np.full((tile, tile), np.nan, dtype=np.float32)
-        ys = pdf["y"].to_numpy() - y0
-        xs = pdf["x"].to_numpy() - x0
-        arr[ys, xs] = pdf[value_col].to_numpy(dtype=np.float32)
-        return pd.DataFrame(
-            {
-                "scene_id": [scene_id],
-                "band": [band],
-                "tile_y": [int(tile_y)],
-                "tile_x": [int(tile_x)],
-                "height": [tile],
-                "width": [tile],
-                "y0": [y0],
-                "x0": [x0],
-                "data": [arr.tobytes()],
-            }
-        )
+        arr[g.y - y0, g.x - x0] = np.asarray(g.v, dtype=np.float32)
+        yield scene_id, band, tile_y, tile_x, tile, tile, y0, x0, arr.tobytes()
 
-    keyed = pixels.withColumn(
-        "tile_y", F.floor(F.col("y") / tile).cast("int")
-    ).withColumn("tile_x", F.floor(F.col("x") / tile).cast("int"))
-    return keyed.groupBy("scene_id", "band", "tile_y", "tile_x").applyInPandas(
-        pack, schema=TILE_SCHEMA
+    keyed = pixels.select(
+        "scene_id", "band",
+        F.floor(F.col("y") / tile).cast("int").alias("tile_y"),
+        F.floor(F.col("x") / tile).cast("int").alias("tile_x"),
+        "y", "x", F.col(value_col).alias("v"),
     )
+    return map_groups(keyed, ["scene_id", "band", "tile_y", "tile_x"], pack, TILE_SCHEMA)
 
 
 def tiles_to_pixels(tiles: DataFrame, value_name: str = "value") -> DataFrame:
@@ -261,7 +180,7 @@ def tiles_to_pixels(tiles: DataFrame, value_name: str = "value") -> DataFrame:
     )
 
     def unpack(row):
-        arr = _tile(row.data, row.height, row.width)
+        arr = as_tile(row.data, row.height, row.width)
         yy, xx = np.nonzero(~np.isnan(arr))
         yield (
             *row[: len(keys)],
@@ -271,7 +190,7 @@ def tiles_to_pixels(tiles: DataFrame, value_name: str = "value") -> DataFrame:
         )
 
     cols = [*keys, "height", "width", "y0", "x0", "data"]
-    return _map_rows(tiles.select(*cols), unpack, out_schema)
+    return map_rows(tiles.select(*cols), unpack, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -304,8 +223,8 @@ def tile_ndvi(band_tiles: DataFrame, red_band: str = "red", nir_band: str = "nir
     joined = r.join(n, ["scene_id", "tile_y", "tile_x"], "inner")
 
     def kernel(row):
-        red = _tile(row.r_data, row.r_height, row.r_width)
-        nir = _tile(row.n_data, row.n_height, row.n_width)
+        red = as_tile(row.r_data, row.r_height, row.r_width)
+        nir = as_tile(row.n_data, row.n_height, row.n_width)
         if red.shape != nir.shape:  # P7 grid-compat guard
             raise ValueError(
                 f"grid mismatch for {row.scene_id} tile "
@@ -329,7 +248,7 @@ def tile_ndvi(band_tiles: DataFrame, red_band: str = "red", nir_band: str = "nir
             float(ndvi[valid].astype(np.float32).astype(np.float64).sum()),
         )
 
-    return _map_rows(joined, kernel, NDVI_TILE_SCHEMA)
+    return map_rows(joined, kernel, NDVI_TILE_SCHEMA)
 
 
 def tile_scene_stats(ndvi_tiles: DataFrame) -> DataFrame:
@@ -361,33 +280,20 @@ def tile_composite(ndvi_tiles: DataFrame, label: str = COMPOSITE_LABEL) -> DataF
     unchanged.
     """
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_y, tile_x, y0, x0, th, tw = (int(v) for v in key)
-        merged = _tile(pdf["data"].iloc[0], th, tw)
-        for buf in pdf["data"].iloc[1:]:
-            merged = np.fmax(merged, _tile(buf, th, tw))
+    def kernel(key, g):
+        tile_y, tile_x, y0, x0, th, tw = key
+        merged = as_tile(g.data[0], th, tw)
+        for buf in g.data[1:]:
+            merged = np.fmax(merged, as_tile(buf, th, tw))
         valid = ~np.isnan(merged)
-        return pd.DataFrame(
-            [
-                {
-                    "scene_id": label,
-                    "tile_y": tile_y,
-                    "tile_x": tile_x,
-                    "height": th,
-                    "width": tw,
-                    "y0": y0,
-                    "x0": x0,
-                    "data": merged.tobytes(),
-                    "n_pixels": int(merged.size),
-                    "n_valid": int(valid.sum()),
-                    "sum_ndvi": float(merged[valid].sum()) if valid.any() else 0.0,
-                }
-            ]
+        yield (
+            label, tile_y, tile_x, th, tw, y0, x0, merged.tobytes(),
+            int(merged.size), int(valid.sum()),
+            float(merged[valid].sum()) if valid.any() else 0.0,
         )
 
-    return ndvi_tiles.groupBy(
-        "tile_y", "tile_x", "y0", "x0", "height", "width"
-    ).applyInPandas(kernel, schema=NDVI_TILE_SCHEMA)
+    keys = ["tile_y", "tile_x", "y0", "x0", "height", "width"]
+    return map_groups(ndvi_tiles.select(*keys, "data"), keys, kernel, NDVI_TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -476,7 +382,7 @@ def _clip_stats(ndvi_tiles: DataFrame, aois, by: tuple[str, ...]) -> DataFrame:
     pruned = ndvi_tiles.filter(cond).select("scene_id", "y0", "x0", "height", "width", "data")
 
     def kernel(row):
-        arr = _tile(row.data, row.height, row.width)
+        arr = as_tile(row.data, row.height, row.width)
         finite = ~np.isnan(arr)
         for aoi_id, mask in masks.items():
             m = mask(row.y0, row.x0, row.height, row.width) & finite
@@ -484,7 +390,7 @@ def _clip_stats(ndvi_tiles: DataFrame, aois, by: tuple[str, ...]) -> DataFrame:
             if n:
                 yield (row.scene_id, aoi_id, n, float(arr[m].astype(np.float64).sum()))
 
-    partials = _map_rows(pruned, kernel, MULTI_CLIP_SCHEMA)
+    partials = map_rows(pruned, kernel, MULTI_CLIP_SCHEMA)
     return partials.groupBy(*by).agg(
         F.sum("n_in_aoi").alias("n_in_aoi"),
         (F.sum("sum_ndvi") / F.sum("n_in_aoi")).alias("mean_ndvi"),
@@ -511,7 +417,7 @@ def tile_overviews(
     ).add("n_valid", T.LongType())
 
     def kernel(row):
-        prev, prev_f = _tile(row.data, row.height, row.width).astype(np.float64), 1
+        prev, prev_f = as_tile(row.data, row.height, row.width).astype(np.float64), 1
         for f in factors:
             step = f // prev_f
             assert (
@@ -533,7 +439,7 @@ def tile_overviews(
     # TILE_SCHEMA includes 'band'; NDVI tiles have none — emit ''.
     band = F.col("band") if "band" in ndvi_tiles.columns else F.lit("").alias("band")
     cols = ["scene_id", band, "tile_y", "tile_x", "height", "width", "y0", "x0", "data"]
-    return _map_rows(ndvi_tiles.select(*cols), kernel, out_schema)
+    return map_rows(ndvi_tiles.select(*cols), kernel, out_schema)
 
 
 VIZ_SCHEMA = T.StructType(
@@ -585,7 +491,7 @@ def tile_viz_products(
     )
 
     def reduce_kernel(row):
-        arr = _tile(row.data, row.height, row.width).astype(np.float64)
+        arr = as_tile(row.data, row.height, row.width).astype(np.float64)
         if mask is not None:
             arr = np.where(mask(row.y0, row.x0, row.height, row.width), arr, np.nan)
         # NaN-pad edge tiles up to a factor multiple; padded cells pool
@@ -601,42 +507,29 @@ def tile_viz_products(
             arr.shape[0], arr.shape[1], arr.astype(np.float32).tobytes(),
         )
 
-    reduced = _map_rows(
+    reduced = map_rows(
         ndvi_tiles.select("scene_id", "y0", "x0", "height", "width", "data"),
         reduce_kernel,
         reduced_schema,
     )
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, g):
         from .multimodal import encode_png
 
-        H = int((pdf["y0"] + pdf["height"]).max())
-        W = int((pdf["x0"] + pdf["width"]).max())
+        H = int((g.y0 + g.height).max())
+        W = int((g.x0 + g.width).max())
         canvas = np.full((H, W), np.nan, dtype=np.float64)
-        for row in pdf.itertuples(index=False):
-            canvas[row.y0 : row.y0 + row.height, row.x0 : row.x0 + row.width] = _tile(
-                row.data, row.height, row.width
-            )
+        for y0, x0, h, w, buf in zip(g.y0, g.x0, g.height, g.width, g.data):
+            canvas[y0 : y0 + h, x0 : x0 + w] = as_tile(buf, h, w)
         valid = ~np.isnan(canvas)
         byte = np.zeros(canvas.shape, dtype=np.uint8)
         with np.errstate(invalid="ignore"):
             byte[valid] = np.round(
                 np.clip((canvas[valid] + 1.0) * 127.5, 0.0, 255.0)
             ).astype(np.uint8)
-        return pd.DataFrame(
-            [
-                {
-                    "scene_id": pdf["scene_id"].iloc[0],
-                    "style": style,
-                    "height": H,
-                    "width": W,
-                    "n_valid": int(valid.sum()),
-                    "png": encode_png(byte),
-                }
-            ]
-        )
+        yield key[0], style, H, W, int(valid.sum()), encode_png(byte)
 
-    return reduced.groupBy("scene_id").applyInPandas(assemble, schema=VIZ_SCHEMA)
+    return map_groups(reduced, ["scene_id"], assemble, VIZ_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -781,7 +674,7 @@ def scan_geotiffs(
                 raise
             return []  # quarantined: no tiles from this file
 
-    return _map_rows(binf, decode, TILE_SCHEMA)
+    return map_rows(binf, decode, TILE_SCHEMA)
 
 
 def scan_scene_ndvi(
@@ -847,7 +740,7 @@ def read_path_bytes(paths_df: DataFrame, path_col: str = "path") -> DataFrame:
         with open(local, "rb") as fh:
             yield (row.path, fh.read())
 
-    return _map_rows(
+    return map_rows(
         paths_df.select(F.col(path_col).alias("path")), read, PATH_BYTES_SCHEMA
     )
 
@@ -886,7 +779,7 @@ def scan_geotiff_status(spark, path_glob: str) -> DataFrame:
         else:
             yield (row.path, scene_id or stem, band, True, None, int(arr.shape[0]), int(arr.shape[1]))
 
-    return _map_rows(binf, probe, SCAN_STATUS_SCHEMA)
+    return map_rows(binf, probe, SCAN_STATUS_SCHEMA)
 
 
 BAND_FILENAME_PATTERN = r"^(.+)_([A-Za-z0-9]+)\.tif$"
@@ -994,29 +887,19 @@ def scene_ndvi_from_bands(
     the job — one bad file cannot kill a 100 TB run. The default
     'raise' is strict (fail fast, the right mode for tests/dev).
 
-    Runs as `applyInArrow`: each scene's band payloads arrive as Arrow
-    buffers read through zero-copy memoryviews, and tile payloads
-    leave as an Arrow batch — pandas never touches the ~100 MB binary
+    Runs through `map_groups`: each scene's band payloads arrive as
+    zero-copy memoryviews of the Arrow buffers, and tile payloads leave
+    as an Arrow batch — pandas never touches the ~100 MB binary
     cells."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"on_error must be 'raise' or 'quarantine', got {on_error!r}")
-    arrow_schema = to_arrow_schema(NDVI_TILE_SCHEMA)
 
-    def kernel(key, table):
-        import pyarrow as pa
+    def kernel(key, g):
+        by_band = dict(zip(g.band, g.content))
+        return _scene_ndvi_rows(key[0], by_band, tile, red_band, nir_band, on_error)
 
-        scene_id = key[0].as_py()
-        contents = table.column("content")
-        by_band = {
-            b: memoryview(contents[i].as_buffer())
-            for i, b in enumerate(table.column("band").to_pylist())
-        }
-        rows = _scene_ndvi_rows(scene_id, by_band, tile, red_band, nir_band, on_error)
-        return pa.Table.from_batches([_record_batch(rows, arrow_schema)])
-
-    return parsed.groupBy("scene_id").applyInArrow(kernel, schema=NDVI_TILE_SCHEMA)
+    bands = parsed.select("scene_id", "band", "content")
+    return map_groups(bands, ["scene_id"], kernel, NDVI_TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1034,9 +917,8 @@ def export_scene_geotiffs(
     """Assemble each scene's tiles into one mosaic and write
     `<scene_id>_NDVI.tif` in the reference's tiled/deflate/predictor-3
     profile — the reference's per-scene product (compute_ndvi.py:73-88)
-    as a distributed applyInPandas sink
-    (scenes write in parallel from executors; `out_dir` must be
-    shared storage on a cluster). Returns (scene_id, path, height,
+    as a distributed `map_groups` sink (scenes write in parallel from
+    executors; `out_dir` must be shared storage on a cluster). Returns (scene_id, path, height,
     width, n_bytes) receipts."""
     schema = T.StructType(
         [
@@ -1048,21 +930,18 @@ def export_scene_geotiffs(
         ]
     )
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, g):
         import os
 
         (scene_id,) = key
-        max_y = int((pdf["y0"] + pdf["height"]).max())
-        max_x = int((pdf["x0"] + pdf["width"]).max())
-        min_y = int(pdf["y0"].min())
-        min_x = int(pdf["x0"].min())
+        max_y = int((g.y0 + g.height).max())
+        max_x = int((g.x0 + g.width).max())
+        min_y = int(g.y0.min())
+        min_x = int(g.x0.min())
         mosaic = np.full((max_y - min_y, max_x - min_x), np.nan, dtype=np.float32)
-        for row in pdf.itertuples(index=False):
-            arr = _tile(row.data, row.height, row.width)
-            mosaic[
-                row.y0 - min_y : row.y0 - min_y + row.height,
-                row.x0 - min_x : row.x0 - min_x + row.width,
-            ] = arr
+        for y0, x0, h, w, buf in zip(g.y0, g.x0, g.height, g.width, g.data):
+            y, x = y0 - min_y, x0 - min_x
+            mosaic[y : y + h, x : x + w] = as_tile(buf, h, w)
         out = np.where(np.isnan(mosaic), np.float32(nodata), mosaic)
         path = os.path.join(out_dir, f"{scene_id}_NDVI.tif")
         blob = TF.write_tiff(
@@ -1071,17 +950,10 @@ def export_scene_geotiffs(
         )
         with open(path, "wb") as fh:
             fh.write(blob)
-        return pd.DataFrame(
-            {
-                "scene_id": [scene_id],
-                "path": [path],
-                "height": [out.shape[0]],
-                "width": [out.shape[1]],
-                "n_bytes": [int(os.path.getsize(path))],
-            }
-        )
+        yield scene_id, path, out.shape[0], out.shape[1], os.path.getsize(path)
 
-    return ndvi_tiles.groupBy("scene_id").applyInPandas(assemble, schema=schema)
+    tiles = ndvi_tiles.select("scene_id", "y0", "x0", "height", "width", "data")
+    return map_groups(tiles, ["scene_id"], assemble, schema)
 
 
 def export_pixel_geotiffs(
@@ -1111,16 +983,14 @@ def export_pixel_geotiffs(
         ]
     )
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, g):
         import os
 
         (scene_id,) = key
-        h = int(pdf["y"].max()) + 1
-        w = int(pdf["x"].max()) + 1
+        h = int(g.y.max()) + 1
+        w = int(g.x.max()) + 1
         arr = np.full((h, w), np.nan, dtype=np.float32)
-        arr[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf[value_col].to_numpy(
-            dtype=np.float32
-        )
+        arr[g.y, g.x] = np.asarray(g.v, dtype=np.float32)
         out = np.where(np.isnan(arr), np.float32(nodata), arr)
         path = os.path.join(out_dir, f"{scene_id}{suffix}.tif")
         blob = TF.write_tiff(
@@ -1129,14 +999,7 @@ def export_pixel_geotiffs(
         )
         with open(path, "wb") as fh:
             fh.write(blob)
-        return pd.DataFrame(
-            {
-                "scene_id": [scene_id],
-                "path": [path],
-                "height": [h],
-                "width": [w],
-                "n_bytes": [int(os.path.getsize(path))],
-            }
-        )
+        yield scene_id, path, h, w, os.path.getsize(path)
 
-    return pixels.groupBy("scene_id").applyInPandas(assemble, schema=schema)
+    px = pixels.select("scene_id", "y", "x", F.col(value_col).alias("v"))
+    return map_groups(px, ["scene_id"], assemble, schema)

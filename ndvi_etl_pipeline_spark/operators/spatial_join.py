@@ -113,7 +113,8 @@ def tile_clip_stats_table(tiles: DataFrame, aois: DataFrame, tile_size: int) -> 
     """
     import numpy as np
 
-    from .raster import MULTI_CLIP_SCHEMA, _map_rows, _ring_mask, _tile
+    from .arrow_kernels import as_tile, map_rows
+    from .raster import MULTI_CLIP_SCHEMA, _ring_mask
 
     cells = (
         cover_cells(aois, "ring", float(tile_size))
@@ -128,7 +129,7 @@ def tile_clip_stats_table(tiles: DataFrame, aois: DataFrame, tile_size: int) -> 
     masks: dict[tuple, object] = {}  # one cached mask builder per ring
 
     def kernel(row):
-        arr = _tile(row.data, row.height, row.width)
+        arr = as_tile(row.data, row.height, row.width)
         ring = tuple(row.ring)
         if ring not in masks:
             masks[ring] = _ring_mask([ring])
@@ -140,7 +141,7 @@ def tile_clip_stats_table(tiles: DataFrame, aois: DataFrame, tile_size: int) -> 
             # literal tile path
             yield (row.scene_id, int(row.aoi_id), n, float(arr[sel].astype(np.float64).sum()))
 
-    partials = _map_rows(cand, kernel, MULTI_CLIP_SCHEMA)
+    partials = map_rows(cand, kernel, MULTI_CLIP_SCHEMA)
     return partials.groupBy("scene_id", "aoi_id").agg(
         F.sum("n_in_aoi").alias("n_in_aoi"),
         (F.sum("sum_ndvi") / F.sum("n_in_aoi")).alias("mean_ndvi"),

@@ -7,7 +7,8 @@ dispatched warp to a metric CRS at fixed resolution). Both are
 the source, interpolate the 4 neighbors" — an affine (or projective)
 grid resample.
 
-Spark shape: `applyInPandas` per scene. One scene's mosaic is
+Spark shape: one `map_groups` kernel per scene (applyInArrow,
+operators/arrow_kernels.py). One scene's mosaic is
 memory-bounded (the reference loads whole scenes too), scenes warp in
 parallel across executors, and the output is pixel/tile rows again —
 closed under the engine's representations. Halo-exchange per-tile
@@ -28,11 +29,11 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .raster import _map_rows, _tile
+from .arrow_kernels import as_tile, map_groups, map_rows
 
 PIXEL_OUT_SCHEMA = T.StructType(
     [
@@ -125,28 +126,11 @@ def resample_scene_pixels(
     except KeyError:
         raise ValueError(f"method must be one of {sorted(_SAMPLERS)}, got {method!r}")
 
-    def warp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (scene_id,) = key
-        h = src_height or int(pdf["y"].max()) + 1
-        w = src_width or int(pdf["x"].max()) + 1
-        src = np.full((h, w), np.nan, dtype=np.float64)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        src[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = vals
-        jj, ii = np.meshgrid(np.arange(out_width), np.arange(out_height))
-        sy = (ii.ravel() + 0.5) * scale_y - 0.5
-        sx = (jj.ravel() + 0.5) * scale_x - 0.5
-        v = sampler(src, sy, sx)
-        keep = ~np.isnan(v)
-        return pd.DataFrame(
-            {
-                "scene_id": scene_id,
-                "y": ii.ravel()[keep].astype(np.int32),
-                "x": jj.ravel()[keep].astype(np.int32),
-                "v": v[keep],
-            }
-        )
+    def inverse_map(dy, dx):
+        return (dy + 0.5) * scale_y - 0.5, (dx + 0.5) * scale_x - 0.5
 
-    return pixels.groupBy("scene_id").applyInPandas(warp, schema=PIXEL_OUT_SCHEMA)
+    return _warp_scenes(pixels, out_height, out_width, inverse_map, sampler,
+                        value_col, src_height, src_width)
 
 
 def resample_dispatch_dtype(
@@ -194,29 +178,32 @@ def warp_with_mapping(
     mapping composes dst-grid→dst-CRS→src-CRS→src-grid, cf.
     load_to_postgis.py:90-136). Runs per scene like
     `resample_scene_pixels`."""
+    return _warp_scenes(pixels, out_height, out_width, inverse_map, bilinear_sample,
+                        value_col, src_height, src_width)
 
-    def warp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+
+def _warp_scenes(pixels, out_height, out_width, inverse_map, sampler,
+                 value_col, src_height, src_width) -> DataFrame:
+    """The per-scene warp kernel behind `resample_scene_pixels` and
+    `warp_with_mapping`: assemble each scene's float64 canvas from its
+    pixel rows, inverse-map every destination pixel (as float64 row
+    and column indices) into it, sample, and keep the valid ones."""
+
+    def warp(key, g):
         (scene_id,) = key
-        h = src_height or int(pdf["y"].max()) + 1
-        w = src_width or int(pdf["x"].max()) + 1
+        h = src_height or int(g.y.max()) + 1
+        w = src_width or int(g.x.max()) + 1
         src = np.full((h, w), np.nan, dtype=np.float64)
-        src[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf[value_col].to_numpy(
-            dtype=np.float64
-        )
+        src[g.y, g.x] = np.asarray(g.v, dtype=np.float64)
         jj, ii = np.meshgrid(np.arange(out_width), np.arange(out_height))
         sy, sx = inverse_map(ii.ravel().astype(np.float64), jj.ravel().astype(np.float64))
-        v = bilinear_sample(src, np.asarray(sy), np.asarray(sx))
+        v = sampler(src, np.asarray(sy), np.asarray(sx))
         keep = ~np.isnan(v)
-        return pd.DataFrame(
-            {
-                "scene_id": scene_id,
-                "y": ii.ravel()[keep].astype(np.int32),
-                "x": jj.ravel()[keep].astype(np.int32),
-                "v": v[keep],
-            }
-        )
+        ys, xs = ii.ravel()[keep].astype(np.int32), jj.ravel()[keep].astype(np.int32)
+        yield scene_id, ys, xs, v[keep]
 
-    return pixels.groupBy("scene_id").applyInPandas(warp, schema=PIXEL_OUT_SCHEMA)
+    px = pixels.select("scene_id", "y", "x", F.col(value_col).alias("v"))
+    return map_groups(px, ["scene_id"], warp, PIXEL_OUT_SCHEMA)
 
 
 def reproject_scene(
@@ -278,7 +265,7 @@ def _halo_strips(tiles: DataFrame, halo: int) -> DataFrame:
     each receiver's padded canvas with `_halo_canvas`."""
 
     def emit(row):
-        arr = _tile(row.data, row.height, row.width)
+        arr = as_tile(row.data, row.height, row.width)
         for dy in (-1, 0, 1):
             for dx in (-1, 0, 1):
                 rty, rtx = row.tile_y + dy, row.tile_x + dx
@@ -303,20 +290,20 @@ def _halo_strips(tiles: DataFrame, halo: int) -> DataFrame:
                 )
 
     cols = ["scene_id", "tile_y", "tile_x", "height", "width", "y0", "x0", "data"]
-    return _map_rows(tiles.select(*cols), emit, TILE_STRIP_SCHEMA)
+    return map_rows(tiles.select(*cols), emit, TILE_STRIP_SCHEMA)
 
 
-def _halo_canvas(key: tuple, pdf: pd.DataFrame, halo: int) -> tuple[np.ndarray, int, int, int]:
-    """One receiver group of `_halo_strips` → (canvas, P, oy, ox): the
-    float64 (P+2·halo)² canvas around tile (recv_ty, recv_tx), NaN
-    where no strip arrived, with (oy, ox) its top-left pixel."""
+def _halo_canvas(key: tuple, g, halo: int) -> tuple[np.ndarray, int, int, int]:
+    """One `map_groups` receiver group of `_halo_strips` → (canvas, P,
+    oy, ox): the float64 (P+2·halo)² canvas around tile (recv_ty,
+    recv_tx), NaN where no strip arrived, with (oy, ox) its top-left
+    pixel."""
     _, rty, rtx = key
-    P = int(pdf["tile"].iloc[0])
-    oy, ox = int(rty) * P - halo, int(rtx) * P - halo
+    P = int(g.tile[0])
+    oy, ox = rty * P - halo, rtx * P - halo
     canvas = np.full((P + 2 * halo, P + 2 * halo), np.nan, dtype=np.float64)
-    for row in pdf.itertuples(index=False):
-        canvas[row.y0 - oy : row.y0 - oy + row.height,
-               row.x0 - ox : row.x0 - ox + row.width] = _tile(row.data, row.height, row.width)
+    for y0, x0, h, w, buf in zip(g.y0, g.x0, g.height, g.width, g.data):
+        canvas[y0 - oy : y0 - oy + h, x0 - ox : x0 - ox + w] = as_tile(buf, h, w)
     return canvas, P, oy, ox
 
 
@@ -385,16 +372,13 @@ def warp_bilinear_tiled(
         hi = min(out_n, math.ceil(((rt + 1) * P + 0.5) / scale - 0.5))
         return lo, hi  # half-open
 
-    def assemble_and_warp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble_and_warp(key, g):
         scene_id, rty, rtx = key
-        canvas, P, oy, ox = _halo_canvas(key, pdf, halo)
-
-        schema = WARP_TILE_SCHEMA if output == "tiles" else PIXEL_OUT_SCHEMA
-        empty = pd.DataFrame(columns=[f.name for f in schema])
-        y_lo, y_hi = _dst_range(int(rty), P, scale_y, out_height)
-        x_lo, x_hi = _dst_range(int(rtx), P, scale_x, out_width)
+        canvas, P, oy, ox = _halo_canvas(key, g, halo)
+        y_lo, y_hi = _dst_range(rty, P, scale_y, out_height)
+        x_lo, x_hi = _dst_range(rtx, P, scale_x, out_width)
         if y_lo >= y_hi or x_lo >= x_hi:
-            return empty
+            return
         dys = np.arange(y_lo, y_hi)
         dxs = np.arange(x_lo, x_hi)
         jj, ii = np.meshgrid(dxs, dys)
@@ -403,34 +387,15 @@ def warp_bilinear_tiled(
         v = bilinear_sample(canvas, sy, sx)
         keep = ~np.isnan(v)
         if not keep.any():
-            return empty
+            return
         if output == "tiles":
-            return pd.DataFrame(
-                [
-                    {
-                        "scene_id": scene_id,
-                        "tile_y": int(rty),
-                        "tile_x": int(rtx),
-                        "height": len(dys),
-                        "width": len(dxs),
-                        "y0": int(y_lo),
-                        "x0": int(x_lo),
-                        "data": v.astype(np.float32)
-                        .reshape(len(dys), len(dxs))
-                        .tobytes(),
-                    }
-                ]
+            yield (
+                scene_id, rty, rtx, len(dys), len(dxs), y_lo, x_lo,
+                v.astype(np.float32).reshape(len(dys), len(dxs)).tobytes(),
             )
-        return pd.DataFrame(
-            {
-                "scene_id": scene_id,
-                "y": ii.ravel()[keep].astype(np.int32),
-                "x": jj.ravel()[keep].astype(np.int32),
-                "v": v[keep],
-            }
-        )
+        else:
+            ys, xs = ii.ravel()[keep].astype(np.int32), jj.ravel()[keep].astype(np.int32)
+            yield scene_id, ys, xs, v[keep]
 
     out_schema = WARP_TILE_SCHEMA if output == "tiles" else PIXEL_OUT_SCHEMA
-    return strips.groupBy("scene_id", "recv_ty", "recv_tx").applyInPandas(
-        assemble_and_warp, schema=out_schema
-    )
+    return map_groups(strips, ["scene_id", "recv_ty", "recv_tx"], assemble_and_warp, out_schema)

@@ -912,7 +912,7 @@ def q_ndvi_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_warp_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bilinear resample of the 100×100 NDVI grid onto 40×40 (scale
     2.5, pixel-center convention) — the reference's reprojection
-    kernel (compute_ndvi.py:162-179) as a per-scene applyInPandas
+    kernel (compute_ndvi.py:162-179) as a per-scene applyInArrow
     warp (operators/warp.py). The oracle replays the identical
     arithmetic as 4-neighbor joins, so interpolation weights, the
     all-4-valid mask, and FP association must all line up."""

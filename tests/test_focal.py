@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 
 from ndvi_etl_pipeline_spark.operators import raster
 from ndvi_etl_pipeline_spark.operators.focal import (
+    FOCAL_TILE_SCHEMA,
     focal_map_tiled,
     focal_mean_3x3,
     sobel_magnitude,
@@ -62,7 +63,8 @@ def test_focal_kernels_match_whole_scene_reference(spark, sf_dir):
 
 def test_focal_mean_shrinks_at_borders(spark, sf_dir):
     """Border pixels average only their in-scene neighbors (NaN-aware
-    window), so a constant scene stays constant everywhere."""
+    window), so a constant scene stays constant everywhere; an empty
+    input maps to an empty result."""
     sc = spark.createDataFrame(
         [("S", "ndvi", int(y), int(x), 2.5) for y in range(64) for x in range(64)],
         "scene_id string, band string, y int, x int, ndvi double",
@@ -70,6 +72,10 @@ def test_focal_mean_shrinks_at_borders(spark, sf_dir):
     tiles = raster.pixels_to_tiles(sc, tile=32, value_col="ndvi").drop("band")
     out = _scene_arrays(focal_map_tiled(tiles, focal_mean_3x3, halo=1))["S"]
     assert np.allclose(out[:64, :64], 2.5)
+    # no tiles in, none out, typed as the focal tile rows
+    empty = focal_map_tiled(tiles.limit(0), focal_mean_3x3, halo=1)
+    assert empty.schema == FOCAL_TILE_SCHEMA
+    assert empty.collect() == []
 
 
 def test_focal_rejects_bad_halo(spark, sf_dir):

@@ -395,3 +395,70 @@ def test_scan_handles_tiled_profile_files(spark, tmp_path):
         }
 
     assert stats(tmp_path / "a") == stats(tmp_path / "b")
+
+
+def _pool2_reference(a):
+    """2×2 NaN-aware average of a float64 array: the mean of a block's
+    finite cells, NaN where it has none."""
+    quads = np.stack([a[0::2, 0::2], a[0::2, 1::2], a[1::2, 0::2], a[1::2, 1::2]])
+    n = (~np.isnan(quads)).sum(axis=0)
+    s = np.where(np.isnan(quads), 0.0, quads).sum(axis=0)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(n > 0, s / n, np.nan)
+
+
+def _ring_contains(ring, px, py):
+    """Even-odd ray cast of points against one [(x, y), ...] ring."""
+    inside = np.zeros(px.shape, dtype=bool)
+    for (x1, y1), (x2, y2) in zip(ring, ring[1:] + ring[:1]):
+        if y1 == y2:
+            continue
+        crosses = (y1 > py) != (y2 > py)
+        inside ^= crosses & (px < x1 + (py - y1) * (x2 - x1) / (y2 - y1))
+    return inside
+
+
+def test_tile_viz_products_match_numpy_reference(spark, sf_dir):
+    """Each scene's viz PNG decodes to its NDVI raster, masked to the
+    ring at full resolution when rings are given, average-pooled by
+    `factor` in chained 2×2 NaN-aware steps (GDAL's overview chaining;
+    every step stays inside one tile because `factor` divides the
+    tile), carried as float32, and rescaled [-1, 1] → [0, 255] with
+    nodata as byte 0 — pixel for pixel."""
+    from ndvi_etl_pipeline_spark.operators.multimodal import decode_png
+
+    ndvi = _ndvi_tiles(spark, sf_dir)
+    scenes = {}
+    for r in ndvi.collect():
+        scenes.setdefault(r.scene_id, []).append(r)
+    # generic vertices: no pixel centre lies on an edge
+    ring = [(10.3, 12.6), (88.7, 18.2), (92.4, 85.9), (50.1, 55.3), (15.8, 80.4)]
+    for factor, rings in ((8, None), (4, [ring])):
+        got = {
+            r.scene_id: r
+            for r in raster.tile_viz_products(ndvi, factor=factor, rings=rings).collect()
+        }
+        assert set(got) == set(scenes)
+        for scene, tiles in scenes.items():
+            H = max(t.y0 + t.height for t in tiles)
+            W = max(t.x0 + t.width for t in tiles)
+            full = np.full((H, W), np.nan)
+            for t in tiles:
+                full[t.y0 : t.y0 + t.height, t.x0 : t.x0 + t.width] = np.frombuffer(
+                    t.data, dtype=np.float32
+                ).reshape(t.height, t.width)
+            if rings:
+                yy, xx = np.mgrid[0:H, 0:W].astype(np.float64)
+                full[~_ring_contains(ring, xx, yy)] = np.nan
+            pooled = full
+            for _ in range(factor.bit_length() - 1):
+                pooled = _pool2_reference(pooled)
+            pooled = pooled.astype(np.float32).astype(np.float64)
+            valid = ~np.isnan(pooled)
+            want = np.zeros(pooled.shape, dtype=np.uint8)
+            want[valid] = np.round(np.clip((pooled[valid] + 1.0) * 127.5, 0.0, 255.0))
+            row = got[scene]
+            png = decode_png(bytes(row.png))
+            assert (row.style, row.height, row.width) == ("viz", H // factor, W // factor)
+            assert row.n_valid == int(valid.sum()) > 0
+            np.testing.assert_array_equal(png.reshape(want.shape), want, err_msg=(scene, factor))

@@ -281,12 +281,18 @@ def test_no_row_python_udfs_anywhere(spark, sf_dir):
 def test_audit_counts_arrow_python_nodes(spark):
     """tools/audit_plans.py counts the Arrow-native Python nodes too: a
     plan with one `mapInArrow` and one grouped `applyInArrow` has two
-    vectorized Python boundaries."""
+    vectorized Python boundaries, neither of them pandas; the pandas
+    twins count as both."""
     from tools.audit_plans import audit_one
 
     df = spark.range(8).mapInArrow(lambda batches: batches, "id long")
     df = df.groupBy("id").applyInArrow(lambda table: table, "id long")
-    assert audit_one(df)["arrow_python_nodes"] == 2
+    counts = audit_one(df)
+    assert (counts["arrow_python_nodes"], counts["pandas_python_nodes"]) == (2, 0)
+    pdf = spark.range(8).mapInPandas(lambda frames: frames, "id long")
+    pdf = pdf.groupBy("id").applyInPandas(lambda frame: frame, "id long")
+    counts = audit_one(pdf)
+    assert (counts["arrow_python_nodes"], counts["pandas_python_nodes"]) == (2, 2)
 
 
 def test_tpch_dim_joins_broadcast(spark, sf_dir_oracle):

@@ -11,6 +11,9 @@ driver-side loops at plan-build time), capture the executed plan as
 - arrow_python_nodes — vectorized Python boundaries (MapInPandas /
                        MapInArrow / FlatMapGroupsInPandas /
                        FlatMapGroupsInArrow / ArrowEvalPython)
+- pandas_python_nodes — the pandas ones among them (MapInPandas /
+                       FlatMapGroupsInPandas): the kernels still to
+                       move to the Arrow boundary
 - row_python_nodes   — row-at-a-time BatchEvalPython (MUST be zero:
                        the engine bans non-Arrow Python in plans)
 
@@ -180,6 +183,7 @@ def audit_one(df) -> dict:
             + plan.count("FlatMapGroupsInArrow")
             + plan.count("ArrowEvalPython")
         ),
+        "pandas_python_nodes": plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas"),
         "row_python_nodes": plan.count("BatchEvalPython"),
         "global_window_nodes": _global_window_nodes(plan),
         "single_partition_exchanges": plan.count("Exchange SinglePartition"),
@@ -254,6 +258,7 @@ def main() -> int:
         "total_exchanges": sum(v["n_exchanges"] for v in audited),
         "queries_with_pushdown": sum(1 for v in audited if v["pushed_filters"]),
         "queries_with_arrow_python": sum(1 for v in audited if v["arrow_python_nodes"]),
+        "queries_with_pandas_python": sum(1 for v in audited if v["pandas_python_nodes"]),
         "global_window_nodes": sum(v["global_window_nodes"] for v in audited),
         "queries_with_global_window": sorted(
             n for n, v in out.items() if v.get("global_window_nodes")
