@@ -18,8 +18,10 @@ points/pixels. That asymmetry is the whole design:
   row groups long before the ray cast runs. At 100 TB the bbox
   kills ~all of the data; the exact test touches survivors only.
 - For geometry-VALUED columns (a polygon per row, the general case
-  the reference never needs), `points_in_polygons` is a vectorized
-  numpy pandas UDF over packed coordinate arrays.
+  the reference never needs), `st_contains_udf` is a vectorized
+  numpy `arrow_udf` over packed coordinate arrays, reading its
+  inputs through the engine's Arrow boundary
+  (operators/arrow_kernels.py `_column`).
 
 Ray cast (even-odd rule): point is inside iff a ray to +∞ in x
 crosses an odd number of edges; edge (x1,y1)-(x2,y2) crosses iff
@@ -34,7 +36,7 @@ import math
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -338,27 +340,28 @@ def _ray_cast_numpy(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndar
     return inside
 
 
-@F.pandas_udf(T.BooleanType())
-def st_contains_udf(
-    ring: pd.Series, x: pd.Series, y: pd.Series
-) -> pd.Series:
+@F.arrow_udf(T.BooleanType())
+def st_contains_udf(ring: pa.Array, x: pa.Array, y: pa.Array) -> pa.Array:
     """st_contains(polygon_ring, x, y) for geometry-valued columns.
 
     Arrow-batched; groups rows by identical ring so the per-ring numpy
     kernel runs once per distinct polygon in the batch (the common
-    case: few AOIs against many points).
+    case: few AOIs against many points). A null ring contains nothing.
     """
-    out = np.zeros(len(x), dtype=bool)
-    px = x.to_numpy(dtype=np.float64)
-    py = y.to_numpy(dtype=np.float64)
-    keys = ring.map(lambda r: tuple(r) if r is not None else None)
-    for key, idx in keys.groupby(keys).groups.items():
-        if key is None:
-            continue
-        pos = keys.index.get_indexer(idx)
-        r = np.asarray(key, dtype=np.float64)
-        out[pos] = _ray_cast_numpy(px[pos], py[pos], r)
-    return pd.Series(out)
+    from ..operators.arrow_kernels import _column
+
+    rings = _column(ring)
+    px = np.asarray(_column(x), dtype=np.float64)
+    py = np.asarray(_column(y), dtype=np.float64)
+    by_ring: dict[bytes, list[int]] = {}
+    for i, r in enumerate(rings):
+        if r is not None:
+            by_ring.setdefault(r.tobytes(), []).append(i)
+    out = np.zeros(len(px), dtype=bool)
+    for idx in by_ring.values():
+        pos = np.asarray(idx)
+        out[pos] = _ray_cast_numpy(px[pos], py[pos], np.asarray(rings[idx[0]], dtype=np.float64))
+    return pa.array(out)
 
 
 def ring_literal(poly: Polygon) -> Column:

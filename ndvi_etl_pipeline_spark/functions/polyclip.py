@@ -29,8 +29,9 @@ Scope and contracts:
   even-odd parity. This is `unary_union` for the few-feature AOI case
   this serves. Geometry ops on driver-known AOIs
   are driver-side by design (the reference unions once per run); the
-  DISTRIBUTED dissolve over millions of geometries stays the
-  applyInPandas-per-group form named in SURVEY §2.5 A2.
+  DISTRIBUTED dissolve over millions of geometries would be a
+  grouped kernel over the engine's Arrow boundary
+  (operators/arrow_kernels.py `map_groups`), SURVEY §2.5 A2.
 
 Verification (tests/test_polyclip.py): membership equivalence on
 dense probe grids — even-odd over the OUTPUT rings must equal the

@@ -1,7 +1,7 @@
 """Python UDTFs (Spark 4 table functions), arrow-optimized.
 
 The engine's generator-shaped kernels as first-class table functions:
-a UDTF is the UDTF-ish surface SURVEY §2.9 maps grouped-map pandas to,
+a UDTF is the UDTF-ish surface SURVEY §2.9 maps grouped-map kernels to,
 but composable from SQL (`LATERAL chunk_spans(...)`) and planned as a
 vectorized `ArrowEvalPythonUDTF` node — batch-transferred, never
 row-at-a-time (the engine bans `BatchEvalPython` plans; see

@@ -77,14 +77,17 @@ def focal_map_tiled(
 
     Shares operators/warp.py::warp_bilinear_tiled's halo exchange
     (`_halo_strips` + `_halo_canvas`); this is the same two-stage plan
-    with an identity destination mapping.
+    with an identity destination mapping. A `halo` of at least the
+    tile size fails the first receiver, when the query runs: the plan
+    never looks at the data.
     """
-    first = tiles.select("height").first()
-    if first is not None and not 0 < halo < first.height:
-        raise ValueError(f"halo must be in (0, {first.height}), got {halo}")
+    if halo <= 0:
+        raise ValueError(f"halo must be positive, got {halo}")
 
     def assemble(key, g):
         scene_id, rty, rtx = key
+        if halo >= g.tile[0]:
+            raise ValueError(f"halo must be in (0, {g.tile[0]}), got {halo}")
         # a receiver with no full-size strip is a phantom neighbor
         # index past the grid edge (dy/dx overshoot) — drop it
         if not ((g.height == g.tile) & (g.width == g.tile)).any():

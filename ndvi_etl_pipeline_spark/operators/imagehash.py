@@ -10,8 +10,8 @@ Three standard public fingerprints over the decoded grayscale image:
   motivates, robust to recompression/resize/small noise (the
   dominant near-dup modes in crawled image corpora).
 
-Scale design: hashing is an Arrow-batched mapInPandas kernel (one
-decode + one 32×32 DCT per image — payloads never shuffle). Pairing
+Scale design: hashing is a narrow Arrow kernel (arrow_kernels.map_rows:
+one decode + one 32×32 DCT per image — payloads never shuffle). Pairing
 is the SAME banded-blocking shape as MinHash-LSH: the 64-bit hash
 splits into B bands; by pigeonhole any pair within Hamming distance
 < B collides on ≥1 band, so candidates form on a plain (band, value)
@@ -23,13 +23,12 @@ At 100 TB: one narrow kernel pass + one banded self-join on small
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .arrow_kernels import map_rows
 
 # orthonormal DCT-II basis, N=32 (same construction as the 8x8 basis
 # in operators/jpeg.py, which pHash's low-frequency block mirrors)
@@ -113,21 +112,10 @@ def image_hashes(media: DataFrame) -> DataFrame:
     via the full codec dispatch (raw/BMP/PPM/PNG/JPEG)."""
     from .multimodal import decode_image
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(row.payload, row.meta)
-                a, d, p = compute_hashes(arr)
-                rows.append(
-                    {"media_id": row.media_id, "ahash": a, "dhash": d, "phash": p}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(row):
+        yield (row.media_id, *compute_hashes(decode_image(bytes(row.payload), row.meta)))
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        kernel, schema=HASH_SCHEMA
-    )
+    return map_rows(media.filter(F.col("media_type") == "image"), kernel, HASH_SCHEMA)
 
 
 def phash_neardup_pairs(

@@ -7,7 +7,8 @@ Design (mirrors how 100 TB multimodal lakes are actually laid out):
   and scans move bytes without serialization cost; metadata is a
   typed STRUCT Catalyst can filter/prune on WITHOUT touching the
   payload (e.g. `meta.width >= 256` prunes at scan time).
-- kernels are Arrow-batched mapInPandas over raw numpy views. The
+- kernels cross through the engine's Arrow boundary
+  (operators/arrow_kernels.py `map_rows`) over raw numpy views. The
   "raw" format (dtype-tagged packed arrays) is fully implemented —
   decode, resize, frame-sample, feature-extract all run for real —
   and so are the pure-spec codecs: BMP, PPM, PNG, WAV, and JPEG
@@ -21,23 +22,23 @@ Design (mirrors how 100 TB multimodal lakes are actually laid out):
   NotImplementedError for them unless PIL/libwebp is present,
   keeping the boundary honest and explicit.
 
-Batch-shape discipline: 1:1 kernels (features, resize, scan) yield
-one frame per input Arrow batch; row-MULTIPLYING kernels (patchify,
-frame-sample) yield one frame per input ROW, so the peak per-task
-memory is O(one payload's expansion), never O(batch × expansion).
-Arrow batch size itself is bounded by
+Batch-shape discipline: the boundary writes an output batch each
+time a kernel's rows reach the input batch's row count, so 1:1
+kernels (features, resize, scan) write one batch per input batch and
+row-MULTIPLYING kernels (patchify, frame-sample) hold at most one
+input batch's worth of output rows plus one payload's expansion,
+never O(batch × expansion). Arrow batch size itself is bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .arrow_kernels import map_rows
 
 try:  # optional codec path, absent in this container
     from PIL import Image  # type: ignore
@@ -487,50 +488,39 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
 )
 
 
+def _raw_meta(w: int, h: int, c: int) -> dict:
+    return {
+        "format": "raw", "width": w, "height": h, "channels": c,
+        "sample_rate": None, "n_frames": None,
+    }
+
+
 def image_features(media: DataFrame) -> DataFrame:
     """Per-image features over the decoded array: luma mean/std,
     16-bin histogram, Shannon entropy. Metadata-only predicates should
     be applied BEFORE this (payloads of filtered rows are never read —
     struct pruning keeps them out of the scan)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(row.payload, row.meta)
-                # luma: BT.601 for >=3 channels; channel 0 for
-                # gray(+alpha) — PNG color type 4 decodes to (h, w, 2),
-                # which a bare reshape-to-(h, w) would crash on.
-                if arr.ndim == 3 and arr.shape[2] >= 3:
-                    luma = (
-                        0.299 * arr[..., 0]
-                        + 0.587 * arr[..., 1]
-                        + 0.114 * arr[..., 2]
-                    )
-                elif arr.ndim == 3:
-                    luma = arr[..., 0].astype(np.float64)
-                else:
-                    luma = arr.astype(np.float64)
-                hist, _ = np.histogram(luma, bins=16, range=(0, 256))
-                p = hist / max(hist.sum(), 1)
-                ent = float(-(p[p > 0] * np.log2(p[p > 0])).sum())
-                rows.append(
-                    {
-                        "media_id": row.media_id,
-                        "width": int(row.meta["width"]),
-                        "height": int(row.meta["height"]),
-                        "mean_luma": float(luma.mean()),
-                        "std_luma": float(luma.std()),
-                        "hist16": hist.astype(np.int64).tolist(),
-                        "entropy": ent,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(row):
+        arr = decode_image(bytes(row.payload), row.meta)
+        # luma: BT.601 for >=3 channels; channel 0 for gray(+alpha) —
+        # PNG color type 4 decodes to (h, w, 2), which a bare
+        # reshape-to-(h, w) would crash on.
+        if arr.ndim == 3 and arr.shape[2] >= 3:
+            luma = 0.299 * arr[..., 0] + 0.587 * arr[..., 1] + 0.114 * arr[..., 2]
+        elif arr.ndim == 3:
+            luma = arr[..., 0].astype(np.float64)
+        else:
+            luma = arr.astype(np.float64)
+        hist, _ = np.histogram(luma, bins=16, range=(0, 256))
+        p = hist / max(hist.sum(), 1)
+        ent = float(-(p[p > 0] * np.log2(p[p > 0])).sum())
+        yield (
+            row.media_id, int(row.meta["width"]), int(row.meta["height"]),
+            float(luma.mean()), float(luma.std()), hist.astype(np.int64).tolist(), ent,
+        )
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        kernel, schema=IMAGE_FEATURE_SCHEMA
-    )
+    return map_rows(media.filter(F.col("media_type") == "image"), kernel, IMAGE_FEATURE_SCHEMA)
 
 
 def resize_images(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
@@ -539,44 +529,20 @@ def resize_images(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
     operators/warp.py, applied channel-wise on uint8."""
     from .warp import bilinear_sample
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(row.payload, row.meta).astype(np.float64)
-                h, w, c = arr.shape
-                jj, ii = np.meshgrid(np.arange(out_w), np.arange(out_h))
-                sy = np.clip((ii.ravel() + 0.5) * (h / out_h) - 0.5, 0, h - 1.001)
-                sx = np.clip((jj.ravel() + 0.5) * (w / out_w) - 0.5, 0, w - 1.001)
-                out = np.stack(
-                    [
-                        bilinear_sample(arr[..., ch], sy, sx).reshape(out_h, out_w)
-                        for ch in range(c)
-                    ],
-                    axis=-1,
-                )
-                out8 = np.clip(np.round(out), 0, 255).astype(np.uint8)
-                rows.append(
-                    {
-                        "media_id": row.media_id,
-                        "media_type": "image",
-                        "payload": out8.tobytes(),
-                        "meta": {
-                            "format": "raw",
-                            "width": out_w,
-                            "height": out_h,
-                            "channels": c,
-                            "sample_rate": None,
-                            "n_frames": None,
-                        },
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(row):
+        arr = decode_image(bytes(row.payload), row.meta).astype(np.float64)
+        h, w, c = arr.shape
+        jj, ii = np.meshgrid(np.arange(out_w), np.arange(out_h))
+        sy = np.clip((ii.ravel() + 0.5) * (h / out_h) - 0.5, 0, h - 1.001)
+        sx = np.clip((jj.ravel() + 0.5) * (w / out_w) - 0.5, 0, w - 1.001)
+        out = np.stack(
+            [bilinear_sample(arr[..., ch], sy, sx).reshape(out_h, out_w) for ch in range(c)],
+            axis=-1,
+        )
+        out8 = np.clip(np.round(out), 0, 255).astype(np.uint8)
+        yield row.media_id, "image", out8.tobytes(), _raw_meta(out_w, out_h, c)
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        kernel, schema=MEDIA_SCHEMA
-    )
+    return map_rows(media.filter(F.col("media_type") == "image"), kernel, MEDIA_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
@@ -592,36 +558,14 @@ def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
         ]
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # one output frame PER VIDEO: this kernel multiplies rows
-            # (nf/every_k per input), so batch-wide buffering would
-            # hold every video's frames at once — per-video yields cap
-            # peak memory at one decoded video + its samples
-            for row in pdf.itertuples(index=False):
-                m = row.meta
-                nf, h, w, c = m["n_frames"], m["height"], m["width"], m["channels"]
-                vid = np.frombuffer(row.payload, dtype=np.uint8).reshape(nf, h, w, c)
-                rows = [
-                    {
-                        "media_id": row.media_id,
-                        "frame_idx": fi,
-                        "payload": vid[fi].tobytes(),
-                        "meta": {
-                            "format": "raw",
-                            "width": w,
-                            "height": h,
-                            "channels": c,
-                            "sample_rate": None,
-                            "n_frames": None,
-                        },
-                    }
-                    for fi in range(0, nf, every_k)
-                ]
-                if rows:
-                    yield pd.DataFrame(rows)
+    def kernel(row):
+        m = row.meta
+        nf, h, w, c = m["n_frames"], m["height"], m["width"], m["channels"]
+        vid = np.frombuffer(row.payload, dtype=np.uint8).reshape(nf, h, w, c)
+        for fi in range(0, nf, every_k):
+            yield row.media_id, fi, vid[fi].tobytes(), _raw_meta(w, h, c)
 
-    return media.filter(F.col("media_type") == "video").mapInPandas(kernel, schema=schema)
+    return map_rows(media.filter(F.col("media_type") == "video"), kernel, schema)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -639,28 +583,19 @@ AUDIO_FEATURE_SCHEMA = T.StructType(
 def audio_features(media: DataFrame) -> DataFrame:
     """PCM16 audio features: duration, RMS, peak, zero-crossing count."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                pcm, rate = _audio_pcm(row)
-                x = pcm.astype(np.float64)
-                rows.append(
-                    {
-                        "media_id": row.media_id,
-                        "n_samples": len(pcm),
-                        "duration_s": len(pcm) / rate,
-                        "rms": float(np.sqrt((x**2).mean())) if len(pcm) else 0.0,
-                        "peak": int(np.abs(pcm).max()) if len(pcm) else 0,
-                        "zero_crossings": int(((pcm[:-1] >= 0) != (pcm[1:] >= 0)).sum()),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(row):
+        pcm, rate = _audio_pcm(row)
+        x = pcm.astype(np.float64)
+        yield (
+            row.media_id,
+            len(pcm),
+            len(pcm) / rate,
+            float(np.sqrt((x**2).mean())) if len(pcm) else 0.0,
+            int(np.abs(pcm).max()) if len(pcm) else 0,
+            int(((pcm[:-1] >= 0) != (pcm[1:] >= 0)).sum()),
+        )
 
-    return media.filter(F.col("media_type") == "audio").mapInPandas(
-        kernel, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return map_rows(media.filter(F.col("media_type") == "audio"), kernel, AUDIO_FEATURE_SCHEMA)
 
 
 SPECTRAL_SCHEMA = T.StructType(
@@ -702,49 +637,30 @@ def audio_spectral_features(media: DataFrame, frame: int = 2048) -> DataFrame:
     single zero-padded frame. Arrow-batched kernel; payloads never
     shuffle."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                pcm, rate = _audio_pcm(row)
-                x = pcm.astype(np.float64)
-                if len(x) < frame:
-                    x = np.pad(x, (0, frame - len(x)))
-                nf = len(x) // frame
-                fr = x[: nf * frame].reshape(nf, frame)
-                spec = np.abs(np.fft.rfft(fr, axis=1)) ** 2
-                p = spec.mean(axis=0)
-                p[0] = 0.0  # exclude DC from all statistics
-                freqs = np.fft.rfftfreq(frame, d=1.0 / rate)
-                tot = p.sum()
-                if tot <= 0:
-                    dom, cen, roll, flat = 0, 0.0, 0.0, 1.0
-                else:
-                    dom = int(np.argmax(p))
-                    cen = float((freqs * p).sum() / tot)
-                    cum = np.cumsum(p)
-                    roll = float(freqs[int(np.searchsorted(cum, 0.85 * tot))])
-                    nz = p[1:][p[1:] > 0]
-                    flat = float(
-                        np.exp(np.log(nz).mean()) / nz.mean()
-                    ) if len(nz) else 1.0
-                rows.append(
-                    {
-                        "media_id": row.media_id,
-                        "n_frames": nf,
-                        "dominant_bin": dom,
-                        "dominant_hz": float(freqs[dom]),
-                        "centroid_hz": cen,
-                        "rolloff_hz": roll,
-                        "flatness": flat,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(row):
+        pcm, rate = _audio_pcm(row)
+        x = pcm.astype(np.float64)
+        if len(x) < frame:
+            x = np.pad(x, (0, frame - len(x)))
+        nf = len(x) // frame
+        fr = x[: nf * frame].reshape(nf, frame)
+        spec = np.abs(np.fft.rfft(fr, axis=1)) ** 2
+        p = spec.mean(axis=0)
+        p[0] = 0.0  # exclude DC from all statistics
+        freqs = np.fft.rfftfreq(frame, d=1.0 / rate)
+        tot = p.sum()
+        if tot <= 0:
+            dom, cen, roll, flat = 0, 0.0, 0.0, 1.0
+        else:
+            dom = int(np.argmax(p))
+            cen = float((freqs * p).sum() / tot)
+            cum = np.cumsum(p)
+            roll = float(freqs[int(np.searchsorted(cum, 0.85 * tot))])
+            nz = p[1:][p[1:] > 0]
+            flat = float(np.exp(np.log(nz).mean()) / nz.mean()) if len(nz) else 1.0
+        yield row.media_id, nf, dom, float(freqs[dom]), cen, roll, flat
 
-    return media.filter(F.col("media_type") == "audio").mapInPandas(
-        kernel, schema=SPECTRAL_SCHEMA
-    )
+    return map_rows(media.filter(F.col("media_type") == "audio"), kernel, SPECTRAL_SCHEMA)
 
 
 MOTION_SCHEMA = T.StructType(
@@ -766,38 +682,20 @@ def video_motion_features(media: DataFrame, cut_threshold: float = 48.0) -> Data
     motion. The kernel materializes one video at a time (bounded by
     the largest clip in the batch, not the partition)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                m = row.meta
-                nf, h, w, c = m["n_frames"], m["height"], m["width"], m["channels"]
-                vid = np.frombuffer(row.payload, dtype=np.uint8).reshape(
-                    nf, h, w, c
-                ).astype(np.float64)
-                if nf < 2:
-                    mean_m = max_m = 0.0
-                    cuts = 0
-                else:
-                    deltas = np.abs(np.diff(vid, axis=0)).mean(axis=(1, 2, 3))
-                    mean_m = float(deltas.mean())
-                    max_m = float(deltas.max())
-                    cuts = int((deltas > cut_threshold).sum())
-                rows.append(
-                    {
-                        "media_id": row.media_id,
-                        "n_frames": nf,
-                        "mean_motion": mean_m,
-                        "max_motion": max_m,
-                        "n_cuts": cuts,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(row):
+        m = row.meta
+        nf, h, w, c = m["n_frames"], m["height"], m["width"], m["channels"]
+        vid = np.frombuffer(row.payload, dtype=np.uint8).reshape(nf, h, w, c).astype(np.float64)
+        if nf < 2:
+            yield row.media_id, nf, 0.0, 0.0, 0
+            return
+        deltas = np.abs(np.diff(vid, axis=0)).mean(axis=(1, 2, 3))
+        yield (
+            row.media_id, nf, float(deltas.mean()), float(deltas.max()),
+            int((deltas > cut_threshold).sum()),
+        )
 
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        kernel, schema=MOTION_SCHEMA
-    )
+    return map_rows(media.filter(F.col("media_type") == "video"), kernel, MOTION_SCHEMA)
 
 
 PATCH_SCHEMA = T.StructType(
@@ -821,46 +719,23 @@ def patchify_images(media: DataFrame, patch: int = 16) -> DataFrame:
     patches, sort by information content) stay JVM-side.
 
     Images are cropped to the patch grid (⌊h/p⌋×⌊w/p⌋ patches — the
-    standard ViT behavior after resize). Same narrow mapInPandas shape
+    standard ViT behavior after resize). Same narrow `map_rows` shape
     as the raster tile codec: no shuffle, the patch stream pipelines
     straight into whatever consumes it (dedup, packing, training-shard
     writes)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # one output frame PER IMAGE (this kernel multiplies rows:
-            # ⌊h/p⌋·⌊w/p⌋ per input) — batch-wide buffering would hold
-            # every image's patch grid at once; per-image yields cap
-            # peak memory at one decoded image + its patches
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(row.payload, row.meta)
-                h, w, c = arr.shape
-                rows = []
-                for py in range(h // patch):
-                    for px in range(w // patch):
-                        blk = arr[
-                            py * patch : (py + 1) * patch,
-                            px * patch : (px + 1) * patch,
-                            :,
-                        ]
-                        rows.append(
-                            {
-                                "media_id": row.media_id,
-                                "patch_row": py,
-                                "patch_col": px,
-                                "height": patch,
-                                "width": patch,
-                                "channels": c,
-                                "payload": np.ascontiguousarray(blk).tobytes(),
-                                "mean_intensity": float(blk.mean()),
-                            }
-                        )
-                if rows:
-                    yield pd.DataFrame(rows)
+    def kernel(row):
+        arr = decode_image(bytes(row.payload), row.meta)
+        h, w, c = arr.shape
+        for py in range(h // patch):
+            for px in range(w // patch):
+                blk = arr[py * patch : (py + 1) * patch, px * patch : (px + 1) * patch, :]
+                yield (
+                    row.media_id, py, px, patch, patch, c,
+                    np.ascontiguousarray(blk).tobytes(), float(blk.mean()),
+                )
 
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        kernel, schema=PATCH_SCHEMA
-    )
+    return map_rows(media.filter(F.col("media_type") == "image"), kernel, PATCH_SCHEMA)
 
 
 SCAN_MEDIA_SCHEMA = T.StructType(
@@ -917,55 +792,36 @@ def scan_media(spark, path_glob: str, on_error: str = "quarantine") -> DataFrame
         raise ValueError(f"bad on_error {on_error!r}")
     binf = spark.read.format("binaryFile").load(path_glob).select("path", "content")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                payload = bytes(r.content)
-                mid = _s.unpack(
-                    ">q", hashlib.md5(r.path.encode()).digest()[:8]
-                )[0]
-                meta = {
-                    "format": None, "width": None, "height": None,
-                    "channels": None, "sample_rate": None, "n_frames": None,
-                }
-                sniffed = sniff_format(payload)
-                try:
-                    if sniffed is None:
-                        raise ValueError("unrecognized format (magic bytes)")
-                    fmt, mt = sniffed
-                    if mt == "image":
-                        arr = decode_image(payload, {"format": fmt})
-                        meta.update(
-                            format=fmt, height=arr.shape[0], width=arr.shape[1],
-                            channels=arr.shape[2],
-                        )
-                    else:
-                        pcm, rate = decode_wav(payload)
-                        meta.update(
-                            format=fmt, sample_rate=rate,
-                            channels=1 if pcm.ndim == 1 else pcm.shape[1],
-                        )
-                    rows.append(
-                        {
-                            "path": r.path, "media_id": mid, "media_type": mt,
-                            "payload": payload, "meta": meta,
-                            "status": "ok", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001 — quarantine boundary
-                    if on_error == "raise":
-                        raise
-                    if on_error == "quarantine":
-                        rows.append(
-                            {
-                                "path": r.path, "media_id": mid,
-                                "media_type": "unknown", "payload": payload,
-                                "meta": meta, "status": "quarantined",
-                                "err": f"{type(e).__name__}: {e}"[:200],
-                            }
-                        )
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(r):
+        payload = bytes(r.content)
+        mid = _s.unpack(">q", hashlib.md5(r.path.encode()).digest()[:8])[0]
+        meta = {
+            "format": None, "width": None, "height": None,
+            "channels": None, "sample_rate": None, "n_frames": None,
+        }
+        sniffed = sniff_format(payload)
+        try:
+            if sniffed is None:
+                raise ValueError("unrecognized format (magic bytes)")
+            fmt, mt = sniffed
+            if mt == "image":
+                arr = decode_image(payload, {"format": fmt})
+                meta.update(
+                    format=fmt, height=arr.shape[0], width=arr.shape[1],
+                    channels=arr.shape[2],
+                )
+            else:
+                pcm, rate = decode_wav(payload)
+                meta.update(
+                    format=fmt, sample_rate=rate,
+                    channels=1 if pcm.ndim == 1 else pcm.shape[1],
+                )
+            yield r.path, mid, mt, payload, meta, "ok", None
+        except Exception as e:  # noqa: BLE001 — quarantine boundary
+            if on_error == "raise":
+                raise
+            if on_error == "quarantine":
+                err = f"{type(e).__name__}: {e}"[:200]
+                yield r.path, mid, "unknown", payload, meta, "quarantined", err
 
-    return binf.mapInPandas(kernel, schema=SCAN_MEDIA_SCHEMA)
+    return map_rows(binf, kernel, SCAN_MEDIA_SCHEMA)

@@ -207,9 +207,9 @@ def semdedup_cluster_stats_np(
     round_digits: int = 6,
 ) -> DataFrame:
     """:func:`semdedup_cluster_stats` with the within-cluster pairwise
-    stage as an Arrow-batched numpy kernel (applyInPandas per cluster)
-    — what SemDeDup itself runs (dense matmuls inside each cluster).
-    Output is identical bit for bit: the Gram matrix accumulates
+    stage as an Arrow numpy kernel (arrow_kernels.map_groups, one call
+    per cluster) — what SemDeDup itself runs (dense matmuls inside
+    each cluster). Output is identical bit for bit: the Gram matrix accumulates
     dim-ordered (S += outer(M[:,d], M[:,d])), matching the
     left-to-right zip_with fold per pair (the brute_force_topk_np
     discipline), and the keep-first rule compares the same rounded
@@ -217,8 +217,10 @@ def semdedup_cluster_stats_np(
     O(|cluster|²) per task — the cluster granularity (k ∝ n) is the
     SemDeDup design knob that bounds it."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from .arrow_kernels import map_groups
+    from .similarity import _dim_ordered_dot
 
     e = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     c = centroids.select(
@@ -252,32 +254,19 @@ def semdedup_cluster_stats_np(
         ]
     )
 
-    def census(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        order = np.argsort(pdf["vid"].to_numpy(), kind="stable")
-        M = np.array(pdf["v"].tolist(), dtype=np.float64)[order]
-        D = M.shape[1]
-        nrm_acc = np.zeros(n)
-        for d in range(D):
-            nrm_acc += M[:, d] * M[:, d]
-        nrm = np.sqrt(nrm_acc)
+    def census(key, g):
+        n = len(g.vid)
+        M = np.array(g.v, dtype=np.float64)[np.argsort(g.vid, kind="stable")]
+        nrm = np.sqrt(_dim_ordered_dot(M, M))
         S = np.zeros((n, n))
-        for d in range(D):
+        for d in range(M.shape[1]):
             col = M[:, d]
             S += col[:, None] * col[None, :]
         cos = np.round(S / (nrm[:, None] * nrm[None, :]), round_digits)
-        dup = (np.triu(cos >= tau, k=1)).any(axis=0)  # exists lower-id row ≥ tau
-        nr = int(dup.sum())
-        return pd.DataFrame(
-            {
-                "centroid_id": [key[0]],
-                "n": [n],
-                "n_removed": [nr],
-                "n_kept": [n - nr],
-            }
-        )
+        nr = int(np.triu(cos >= tau, k=1).any(axis=0).sum())  # a lower-id row ≥ tau
+        yield key[0], n, nr, n - nr
 
-    return assign.groupBy("centroid_id").applyInPandas(census, out_schema)
+    return map_groups(assign, ["centroid_id"], census, out_schema)
 
 
 def duplicated_window_stats(
@@ -729,80 +718,13 @@ def hard_negatives_np(
     round_digits: int = 6,
 ) -> DataFrame:
     """:func:`hard_negatives` with the scoring kernel in Arrow-batched
-    numpy — same output bit for bit (similarity.brute_force_topk_np
-    discipline: dim-ordered accumulation matches the left-to-right
-    aggregate()/list_sum fold exactly, so nothing drifts through the
-    round). The label anti-predicate is applied inside the kernel
-    against the driver-held query label vector, before ranking."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    numpy — same output bit for bit: it is similarity.brute_force_topk_np's
+    dim-ordered cosine scorer plus a per-query label mask, applied
+    inside the kernel against the driver-held query label vector,
+    before ranking."""
+    from .similarity import _cosine_topk_np
 
-    qrows = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        F.col(label_col).alias("ql"),
-    ).collect()
-    qids = [r.qid for r in qrows]
-    qlabels = [r.ql for r in qrows]
-    Q = np.array([list(r.qv) for r in qrows], dtype=np.float64)
-    qnorm_acc = np.zeros(len(qrows))
-    for d in range(Q.shape[1] if Q.size else 0):
-        qnorm_acc += Q[:, d] * Q[:, d]
-    qnorm = np.sqrt(qnorm_acc)
-
-    id_field = corpus.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_field),
-            T.StructField(id_col, id_field),
-            T.StructField("cosine_sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            labels = pdf[label_col].to_numpy()
-            B, D = M.shape
-            cnorm_acc = np.zeros(B)
-            for d in range(D):
-                cnorm_acc += M[:, d] * M[:, d]
-            cnorm = np.sqrt(cnorm_acc)
-            frames = []
-            for qi, qid in enumerate(qids):
-                keep = labels != qlabels[qi]
-                if not keep.any():
-                    continue
-                acc = np.zeros(B)
-                for d in range(D):
-                    acc += M[:, d] * Q[qi, d]
-                sim = np.round(acc / (cnorm * qnorm[qi]), round_digits)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            id_col: pdf[id_col].to_numpy()[keep],
-                            "cosine_sim": sim[keep],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = corpus.select(id_col, vec_col, label_col).mapInPandas(
-        score, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "cosine_sim")
-    )
+    return _cosine_topk_np(corpus, queries, k, id_col, vec_col, round_digits, label_col)
 
 
 def soft_dedup_weights(

@@ -12,9 +12,9 @@ Two tiers, mirroring what a 100 TB pipeline actually runs:
   fan-out; the candidate shuffle replaces the O(n²) cross join.
 
 All vector math is native `aggregate`/`zip_with` on DOUBLE — stays in
-codegen, no Python. For very wide vectors a Pandas-UDF/numpy variant
-wins on constant factors; at 64 dims the native path is faster than
-the Arrow round-trip.
+codegen, no Python — except `brute_force_topk_np`, whose dense scoring
+runs as a numpy kernel over the engine's Arrow boundary
+(operators/arrow_kernels.py) with the same accumulation order.
 """
 
 from __future__ import annotations
@@ -93,28 +93,65 @@ def brute_force_topk_np(
     zip_with/aggregate cosine costs ~1.5 s inside the window stage vs
     ~0.2 s for the vectorized kernel — dense linear algebra is the one
     place Arrow+numpy beats whole-stage codegen. Why it is still
-    EXACT: sums accumulate with an explicit dim-ordered loop
-    (acc += M[:, d] · q[d]) — vectorized ACROSS rows, sequential
-    ACROSS dims — so every double matches the left-to-right
-    `aggregate`/`list_sum` accumulation of the native path and the
-    DuckDB oracle exactly; no BLAS pairwise-summation drift can leak
-    through the round(6).
+    EXACT: see `_dim_ordered_dot`.
 
     The query side is collected to a driver-held matrix (metadata-
     scale by construction — the same broadcast-literal idiom as
     kmeans centroids) and ships to executors in the task closure.
     """
+    return _cosine_topk_np(corpus, queries, k, id_col, vec_col, round_digits)
+
+
+def _dim_ordered_dot(M, v):
+    """Row-wise Σ_d M[:, d]·v[..., d] (`v` one vector or a matrix like
+    `M`), accumulated dim by dim — vectorized ACROSS rows, sequential
+    ACROSS dims — so every double matches the left-to-right
+    `aggregate`/`list_sum` fold of the native path and the DuckDB
+    oracle exactly; no BLAS pairwise-summation drift can leak through
+    a round(6)."""
     import numpy as np
-    import pandas as pd
+
+    acc = np.zeros(M.shape[0])
+    for d in range(M.shape[1]):
+        acc += M[:, d] * v[..., d]
+    return acc
+
+
+def _cosine_topk_np(corpus, queries, k, id_col, vec_col, round_digits, label_col=None):
+    """The one dim-ordered numpy cosine top-k: `brute_force_topk_np`,
+    and with `label_col` `selection.hard_negatives_np` — a query then
+    scores only the corpus rows whose label differs from its own, so
+    the mask applies before ranking. One `map_batches` kernel scores
+    each corpus batch against the driver-held query matrix; a window
+    ranks the rounded scores, ties on the id."""
+    import numpy as np
     from pyspark.sql import types as T
 
+    from .arrow_kernels import map_batches
+
+    extra = [] if label_col is None else [F.col(label_col).alias("label")]
     qrows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), *extra
     ).collect()
-    qids = [r.qid for r in qrows]
-    Q = np.array([list(r.qv) for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((Q * Q).cumsum(axis=1)[:, -1]) if Q.size else np.array([])
-    # qnorm via dim-ordered accumulation too (cumsum is sequential)
+    qids = [r.id for r in qrows]
+    qlabels = [r.label for r in qrows] if extra else None
+    Q = np.array([list(r.vec) for r in qrows], dtype=np.float64)
+    qnorm = np.sqrt(_dim_ordered_dot(Q, Q)) if qrows else Q
+
+    def score(batch):
+        if not len(batch.id):
+            return
+        ids = np.asarray(batch.id)
+        M = np.array(batch.vec, dtype=np.float64)
+        cnorm = np.sqrt(_dim_ordered_dot(M, M))
+        for qi, qid in enumerate(qids):
+            sim = np.round(_dim_ordered_dot(M, Q[qi]) / (cnorm * qnorm[qi]), round_digits)
+            if qlabels is None:
+                yield qid, ids, sim
+                continue
+            keep = np.asarray(batch.label) != qlabels[qi]
+            if keep.any():
+                yield qid, ids[keep], sim[keep]
 
     id_field = corpus.schema[id_col].dataType
     out_schema = T.StructType(
@@ -124,36 +161,11 @@ def brute_force_topk_np(
             T.StructField("cosine_sim", T.DoubleType()),
         ]
     )
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            B, D = M.shape
-            # dim-ordered accumulation: bit-identical to aggregate()
-            cnorm_acc = np.zeros(B)
-            for d in range(D):
-                cnorm_acc += M[:, d] * M[:, d]
-            cnorm = np.sqrt(cnorm_acc)
-            frames = []
-            for qi, qid in enumerate(qids):
-                acc = np.zeros(B)
-                for d in range(D):
-                    acc += M[:, d] * Q[qi, d]
-                sim = np.round(acc / (cnorm * qnorm[qi]), round_digits)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            id_col: pdf[id_col].to_numpy(),
-                            "cosine_sim": sim,
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
+    scored = map_batches(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), *extra),
+        score,
+        out_schema,
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col(id_col).asc()
     )

@@ -17,8 +17,9 @@ uniform grid:
 3. equi-join on the cell key — plain hash-join machinery, shuffle
    partitioned by cell, skew handled by AQE like any hot key;
 4. exact even-odd ray cast on the candidates only
-   (`functions/geo.py::st_contains_udf`, Arrow-batched numpy,
-   one kernel run per distinct polygon per batch).
+   (`functions/geo.py::st_contains_udf`, an `arrow_udf` over the
+   engine's Arrow boundary, one numpy kernel run per distinct polygon
+   per batch).
 
 Cell-size rule of thumb: ~the median polygon diameter — bbox cover
 stays O(1) cells/polygon while each point joins to few cells. The
@@ -130,10 +131,11 @@ def tile_clip_stats_table(tiles: DataFrame, aois: DataFrame, tile_size: int) -> 
 
     def kernel(row):
         arr = as_tile(row.data, row.height, row.width)
-        ring = tuple(row.ring)
-        if ring not in masks:
-            masks[ring] = _ring_mask([ring])
-        mask = masks[ring]
+        key = row.ring.tobytes()
+        if key not in masks:
+            # the ring views its Arrow batch; the cached mask outlives it
+            masks[key] = _ring_mask([row.ring.copy()])
+        mask = masks[key]
         sel = mask(row.y0, row.x0, row.height, row.width) & ~np.isnan(arr)
         n = int(sel.sum())
         if n:

@@ -1467,49 +1467,37 @@ def q_jpeg_roundtrip_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual SOF0 header and within_tol asserts max|err| ≤ 6 at q=95
     4:4:4 — the oracle predicts every column from doc_id alone, so a
     header-layout, sampling, Huffman, or IDCT bug flips a value and
-    fails the hash. Batch-bounded mapInPandas; payloads never shuffle."""
-    import pandas as _pd
+    fails the hash. Narrow Arrow kernel (arrow_kernels.map_rows);
+    payloads never shuffle."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from ...operators.arrow_kernels import map_rows
+    from ...operators.jpeg import decode_jpeg, encode_jpeg
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 12).select("doc_id")
-
-    schema = (
+    schema = T.StructType.fromDDL(
         "doc_id bigint, height int, width int, channels int, within_tol boolean"
     )
 
-    def kernel(batches):
-        import numpy as np
+    def kernel(row):
+        doc_id = int(row.doc_id)
+        h = 24 + (doc_id % 3) * 8
+        w = 32 + (doc_id % 5) * 8
+        jj, ii = np.meshgrid(np.arange(w), np.arange(h))
+        img = np.stack(
+            [
+                np.clip(ii * 4 + doc_id, 0, 255),
+                np.clip(jj * 3, 0, 255),
+                np.clip(255 - ii - jj * 2, 0, 255),
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        out = decode_jpeg(encode_jpeg(img, quality=95, subsample="444"))
+        err = int(np.abs(out.astype(int) - img.astype(int)).max())
+        yield doc_id, *out.shape, err <= 6
 
-        from ...operators.jpeg import decode_jpeg, encode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                h = 24 + (doc_id % 3) * 8
-                w = 32 + (doc_id % 5) * 8
-                jj, ii = np.meshgrid(np.arange(w), np.arange(h))
-                img = np.stack(
-                    [
-                        np.clip(ii * 4 + doc_id, 0, 255),
-                        np.clip(jj * 3, 0, 255),
-                        np.clip(255 - ii - jj * 2, 0, 255),
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                out = decode_jpeg(encode_jpeg(img, quality=95, subsample="444"))
-                err = int(np.abs(out.astype(int) - img.astype(int)).max())
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "height": out.shape[0],
-                        "width": out.shape[1],
-                        "channels": out.shape[2],
-                        "within_tol": err <= 6,
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return d.mapInPandas(kernel, schema=schema).orderBy("doc_id")
+    return map_rows(d, kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -1537,59 +1525,44 @@ def q_webp_roundtrip_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     array, lossless_exact asserts bit-identity and lossy_within_tol a
     mean-|err| < 16 envelope — so a container-layout bug, a codec
     misroute, or a decode regression flips a value and fails the
-    hash. Batch-bounded mapInPandas; payloads never shuffle."""
-    import pandas as _pd
+    hash. Narrow Arrow kernel (arrow_kernels.map_rows); payloads
+    never shuffle."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from ...operators.arrow_kernels import map_rows
+    from ...operators.webp import decode_webp, encode_webp, webp_info
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 10).select("doc_id")
-
-    schema = (
+    schema = T.StructType.fromDDL(
         "doc_id bigint, height int, width int, channels int, "
         "lossless_codec string, lossy_codec string, "
         "lossless_exact boolean, lossy_within_tol boolean"
     )
 
-    def kernel(batches):
-        import numpy as np
+    def kernel(row):
+        doc_id = int(row.doc_id)
+        h = 16 + (doc_id % 4) * 8
+        w = 24 + (doc_id % 3) * 8
+        jj, ii = np.meshgrid(np.arange(w), np.arange(h))
+        img = np.stack(
+            [
+                np.clip(ii * 5 + doc_id, 0, 255),
+                np.clip(jj * 4, 0, 255),
+                np.clip(200 - ii * 2 - jj, 0, 255),
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        ll = encode_webp(img, lossless=True)
+        lossy = encode_webp(img, quality=90.0)
+        out_ll = decode_webp(ll)
+        err = float(np.abs(decode_webp(lossy).astype(int) - img.astype(int)).mean())
+        yield (
+            doc_id, *out_ll.shape, webp_info(ll)["codec"], webp_info(lossy)["codec"],
+            bool(np.array_equal(out_ll, img)), err < 16.0,
+        )
 
-        from ...operators.webp import decode_webp, encode_webp, webp_info
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                h = 16 + (doc_id % 4) * 8
-                w = 24 + (doc_id % 3) * 8
-                jj, ii = np.meshgrid(np.arange(w), np.arange(h))
-                img = np.stack(
-                    [
-                        np.clip(ii * 5 + doc_id, 0, 255),
-                        np.clip(jj * 4, 0, 255),
-                        np.clip(200 - ii * 2 - jj, 0, 255),
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                ll = encode_webp(img, lossless=True)
-                lossy = encode_webp(img, quality=90.0)
-                out_ll = decode_webp(ll)
-                out_ly = decode_webp(lossy)
-                err = float(
-                    np.abs(out_ly.astype(int) - img.astype(int)).mean()
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "height": out_ll.shape[0],
-                        "width": out_ll.shape[1],
-                        "channels": out_ll.shape[2],
-                        "lossless_codec": webp_info(ll)["codec"],
-                        "lossy_codec": webp_info(lossy)["codec"],
-                        "lossless_exact": bool(np.array_equal(out_ll, img)),
-                        "lossy_within_tol": err < 16.0,
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return d.mapInPandas(kernel, schema=schema).orderBy("doc_id")
+    return map_rows(d, kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -1618,78 +1591,54 @@ def q_webp_anim_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, or compositing bug flips a boolean and fails the hash.
     Frame pixel decode is the NATIVE VP8L path (no libwebp on the
     read side)."""
-    import pandas as _pd
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from ...operators.arrow_kernels import map_rows
+    from ...operators.webp import encode_webp_animation, webp_frame_headers, webp_frames
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 8).select("doc_id")
-
-    schema = (
+    schema = T.StructType.fromDDL(
         "doc_id bigint, n_frames int, height int, width int, "
         "headers_roundtrip boolean, compositing_correct boolean"
     )
+    H, W = 20, 32
 
-    def kernel(batches):
-        import numpy as np
-
-        from ...operators.webp import (
-            encode_webp_animation,
-            webp_frame_headers,
-            webp_frames,
+    def kernel(row):
+        doc_id = int(row.doc_id)
+        n = 2 + (doc_id % 2)
+        base = np.zeros((H, W, 3), np.uint8)
+        base[:, :, 0] = 100 + doc_id * 10
+        frames = [base]
+        rects = [(0, 0)]
+        durs = [30]
+        for j in range(1, n):
+            ph, pw = 6 + 2 * j, 8 + 2 * j
+            patch = np.full(
+                (ph, pw, 3), [(doc_id * 40 + j * 90) % 256, 250, j * 70 % 256], np.uint8
+            )
+            frames.append(patch)
+            rects.append((2 * j, 2 * j))
+            durs.append(30 + 10 * j)
+        payload = encode_webp_animation(frames, durs, rects=rects, blend=False, dispose_bg=False)
+        heads = webp_frame_headers(payload)
+        hr = (
+            len(heads) == n
+            and [h_["duration_ms"] for h_ in heads] == durs
+            and [(h_["x"], h_["y"]) for h_ in heads] == rects
+            and all(not h_["blend"] and not h_["dispose_bg"] for h_ in heads)
         )
+        got, _meta = webp_frames(payload)
+        # straight numpy replay of replace-compositing
+        canvas = np.zeros((H, W, 4), np.uint8)
+        ok = got.shape == (n, H, W, 4)
+        for j, (fr, (x, y)) in enumerate(zip(frames, rects)):
+            rgba = np.concatenate([fr, np.full(fr.shape[:2] + (1,), 255, np.uint8)], axis=2)
+            canvas[y : y + fr.shape[0], x : x + fr.shape[1]] = rgba
+            ok = ok and bool(np.array_equal(got[j], canvas))
+        yield doc_id, *got.shape[:3], bool(hr), bool(ok)
 
-        H, W = 20, 32
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 2 + (doc_id % 2)
-                base = np.zeros((H, W, 3), np.uint8)
-                base[:, :, 0] = 100 + doc_id * 10
-                frames = [base]
-                rects = [(0, 0)]
-                durs = [30]
-                for j in range(1, n):
-                    ph, pw = 6 + 2 * j, 8 + 2 * j
-                    patch = np.full(
-                        (ph, pw, 3),
-                        [(doc_id * 40 + j * 90) % 256, 250, j * 70 % 256],
-                        np.uint8,
-                    )
-                    frames.append(patch)
-                    rects.append((2 * j, 2 * j))
-                    durs.append(30 + 10 * j)
-                payload = encode_webp_animation(
-                    frames, durs, rects=rects, blend=False, dispose_bg=False
-                )
-                heads = webp_frame_headers(payload)
-                hr = (
-                    len(heads) == n
-                    and [h_["duration_ms"] for h_ in heads] == durs
-                    and [(h_["x"], h_["y"]) for h_ in heads] == rects
-                    and all(not h_["blend"] and not h_["dispose_bg"] for h_ in heads)
-                )
-                got, _meta = webp_frames(payload)
-                # straight numpy replay of replace-compositing
-                canvas = np.zeros((H, W, 4), np.uint8)
-                ok = got.shape == (n, H, W, 4)
-                for j, (fr, (x, y)) in enumerate(zip(frames, rects)):
-                    rgba = np.concatenate(
-                        [fr, np.full(fr.shape[:2] + (1,), 255, np.uint8)], axis=2
-                    )
-                    canvas[y : y + fr.shape[0], x : x + fr.shape[1]] = rgba
-                    ok = ok and bool(np.array_equal(got[j], canvas))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_frames": int(got.shape[0]),
-                        "height": int(got.shape[1]),
-                        "width": int(got.shape[2]),
-                        "headers_roundtrip": bool(hr),
-                        "compositing_correct": bool(ok),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return d.mapInPandas(kernel, schema=schema).orderBy("doc_id")
+    return map_rows(d, kernel, schema).orderBy("doc_id")
 
 
 @register(

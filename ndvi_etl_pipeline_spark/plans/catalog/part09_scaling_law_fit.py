@@ -832,48 +832,39 @@ def q_image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id % 4 alone, so decoder, DCT, median threshold, banding, and
     popcount all have to be right for the hash to match — measured
     margins: in-group ≤ 14, cross-group ≥ 24."""
-    import pandas as _pd
+    import numpy as np
 
+    from ...operators.arrow_kernels import map_rows
     from ...operators.imagehash import HASH_SCHEMA, compute_hashes, phash_neardup_pairs
+    from ...operators.jpeg import decode_jpeg, encode_jpeg
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 16).select("doc_id")
 
-    def kernel(batches):
-        import numpy as np
+    def kernel(row):
+        doc_id = int(row.doc_id)
+        g, v = doc_id % 4, doc_id // 4
+        jj, ii = np.meshgrid(np.arange(80), np.arange(60))
+        base = np.clip(
+            np.sin(ii / (3.0 + 2.0 * g) + 0.7 * g) * 100
+            + np.cos(jj / (4.0 + 3.0 * g)) * 80
+            + 128,
+            0,
+            255,
+        ).astype(np.uint8)
+        img = base
+        if v == 1:
+            rng = np.random.default_rng(100 + g)
+            noisy = base.astype(int)
+            idx = rng.integers(0, base.size, 150)
+            noisy.ravel()[idx] += rng.integers(-25, 25, 150)
+            img = np.clip(noisy, 0, 255).astype(np.uint8)
+        elif v == 2:
+            img = decode_jpeg(encode_jpeg(base, quality=70))[:, :, 0]
+        elif v == 3:
+            img = np.clip(base.astype(int) + 15, 0, 255).astype(np.uint8)
+        yield doc_id, *compute_hashes(img)
 
-        from ...operators.jpeg import decode_jpeg, encode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                g, v = doc_id % 4, doc_id // 4
-                jj, ii = np.meshgrid(np.arange(80), np.arange(60))
-                base = np.clip(
-                    np.sin(ii / (3.0 + 2.0 * g) + 0.7 * g) * 100
-                    + np.cos(jj / (4.0 + 3.0 * g)) * 80
-                    + 128,
-                    0,
-                    255,
-                ).astype(np.uint8)
-                img = base
-                if v == 1:
-                    rng = np.random.default_rng(100 + g)
-                    noisy = base.astype(int)
-                    idx = rng.integers(0, base.size, 150)
-                    noisy.ravel()[idx] += rng.integers(-25, 25, 150)
-                    img = np.clip(noisy, 0, 255).astype(np.uint8)
-                elif v == 2:
-                    img = decode_jpeg(encode_jpeg(base, quality=70))[:, :, 0]
-                elif v == 3:
-                    img = np.clip(base.astype(int) + 15, 0, 255).astype(np.uint8)
-                a, dh, p = compute_hashes(img)
-                rows.append(
-                    {"media_id": doc_id, "ahash": a, "dhash": dh, "phash": p}
-                )
-            yield _pd.DataFrame(rows)
-
-    hashes = d.mapInPandas(kernel, schema=HASH_SCHEMA)
+    hashes = map_rows(d, kernel, HASH_SCHEMA)
     return (
         phash_neardup_pairs(hashes, max_distance=15, bands=16)
         .select(
@@ -906,50 +897,35 @@ def q_audio_spectral_tones(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame count (1 s → 7 full frames), and the tonality verdict
     (spectral flatness < 0.01) from doc_id alone — windowing, rfft
     indexing, and the flatness statistic must all be right."""
-    import pandas as _pd
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from ...operators.arrow_kernels import map_rows
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 12).select("doc_id")
-
-    schema = (
-        "doc_id bigint, dominant_bin int, dominant_hz double, "
-        "n_frames int, is_tone boolean"
+    schema = T.StructType.fromDDL(
+        "doc_id bigint, dominant_bin int, dominant_hz double, n_frames int, is_tone boolean"
     )
 
-    def kernel(batches):
-        import numpy as np
+    def kernel(row):
+        doc_id = int(row.doc_id)
+        sr, frame = 16000, 2048
+        k = 8 * (doc_id % 6 + 1)
+        f = k * sr / frame
+        t = np.arange(sr)
+        x = (8000 * np.sin(2 * np.pi * f * t / sr)).astype(np.float64)
+        nf = sr // frame
+        fr = x[: nf * frame].reshape(nf, frame)
+        spec = np.abs(np.fft.rfft(fr, axis=1)) ** 2
+        p = spec.mean(axis=0)
+        p[0] = 0.0
+        freqs = np.fft.rfftfreq(frame, d=1.0 / sr)
+        dom = int(np.argmax(p))
+        nz = p[1:][p[1:] > 0]
+        flat = float(np.exp(np.log(nz).mean()) / nz.mean()) if len(nz) else 1.0
+        yield doc_id, dom, round(float(freqs[dom]), 4) + 0.0, nf, flat < 0.01
 
-        from ...operators.multimodal import MEDIA_SCHEMA  # noqa: F401
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                sr, frame = 16000, 2048
-                k = 8 * (doc_id % 6 + 1)
-                f = k * sr / frame
-                t = np.arange(sr)
-                x = (8000 * np.sin(2 * np.pi * f * t / sr)).astype(np.float64)
-                nf = sr // frame
-                fr = x[: nf * frame].reshape(nf, frame)
-                spec = np.abs(np.fft.rfft(fr, axis=1)) ** 2
-                p = spec.mean(axis=0)
-                p[0] = 0.0
-                freqs = np.fft.rfftfreq(frame, d=1.0 / sr)
-                dom = int(np.argmax(p))
-                nz = p[1:][p[1:] > 0]
-                flat = float(np.exp(np.log(nz).mean()) / nz.mean()) if len(nz) else 1.0
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "dominant_bin": dom,
-                        "dominant_hz": round(float(freqs[dom]), 4) + 0.0,
-                        "n_frames": nf,
-                        "is_tone": flat < 0.01,
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return d.mapInPandas(kernel, schema=schema).orderBy("doc_id")
+    return map_rows(d, kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -973,52 +949,38 @@ def q_video_motion_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicts cut count and the exact motion statistics from doc_id —
     frame differencing, the per-transition mean, and the threshold all
     value-checked."""
-    import pandas as _pd
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from ...operators.arrow_kernels import map_rows
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 12).select("doc_id")
-
-    schema = (
-        "doc_id bigint, n_frames int, n_cuts int, "
-        "mean_motion double, max_motion double"
+    schema = T.StructType.fromDDL(
+        "doc_id bigint, n_frames int, n_cuts int, mean_motion double, max_motion double"
     )
 
-    def kernel(batches):
-        import numpy as np
+    def kernel(row):
+        doc_id = int(row.doc_id)
+        cuts = doc_id % 3
+        nf, h, w, c = 9, 12, 16, 3
+        # segment boundaries after frames 3 and 6 (as many as `cuts`),
+        # values alternate 40/200
+        vals = []
+        seg = 0
+        for i in range(nf):
+            if cuts >= 1 and i == 3:
+                seg += 1
+            if cuts >= 2 and i == 6:
+                seg += 1
+            vals.append(40 if seg % 2 == 0 else 200)
+        vid = np.stack([np.full((h, w, c), v, np.float64) for v in vals])
+        deltas = np.abs(np.diff(vid, axis=0)).mean(axis=(1, 2, 3))
+        yield (
+            doc_id, nf, int((deltas > 48.0).sum()),
+            round(float(deltas.mean()), 4) + 0.0, round(float(deltas.max()), 4) + 0.0,
+        )
 
-        from ...operators.multimodal import video_motion_features  # noqa: F401
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                cuts = doc_id % 3
-                nf, h, w, c = 9, 12, 16, 3
-                # segment boundaries after frames 3 and 6 (as many as
-                # `cuts`), values alternate 40/200
-                vals = []
-                seg = 0
-                for i in range(nf):
-                    if cuts >= 1 and i == 3:
-                        seg += 1
-                    if cuts >= 2 and i == 6:
-                        seg += 1
-                    vals.append(40 if seg % 2 == 0 else 200)
-                vid = np.stack(
-                    [np.full((h, w, c), v, np.float64) for v in vals]
-                )
-                deltas = np.abs(np.diff(vid, axis=0)).mean(axis=(1, 2, 3))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_frames": nf,
-                        "n_cuts": int((deltas > 48.0).sum()),
-                        "mean_motion": round(float(deltas.mean()), 4) + 0.0,
-                        "max_motion": round(float(deltas.max()), 4) + 0.0,
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return d.mapInPandas(kernel, schema=schema).orderBy("doc_id")
+    return map_rows(d, kernel, schema).orderBy("doc_id")
 
 
 def _pq_chain(m: int = 4, k: int = 8, iterations: int = 2, sub: int = 16) -> str:

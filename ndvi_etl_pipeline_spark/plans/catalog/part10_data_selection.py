@@ -151,7 +151,7 @@ def q_semdedup_prune_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     within each cluster remove rows whose cosine to a lower-id row
     is ≥ 0.30 (rounded-before-compare, keep-first policy). The pair
     stage runs as SemDeDup itself does — a dense numpy kernel per
-    cluster (applyInPandas, dim-ordered Gram accumulation,
+    cluster (arrow_kernels.map_groups, dim-ordered Gram accumulation,
     bit-identical to the HOF-fold path and equality test-pinned);
     pair volume is Σ|cluster|² — the cluster-granularity design
     knob that bounds per-task memory; centroids are broadcast."""

@@ -20,8 +20,9 @@ Engine design:
   STAC document shape; asset selection is a pure projection
   (`coalesce` over lower-cased map keys), no UDF.
 - The *download* is the distributed part: one fetch task per scene
-  row via mapInPandas, results as status rows (ok/quarantined +
-  error) — per-scene failure isolation as data, not exceptions (E1).
+  row through the engine's Arrow boundary (arrow_kernels.map_rows),
+  results as status rows (ok/quarantined + error) — per-scene
+  failure isolation as data, not exceptions (E1).
   The fetcher is injectable so tests run without network and a
   cluster can swap in a cloud-storage copy.
 """
@@ -30,9 +31,8 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -226,7 +226,7 @@ def fetch_assets(
     sleeper: Callable[[float], None] | None = None,
 ) -> DataFrame:
     """Distributed asset download: one row per (scene, band), fetched
-    from executors via mapInPandas, validated (V1 content-type, V2
+    from executors via `map_rows`, validated (V1 content-type, V2
     min size) and routed to ok/quarantined status rows instead of
     exceptions (E1). Repartitioned on scene so a slow scene does not
     serialize the rest.
@@ -245,43 +245,31 @@ def fetch_assets(
         ).alias("band", "href"),
     ).repartition("scene_id")
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                path = os.path.join(out_dir, f"{row.scene_id}_{row.band}.tif")
-                rec = {
-                    "scene_id": row.scene_id,
-                    "band": row.band,
-                    "href": row.href,
-                    "path": path,
-                    "n_bytes": 0,
-                    "content_type": None,
-                    "status": "quarantined",
-                    "error": None,
-                }
-                sleep = sleeper if sleeper is not None else time.sleep
-                for attempt in range(retries + 1):
-                    try:
-                        n, ctype = fetcher(row.href, path)
-                        rec["n_bytes"], rec["content_type"] = int(n), ctype
-                        rec["error"] = None
-                        if require_tiff and ctype and "tiff" not in ctype.lower():
-                            rec["error"] = f"V1: content-type {ctype!r} not tiff"
-                        elif n < min_bytes:
-                            rec["error"] = f"V2: {n} bytes < {min_bytes}"
-                        else:
-                            rec["status"] = "ok"
-                        break  # validation failures don't retry
-                    except Exception as exc:  # per-row isolation, E1
-                        rec["error"] = f"{type(exc).__name__}: {exc}"
-                        if attempt < retries:
-                            sleep(backoff_s * (2**attempt))
-                rows.append(rec)
-            if rows:
-                yield pd.DataFrame(rows)
+    from ..operators.arrow_kernels import map_rows
 
-    return per_band.mapInPandas(fetch, schema=FETCH_SCHEMA)
+    sleep = sleeper if sleeper is not None else time.sleep
+
+    def fetch(row):
+        path = os.path.join(out_dir, f"{row.scene_id}_{row.band}.tif")
+        n_bytes, content_type, status, error = 0, None, "quarantined", None
+        for attempt in range(retries + 1):
+            try:
+                n, ctype = fetcher(row.href, path)
+                n_bytes, content_type, error = int(n), ctype, None
+                if require_tiff and ctype and "tiff" not in ctype.lower():
+                    error = f"V1: content-type {ctype!r} not tiff"
+                elif n < min_bytes:
+                    error = f"V2: {n} bytes < {min_bytes}"
+                else:
+                    status = "ok"
+                break  # validation failures don't retry
+            except Exception as exc:  # per-row isolation, E1
+                error = f"{type(exc).__name__}: {exc}"
+                if attempt < retries:
+                    sleep(backoff_s * (2**attempt))
+        yield row.scene_id, row.band, row.href, path, n_bytes, content_type, status, error
+
+    return map_rows(per_band, fetch, FETCH_SCHEMA)
 
 
 def complete_scenes(fetched: DataFrame) -> DataFrame:

@@ -2,11 +2,11 @@
 web-archive files: ``spark.read.format("warc").load()`` over a
 directory of .warc / .warc.gz files.
 
-Third transport for the WARC parser (after the mapInPandas reader
+Third transport for the WARC parser (after the `map_rows` reader
 `sources/webarchive.py::read_warc` and the `warc_records` UDTF,
 functions/udtfs.py) — one parser, three surfaces, because that is how
 the engine exposes every codec. What the DataSource adds over the
-binaryFile+mapInPandas path:
+binaryFile+map_rows path:
 
 - **file-granular partitions with no driver content reads**:
   `partitions()` lists names only; each executor opens exactly its

@@ -7,7 +7,7 @@ pipeline's analog is crawl archives: millions of WARC files, each a
 concatenation of length-prefixed records. The Spark-native shape is
 the same as the GeoTIFF codec (`operators/raster.py`):
 
-    spark.read.format("binaryFile") → mapInPandas(parse) → rows
+    spark.read.format("binaryFile") → map_rows(parse) → rows
 
 - **binaryFile** gives distributed file scheduling, one task per
   file (WARC members can't be split mid-record without an index, so
@@ -34,7 +34,6 @@ parallelism already scales to any corpus since |files| >> |cores|.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -135,19 +134,15 @@ def parse_warc_bytes(raw: bytes, source: str) -> list[dict[str, Any]]:
 def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed WARC scan: binaryFile file scheduling + an
     Arrow-batched per-file parser. One output row per WARC record."""
-    import pandas as pd
+    from ..operators.arrow_kernels import map_rows
 
     files = spark.read.format("binaryFile").load(path_glob).select("path", "content")
 
-    def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                recs = parse_warc_bytes(bytes(row["content"]), row["path"])
-                if recs:
-                    yield pd.DataFrame(recs, columns=cols)
+    def parse(row):
+        for rec in parse_warc_bytes(bytes(row.content), row.path):
+            yield tuple(rec.values())  # WARC_SCHEMA order
 
-    return files.mapInPandas(parse, WARC_SCHEMA)
+    return map_rows(files, parse, WARC_SCHEMA)
 
 
 def warc_documents(records: DataFrame) -> DataFrame:

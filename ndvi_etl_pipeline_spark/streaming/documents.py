@@ -357,7 +357,7 @@ def neardup_gate_batch(
     (lsh_near_duplicate_pairs' own invariant), so the greedy is
     bucket-local and buckets run in parallel: one shuffle of
     candidates + store on bucket, then a cogrouped Arrow kernel
-    (applyInPandas) does the |cand|×|store| vectorized cosines per
+    (applyInArrow) does the |cand|×|store| vectorized cosines per
     bucket — no all-pairs join, no driver collect. Exactly-once per
     content across replays: a replayed batch's rows are byte-identical
     to store rows and die in the fingerprint anti-join before the
@@ -429,18 +429,17 @@ def _admit_against_store(
     relation — the FULL store for the loose-parquet gate, or only the
     matching-bucket files for the lake-indexed gate."""
     import numpy as np
-    import pandas as pd
+
+    from ..operators.arrow_kernels import _column
 
     thr = float(threshold)
 
-    def bucket_greedy(cand_pdf: pd.DataFrame, store_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return cand_pdf
-        admitted = [np.asarray(e, dtype=np.float64) for e in store_pdf["embedding"]]
-        cand_pdf = cand_pdf.sort_values("doc_id")
+    def bucket_greedy(cand, store):
+        admitted = [np.asarray(e, dtype=np.float64) for e in _column(store["embedding"])]
+        emb = _column(cand["embedding"])
         keep = []
-        for i, emb in enumerate(cand_pdf["embedding"]):
-            v = np.asarray(emb, dtype=np.float64)
+        for i in np.argsort(_column(cand["doc_id"]), kind="stable"):
+            v = np.asarray(emb[i], dtype=np.float64)
             nv = float(np.sqrt((v * v).sum()))
             dup = False
             for a in admitted:
@@ -452,16 +451,13 @@ def _admit_against_store(
             if not dup:
                 keep.append(i)
                 admitted.append(v)
-        return cand_pdf.iloc[keep]
+        return cand.take(np.array(keep, dtype=np.int64))
 
     return (
         fresh.select("doc_id", "text", "source", "fingerprint", "bucket", "embedding")
         .groupBy("bucket")
         .cogroup(store_embeddings.groupBy("bucket"))
-        .applyInPandas(
-            lambda cand, st: bucket_greedy(cand, st),
-            schema=NEARDUP_CURATED_SCHEMA,
-        )
+        .applyInArrow(bucket_greedy, schema=NEARDUP_CURATED_SCHEMA)
     )
 
 

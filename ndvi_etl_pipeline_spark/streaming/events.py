@@ -176,7 +176,7 @@ def stateful_sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame
     State is 3 longs per open session per user — O(active users), the
     bounded-state property that matters at 100 TB/day event volumes.
     """
-    import pandas as pd
+    import pandas as pd  # the frame type of Spark's GroupState API, which has no Arrow form
 
     gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
 
@@ -267,7 +267,7 @@ def tws_sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
             "transformWithStateInPandas needs the 'protobuf' package; "
             "use stateful_sessionize (applyInPandasWithState) instead"
         ) from exc
-    import pandas as pd
+    import pandas as pd  # this state API's frame type, kept as the applyInPandasWithState twin
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,

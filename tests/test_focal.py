@@ -79,10 +79,32 @@ def test_focal_mean_shrinks_at_borders(spark, sf_dir):
 
 
 def test_focal_rejects_bad_halo(spark, sf_dir):
+    """A non-positive halo fails at plan time; a halo of at least the
+    tile size fails when the query runs (the plan reads no data)."""
     tiles = _ndvi_tiles(spark, sf_dir, 32)
     import pytest
 
     with pytest.raises(ValueError, match="halo"):
         focal_map_tiled(tiles, focal_mean_3x3, halo=0)
-    with pytest.raises(ValueError, match="halo"):
-        focal_map_tiled(tiles, focal_mean_3x3, halo=32)
+    too_wide = focal_map_tiled(tiles, focal_mean_3x3, halo=32)
+    with pytest.raises(Exception, match="halo"):
+        too_wide.collect()
+
+
+def test_focal_planning_runs_no_job(spark, tmp_path):
+    """Building a `focal_map_tiled` plan launches no Spark job."""
+    px = spark.createDataFrame(
+        [("S", "ndvi", y, x, float(y + x)) for y in range(40) for x in range(40)],
+        "scene_id string, band string, y int, x int, dn double",
+    )
+    tiles = raster.pixels_to_tiles(px, tile=16).drop("band")
+    sc = spark.sparkContext
+    group = f"focal-plan-{tmp_path.name}"
+    sc.setJobGroup(group, "plan a focal map")
+    try:
+        out = focal_map_tiled(tiles, focal_mean_3x3, halo=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert out.count() > 0

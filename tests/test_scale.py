@@ -293,6 +293,29 @@ def test_audit_counts_arrow_python_nodes(spark):
     pdf = pdf.groupBy("id").applyInPandas(lambda frame: frame, "id long")
     counts = audit_one(pdf)
     assert (counts["arrow_python_nodes"], counts["pandas_python_nodes"]) == (2, 2)
+    # a scalar pandas UDF (eval type 200) and a cogrouped pandas kernel
+    # are pandas boundaries too; an arrow_udf (eval type 250) is not
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("boolean")
+    def pos_pd(x: pd.Series) -> pd.Series:
+        return x > 0
+
+    @F.arrow_udf("boolean")
+    def pos_pa(x: pa.Array) -> pa.Array:
+        return pc.greater(x, 0)
+
+    df = spark.range(8)
+    counts = audit_one(df.select(pos_pd("id"), pos_pa("id")))
+    assert (counts["arrow_python_nodes"], counts["pandas_python_nodes"]) == (2, 1)
+    co = df.groupBy("id").cogroup(df.groupBy("id"))
+    counts = audit_one(co.applyInPandas(lambda a, b: a, "id long"))
+    assert (counts["arrow_python_nodes"], counts["pandas_python_nodes"]) == (1, 1)
+    counts = audit_one(co.applyInArrow(lambda a, b: a, "id long"))
+    assert (counts["arrow_python_nodes"], counts["pandas_python_nodes"]) == (1, 0)
 
 
 def test_tpch_dim_joins_broadcast(spark, sf_dir_oracle):
@@ -494,7 +517,7 @@ def test_selection_tier_plan_shapes(spark, sf_dir):
     # hard-negative mining scores via the Arrow kernel (driver-held
     # query matrix — no join at all), then ranks with a window
     p = plan_of("hard_negative_mining")
-    assert "MapInPandas" in p and "Join" not in p
+    assert "MapInArrow" in p and "Join" not in p
     for name in (
         "dsir_importance_topk",
         "semdedup_prune_census",

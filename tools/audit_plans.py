@@ -8,12 +8,16 @@ driver-side loops at plan-build time), capture the executed plan as
 - n_exchanges        — shuffle count
 - pushed_filters     — parquet scans with non-empty PushedFilters
 - codegen_spans      — WholeStageCodegen regions
-- arrow_python_nodes — vectorized Python boundaries (MapInPandas /
-                       MapInArrow / FlatMapGroupsInPandas /
-                       FlatMapGroupsInArrow / ArrowEvalPython)
-- pandas_python_nodes — the pandas ones among them (MapInPandas /
-                       FlatMapGroupsInPandas): the kernels still to
-                       move to the Arrow boundary
+- arrow_python_nodes — vectorized Python boundaries (MapIn*,
+                       FlatMapGroupsIn*, FlatMapCoGroupsIn* for
+                       Pandas and Arrow, and ArrowEvalPython)
+- pandas_python_nodes — the pandas ones among them: MapInPandas,
+                       FlatMapGroupsInPandas, FlatMapCoGroupsInPandas
+                       and the scalar pandas UDFs (ArrowEvalPython
+                       with eval type 200, or 204 for the iterator
+                       form; an arrow_udf plans as 250). The engine
+                       crosses through operators/arrow_kernels.py, so
+                       this must read zero
 - row_python_nodes   — row-at-a-time BatchEvalPython (MUST be zero:
                        the engine bans non-Arrow Python in plans)
 
@@ -165,6 +169,19 @@ def _sp_exchanges_nonagg(plan: str) -> int:
     return n
 
 
+_PYTHON_NODES = ("MapIn", "FlatMapGroupsIn", "FlatMapCoGroupsIn")
+# an ArrowEvalPython line ends with its UDFs' eval type
+_PANDAS_SCALAR_UDF = re.compile(r"ArrowEvalPython .*, 20[04]$", re.M)
+
+
+def pandas_python_nodes(plan: str) -> int:
+    """The pandas Python boundaries in a `plan_as_run` text: pandas
+    map, grouped and cogrouped kernels plus scalar pandas UDFs."""
+    return sum(plan.count(n + "Pandas") for n in _PYTHON_NODES) + len(
+        _PANDAS_SCALAR_UDF.findall(plan)
+    )
+
+
 def audit_one(df) -> dict:
     plan = plan_as_run(df)
     # shuffles only: 'BroadcastExchange ...' and 'ReusedExchange [...]'
@@ -176,14 +193,11 @@ def audit_one(df) -> dict:
         "n_broadcasts": plan.count("BroadcastExchange "),
         "pushed_filters": plan.count("PushedFilters: [") - plan.count("PushedFilters: []"),
         "codegen_spans": plan.count("WholeStageCodegen"),
-        "arrow_python_nodes": (
-            plan.count("MapInPandas")
-            + plan.count("MapInArrow")
-            + plan.count("FlatMapGroupsInPandas")
-            + plan.count("FlatMapGroupsInArrow")
-            + plan.count("ArrowEvalPython")
-        ),
-        "pandas_python_nodes": plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas"),
+        "arrow_python_nodes": sum(
+            plan.count(n + kind) for n in _PYTHON_NODES for kind in ("Pandas", "Arrow")
+        )
+        + plan.count("ArrowEvalPython"),
+        "pandas_python_nodes": pandas_python_nodes(plan),
         "row_python_nodes": plan.count("BatchEvalPython"),
         "global_window_nodes": _global_window_nodes(plan),
         "single_partition_exchanges": plan.count("Exchange SinglePartition"),
