@@ -24,6 +24,7 @@ propagates NaN — both match the usual GIS conventions).
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable
 
 import numpy as np
@@ -42,7 +43,8 @@ def focal_mean_3x3(canvas: np.ndarray) -> np.ndarray:
     from numpy.lib.stride_tricks import sliding_window_view
 
     w = sliding_window_view(canvas, (3, 3))
-    with np.errstate(invalid="ignore"):  # all-NaN windows
+    with warnings.catch_warnings():  # all-NaN windows warn through `warnings`
+        warnings.filterwarnings("ignore", "Mean of empty slice", RuntimeWarning)
         return np.nanmean(w, axis=(2, 3))
 
 

@@ -13,6 +13,22 @@ down for local testing:
 - shuffle.partitions default sized to cores locally; on a cluster this
   should be ~2-3× total executor cores (or left to AQE's coalescing
   with a high initial value).
+- Generated-code cache sized to the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark keeps 100 compiled classes by
+  default; one 12-query catalog round needs about 210 distinct classes
+  and one raster + lake round about 145, so with the default every warm
+  re-run of a plan recompiles almost all of its code with Janino (about
+  170 compiles per catalog round and 130 per raster + lake round,
+  counted with ``CodegenMetrics`` in perfbench's traced runs on
+  ``local[4]``). At 1024 entries a warm catalog round compiles 0-2
+  classes (a raster + lake round 16: its per-round literals are new
+  code). A kept class costs 4-10 KB of Metaspace (a one-projection
+  stage; the average catalog query's), so the bound is about 10 MB.
+  It is a *static* conf, read once when the JVM first generates code:
+  a session built elsewhere — one passed in to
+  ``__spark_entry__.entry(spark)``, or an already-active session that
+  ``get_spark`` returns untouched — keeps whatever cache size it was
+  started with.
 """
 
 from __future__ import annotations
@@ -22,6 +38,10 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+# spark.sql.codegen.cache.maxEntries: about 4x the larger benchmark
+# working set (module docstring)
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def get_spark(
@@ -92,6 +112,7 @@ def get_spark(
         # 128 MB input splits: the sweet spot for parquet scans at scale;
         # small local files coalesce via AQE anyway.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )

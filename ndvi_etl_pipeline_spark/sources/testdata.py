@@ -4,12 +4,18 @@ The driver's synthetic tables (TESTDATA.md) are one parquet file per
 table. At 100 TB the same code path reads a partitioned parquet lake —
 Spark's DataSource v2 handles split planning, predicate pushdown and
 column pruning; nothing here changes except the path.
+
+`load_table` infers each file's schema once per session: later reads of
+the same unchanged file pass the cached schema to Spark and run no job.
+The cache holds parquet metadata (schema, row-group count), never data.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,20 +54,47 @@ def default_sf_dir() -> str:
 # row-group count already feeds half the cores (any real lake at
 # scale) is returned untouched, so the extra exchange exists only
 # where the alternative is an idle cluster — not as a local[32] tune.
-_ROW_GROUPS_CACHE: dict[str, int] = {}
+_UNREADABLE_FOOTER = 1 << 30  # assume splittable, never spread
+
+# Metadata of the files `load_table` has read, one entry per path:
+# (identity, Spark-inferred schema, row-group count). It holds
+# metadata, never data. Spark infers a parquet schema with one job per
+# read (~130 ms warm); a read given the schema runs none (~27 ms), and
+# every catalog plan build loads its tables again. The identity is the
+# file's size and mtime plus the session confs that change what Spark
+# infers, so a rewritten file or a re-tuned session misses; a footer
+# that could not be read is not cached.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_METADATA: dict[str, tuple[tuple, T.StructType, int]] = {}
 
 
-def _row_groups(path: str) -> int:
-    n = _ROW_GROUPS_CACHE.get(path)
-    if n is None:
-        try:
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:
-            n = 1 << 30  # unreadable footer: assume splittable, never spread
-        _ROW_GROUPS_CACHE[path] = n
-    return n
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
+    """The parquet read of `path` and its row-group count, inferring
+    the schema only on the file's first read."""
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: Spark resolves it
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path), _UNREADABLE_FOOTER
+    ident = (st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(k, None) for k in _INFER_CONFS
+    )
+    hit = _METADATA.get(path)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path), hit[2]
+    df = spark.read.parquet(path)
+    try:
+        row_groups = pq.read_metadata(path).num_row_groups
+    except (OSError, ValueError):  # ArrowInvalid is a ValueError
+        return df, _UNREADABLE_FOOTER
+    _METADATA[path] = (ident, df.schema, row_groups)
+    return df, row_groups
 
 
 def load_table(
@@ -71,10 +104,10 @@ def load_table(
     spread_key: str | None = None,
 ) -> DataFrame:
     sf_dir = sf_dir or default_sf_dir()
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df, row_groups = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if spread_key is not None:
         p = spark.sparkContext.defaultParallelism
-        if _row_groups(f"{sf_dir}/{name}.parquet") < max(2, p // 2):
+        if row_groups < max(2, p // 2):
             df = df.repartition(p, spread_key)
     # Normalize `ts` to a session-timezone TIMESTAMP whatever the parquet
     # writer used: TIMESTAMP(NANOS) arrives as long (nanosAsLong=true) and

@@ -78,6 +78,22 @@ def test_focal_mean_shrinks_at_borders(spark, sf_dir):
     assert empty.collect() == []
 
 
+def test_focal_mean_all_nan_window_is_silent():
+    """An all-NaN window (a pixel whose neighbors are all off-scene or
+    missing) averages to NaN without a warning, so the workers do not
+    warn once per scene border."""
+    import warnings
+
+    canvas = np.full((4, 4), np.nan, dtype=np.float32)
+    canvas[0, 0] = 1.0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = focal_mean_3x3(canvas)
+    assert out.dtype == np.float32
+    assert out[0, 0] == 1.0
+    assert np.isnan(out[1, 1])
+
+
 def test_focal_rejects_bad_halo(spark, sf_dir):
     """A non-positive halo fails at plan time; a halo of at least the
     tile size fails when the query runs (the plan reads no data)."""
