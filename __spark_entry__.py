@@ -6,6 +6,14 @@ queries()         — every implemented operator from SURVEY.md §2 plus
 oracle_sql()      — DuckDB-equivalent SQL per query (correctness gate).
 
 Implementations live in ndvi_etl_pipeline_spark/plans/queries.py.
+
+A session passed in here keeps the generated-code cache it was built
+with: `spark.sql.codegen.cache.maxEntries` is a static conf, and at
+Spark's default of 100 a warm re-run of the catalog recompiles most of
+its generated classes. Pass it when the session is built
+(`spark-submit --conf spark.sql.codegen.cache.maxEntries=1024`, the
+engine's `session.CODEGEN_CACHE_ENTRIES`); `session.get_spark` logs a
+warning when the active session it returns has less.
 """
 
 from __future__ import annotations

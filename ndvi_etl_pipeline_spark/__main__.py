@@ -74,6 +74,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from .operators import raster
+    from .operators.arrow_kernels import local_df
     from .operators.upsert import write_upsert
     from .session import get_spark
 
@@ -135,7 +136,8 @@ def main(argv: list[str] | None = None) -> int:
         # the FULL ring set — summing independent per-ring stats would
         # double-count cavity pixels under exterior+hole.
         dissolved = union_polygons(polys)
-        aois_df = spark.createDataFrame(
+        aois_df = local_df(
+            spark,
             [(1, "AOI", _json.dumps(rings_to_geojson(dissolved)))],
             "aoi_id int, name string, geom_geojson string",
         )

@@ -334,9 +334,11 @@ def _ray_cast_numpy(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndar
         x1, y1, xx2, yy2 = xs[i], ys[i], x2[i], y2[i]
         if y1 == yy2:
             continue
-        straddles = (y1 > py) != (yy2 > py)
-        x_at_y = x1 + (py - y1) * (xx2 - x1) / (yy2 - y1)
-        inside ^= straddles & (px < x_at_y)
+        # the crossing is computed only for points the edge straddles:
+        # elsewhere |py - y1| may dwarf a near-horizontal edge's height
+        s = (y1 > py) != (yy2 > py)
+        x_at_y = x1 + (py[s] - y1) * (xx2 - x1) / (yy2 - y1)
+        inside[s] ^= px[s] < x_at_y
     return inside
 
 

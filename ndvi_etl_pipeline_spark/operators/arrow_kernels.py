@@ -22,6 +22,12 @@ bytes copy. Scalar column functions (`functions/geo.py`) are
 The only pandas left in the package are Spark's streaming state APIs
 (`applyInPandasWithState`, `transformWithStateInPandas` in
 `streaming/events.py`), which have no Arrow form.
+
+The driver side has one entry point too: `local_df` turns a Python
+row list (centroids, query tables, parameter grids) into a relation
+through the same column converter (`_arrays`). It plans as an Arrow
+`LocalTableScan`, not the pickled Python RDD of
+`createDataFrame(<list>)`, so no job over it starts a Python worker.
 """
 
 from __future__ import annotations
@@ -78,30 +84,60 @@ def _fields(names: tuple[str, ...]):
     return namedtuple("Fields", names)
 
 
-def _record_batch(rows: list[tuple], schema):
-    """Output row tuples (in `schema` field order) → one Arrow record
-    batch. A column whose first value is a numpy array holds one array
-    per row; each row then stands for that many output rows with its
-    scalar fields repeated — how a tile explodes to pixels."""
+def _arrays(rows, schema, explode: bool = False) -> list:
+    """Row tuples (in `schema` field order) → one Arrow array per field
+    of `schema` (an Arrow schema); `rows` may be empty.
+
+    With `explode`, a column whose first value is a numpy array holds
+    one array per row; each row then stands for that many output rows
+    with its scalar fields repeated — how a tile explodes to pixels.
+    Without it every value is one cell: a numpy array in an `array<…>`
+    column stays one row."""
     import pyarrow as pa
 
-    if not rows:
-        return pa.RecordBatch.from_pylist([], schema=schema)
-    cols = list(zip(*rows))
-    sizes = next(
-        (np.fromiter(map(len, c), np.int64, len(c)) for c in cols if isinstance(c[0], np.ndarray)),
-        None,
-    )
-    arrays = []
-    for c, f in zip(cols, schema):
-        if sizes is None:
-            v = list(c)
-        elif isinstance(c[0], np.ndarray):
-            v = np.concatenate(c)
-        else:
-            v = np.repeat(np.asarray(c, dtype=object), sizes)
-        arrays.append(pa.array(v, type=f.type))
-    return pa.record_batch(arrays, schema=schema)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    first = next((c for c in cols if explode and c and isinstance(c[0], np.ndarray)), None)
+    if first is None:
+        return [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+    sizes = np.fromiter(map(len, first), np.int64, len(first))
+    return [
+        pa.array(
+            np.concatenate(c) if isinstance(c[0], np.ndarray)
+            else np.repeat(np.asarray(c, dtype=object), sizes),
+            type=f.type,
+        )
+        for c, f in zip(cols, schema)
+    ]
+
+
+def _record_batch(rows: list[tuple], schema):
+    """Kernel output row tuples (in `schema` field order) → one Arrow
+    record batch; a numpy-array column explodes its row (`_arrays`)."""
+    import pyarrow as pa
+
+    return pa.record_batch(_arrays(rows, schema, explode=True), schema=schema)
+
+
+def local_df(spark, rows, schema) -> DataFrame:
+    """Driver-side `rows` (tuples or Rows in `schema` field order; may
+    be empty) as an Arrow-backed LocalRelation — the engine's one way
+    to turn a Python row list into a relation. `schema` is a DDL
+    string or a StructType.
+
+    Why: `spark.createDataFrame(<python list>)` pickles the rows into
+    an RDD, so every job touching the relation plans `Scan
+    ExistingRDD` and starts a Python-worker stage. A pyarrow table
+    lands as a `LocalTableScan` instead: collecting a projection of it
+    runs no job (Catalyst folds the projection into the local rows),
+    and broadcasting it ships no Python RDD."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(_arrays(rows, arrow), schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def batch_stream(batches, names: tuple[str, ...], fn, schema):

@@ -20,30 +20,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .arrow_kernels import local_df
 from .iterate import scoped_persist
 
 __all__ = ["kmeans_lloyd", "kmeans_centroid_vectors"]
 
 
-def kmeans_lloyd(
+def _lloyd(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 4,
-    iterations: int = 3,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Run `iterations` Lloyd steps; init = the k smallest `id_col`
-    rows (deterministic). Returns one row per cluster:
-    (cid, n_points, centroid_sum) — final assignment sizes plus the
-    rounded component-sum of the post-update centroid."""
+    id_col: str,
+    vec_col: str,
+    k: int,
+    iterations: int,
+    round_digits: int,
+    slot: str,
+) -> tuple[list[tuple[int, list[float]]], DataFrame]:
+    """The one Lloyd loop. Init = the k smallest `id_col` rows
+    (deterministic); each iteration assigns every row to its nearest
+    centroid (ties to the smaller cid) and replaces each centroid by
+    its members' per-component mean, rounded at `round_digits`.
+
+    Returns (the final centroids [(cid, [component, ...])] sorted by
+    cid, the last assignment (vec_id, cid, v)). The vectors are cached
+    under `slot` (`scoped_persist`: one live cache per slot, released
+    by the slot's next call even when an iteration raised)."""
     spark = df.sparkSession
     vecs = scoped_persist(
         df.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("v"),
         ),
-        "clustering.kmeans_lloyd.vecs",
+        slot,
     )
     centroids = [
         (cid, list(r.v)) for cid, r in enumerate(vecs.orderBy("vec_id").limit(k).collect())
@@ -54,7 +61,7 @@ def kmeans_lloyd(
 
     assigned = None
     for _ in range(iterations):
-        cdf = spark.createDataFrame(centroids, "cid int, c array<double>")
+        cdf = local_df(spark, centroids, "cid int, c array<double>")
         dist = F.aggregate(F.zip_with("v", "c", sq), F.lit(0.0), add)
         assigned = (
             vecs.crossJoin(F.broadcast(cdf))
@@ -84,10 +91,26 @@ def kmeans_lloyd(
             .collect()
         )
         centroids = sorted((r.cid, list(r.c)) for r in new_c)
+    return centroids, assigned
 
+
+def kmeans_lloyd(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 4,
+    iterations: int = 3,
+    round_digits: int = 6,
+) -> DataFrame:
+    """Run `iterations` Lloyd steps (`_lloyd`). Returns one row per
+    cluster: (cid, n_points, centroid_sum) — final assignment sizes
+    plus the rounded component-sum of the post-update centroid."""
+    centroids, assigned = _lloyd(
+        df, id_col, vec_col, k, iterations, round_digits, "clustering.kmeans_lloyd.vecs"
+    )
     sizes = assigned.groupBy("cid").agg(F.count("*").alias("n_points"))
-    sums = spark.createDataFrame(
-        [(cid, float(sum(c))) for cid, c in centroids], "cid int, s double"
+    sums = local_df(
+        df.sparkSession, [(cid, float(sum(c))) for cid, c in centroids], "cid int, s double"
     ).select("cid", F.round("s", 4).alias("centroid_sum"))
     return sizes.join(sums, "cid").select("cid", "n_points", "centroid_sum")
 
@@ -103,48 +126,14 @@ def kmeans_centroid_vectors(
     """Run the same Lloyd trajectory as `kmeans_lloyd` but return the
     final CENTROID VECTORS [(cid, [component, ...]), ...] — the
     training output other operators compose with (e.g. an IVF index
-    built on fitted cells instead of sampled rows). Same deterministic
-    init, assignment tie-break, and per-iteration component rounding,
-    so the trajectory — and therefore the centroids — replays exactly
-    in the unrolled-CTE oracle."""
-    spark = df.sparkSession
-    vecs = df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).persist()
-    centroids = [
-        (cid, list(r.v)) for cid, r in enumerate(vecs.orderBy("vec_id").limit(k).collect())
-    ]
-    sq = lambda a, b: (a - b) * (a - b)  # noqa: E731
-    add = lambda acc, x: acc + x  # noqa: E731
-    for _ in range(iterations):
-        cdf = spark.createDataFrame(centroids, "cid int, c array<double>")
-        dist = F.aggregate(F.zip_with("v", "c", sq), F.lit(0.0), add)
-        assigned = (
-            vecs.crossJoin(F.broadcast(cdf))
-            .select("vec_id", "v", dist.alias("dist"), "cid")
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid")).alias("m"), F.first("v").alias("v"))
-            .select("vec_id", F.col("m.cid").alias("cid"), "v")
-        )
-        comp = (
-            assigned.select("cid", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg("val"), round_digits).alias("val"))
-        )
-        new_c = (
-            comp.groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                    lambda s: s["val"],
-                ).alias("c")
-            )
-            .collect()
-        )
-        centroids = sorted((r.cid, list(r.c)) for r in new_c)
-    vecs.unpersist()
+    built on fitted cells instead of sampled rows). The loop is
+    `_lloyd`, so the trajectory — and therefore the centroids —
+    replays exactly in the unrolled-CTE oracle."""
+    centroids, _ = _lloyd(
+        df, id_col, vec_col, k, iterations, round_digits,
+        "clustering.kmeans_centroid_vectors.vecs",
+    )
     return centroids
-
 
 
 def centered_embeddings(
@@ -266,7 +255,8 @@ def pca_power_iteration(
     (exact in binary)."""
     spark = df.sparkSession
     vr, lam = pca_top_component(df, vec_col, iterations, round_digits)
-    out = spark.createDataFrame(
+    out = local_df(
+        spark,
         [(d + 1, vr[d], lam) for d in range(len(vr))],
         "idx int, loading double, eigenvalue double",
     )

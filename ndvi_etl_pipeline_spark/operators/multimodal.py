@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .arrow_kernels import map_rows
+from .arrow_kernels import local_df, map_rows
 
 try:  # optional codec path, absent in this container
     from PIL import Image  # type: ignore
@@ -102,7 +102,7 @@ def synthesize_media(
         vid = rng.integers(0, 256, size=(nf, h, w, c), dtype=np.uint8)
         rows.append((mid, "video", bytearray(vid.tobytes()), ("rawvideo", w, h, c, None, nf)))
         mid += 1
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_df(spark, rows, MEDIA_SCHEMA)
 
 
 def _raw_image(row) -> np.ndarray:

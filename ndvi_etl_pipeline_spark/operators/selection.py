@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, word_shingles
+from .arrow_kernels import local_df
 from .dedup import _nibble_value
 from .similarity import cosine
 from .iterate import scoped_persist
@@ -916,8 +917,8 @@ def bpe_merges(
     within each run of overlapping match positions).
     """
     merges, _ = _bpe_train(docs, n_merges, text_col, id_col)
-    return docs.sparkSession.createDataFrame(
-        merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
+    return local_df(
+        docs.sparkSession, merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
     )
 
 
@@ -1186,9 +1187,7 @@ def unigram_em_pieces(
     words = scoped_persist(words, "selection.unigram_em.words")
     seed = unigram_seed_counts(words, vocab_size, max_piece).collect()
     if not seed:  # empty corpus: an empty tokenizer, not a log(0) crash
-        return spark.createDataFrame(
-            [], "piece string, em_cnt bigint, logp double"
-        )
+        return local_df(spark, [], "piece string, em_cnt bigint, logp double")
     vocab = sorted(r.piece for r in seed)
     cnts = {r.piece: int(r.seed_cnt) for r in seed}
 
@@ -1220,9 +1219,8 @@ def unigram_em_pieces(
         cnts = {p: got.get(p, 0) for p in vocab}
         logp = to_logp(cnts)
 
-    return spark.createDataFrame(
-        [(p, cnts[p], logp[p]) for p in vocab],
-        "piece string, em_cnt bigint, logp double",
+    return local_df(
+        spark, [(p, cnts[p], logp[p]) for p in vocab], "piece string, em_cnt bigint, logp double"
     )
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .arrow_kernels import local_df
+
 
 def dot(a: Column | str, b: Column | str) -> Column:
     """Σ aᵢbᵢ with left-to-right accumulation in double precision."""
@@ -370,7 +372,8 @@ def pq_train(
         sq = lambda a, b: (a - b) * (a - b)  # noqa: E731
         add = lambda acc, x: acc + x  # noqa: E731
         for _ in range(iterations):
-            cdf = spark.createDataFrame(
+            cdf = local_df(
+                spark,
                 [(s, cid, c) for s in range(m) for cid, c in books[s]],
                 "s int, cid int, c array<double>",
             )
@@ -518,7 +521,8 @@ def pq_topk_adc(
             T.StructField("adc_tables", T.ArrayType(T.ArrayType(T.DoubleType()))),
         ]
     )
-    qdf = corpus_codes.sparkSession.createDataFrame(
+    qdf = local_df(
+        corpus_codes.sparkSession,
         [(q.query_id, _adc_tables(list(q.v), codebooks)) for q in qrows], qschema
     )
     scored = corpus_codes.crossJoin(F.broadcast(qdf)).select(
@@ -585,7 +589,8 @@ def ivfpq_topk(
             T.StructField("adc_tables", T.ArrayType(T.ArrayType(T.DoubleType()))),
         ]
     )
-    qdf = corpus.sparkSession.createDataFrame(
+    qdf = local_df(
+        corpus.sparkSession,
         [
             (p.query_id, p.centroid_id, _adc_tables(qvecs[p.query_id], codebooks))
             for p in probes
@@ -705,7 +710,8 @@ def ivfpq_residual_topk(
                 T.StructField("adc_tables", T.ArrayType(T.ArrayType(T.DoubleType()))),
             ]
         )
-        qdf = corpus.sparkSession.createDataFrame(
+        qdf = local_df(
+            corpus.sparkSession,
             [
                 (
                     p.query_id,

@@ -18,6 +18,7 @@ from ...functions import text as TXT
 from ...operators import curation as CUR
 from ...operators import dedup as DD
 from ...operators import similarity as SIM
+from ...operators.arrow_kernels import local_df
 from ...operators.bands import pair_bands
 from ...sources.testdata import load_table
 
@@ -840,7 +841,8 @@ def _anchored_ndvi_tiles(spark: SparkSession, sf_dir: str):
     from ...operators.raster import pixels_to_tiles, tile_ndvi
 
     px = derived_pixels(spark, sf_dir)
-    grid = spark.createDataFrame(
+    grid = local_df(
+        spark,
         [
             (b, ty * 32, tx * 32)
             for b in ("red", "nir")
@@ -1041,6 +1043,7 @@ __all__ = [
     "SIM",
     "pair_bands",
     "load_table",
+    "local_df",
     "QuerySpec",
     "REGISTRY",
     "CUR_SCRUB_PATTERN_SQL",

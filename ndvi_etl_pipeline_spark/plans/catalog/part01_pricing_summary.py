@@ -4281,9 +4281,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     cents = kmeans_centroids_shared(spark, sf_dir, k=4, iterations=3)
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>"
-    )
+    cdf = local_df(spark, [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>")
     return SIM.ivf_topk(
         corpus=e.filter(F.col("vec_id") >= 5),
         queries=e.filter(F.col("vec_id") < 5),
@@ -4315,9 +4313,7 @@ def q_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.filter(F.col("vec_id") >= 5)
     queries = e.filter(F.col("vec_id") < 5)
     cents = kmeans_centroids_shared(spark, sf_dir, k=4, iterations=3)
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>"
-    )
+    cdf = local_df(spark, [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>")
     itop = SIM.ivf_topk(corpus, queries, cdf, k=5, nprobe=2).select(
         "query_id", F.col("vec_id").alias("ivf_vec")
     )

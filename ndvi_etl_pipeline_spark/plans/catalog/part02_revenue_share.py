@@ -366,7 +366,7 @@ def q_grid_spatial_join_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (aoi_id, [float(v) for p in ring for v in p]) for aoi_id, ring in _AOI_TABLE
     ]
-    aois = spark.createDataFrame(rows, "aoi_id int, ring array<double>")
+    aois = local_df(spark, rows, "aoi_id int, ring array<double>")
     nv = _ndvi_pixels_df(spark, sf_dir)
     joined = grid_spatial_join(nv, aois, cell=16.0, x_col="x", y_col="y")
     return joined.groupBy("aoi_id").agg(
@@ -392,7 +392,7 @@ def q_grid_tile_clip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (aoi_id, [float(v) for p in ring for v in p]) for aoi_id, ring in _AOI_TABLE
     ]
-    aois = spark.createDataFrame(rows, "aoi_id int, ring array<double>")
+    aois = local_df(spark, rows, "aoi_id int, ring array<double>")
     nv = _ndvi_pixels_df(spark, sf_dir)
     tiles = pixels_to_tiles(
         nv.withColumn("band", F.lit("ndvi")), tile=32, value_col="ndvi"

@@ -354,7 +354,8 @@ def q_haversine_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     |points| pre-argmin rows — and the window's partition key is the
     point id, so it rides the same hash partitioning."""
     s = _t(spark, sf_dir, "supplier")
-    hubs = spark.createDataFrame(
+    hubs = local_df(
+        spark,
         [
             ("helsinki", 60.17, 24.94), ("london", 51.51, -0.13),
             ("nyc", 40.71, -74.01), ("tokyo", 35.68, 139.69),
@@ -1974,7 +1975,8 @@ def q_polygon_shoelace_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     polygon set; the join keys on (polygon, (i+1) mod n) so each
     polygon's edges stay co-partitioned."""
     n = len(_AOI_RING)
-    ring = spark.createDataFrame(
+    ring = local_df(
+        spark,
         [(i, float(x), float(y)) for i, (x, y) in enumerate(_AOI_RING)],
         "i INT, x DOUBLE, y DOUBLE",
     )

@@ -1081,7 +1081,8 @@ def q_lsh_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     nt = truth.count()
     nc = cand.count()
     nh = hits.count()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (
                 nt,
@@ -2296,7 +2297,8 @@ def q_capture_recapture_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = li.select("l_partkey").distinct()
     n1, n2, m, t = s1.count(), s2.count(), both.count(), truth.count()
     chapman = (n1 + 1) * (n2 + 1) / (m + 1) - 1
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (
                 n1,
@@ -2967,7 +2969,7 @@ def q_hurst_exponent_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(Window.orderBy("d")) - 1).cast("long").alias("i"),
         "v",
     )
-    scales = spark.createDataFrame([(8,), (16,), (32,), (64,)], "n INT")
+    scales = local_df(spark, [(8,), (16,), (32,), (64,)], "n INT")
     sized = idx.crossJoin(F.broadcast(scales)).select(
         "n", (F.col("i") / F.col("n")).cast("long").alias("blk"), "i", "v"
     )
@@ -3198,7 +3200,7 @@ def q_dft_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = idx.join(F.broadcast(st)).select(
         "i", ((F.col("v") - F.col("mu")) / F.col("sd")).alias("zv"), "n"
     )
-    periods = spark.createDataFrame([(7,), (30,), (91,)], "period int")
+    periods = local_df(spark, [(7,), (30,), (91,)], "period int")
     ang = 2 * math.pi * F.col("i") / F.col("period")
     comp = (
         z.crossJoin(F.broadcast(periods))
@@ -3896,7 +3898,7 @@ def q_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = idx.join(F.broadcast(st)).select(
         "i", ((F.col("v") - F.col("mu")) / F.col("sd")).alias("zv")
     )
-    lv = spark.createDataFrame([(1,), (2,), (3,), (4,)], "j int")
+    lv = local_df(spark, [(1,), (2,), (3,), (4,)], "j int")
     blksz = F.pow(F.lit(2.0), F.col("j")).cast("long")
     halfsz = F.pow(F.lit(2.0), F.col("j") - 1).cast("long")
     sign = 1 - 2 * ((F.col("i") / halfsz).cast("long") % 2)

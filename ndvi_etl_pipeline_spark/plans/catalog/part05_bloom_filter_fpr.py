@@ -54,7 +54,7 @@ def q_bloom_filter_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning); deterministic md5 bits keep both engines bit-for-bit
     identical."""
     p = _t(spark, sf_dir, "part")
-    seeds = spark.createDataFrame([(1,), (2,), (3,)], "s int")
+    seeds = local_df(spark, [(1,), (2,), (3,)], "s int")
 
     def hbit(key, s):
         return (
@@ -300,7 +300,7 @@ def q_lagged_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("ts").alias("d"))
         .agg(F.count("*").cast("double").alias("y"))
     )
-    lags = spark.createDataFrame([(i,) for i in range(8)], "lag int")
+    lags = local_df(spark, [(i,) for i in range(8)], "lag int")
     shifted = c.crossJoin(F.broadcast(lags)).select(
         "lag", F.date_add(F.col("d"), F.col("lag")).alias("dj"), "x"
     )
@@ -2234,9 +2234,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v")
         )
     )
-    channels = spark.createDataFrame(
-        [("view", 1), ("click", 2), ("signup", 4)], "ch string, bit int"
-    )
+    channels = local_df(spark, [("view", 1), ("click", 2), ("signup", 4)], "ch string, bit int")
     sv = v.select(F.col("s").alias("s0"), F.col("v").alias("v0"))
     vi = v.select(F.col("s").alias("s1"), F.col("v").alias("v1"))
     weight = (
@@ -3283,8 +3281,8 @@ def q_event_study_abnormal(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum("o_totalprice").alias("v")
     )
-    ev = spark.createDataFrame(
-        [(f"{y}-01-01",) for y in range(1993, 1998)], "e string"
+    ev = local_df(
+        spark, [(f"{y}-01-01",) for y in range(1993, 1998)], "e string"
     ).select(F.col("e").cast("date").alias("e"))
     win = daily.join(
         F.broadcast(ev),

@@ -1466,7 +1466,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy(F.desc("c"), "token")).alias("rk"),
     )
     tot = ranked.agg(F.sum("c").alias("t"))
-    ks = spark.createDataFrame([(10,), (50,), (100,), (500,), (1000,)], "k int")
+    ks = local_df(spark, [(10,), (50,), (100,), (500,), (1000,)], "k int")
     covered = F.sum(
         F.when(F.col("rk") <= F.col("k"), F.col("c")).otherwise(0.0)
     )
@@ -1515,7 +1515,7 @@ def q_packing_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     same no-re-scan device as vocab_coverage_curve."""
     d = _t(spark, sf_dir, "documents")
     docs = d.select(TXT.token_count(F.col("text")).cast("double").alias("n_tok"))
-    ls = spark.createDataFrame([(128,), (512,), (2048,)], "max_len int")
+    ls = local_df(spark, [(128,), (512,), (2048,)], "max_len int")
     return (
         docs.crossJoin(F.broadcast(ls))
         .groupBy("max_len")
@@ -3817,8 +3817,8 @@ def q_dbscan_core_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("x") / 0.1).cast("long").alias("cx"),
         F.floor(F.col("y") / 0.1).cast("long").alias("cy"),
     ).agg(F.count("*").cast("bigint").alias("n"))
-    offsets = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], "dx int, dy int"
+    offsets = local_df(
+        spark, [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], "dx int, dy int"
     )
     c = cells.select(
         F.col("cx").alias("ccx"), F.col("cy").alias("ccy"), F.col("n").alias("own")
@@ -4069,7 +4069,7 @@ def q_kingman_vut_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.var_samp("ia") / F.pow(F.avg("ia"), 2)).alias("ca2"),
         F.count("*").cast("bigint").alias("n"),
     )
-    rhos = spark.createDataFrame([(0.7,), (0.8,), (0.9,)], "rho double")
+    rhos = local_df(spark, [(0.7,), (0.8,), (0.9,)], "rho double")
     wait = (F.col("rho") / (1 - F.col("rho"))) * (F.col("ca2") + 0) / 2 * (
         F.col("rho") * F.col("mia")
     )

@@ -3432,9 +3432,7 @@ def q_loess_local_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").cast("double").alias("x"),
         F.col("o_totalprice").alias("y"),
     )
-    pts = spark.createDataFrame(
-        [(2.0,), (4.0,), (6.0,), (8.0,), (10.0,)], "x0 double"
-    )
+    pts = local_df(spark, [(2.0,), (4.0,), (6.0,), (8.0,), (10.0,)], "x0 double")
     wexpr = F.pow(
         1 - F.pow(F.least(F.abs(F.col("x") - F.col("x0")) / 3.0, F.lit(1.0)), 3), 3
     )
@@ -3782,9 +3780,7 @@ def q_spectral_flatness(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = idx.join(F.broadcast(st)).select(
         "i", ((F.col("v") - F.col("mu")) / F.col("sd")).alias("zv"), "n"
     )
-    per = spark.createDataFrame(
-        [(p,) for p in (3, 5, 7, 14, 30, 60, 91, 182)], "period int"
-    )
+    per = local_df(spark, [(p,) for p in (3, 5, 7, 14, 30, 60, 91, 182)], "period int")
     ang = 2 * math.pi * F.col("i") / F.col("period")
     comp = (
         z.crossJoin(F.broadcast(per))

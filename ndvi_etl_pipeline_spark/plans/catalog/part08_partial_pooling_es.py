@@ -1252,9 +1252,7 @@ def q_adstock_halflife_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("ts").alias("d"))
         .agg(F.count("*").cast("double").alias("y"))
     )
-    lams = spark.createDataFrame(
-        [(0.3,), (0.5,), (0.7,), (0.8,), (0.9,)], "lam double"
-    )
+    lams = local_df(spark, [(0.3,), (0.5,), (0.7,), (0.8,), (0.9,)], "lam double")
     a = spend.select(F.col("d").alias("ad"))
     b = spend.select(F.col("d").alias("bd"), "x")
     stocked = (
@@ -2951,7 +2949,7 @@ def q_mean_cumulative_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(users, "user_id")
         .select(F.datediff(F.to_date("ts"), F.col("t0")).alias("age"))
     )
-    horizons = spark.createDataFrame([(30,), (60,), (90,), (180,)], "h int")
+    horizons = local_df(spark, [(30,), (60,), (90,), (180,)], "h int")
     return (
         recurrent.crossJoin(F.broadcast(horizons))
         .crossJoin(F.broadcast(nu))
@@ -3031,8 +3029,8 @@ def q_getis_ord_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.stddev_samp("v").alias("s"),
         F.count("*").cast("double").alias("n"),
     )
-    offsets = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], "dx int, dy int"
+    offsets = local_df(
+        spark, [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], "dx int, dy int"
     )
     c = cells.select(
         F.col("cx").alias("ccx"), F.col("cy").alias("ccy")

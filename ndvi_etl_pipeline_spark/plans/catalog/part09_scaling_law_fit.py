@@ -94,9 +94,7 @@ def q_scaling_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").cast("double").alias("v"),
         CUR.hash_bucket(F.col("vec_id"), 100).alias("bucket"),
     )
-    fracs = spark.createDataFrame(
-        [(20,), (40,), (60,), (80,), (100,)], "f int"
-    )
+    fracs = local_df(spark, [(20,), (40,), (60,), (80,), (100,)], "f int")
     sub = dims.crossJoin(F.broadcast(fracs)).filter(
         F.col("bucket") < F.col("f")
     )
@@ -1245,9 +1243,7 @@ def q_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     cents = kmeans_centroids_shared(spark, sf_dir, k=4, iterations=3)
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>"
-    )
+    cdf = local_df(spark, [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>")
     books = pq_codebooks_shared(spark, sf_dir, m=4, k=8, iterations=2)
     return ivfpq_topk(
         e.filter(F.col("vec_id") >= 5),
@@ -1420,9 +1416,7 @@ def q_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     cents = kmeans_centroids_shared(spark, sf_dir, k=4, iterations=3)
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>"
-    )
+    cdf = local_df(spark, [(cid, vec) for cid, vec in cents], "vec_id int, embedding array<double>")
     ptop = ivfpq_residual_topk(
         e.filter(F.col("vec_id") >= 5),
         e.filter(F.col("vec_id") < 5),
@@ -1557,8 +1551,8 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("t")
         ).first().t
         out_rows.append((it, best.pair, int(best.n), int(tokens_after)))
-    return spark.createDataFrame(
-        out_rows, "it int, merged_pair string, pair_count bigint, tokens_after bigint"
+    return local_df(
+        spark, out_rows, "it int, merged_pair string, pair_count bigint, tokens_after bigint"
     )
 
 

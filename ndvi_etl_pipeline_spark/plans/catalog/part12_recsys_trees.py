@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ...operators import recsys as RS
+from ...operators.arrow_kernels import local_df
 from ...operators import trees as TR
 from ...operators.graph import bfs_distances
 from ...operators.scale import with_hilbert_key
@@ -93,9 +94,7 @@ def q_countmin_frequency_contract(spark: SparkSession, sf_dir: str) -> DataFrame
         li.groupBy(F.col("l_partkey").alias("k"))
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    hs = spark.createDataFrame(
-        list(_CM_HASHES), "r INT, a BIGINT, b BIGINT"
-    )
+    hs = local_df(spark, list(_CM_HASHES), "r INT, a BIGINT, b BIGINT")
     cells = freq.crossJoin(F.broadcast(hs)).select(
         "k", "c", "r",
         (((F.col("a") * F.col("k") + F.col("b")) % _CM_P) % _CM_W).alias("col"),

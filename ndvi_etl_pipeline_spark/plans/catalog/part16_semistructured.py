@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ...operators.arrow_kernels import local_df
 from ._shared import _t, register
 
 
@@ -99,9 +100,7 @@ def q_blocklist_filter_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n_docs_hit"))
     )
     # zero-hit patterns need their row back (the oracle's LEFT JOIN)
-    all_pats = d.sparkSession.createDataFrame(
-        [(p,) for p in _BLOCK_PATTERNS], "pattern STRING"
-    )
+    all_pats = local_df(d.sparkSession, [(p,) for p in _BLOCK_PATTERNS], "pattern STRING")
     per_full = (
         all_pats.join(per, "pattern", "left")
         .select("pattern", F.coalesce("n_docs_hit", F.lit(0)).cast("bigint").alias("n_docs_hit"))

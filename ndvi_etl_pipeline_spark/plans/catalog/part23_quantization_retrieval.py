@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ...operators.arrow_kernels import local_df
 from ._shared import _t, register
 
 _SPLIT = 5  # vec_id < 5 are queries, >= 5 the corpus (family convention)
@@ -351,7 +352,8 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "vec_id", "v", F.round(F.lit(lam) * F.col("rel6"), 6).alias("score")
                 )
             else:
-                sel_df = spark_sess.createDataFrame(
+                sel_df = local_df(
+                    spark_sess,
                     [(vid, vec) for _o, vid, _s, vec in picks],
                     "s_id long, s_vec array<double>",
                 )
@@ -379,7 +381,8 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             picks.append((i, int(top.vec_id), float(top.score), list(top.v)))
     finally:
         cand.unpersist()
-    return spark_sess.createDataFrame(
+    return local_df(
+        spark_sess,
         [(o, vid, s) for o, vid, s, _v in picks],
         "pick_order int, vec_id long, mmr_score double",
     )

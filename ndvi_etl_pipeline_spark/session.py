@@ -28,11 +28,12 @@ down for local testing:
   a session built elsewhere — one passed in to
   ``__spark_entry__.entry(spark)``, or an already-active session that
   ``get_spark`` returns untouched — keeps whatever cache size it was
-  started with.
+  started with (``get_spark`` warns when that is below ours).
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -42,6 +43,7 @@ __all__ = ["get_spark", "stop_spark"]
 # spark.sql.codegen.cache.maxEntries: about 4x the larger benchmark
 # working set (module docstring)
 CODEGEN_CACHE_ENTRIES = 1024
+_CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 
 
 def get_spark(
@@ -60,9 +62,19 @@ def get_spark(
     the builder would otherwise overwrite its runtime SQL confs (e.g.
     ``spark.sql.shuffle.partitions``) with this call's defaults, so an
     in-process CLI run would silently re-tune its caller's session.
+    Its code cache cannot be resized (a static conf): when it is below
+    ``CODEGEN_CACHE_ENTRIES``, a warning says so.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
+        entries = int(active.conf.get(_CODEGEN_CACHE_CONF))
+        if entries < CODEGEN_CACHE_ENTRIES:
+            logging.getLogger(__name__).warning(
+                f"{_CODEGEN_CACHE_CONF} is {entries} on this session, below the engine's "
+                f"{CODEGEN_CACHE_ENTRIES}: warm re-runs recompile most of their generated code. "
+                f"Pass it when the session is built (spark-submit --conf "
+                f"{_CODEGEN_CACHE_CONF}={CODEGEN_CACHE_ENTRIES})."
+            )
         return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -112,7 +124,7 @@ def get_spark(
         # 128 MB input splits: the sweet spot for parquet scans at scale;
         # small local files coalesce via AQE anyway.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.arrow_kernels import local_df
+
 HEIGHT = 100
 WIDTH = 100
 TRANSFORM = [0.1, 0.0, 0.0, 0.0, -0.1, 0.0]  # from_origin(0, 0, 0.1, 0.1)
@@ -104,7 +106,8 @@ def scene_bands(spark: SparkSession, include_mismatch: bool = False) -> DataFram
         rows.append(
             ("LC08_L2SP_187018_20220901_02_T1", "nir", 100, 100, [0.2, 0.0, 0.0, 0.0, -0.2, 0.0], CRS, 0.0)
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         rows,
         "scene_id string, band string, height int, width int, "
         "transform array<double>, crs string, nodata double",

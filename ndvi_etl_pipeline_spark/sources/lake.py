@@ -99,6 +99,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.arrow_kernels import local_df
+
 #: Files younger than this are never vacuumed even when unreferenced —
 #: they may belong to a writer that has staged data but not yet
 #: committed its manifest (Delta's VACUUM retention, scaled to the
@@ -1144,29 +1146,6 @@ def _write_data_files(
     return entries, rows
 
 
-def _local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-side `rows` (tuples or Rows in `schema` field order; may
-    be empty) as an Arrow-backed LocalRelation.
-
-    Why: `spark.createDataFrame(<python list>)` pickles the rows into
-    an RDD, so every job touching the relation plans `Scan
-    ExistingRDD` and starts a Python-worker stage. A pyarrow table
-    lands as a `LocalTableScan` instead: collecting a projection of it
-    runs no job (Catalyst folds the projection into the local rows),
-    and broadcasting it ships no Python RDD."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = spark._parse_ddl(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, schema)
-
-
 #: Reserved column names DV bookkeeping rides on; user tables must
 #: not use them (asserted at dv-delete time).
 _DV_FILE, _DV_POS = "__dv_file", "__dv_pos"
@@ -1224,7 +1203,7 @@ def _dv_raw_hashes(spark: SparkSession, raws: dict[str, str]) -> dict:
     driver/executor mismatch to over- or under-delete rows. The
     relation is local, so this collect runs no job."""
     return dict(
-        _local_df(
+        local_df(
             spark, sorted(raws.items()), f"{_DV_FILE} string, __dv_raw string"
         )
         .select(_DV_FILE, F.xxhash64("__dv_raw"))
@@ -1482,7 +1461,7 @@ def _read_entries(
     dvs = (manifest.get("dvs") or []) if apply_dvs else []
     want_meta = keep_meta or bool(dvs)
     if not entries:
-        out = _local_df(spark, [], log_schema)
+        out = local_df(spark, [], log_schema)
         if keep_meta:
             out = out.withColumn(_DV_FILE, F.lit(None).cast("string"))
             out = out.withColumn(_DV_POS, F.lit(None).cast("bigint"))
@@ -1589,7 +1568,7 @@ def _read_entries(
             # through a broadcast manifest-scale map and ORs in the
             # ordinal; the table side packed at the scan.
             posbits, mask, bases = dv_pack
-            base_df = _local_df(
+            base_df = local_df(
                 spark,
                 sorted(bases.items()),
                 f"{_DV_FILE} string, __dv_base bigint",
@@ -1610,7 +1589,7 @@ def _read_entries(
             # past it the anti-join sheds the hint and shuffles
             # (lake_maintain's max_dv_rows drain compacts long
             # before).
-            hash_df = _local_df(
+            hash_df = local_df(
                 spark,
                 sorted(dv_hash.items()),
                 f"{_DV_FILE} string, {_DV_H} bigint",
@@ -1640,7 +1619,7 @@ def _read_entries(
             # planner shuffles; lake_maintain's max_dv_rows drain
             # compacts long before that.
             fid = "__dv_fid"
-            id_df = _local_df(
+            id_df = local_df(
                 spark,
                 [(r, i) for i, r in enumerate(rels)],
                 f"{_DV_FILE} string, {fid} int",
@@ -2188,7 +2167,7 @@ def _plan_files_spark(
         if pr is not None:
             keep = keep & ~F.coalesce(pr, F.lit(False))
     if removed:
-        rm_df = _local_df(
+        rm_df = local_df(
             spark, [(p,) for p in sorted(removed)], "path string"
         )
         df = df.join(F.broadcast(rm_df), "path", "left_anti")
@@ -2571,7 +2550,7 @@ def lake_read_cdf(
                 T.StructField("_commit_version", T.IntegerType()),
             ]
         )
-        return _local_df(spark, [], empty)
+        return local_df(spark, [], empty)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -26,9 +26,9 @@ import re
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.arrow_kernels import local_df
 from .lake import (
     _latest_version,
-    _local_df,
     _read_manifest,
     lake_delete,
     lake_delete_keys,
@@ -186,7 +186,7 @@ def _table_path(name: str, tables: dict[str, str]) -> str:
 
 
 def _dml_result(spark: SparkSession, op: str, version: int) -> DataFrame:
-    return _local_df(
+    return local_df(
         spark, [Row(op=op, version=int(version))], "op string, version bigint"
     )
 
@@ -630,7 +630,7 @@ def _run_maintenance(
             )
             for h in hist
         ]
-        return _local_df(
+        return local_df(
             spark,
             rows,
             "version bigint, op string, ts double, n_rows_delta bigint",
@@ -653,7 +653,7 @@ def _run_maintenance(
         if m.group(2) is not None:
             kwargs["retention_seconds"] = float(m.group(2)) * 3600.0
         deleted = lake_vacuum(path, **kwargs)
-        return _local_df(
+        return local_df(
             spark,
             [Row(op="vacuum", n_deleted=len(deleted))],
             "op string, n_deleted bigint",

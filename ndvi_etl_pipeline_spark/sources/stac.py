@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.arrow_kernels import local_df
+
 DEFAULT_RED_KEYS = ("red", "sr_b4", "b04", "b4")
 DEFAULT_NIR_KEYS = ("nir08", "sr_b5", "b08", "b5")
 
@@ -131,7 +133,7 @@ def item_to_row(it: dict) -> tuple:
 def items_to_df(spark: SparkSession, items: list[dict]) -> DataFrame:
     """STAC item documents → typed DataFrame (properties/assets as
     MAP columns, SURVEY §1.4)."""
-    return spark.createDataFrame([item_to_row(it) for it in items], ITEM_SCHEMA)
+    return local_df(spark, [item_to_row(it) for it in items], ITEM_SCHEMA)
 
 
 def _pick_asset(assets_lc, keys: tuple[str, ...]):

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import read_store_or_empty
+
 QUERY_LANDING_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.LongType()),
@@ -40,17 +42,6 @@ ANN_RESULT_SCHEMA = T.StructType(
         T.StructField("adc_dist", T.DoubleType()),
     ]
 )
-
-
-def _served_or_empty(spark: SparkSession, path: str) -> DataFrame:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(ANN_RESULT_SCHEMA).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], ANN_RESULT_SCHEMA)
-        raise
 
 
 def ann_serve_batch(
@@ -73,7 +64,9 @@ def ann_serve_batch(
         .groupBy("query_id")
         .agg(F.min("embedding").alias("embedding"))
     )
-    served = _served_or_empty(spark, results_path).select("query_id").distinct()
+    served = (
+        read_store_or_empty(spark, results_path, ANN_RESULT_SCHEMA).select("query_id").distinct()
+    )
     fresh = in_batch.join(served, "query_id", "left_anti").select(
         F.col("query_id").cast("long").alias("vec_id"), "embedding"
     )

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import exact_fingerprint, quality_score
+from ..operators.arrow_kernels import local_df
+from . import read_store_or_empty
 
 LANDING_SCHEMA = T.StructType(
     [
@@ -50,22 +52,8 @@ CURATED_SCHEMA = T.StructType(
 )
 
 
-def _read_store_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Empty ONLY when the store does not exist yet; other read
-    failures RAISE (an empty fallback would reset the cross-batch
-    fingerprint state and double-admit every already-curated doc)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
-
-
 def _read_curated(spark: SparkSession, path: str) -> DataFrame:
-    return _read_store_or_empty(spark, path, CURATED_SCHEMA)
+    return read_store_or_empty(spark, path, CURATED_SCHEMA)
 
 
 def curate_batch(
@@ -185,7 +173,7 @@ def score_batch(
         "fingerprint",
         F.col("x.dsir_weight").alias("dsir_weight"),
     )
-    seen = _read_store_or_empty(spark, curated_path, SELECTED_SCHEMA).select(
+    seen = read_store_or_empty(spark, curated_path, SELECTED_SCHEMA).select(
         "fingerprint"
     )
     return in_batch.join(seen, "fingerprint", "left_anti")
@@ -275,14 +263,7 @@ def gopher_gate_batch(
         F.col("x.source").alias("source"),
         "fingerprint",
     )
-    from pyspark.errors import AnalysisException
-
-    try:
-        seen = spark.read.parquet(curated_path).select("fingerprint")
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        seen = spark.createDataFrame([], "fingerprint string")
+    seen = read_store_or_empty(spark, curated_path, "fingerprint string")
     return in_batch.join(seen, "fingerprint", "left_anti")
 
 
@@ -367,7 +348,7 @@ def neardup_gate_batch(
     100 TB path is neardup_gate_batch_lake, whose bucket-partitioned
     lake store prunes the per-batch embedding scan to only the
     buckets present in the batch."""
-    store = _read_store_or_empty(
+    store = read_store_or_empty(
         batch_df.sparkSession, curated_path, NEARDUP_CURATED_SCHEMA
     )
     fresh = _neardup_fresh_candidates(
@@ -496,6 +477,7 @@ def neardup_gate_batch_lake(
         lake_read(spark, curated_table)
     except FileNotFoundError:
         store_exists = False
+    seen_fp = local_df(spark, [], "fingerprint string")
     if store_exists:
         # ledger anti-join, bloom-pruned: only files whose fingerprint
         # bloom may contain one of THIS batch's fingerprints can
@@ -507,30 +489,21 @@ def neardup_gate_batch_lake(
             r.fingerprint
             for r in in_batch.select("fingerprint").distinct().collect()
         ]
-        seen_fp = (
-            lake_read(
+        if fps:
+            seen_fp = lake_read(
                 spark,
                 curated_table,
                 where=[("fingerprint", "in", fps)],
                 prune_only=True,
             ).select("fingerprint")
-            if fps
-            else spark.createDataFrame([], "fingerprint string")
-        )
-    else:
-        seen_fp = spark.createDataFrame([], "fingerprint string")
     fresh = in_batch.join(seen_fp, "fingerprint", "left_anti")
-    store_cols = "bucket long, doc_id long, embedding array<double>"
+    store_b = local_df(spark, [], "bucket long, doc_id long, embedding array<double>")
     if store_exists:
         buckets = [r.bucket for r in fresh.select("bucket").distinct().collect()]
-        store_b = (
-            lake_read(spark, curated_table, where=[("bucket", "in", buckets)])
-            .select("bucket", "doc_id", "embedding")
-            if buckets
-            else spark.createDataFrame([], store_cols)
-        )
-    else:
-        store_b = spark.createDataFrame([], store_cols)
+        if buckets:
+            store_b = lake_read(
+                spark, curated_table, where=[("bucket", "in", buckets)]
+            ).select("bucket", "doc_id", "embedding")
     return _admit_against_store(fresh, store_b, threshold)
 
 
@@ -662,7 +635,7 @@ def tokenize_batch(
     job and the lightweight serving gate, same as the DSIR model in
     score_batch."""
     spark = batch_df.sparkSession
-    wlen = spark.createDataFrame(wlen_rows, "word string, n_pieces int")
+    wlen = local_df(spark, wlen_rows, "word string, n_pieces int")
     base = batch_df.filter(F.col("text").isNotNull()).withColumn(
         "fingerprint", exact_fingerprint("text")
     )
@@ -708,7 +681,7 @@ def tokenize_batch(
         F.col("x.n_unigram_pieces").alias("n_unigram_pieces"),
         F.col("x.fertility").alias("fertility"),
     )
-    seen = _read_store_or_empty(spark, tokenized_path, TOKENIZED_SCHEMA).select(
+    seen = read_store_or_empty(spark, tokenized_path, TOKENIZED_SCHEMA).select(
         "fingerprint"
     )
     return dedup.join(seen, "fingerprint", "left_anti")
@@ -781,6 +754,7 @@ def stream_curated_documents_lake(
             "fingerprint",
             F.col("w.quality").alias("quality"),
         )
+        seen = local_df(spark, [], "fingerprint string")
         try:
             # bloom-pruned ledger: only files that may contain one of
             # the batch's fingerprints feed the anti-join (prune_only —
@@ -789,18 +763,15 @@ def stream_curated_documents_lake(
                 r.fingerprint
                 for r in in_batch.select("fingerprint").distinct().collect()
             ]
-            seen = (
-                lake_read(
+            if fps:
+                seen = lake_read(
                     spark,
                     curated_table,
                     where=[("fingerprint", "in", fps)],
                     prune_only=True,
                 ).select("fingerprint")
-                if fps
-                else spark.createDataFrame([], "fingerprint string")
-            )
         except FileNotFoundError:
-            seen = spark.createDataFrame([], "fingerprint string")
+            pass  # no store yet: nothing is seen
         fresh = in_batch.join(seen, "fingerprint", "left_anti")
         if fresh.count():
             # lake_write retries lost commit races internally; the

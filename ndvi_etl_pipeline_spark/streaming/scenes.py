@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import raster
+from . import read_store_or_empty
 
 __all__ = ["stream_scene_stats", "stream_scene_composite"]
 
@@ -44,22 +45,6 @@ BINARY_FILE_SCHEMA = T.StructType(
         T.StructField("content", T.BinaryType()),
     ]
 )
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Empty relation ONLY when the store does not exist yet (first
-    batch); any other read failure (corrupt footer from a killed
-    writer, FS error) must RAISE — silently returning empty would
-    reset the processed/quarantine state and re-append every
-    previously completed scene, breaking exactly-once-per-scene."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
 
 
 _LEDGER_SCHEMA = T.StructType(
@@ -101,7 +86,7 @@ def _reconcile_arrivals(
     )
     arrivals.write.mode("append").parquet(ledger_path)
 
-    ledger = _read_or_empty(s, ledger_path, _LEDGER_SCHEMA)
+    ledger = read_store_or_empty(s, ledger_path, _LEDGER_SCHEMA)
     complete = (
         ledger.groupBy("scene_id")
         .agg(F.countDistinct("band").alias("nb"))
@@ -149,8 +134,8 @@ def stream_scene_stats(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        processed = _read_or_empty(s, products_path, _PRODUCT_SCHEMA).select("scene_id")
-        quarantined = _read_or_empty(s, quarantine_path, _QUAR_SCHEMA)
+        processed = read_store_or_empty(s, products_path, _PRODUCT_SCHEMA).select("scene_id")
+        quarantined = read_store_or_empty(s, quarantine_path, _QUAR_SCHEMA)
         todo_rows = _reconcile_arrivals(batch_df, ledger_path, processed, quarantined)
         if todo_rows is None:
             return
@@ -211,8 +196,8 @@ def stream_scene_composite(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        processed = _read_or_empty(s, processed_path, _ID_SCHEMA)
-        quarantined = _read_or_empty(s, quarantine_path, _ID_SCHEMA)
+        processed = read_store_or_empty(s, processed_path, _ID_SCHEMA)
+        quarantined = read_store_or_empty(s, quarantine_path, _ID_SCHEMA)
         todo_rows = _reconcile_arrivals(batch_df, ledger_path, processed, quarantined)
         if todo_rows is None:
             return
@@ -222,7 +207,7 @@ def stream_scene_composite(
         ).persist()
 
         batch_comp = raster.tile_composite(ndvi)
-        existing = _read_or_empty(s, composite_path, raster.NDVI_TILE_SCHEMA)
+        existing = read_store_or_empty(s, composite_path, raster.NDVI_TILE_SCHEMA)
         # merge = one more composite pass over (product ∪ batch) —
         # idempotence makes checkpoint replays a no-op on values.
         merged = raster.tile_composite(existing.unionByName(batch_comp))

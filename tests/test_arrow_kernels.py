@@ -2,8 +2,11 @@
 a kernel receives and how its rows come back, how the batch loop
 bounds its output batches, that every ported kernel plans as an Arrow
 Python node and never a pandas one, and that no pandas kernel is left
-in the package outside Spark's streaming state APIs."""
+in the package outside Spark's streaming state APIs. Also its driver
+side: `local_df` turns Python rows into a relation that plans no job,
+and is the package's one `createDataFrame` call."""
 
+import ast
 import io
 import tokenize
 from collections import Counter
@@ -12,6 +15,7 @@ from pathlib import Path
 import numpy as np
 import pyarrow as pa
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import types as T
 
 import ndvi_etl_pipeline_spark
@@ -25,7 +29,12 @@ from ndvi_etl_pipeline_spark.operators import (
     similarity,
     warp,
 )
-from ndvi_etl_pipeline_spark.operators.arrow_kernels import batch_stream, map_batches, map_groups
+from ndvi_etl_pipeline_spark.operators.arrow_kernels import (
+    batch_stream,
+    local_df,
+    map_batches,
+    map_groups,
+)
 from tools.audit_plans import pandas_python_nodes, plan_as_run
 
 
@@ -273,3 +282,92 @@ def test_no_pandas_kernel_outside_the_state_apis():
         for site in _pandas_sites(path.read_text())
     )
     assert found - _ALLOWED == Counter(), sorted(found - _ALLOWED)
+
+
+def test_local_df_matches_create_dataframe(spark):
+    """`local_df` is a drop-in for `createDataFrame(list, schema)` on
+    the types its callers pass: same schema, same rows, None kept,
+    DDL or StructType schema, Row input, the empty list, arrays
+    (nested too: the ADC tables), binary plus a struct (media), and
+    numpy values — a numpy array cell stays one row, not one per
+    element. The reference rows are the plain-Python form of the
+    input where `createDataFrame` would reject numpy values."""
+    ddl = "s string, i int, b bigint, d double"
+    rows = [("a", 1, 2**40, 0.5), (None, None, None, None), ("c", -3, 7, 1e300)]
+    vec = "cid int, c array<double>"
+    adc = "query_id long, adc_tables array<array<double>>"
+    cases = [
+        (rows, ddl, None),
+        ([Row(s="x", i=4, b=5, d=6.0)], ddl, None),
+        ([], ddl, None),
+        (rows, spark._parse_ddl(ddl), None),
+        ([], spark._parse_ddl(ddl), None),
+        ([(0, [1.0, -2.5]), (1, []), (2, None)], vec, None),
+        ([(0, np.array([1.0, -2.5, 3.0]))], vec, [(0, [1.0, -2.5, 3.0])]),
+        ([(7, [[0.5, 1.5], [], [2.0]]), (8, None)], adc, None),
+        ([], adc, None),
+        (
+            [(np.int32(3), np.int64(2**40), np.float64(0.25), np.float32(1.5))],
+            "i int, b bigint, d double, f double",
+            [(3, 2**40, 0.25, 1.5)],
+        ),
+        (
+            [
+                (1, "image", bytearray(b"\x00\xff"), ("raw", 2, 1, 1, None, None)),
+                (2, "audio", b"", ("pcm16", None, None, 1, 8000, None)),
+                (3, "video", None, None),
+            ],
+            multimodal.MEDIA_SCHEMA,
+            None,
+        ),
+    ]
+    for data, schema, ref_data in cases:
+        got = local_df(spark, data, schema)
+        ref = spark.createDataFrame(data if ref_data is None else ref_data, schema)
+        assert got.schema == ref.schema
+        assert got.collect() == ref.collect(), (data, schema)
+
+
+def test_local_df_projection_runs_no_job(spark, tmp_path):
+    """A `local_df` relation is a LocalTableScan, not a Python RDD:
+    collecting a projection of it launches no Spark job."""
+    df = local_df(spark, [(i, [float(i)] * 3) for i in range(50)], "cid int, c array<double>")
+    sc = spark.sparkContext
+    group = f"local-df-{tmp_path.name}"
+    sc.setJobGroup(group, "collect a local relation")
+    try:
+        got = df.select((df.cid * 2).alias("z"), df.c[1].alias("c1")).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert got == [(2 * i, float(i)) for i in range(50)]
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def _create_dataframe_sites(source: str):
+    """The enclosing top-level function (None at module level) of
+    every `<x>.createDataFrame(...)` call in `source` — calls, so a
+    docstring or comment that names one does not count."""
+    for top in ast.parse(source).body:
+        name = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                yield name
+
+
+def test_create_dataframe_only_in_local_df():
+    """Driver rows become a relation one way: the package calls
+    `createDataFrame` once, inside `arrow_kernels.local_df`, with an
+    Arrow table."""
+    root = Path(ndvi_etl_pipeline_spark.__file__).parent
+    found = Counter(
+        (path.relative_to(root).as_posix(), site)
+        for path in sorted(root.rglob("*.py"))
+        for site in _create_dataframe_sites(path.read_text())
+    )
+    assert found == Counter({("operators/arrow_kernels.py", "local_df"): 1}), sorted(found)

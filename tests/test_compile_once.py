@@ -7,6 +7,7 @@ schema inference (`sources/testdata.load_table` caches each file's
 metadata by its identity). Neither caches data.
 """
 
+import logging
 import os
 from functools import reduce
 
@@ -17,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ndvi_etl_pipeline_spark import session
 from ndvi_etl_pipeline_spark.sources.testdata import load_table
 
 
@@ -54,6 +56,22 @@ def test_warm_plans_reuse_generated_code(spark):
     before = _compiles(spark)
     run_all()
     assert _compiles(spark) - before == 0
+
+
+def test_small_codegen_cache_of_a_given_session_is_reported(spark, monkeypatch, caplog):
+    """`get_spark` hands back an already-active session untouched; when
+    that session's code cache is below the engine's size it logs a
+    warning naming the conf and how to set it. The engine's size is
+    raised here instead of starting a second session with Spark's
+    default."""
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        assert session.get_spark() is spark
+        assert caplog.records == []  # the test session has the engine's size
+        monkeypatch.setattr(session, "CODEGEN_CACHE_ENTRIES", 4 * session.CODEGEN_CACHE_ENTRIES)
+        assert session.get_spark() is spark
+    (rec,) = caplog.records
+    assert "spark.sql.codegen.cache.maxEntries is 1024" in rec.getMessage()
+    assert "spark-submit --conf spark.sql.codegen.cache.maxEntries=4096" in rec.getMessage()
 
 
 def _write(path, table, row_groups=1):

@@ -9,7 +9,7 @@ LongHashedRelation fast path; two long keys force UnsafeHashedRelation
 per row at 60 M rows. The packing must
 never trade that speed for correctness — these tests pin the verified
 fallbacks, the bounded caches behind them, and the driver-side maps
-built as local relations (`_local_df`), which plan no job."""
+built as local relations (`arrow_kernels.local_df`), which plan no job."""
 
 import pyspark.sql.functions as F
 
@@ -327,25 +327,3 @@ def test_dv_read_planning_runs_no_job(spark, tmp_path):
     assert sorted(r.k for r in df.collect()) == [
         k for k in range(60) if k % 2 and k % 3
     ] + list(range(60, 70))
-
-
-def test_local_df_matches_create_dataframe(spark):
-    """`_local_df` is a drop-in for `createDataFrame(list, schema)` on
-    the types its callers pass: same schema, same rows, None kept,
-    Row input, DDL or StructType schema, and the empty list."""
-    from pyspark.sql import Row
-
-    ddl = "s string, i int, b bigint, d double"
-    rows = [("a", 1, 2**40, 0.5), (None, None, None, None), ("c", -3, 7, 1e300)]
-    cases = [
-        (rows, ddl),
-        ([Row(s="x", i=4, b=5, d=6.0)], ddl),
-        ([], ddl),
-        (rows, spark._parse_ddl(ddl)),
-        ([], spark._parse_ddl(ddl)),
-    ]
-    for data, schema in cases:
-        got = L._local_df(spark, data, schema)
-        ref = spark.createDataFrame(data, schema)
-        assert got.schema == ref.schema
-        assert got.collect() == ref.collect()

@@ -20,6 +20,12 @@ driver-side loops at plan-build time), capture the executed plan as
                        this must read zero
 - row_python_nodes   — row-at-a-time BatchEvalPython (MUST be zero:
                        the engine bans non-Arrow Python in plans)
+- build_s, build_jobs — the builder call's wall seconds and the Spark
+                       jobs it ran (one job group around it, counted
+                       with the status tracker): the plan-build census
+
+The summary adds the census totals (build_s_total, build_jobs_total,
+queries_with_build_jobs).
 
 Writes PLANS_AUDIT.json at the repo root and prints a summary. The
 ban on BatchEvalPython is also enforced by
@@ -39,6 +45,7 @@ import argparse
 import json
 import re
 import sys
+import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -212,6 +219,23 @@ def audit_one(df) -> dict:
     }
 
 
+def build_counted(spark, name: str, builder, sf: str):
+    """(builder(spark, sf), its wall seconds, the Spark jobs it ran):
+    one job group around the call, its jobs counted with the status
+    tracker."""
+    sc = spark.sparkContext
+    group = f"audit-build-{name}"
+    sc.setJobGroup(group, f"build {name}")
+    t0 = time.perf_counter()
+    try:
+        df = builder(spark, sf)
+    finally:
+        build_s = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return df, build_s, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -257,7 +281,9 @@ def main() -> int:
             out[name] = {"skipped": "executes driver-side work at build time"}
             continue
         try:
-            out[name] = audit_one(spec.builder(spark, args.sf))
+            df, build_s, build_jobs = build_counted(spark, name, spec.builder, args.sf)
+            out[name] = audit_one(df)
+            out[name].update(build_s=round(build_s, 3), build_jobs=build_jobs)
         except Exception as e:  # noqa: BLE001
             out[name] = {"error": str(e).splitlines()[0][:120]}
             violations.append((name, "plan build failed"))
@@ -284,6 +310,9 @@ def main() -> int:
             v.get("sp_exchanges_nonagg", 0) for v in audited
         ),
         "row_python_violations": [n for n, _ in violations],
+        "build_s_total": round(sum(v["build_s"] for v in audited), 1),
+        "build_jobs_total": sum(v["build_jobs"] for v in audited),
+        "queries_with_build_jobs": sum(1 for v in audited if v["build_jobs"]),
     }
     Path(args.out).write_text(
         json.dumps({"summary": summary, "queries": out}, indent=1, sort_keys=True)
