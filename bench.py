@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from ndvi_etl_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
+from ndvi_etl_pipeline_spark.plans.queries import REGISTRY, headline_queries  # noqa: E402
 from ndvi_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -37,7 +37,7 @@ def main() -> None:
     n_cpus = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
     spark = get_spark(app_name="bench", shuffle_partitions=n_cpus)
 
-    names = [n for n, s in REGISTRY.items() if s.headline]
+    names = list(headline_queries())
     # warm the JVM/codegen/Arrow path with NON-registry plans, so the
     # first headline query's cold time stays genuinely cold
     spark.range(0, 1_000_000, 1, n_cpus).groupBy(

@@ -5,14 +5,12 @@ from .crs import (
     webmercator_to_lonlat,
 )
 from .ndvi import (
-    NODATA,
     clamp,
     evi2,
     ndvi,
     savi,
     scale_reflectance,
     valid_dn_mask,
-    with_nodata_sentinel,
 )
 from .udtfs import ChunkSpans, register_udtfs
 from .scene import (
@@ -28,12 +26,10 @@ __all__ = [
     "webmercator_to_lonlat",
     "evi2",
     "savi",
-    "NODATA",
     "clamp",
     "ndvi",
     "scale_reflectance",
     "valid_dn_mask",
-    "with_nodata_sentinel",
     "ChunkSpans",
     "register_udtfs",
     "exclude_sensors",

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 SCALE = 0.0000275
 OFFSET = -0.2
 EPS = 1e-6
-NODATA = -9999.0
 
 
 def scale_reflectance(dn: Column | str) -> Column:
@@ -70,7 +69,7 @@ def ndvi_from_dn(red_dn: Column | str, nir_dn: Column | str, nodata_dn: float = 
     NULL (not −9999.0) is the in-engine nodata representation — Spark
     aggregates skip NULLs, which reproduces the reference's masked
     mean (load_to_postgis.py:74-79) with a plain `avg`. The sentinel
-    is applied only at export (`with_nodata_sentinel`).
+    is applied only at export (the GeoTIFF writers' `nodata`).
     """
     valid = valid_dn_mask(red_dn, nir_dn, nodata_dn)
     value = clamp(ndvi(scale_reflectance(red_dn), scale_reflectance(nir_dn)))
@@ -102,9 +101,3 @@ def savi(red: Column | str, nir: Column | str, soil_l: float = 0.5) -> Column:
     return (
         F.lit(1.0 + soil_l) * (nir - red) / (nir + red + F.lit(float(soil_l)))
     )
-
-
-def with_nodata_sentinel(x: Column | str, sentinel: float = NODATA) -> Column:
-    """P4 at export time: NULL → −9999.0. compute_ndvi.py:36,68."""
-    x = F.col(x) if isinstance(x, str) else x
-    return F.coalesce(x, F.lit(sentinel))

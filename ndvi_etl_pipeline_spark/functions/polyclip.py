@@ -6,11 +6,11 @@ The reference dissolves AOI features with shapely's `unary_union`
 for intersects tests and clipping. Round 1 covered those USES with
 membership predicates (OR of ray casts, `point_in_any_ring`); this
 module supplies the missing geometry-producing operator so a union is
-a first-class ring set that can be stored (GeoJSON/WKT), buffered,
-re-clipped, or handed to the sargable bbox machinery like any other
-AOI — no shapely in the container, so the clipper is implemented
-directly: Greiner–Hormann (Computing 1998), the standard
-intersection-linked-list polygon clipping algorithm.
+a first-class ring set that can be stored (GeoJSON), re-clipped, or
+handed to the sargable bbox machinery like any other AOI — no shapely
+in the container, so the clipper is implemented directly:
+Greiner–Hormann (Computing 1998), the standard intersection-linked-list
+polygon clipping algorithm.
 
 Scope and contracts:
 - Inputs are simple (non-self-intersecting) rings, open form
@@ -52,12 +52,10 @@ __all__ = [
     "polygon_union",
     "polygon_intersection",
     "polygon_difference",
-    "buffer_polygon",
     "shoelace_area",
     "point_in_ring",
     "rings_area_even_odd",
     "rings_to_geojson",
-    "rings_to_wkt",
 ]
 
 
@@ -387,7 +385,7 @@ def _ring_bbox(ring: Ring) -> tuple[float, float, float, float]:
 # its cavities, membership = even-odd over the flat ring list. Hole
 # regions may themselves be represented even-odd by >1 ring (e.g. an
 # island inside a cavity contributes [hole, island]) — parity handles
-# arbitrary nesting, and _nest_rings regroups for GeoJSON/WKT output.
+# arbitrary nesting, and _nest_rings regroups for GeoJSON output.
 _Component = tuple[Ring, list[Ring]]
 
 
@@ -473,49 +471,6 @@ def union_polygons(polys: list[_Component]) -> list[Ring]:
     return out
 
 
-def _circle_ring(cx: float, cy: float, r: float, segments: int) -> Ring:
-    import math
-
-    return [
-        (cx + r * math.cos(2 * math.pi * k / segments),
-         cy + r * math.sin(2 * math.pi * k / segments))
-        for k in range(segments)
-    ]
-
-
-def buffer_polygon(ring: Ring, dist: float, segments: int = 64) -> list[Ring]:
-    """Positive buffer as GEOMETRY: union of the polygon, one outward/
-    inward-agnostic rectangle per edge (width 2·dist), and one
-    `segments`-gon disk per vertex — the Minkowski sum with a disk,
-    polygonized. The reference's `geom.buffer(1.0)`
-    (compute_ndvi.py:128-132) as a ring set the rest of the engine can
-    clip/store/re-buffer.
-
-    Exactness: edges and containment are exact; only the vertex arcs
-    are chorded — max boundary error r·(1−cos(π/segments)) (≈ 1.2e-3·r
-    at 64 segments). The membership-equivalence test probes outside
-    that band against the exact distance predicate
-    (geo.point_in_buffered_rings_col semantics).
-    """
-    if dist <= 0:
-        raise ValueError("buffer_polygon handles positive distances")
-    pieces: list[Ring] = [list(ring)]
-    n = len(ring)
-    for i in range(n):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % n]
-        dx, dy = x2 - x1, y2 - y1
-        L = (dx * dx + dy * dy) ** 0.5
-        if L == 0:
-            continue
-        nx, ny = -dy / L * dist, dx / L * dist
-        pieces.append(
-            [(x1 + nx, y1 + ny), (x2 + nx, y2 + ny), (x2 - nx, y2 - ny), (x1 - nx, y1 - ny)]
-        )
-        pieces.append(_circle_ring(x1, y1, dist, segments))
-    return union_all(pieces)
-
-
 def _nest_rings(rings: list[Ring]) -> list[tuple[Ring, list[Ring]]]:
     """Group an even-odd ring set into (exterior, [holes]) polygons by
     containment depth: even depth → exterior, odd → hole of its
@@ -565,22 +520,3 @@ def rings_to_geojson(rings: list[Ring]) -> dict:
     if len(coords) == 1:
         return {"type": "Polygon", "coordinates": coords[0]}
     return {"type": "MultiPolygon", "coordinates": coords}
-
-
-def rings_to_wkt(rings: list[Ring]) -> str:
-    """Even-odd ring set → WKT POLYGON/MULTIPOLYGON text."""
-
-    def ring_txt(r: Ring) -> str:
-        # repr() round-trips float64 exactly; '%g' keeps only 6
-        # significant digits (~100 m at lon/lat scale), which would
-        # silently move stored AOI boundaries on re-clip.
-        return "(" + ", ".join(f"{x!r} {y!r}" for x, y in _close(r)) + ")"
-
-    polys = _nest_rings(rings)
-    parts = [
-        "(" + ", ".join([ring_txt(ext)] + [ring_txt(h) for h in holes]) + ")"
-        for ext, holes in polys
-    ]
-    if len(parts) == 1:
-        return "POLYGON " + parts[0]
-    return "MULTIPOLYGON (" + ", ".join(parts) + ")"

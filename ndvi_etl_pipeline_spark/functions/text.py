@@ -24,11 +24,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "zh": ("de", "shi", "le", "bu", "wo", "zai"),
 }
 
-ENGLISH_STOPWORDS = (
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    "for", "on", "with", "as", "at", "by", "be", "this", "that",
-)
-
 
 def tokens(text: Column | str, lowercase: bool = True) -> Column:
     """Whitespace tokenization: split on runs of whitespace."""
@@ -80,11 +75,6 @@ def word_shingles(toks: Column, n: int = 3, distinct: bool = True) -> Column:
     return F.array_distinct(sh) if distinct else sh
 
 
-def char_len(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Fraction of characters that are ASCII punctuation."""
     c = F.col(text) if isinstance(text, str) else text
@@ -92,14 +82,6 @@ def punct_ratio(text: Column | str) -> Column:
     return (F.length(c) - F.length(stripped)).cast("double") / F.greatest(
         F.length(c), F.lit(1)
     ).cast("double")
-
-
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = ENGLISH_STOPWORDS) -> Column:
-    """Fraction of tokens that are stopwords (count-based, not set-based)."""
-    t = tokens(text)
-    sw = F.array(*[F.lit(w) for w in stopwords])
-    n_stop = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
-    return n_stop.cast("double") / F.greatest(F.size(t), F.lit(1)).cast("double")
 
 
 def quality_score(text: Column | str) -> Column:

@@ -4,7 +4,7 @@ from .focal import focal_map_tiled, focal_mean_3x3, sobel_magnitude
 from .graph import bfs_distances, pagerank, triangle_counts
 from .linear import logreg_gd_trajectory
 from .recsys import basket_pairs, item_similarity, rank1_als, user_item_scores
-from .stats import masked_mean, pareto_skyline_2d, run_summary
+from .stats import masked_mean, pareto_skyline_2d
 from .timeseries import first_crossing, temporal_composite
 from .trees import boosted_stumps, gini_splits, variance_splits
 
@@ -25,7 +25,6 @@ __all__ = [
     "user_item_scores",
     "masked_mean",
     "pareto_skyline_2d",
-    "run_summary",
     "first_crossing",
     "temporal_composite",
     "boosted_stumps",

@@ -19,9 +19,9 @@ side of a kernel. Read a tile payload with `as_tile`, never as a
 bytes copy. Scalar column functions (`functions/geo.py`) are
 `arrow_udf`s that read their inputs through `_column` too.
 
-The only pandas left in the package are Spark's streaming state APIs
-(`applyInPandasWithState`, `transformWithStateInPandas` in
-`streaming/events.py`), which have no Arrow form.
+The only pandas left in the package is Spark's streaming state API
+(`applyInPandasWithState` in `streaming/events.py`), which has no
+Arrow form.
 
 The driver side has one entry point too: `local_df` turns a Python
 row list (centroids, query tables, parameter grids) into a relation

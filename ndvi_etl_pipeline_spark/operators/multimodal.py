@@ -105,13 +105,6 @@ def synthesize_media(
     return local_df(spark, rows, MEDIA_SCHEMA)
 
 
-def _raw_image(row) -> np.ndarray:
-    m = row.meta
-    return np.frombuffer(row.payload, dtype=np.uint8).reshape(
-        m["height"], m["width"], m["channels"]
-    )
-
-
 def decode_image(payload: bytes, meta) -> np.ndarray:
     """Decode one image payload to uint8 HWC.
 

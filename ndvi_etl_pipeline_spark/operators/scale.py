@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import shutil
 from pathlib import Path
-from urllib.parse import unquote, urlparse
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -189,86 +189,3 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def explain_str(df: DataFrame) -> str:
-    """Formatted physical plan as a string (for plan assertions)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_cols: tuple[str, ...],
-    target_bytes: int = 128 * 1024 * 1024,
-    min_files_to_compact: int = 2,
-) -> dict[str, tuple[int, int]]:
-    """Small-files compaction for a partitioned parquet lake.
-
-    Streaming/incremental appends (streaming/scenes.py, the
-    foreachBatch upsert sink) leave one file per batch per partition;
-    at 100 TB that turns scans into open-file storms and kills split
-    planning. This rewrites each fragmented partition into
-    ``ceil(partition_bytes / target_bytes)`` files via dynamic
-    partition overwrite — ONLY the fragmented partitions are
-    rewritten, untouched partitions keep their files (same mechanism
-    as the K4 upsert path, so readers never see a partial state on
-    job failure: the overwrite commits per-partition).
-
-    Returns {partition_path: (files_before, files_after)}. File
-    listing is driver-side metadata (the same listing any table
-    format's compaction does); data moves once, through the executors.
-    """
-    root = Path(urlparse(path).path if "://" in path else path)
-    df = spark.read.parquet(str(root))
-
-    # partition dir → current data files
-    part_files: dict[Path, list[Path]] = {}
-    for f in root.rglob("*.parquet"):
-        if f.name.startswith("_"):
-            continue
-        part_files.setdefault(f.parent, []).append(f)
-
-    report: dict[str, tuple[int, int]] = {}
-    todo: list[tuple[Path, int]] = []
-    for d, files in part_files.items():
-        if len(files) < min_files_to_compact:
-            continue
-        nbytes = sum(f.stat().st_size for f in files)
-        n_out = max(1, -(-nbytes // target_bytes))
-        if n_out < len(files):
-            todo.append((d, n_out))
-
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for d, n_out in todo:
-            # partition dir like .../k1=v1/k2=v2 → equality predicates.
-            # Directory values are Hive-ESCAPED (':' → '%3A' etc.) and
-            # NULL partitions appear as __HIVE_DEFAULT_PARTITION__ —
-            # compare against the unescaped value / isNull, or the
-            # filter silently matches zero rows and the fragmented
-            # partition never compacts.
-            preds = dict(
-                seg.split("=", 1) for seg in d.relative_to(root).parts if "=" in seg
-            )
-            part = df
-            for k, v in preds.items():
-                if v == "__HIVE_DEFAULT_PARTITION__":
-                    part = part.filter(F.col(k).isNull())
-                else:
-                    part = part.filter(F.col(k).cast("string") == unquote(v))
-            before = len(part_files[d])
-            (
-                part.repartition(n_out)
-                .write.mode("overwrite")
-                .partitionBy(*partition_cols)
-                .parquet(str(root))
-            )
-            after = len([f for f in d.rglob("*.parquet") if not f.name.startswith("_")])
-            report[str(d)] = (before, after)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-    return report

@@ -25,11 +25,6 @@ def masked_mean(
     return df.groupBy(*keys).agg(F.avg(value_col).alias(out_col))
 
 
-def run_summary(df: DataFrame, status_col: str = "status") -> DataFrame:
-    """A5: success/failure counters (main.py:143-154) as a groupBy-count."""
-    return df.groupBy(status_col).agg(F.count("*").alias("n"))
-
-
 def with_observed_metrics(df: DataFrame, name: str = "run_metrics"):
     """K6 observability the Spark-native way: attach an Observation so
     the NEXT action on the returned DataFrame also yields run metrics

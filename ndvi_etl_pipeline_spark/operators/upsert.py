@@ -57,13 +57,11 @@ def write_upsert(
     partition_cols: tuple[str, ...] = (),
 ) -> None:
     """Sink with partition-scoped overwrite: only partitions present in
-    `df` are replaced (spark.sql.sources.partitionOverwriteMode=dynamic)
-    — the Parquet analog of row-level ON CONFLICT at partition
-    granularity.
+    `df` are replaced (the write's own partitionOverwriteMode=dynamic;
+    the session's mode is left as it is) — the Parquet analog of
+    row-level ON CONFLICT at partition granularity.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    w = df.write.mode("overwrite")
+    w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(path)

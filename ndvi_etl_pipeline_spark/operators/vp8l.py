@@ -294,37 +294,6 @@ def _pack(a, r, g, b) -> np.ndarray:
     )
 
 
-def _avg2(x, y):
-    return (x + y) // 2
-
-
-def _predict(mode: int, left, top, topleft, topright):
-    """The 14 spatial predictors, per channel (inputs int arrays)."""
-    if mode == 0:
-        return np.zeros_like(left)  # handled by caller adding 0xff000000
-    if mode == 1:
-        return left
-    if mode == 2:
-        return top
-    if mode == 3:
-        return topright
-    if mode == 4:
-        return topleft
-    if mode == 5:
-        return _avg2(_avg2(left, topright), top)
-    if mode == 6:
-        return _avg2(left, topleft)
-    if mode == 7:
-        return _avg2(left, top)
-    if mode == 8:
-        return _avg2(topleft, top)
-    if mode == 9:
-        return _avg2(top, topright)
-    if mode == 10:
-        return _avg2(_avg2(left, topleft), _avg2(top, topright))
-    raise ValueError(f"non-vectorizable predictor {mode}")
-
-
 def _inverse_predictor(img: np.ndarray, pred_img: np.ndarray, size_bits: int):
     """Inverse predictor transform IN PLACE on packed ARGB (uint32).
     Scalar per-pixel (prediction is causally sequential); block modes

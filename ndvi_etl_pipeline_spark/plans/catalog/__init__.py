@@ -31,7 +31,6 @@ from ._shared import (  # noqa: F401
     REGISTRY,
     QuerySpec,
     canon_round,
-    canon_round_sql,
     headline_queries,
     oracle_sql,
     queries,

@@ -66,7 +66,7 @@ def _t(
 # must canonicalize the sign on BOTH sides. IEEE: x + 0.0 == x for every
 # finite x except that -0.0 + 0.0 = +0.0, so adding +0.0 is an exact
 # no-op everywhere but the one cell we need to fix (NaN stays NaN).
-# Use canon_round / canon_round_sql in matched pairs.
+# Pair canon_round with `(round(<expr>, <scale>) + 0.0)` in the oracle.
 
 
 def canon_round(col, scale: int) -> "F.Column":
@@ -83,10 +83,6 @@ def seq1(stop) -> "F.Column":
     return F.when(stop >= 1, F.sequence(F.lit(1), stop)).otherwise(
         F.array().cast("array<int>")
     )
-
-
-def canon_round_sql(expr: str, scale: int) -> str:
-    return f"(round({expr}, {scale}) + 0.0)"
 
 
 # Two-sided normal p-value from a z score — p = erfc(|z|/√2);
@@ -1050,7 +1046,6 @@ __all__ = [
     "register",
     "_t",
     "canon_round",
-    "canon_round_sql",
     "seq1",
     "_ERFC_C",
     "_ERFC_CF_DEPTH",

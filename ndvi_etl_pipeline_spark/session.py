@@ -29,6 +29,12 @@ down for local testing:
   ``__spark_entry__.entry(spark)``, or an already-active session that
   ``get_spark`` returns untouched — keeps whatever cache size it was
   started with (``get_spark`` warns when that is below ours).
+- Driver heap: ``SPARK_DRIVER_MEM`` when set, else half the host's
+  physical memory, capped at 16g. In local mode the driver JVM runs
+  every task beside the Python workers, so a heap larger than the host
+  invites the kernel's OOM killer, not a JVM error. On a cluster, pass
+  the driver's size explicitly (``spark-submit --driver-memory``, or
+  ``SPARK_DRIVER_MEM``).
 """
 
 from __future__ import annotations
@@ -38,12 +44,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 # spark.sql.codegen.cache.maxEntries: about 4x the larger benchmark
 # working set (module docstring)
 CODEGEN_CACHE_ENTRIES = 1024
 _CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+_DRIVER_MEMORY_CAP_GB = 16
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB (at least 1g),
+    capped at 16g: the driver heap `get_spark` asks for when
+    ``SPARK_DRIVER_MEM`` is unset."""
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(_DRIVER_MEMORY_CAP_GB, int(host_gb // 2)))}g"
 
 
 def get_spark(
@@ -126,7 +141,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()))
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -134,9 +149,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

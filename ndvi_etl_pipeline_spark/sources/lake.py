@@ -531,11 +531,6 @@ _CKPT_CACHE: dict = {}
 _SNAP_CACHE_MAX = 64
 
 
-def _clear_caches() -> None:
-    _SNAP_CACHE.clear()
-    _CKPT_CACHE.clear()
-
-
 def _rec_sig(path: str, version: int):
     try:
         st = os.stat(os.path.join(_manifest_dir(path), f"v{version}.json"))

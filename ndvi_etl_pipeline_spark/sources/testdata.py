@@ -125,15 +125,3 @@ def load_table(
         elif isinstance(f.dataType, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str | None = None, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for n in TABLES:
-        load_table(spark, n, sf_dir).createOrReplaceTempView(n)

@@ -241,74 +241,6 @@ def stream_static_enrich(
     )
 
 
-def tws_sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """The sessionizer on the transformWithState surface (Spark 4's
-    successor to applyInPandasWithState): explicit StatefulProcessor
-    lifecycle with named, schema-typed state slots instead of one
-    opaque GroupState tuple. Same session-merge kernel
-    (merge_session_chunk), same output contract as
-    stateful_sessionize — the two surfaces are agreement-tested
-    against each other.
-
-    Requires the RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass=
-    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider)
-    — which is also the provider you'd run at scale: state lives
-    off-heap/on-disk per partition, so active-user cardinality is
-    bounded by executor disk, not memory.
-
-    Also requires `protobuf` (the TWS state-server wire protocol is
-    proto-based); environments without it should use the
-    applyInPandasWithState twin, which speaks the legacy protocol."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package; "
-            "use stateful_sessionize (applyInPandasWithState) instead"
-        ) from exc
-    import pandas as pd  # this state API's frame type, kept as the applyInPandasWithState twin
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState("open_session", SESSION_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = tuple(self._open.get()) if self._open.exists() else None
-            ts: list[int] = []
-            for pdf in rows:
-                ts.extend((pdf["ts"].astype("int64") // 1000).tolist())
-            ts.sort()
-            closed, cur = merge_session_chunk(ts, prev, gap_us)
-            if cur is not None:
-                self._open.update(cur)
-            out = closed + ([cur] if cur is not None else [])
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "session_start": pd.to_datetime([r[0] for r in out], unit="us"),
-                    "session_end": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "n_events": [r[2] for r in out],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=SESSION_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def countmin_counters(events: "DataFrame", width: int = 512) -> "DataFrame":
     """Streaming count-min sketch over user ids: the depth-4 counter
     table as an unwindowed streaming aggregation on (row, col).
@@ -341,24 +273,26 @@ def run_stream_with_upsert_sink(
     keys: tuple[str, ...],
     query_name: str = "t_upsert",
 ) -> DataFrame:
-    """foreachBatch sink: each micro-batch MERGEs into a parquet
-    product table via the K4 last-write-wins idiom
-    (operators/upsert.py) — the streaming twin of write_upsert. Used
-    for continuously-maintained product tables (scene stats, hourly
-    rollups) where append-only would accumulate superseded rows."""
-    import os
-
+    """foreachBatch sink: each micro-batch MERGEs into a lake product
+    table via the K4 last-write-wins idiom (operators/upsert.py) — the
+    streaming twin of write_upsert. Used for continuously-maintained
+    product tables (scene stats, hourly rollups) where append-only
+    would accumulate superseded rows. Read the product with
+    `lake_read` (the returned DataFrame is one)."""
     from ..operators.upsert import upsert_replace
+    from ..sources.lake import lake_latest_version, lake_read, lake_vacuum, lake_write
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.isdir(out_path):
-            existing = spark.read.parquet(out_path)
-            merged = upsert_replace(existing, batch_df, keys)
+        if lake_latest_version(out_path) is not None:
+            merged = upsert_replace(lake_read(spark, out_path), batch_df, keys)
         else:
             merged = batch_df
-        # localCheckpoint breaks the lineage onto the old files before
-        # the overwrite invalidates them
-        merged.localCheckpoint().write.mode("overwrite").parquet(out_path)
+        # one atomic commit: the previous version's files stay live
+        # until the new ones are written, so a failed write leaves the
+        # last product readable. Vacuum then drops the superseded files
+        # at once: this stream is the table's only writer.
+        lake_write(merged, out_path, mode="overwrite")
+        lake_vacuum(out_path, retention_seconds=0)
 
     events = _stream_events(spark, parquet_path)
     # update mode: every changed window reaches the sink each batch and
@@ -375,7 +309,7 @@ def run_stream_with_upsert_sink(
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.read.parquet(out_path)
+    return lake_read(spark, out_path)
 
 
 def run_stream_over_parquet(

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import raster
+from ..sources.lake import lake_latest_version, lake_read, lake_vacuum, lake_write
 from . import read_store_or_empty
 
 __all__ = ["stream_scene_stats", "stream_scene_composite"]
@@ -176,7 +177,7 @@ def stream_scene_composite(
 ):
     """Incrementally-maintained greenest-pixel composite: as scenes
     land, each batch's NDVI tiles are max-merged into a running
-    composite product at `<work_dir>/composite`.
+    composite product, the lake table at `<work_dir>/composite`.
 
     Correctness rests on the merge's algebra (raster.tile_composite:
     associative + commutative + idempotent), so
@@ -207,13 +208,20 @@ def stream_scene_composite(
         ).persist()
 
         batch_comp = raster.tile_composite(ndvi)
-        existing = read_store_or_empty(s, composite_path, raster.NDVI_TILE_SCHEMA)
-        # merge = one more composite pass over (product ∪ batch) —
-        # idempotence makes checkpoint replays a no-op on values.
-        merged = raster.tile_composite(existing.unionByName(batch_comp))
-        # localCheckpoint breaks lineage off the files the overwrite
-        # is about to invalidate (same pattern as the events upsert sink)
-        merged.localCheckpoint().write.mode("overwrite").parquet(composite_path)
+        if lake_latest_version(composite_path) is not None:
+            # merge = one more composite pass over (product ∪ batch) —
+            # idempotence makes checkpoint replays a no-op on values.
+            merged = raster.tile_composite(
+                lake_read(s, composite_path).unionByName(batch_comp)
+            )
+        else:
+            merged = batch_comp
+        # one atomic commit: the previous composite stays live until the
+        # new files are written, so a failed write leaves it readable.
+        # Vacuum then drops the superseded files at once: this stream is
+        # the table's only writer (same pattern as the events upsert sink).
+        lake_write(merged, composite_path, mode="overwrite")
+        lake_vacuum(composite_path, retention_seconds=0)
 
         ok = ndvi.select("scene_id").distinct()
         ok.write.mode("append").parquet(processed_path)

@@ -2,7 +2,7 @@
 a kernel receives and how its rows come back, how the batch loop
 bounds its output batches, that every ported kernel plans as an Arrow
 Python node and never a pandas one, and that no pandas kernel is left
-in the package outside Spark's streaming state APIs. Also its driver
+in the package outside Spark's streaming state API. Also its driver
 side: `local_df` turns Python rows into a relation that plans no job,
 and is the package's one `createDataFrame` call."""
 
@@ -258,8 +258,8 @@ def test_st_contains_udf_reads_ring_lists(spark):
 
 # the pandas kernel surfaces: a NAME token, or `import pandas` / `from pandas`
 _PANDAS_NAMES = {"mapInPandas", "applyInPandas", "pandas_udf"}
-# Spark's streaming state APIs speak pandas frames and have no Arrow form
-_ALLOWED = Counter({("streaming/events.py", "import pandas"): 2})
+# Spark's streaming state API speaks pandas frames and has no Arrow form
+_ALLOWED = Counter({("streaming/events.py", "import pandas"): 1})
 
 
 def _pandas_sites(source: str):

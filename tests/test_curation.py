@@ -113,7 +113,7 @@ def test_assign_contiguous_ids_dense_and_distributed(spark, sf_dir):
     """Ids must be exactly 0..N-1 in key order, and the plan must NOT
     funnel through a single-partition global sort (the whole point)."""
     from ndvi_etl_pipeline_spark.operators.curation import assign_contiguous_ids
-    from ndvi_etl_pipeline_spark.operators.scale import explain_str
+    from tools.audit_plans import explain_str
     from ndvi_etl_pipeline_spark.sources.testdata import load_table
 
     d = load_table(spark, "documents", sf_dir).select("doc_id")

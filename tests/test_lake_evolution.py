@@ -239,7 +239,8 @@ def test_checkpoint_roundtrips_mapping_tables(spark, tmp_path):
         lake_write(
             _df(spark, [(i + 10, f"x{i}")], "k int, label string").coalesce(1), t
         )
-    L._clear_caches()
+    L._SNAP_CACHE.clear()
+    L._CKPT_CACHE.clear()
     v = L._latest_version(t)
     m = L._read_manifest(t, v)
     assert m["column_mapping"]["cols"][1]["name"] == "label"

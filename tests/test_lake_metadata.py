@@ -40,6 +40,13 @@ def _df(spark, rows, schema="k int, v string"):
     return spark.createDataFrame(rows, schema)
 
 
+def _clear_caches():
+    """Drop the lake's snapshot reconstruction caches, so the next read
+    replays the log from disk."""
+    L._SNAP_CACHE.clear()
+    L._CKPT_CACHE.clear()
+
+
 def _mdir(t):
     return os.path.join(t, "_manifests")
 
@@ -76,7 +83,7 @@ def test_checkpoint_written_and_replay_bounded(spark, tmp_path):
     assert L.LAKE_CHECKPOINT_INTERVAL in ck
     assert 2 * L.LAKE_CHECKPOINT_INTERVAL in ck
     # cold reconstruction: count how many delta segments it touches
-    L._clear_caches()
+    _clear_caches()
     calls = []
     orig = L._read_delta
 
@@ -102,7 +109,7 @@ def test_time_travel_across_checkpoint_boundary(spark, tmp_path):
     n = L.LAKE_CHECKPOINT_INTERVAL + 4
     for i in range(n):
         lake_write(_df(spark, [(i, f"r{i}")]).coalesce(1), t)
-    L._clear_caches()
+    _clear_caches()
     for v in (0, 3, L.LAKE_CHECKPOINT_INTERVAL - 1, L.LAKE_CHECKPOINT_INTERVAL,
               L.LAKE_CHECKPOINT_INTERVAL + 1, n - 1):
         got = sorted(
@@ -126,17 +133,17 @@ def test_checkpoint_preserves_entry_fidelity(spark, tmp_path):
             bloom_cols=("key",),
         )
     v = L.LAKE_CHECKPOINT_INTERVAL
-    L._clear_caches()
+    _clear_caches()
     via_ckpt = L._read_manifest(t, v)["files"]
     # force pure replay by hiding the checkpoint pointer
     lc = L._last_ckpt_file(t)
     os.rename(lc, lc + ".hidden")
-    L._clear_caches()
+    _clear_caches()
     try:
         via_replay = L._read_manifest(t, v)["files"]
     finally:
         os.rename(lc + ".hidden", lc)
-        L._clear_caches()
+        _clear_caches()
     assert via_ckpt == via_replay
 
 
@@ -244,7 +251,7 @@ def test_vacuum_fast_path_is_log_diff_no_walk(spark, tmp_path, monkeypatch):
     assert len(deleted) == 6  # exactly the pre-compaction files
     assert not (set(deleted) & before)
     # kept snapshot reconstructs from the vacuum-written checkpoint
-    L._clear_caches()
+    _clear_caches()
     assert lake_read(spark, t).count() == 6
     assert lake_history(t)[0]["version"] == L._latest_version(t)
 
@@ -271,7 +278,7 @@ def test_vacuum_concurrent_append_within_retention_survives(spark, tmp_path):
         lake_vacuum(t, keep_last=1, retention_seconds=3600)
     finally:
         L._read_delta = orig
-    L._clear_caches()
+    _clear_caches()
     got = sorted(r.k for r in lake_read(spark, t).collect())
     assert 100 in got  # the raced append's rows survived
 
@@ -303,7 +310,7 @@ def test_history_reads_raw_segments_only(spark, tmp_path, monkeypatch):
         raise AssertionError("lake_history reconstructed a snapshot")
 
     monkeypatch.setattr(L, "_files_at", boom)
-    L._clear_caches()
+    _clear_caches()
     h = lake_history(t)
     assert [e["version"] for e in h] == list(range(5))
     assert [e["n_files"] for e in h] == [1, 2, 3, 4, 5]
@@ -322,7 +329,7 @@ def test_forced_checkpoint_and_stale_pointer_recovery(spark, tmp_path):
     assert os.path.exists(L._ckpt_file(t, 3))
     with open(L._last_ckpt_file(t), "w") as fh:
         fh.write("{corrupt")
-    L._clear_caches()
+    _clear_caches()
     assert lake_read(spark, t).count() == 5
     assert L._latest_version(t) == 4
 
@@ -358,7 +365,7 @@ def test_200_commit_metadata_scale(spark, tmp_path, nfiles, monkeypatch):
     assert max(sizes) < 2048 * nfiles  # never O(table)
     assert sizes[-1] <= sizes[0] * 2 + 256
     assert len(L._ckpt_versions(t)) >= 200 // L.LAKE_CHECKPOINT_INTERVAL
-    L._clear_caches()
+    _clear_caches()
     calls = []
     orig = L._read_delta
 

@@ -12,7 +12,7 @@ from ndvi_etl_pipeline_spark.operators.dedup import (
 )
 from ndvi_etl_pipeline_spark.operators.overviews import overview_cascade
 from ndvi_etl_pipeline_spark.operators.similarity import brute_force_topk, cosine
-from ndvi_etl_pipeline_spark.operators.upsert import upsert_ignore, upsert_replace
+from ndvi_etl_pipeline_spark.operators.upsert import upsert_ignore, upsert_replace, write_upsert
 
 
 def test_asof_join_semantics(spark):
@@ -131,6 +131,21 @@ def test_upsert_ignore_and_replace(spark):
     assert ign == {1: 10, 2: 20, 3: 30}
     rep = {r.id: r.v for r in upsert_replace(existing, incoming, keys=("id",)).collect()}
     assert rep == {1: 10, 2: 99, 3: 30}
+
+
+def test_write_upsert_replaces_its_partitions_and_leaves_the_session_conf(spark, tmp_path):
+    """Only the partitions the write carries are replaced, and the
+    session's partitionOverwriteMode is what it was before: a later
+    partitioned overwrite in the same session keeps its own meaning."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
+    out = str(tmp_path / "t")
+    rows = "id int, part string"
+    write_upsert(spark.createDataFrame([(1, "a"), (2, "b")], rows), out, ("part",))
+    write_upsert(spark.createDataFrame([(3, "b")], rows), out, ("part",))
+    got = {(r.id, r.part) for r in spark.read.parquet(out).collect()}
+    assert got == {(1, "a"), (3, "b")}
+    assert spark.conf.get(conf) == before
 
 
 def test_approx_distinct_within_tolerance(spark, sf_dir_oracle):

@@ -5,13 +5,12 @@ import pyspark.sql.functions as F
 import pytest
 
 from ndvi_etl_pipeline_spark.operators.scale import (
-    explain_str,
     read_table,
     salted_join,
     write_bucketed,
 )
 from ndvi_etl_pipeline_spark.sources.testdata import load_table
-from tools.audit_plans import _sp_exchanges_nonagg, plan_as_run
+from tools.audit_plans import _sp_exchanges_nonagg, explain_str, plan_as_run
 
 
 @pytest.fixture()
@@ -209,32 +208,6 @@ def test_tile_clip_plan_prunes_before_python(spark, tmp_path):
     assert any("Condition" in ln and "x0" in ln for ln in plan.splitlines())
     # map-side partial aggregation of the per-tile sums
     assert "partial_sum(n_in_aoi" in plan
-
-
-def test_compact_partitions_reduces_files_keeps_data(spark, sf_dir, tmp_path):
-    """Compaction must shrink fragmented partitions to the computed
-    file count, leave healthy partitions untouched, and preserve the
-    data exactly."""
-    from ndvi_etl_pipeline_spark.operators.scale import compact_partitions
-
-    e = load_table(spark, "events", sf_dir).select("event_id", "user_id", "event_type")
-    lake = str(tmp_path / "lake")
-    # simulate many tiny incremental appends
-    e.repartition(16).write.partitionBy("event_type").parquet(lake)
-
-    before = e.groupBy("event_type").count().collect()
-    report = compact_partitions(
-        spark, lake, ("event_type",), target_bytes=1 << 30
-    )
-    assert report, "fragmented partitions should have been compacted"
-    for part, (n_before, n_after) in report.items():
-        assert n_after == 1 and n_before > 1, part
-
-    back = spark.read.parquet(lake)
-    assert {tuple(r) for r in back.groupBy("event_type").count().collect()} == {
-        tuple(r) for r in before
-    }
-    assert back.select(F.sum("event_id")).first()[0] == e.select(F.sum("event_id")).first()[0]
 
 
 def test_parquet_scan_pushes_filters_and_prunes_columns(spark, sf_dir):

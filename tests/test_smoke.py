@@ -5,6 +5,16 @@ def test_session_up(spark):
     assert spark.range(10).count() == 10
 
 
+def test_default_driver_heap_fits_the_host():
+    import os
+
+    from ndvi_etl_pipeline_spark.session import _default_driver_memory
+
+    gb = int(_default_driver_memory().removesuffix("g"))
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 1 <= gb <= 16 and gb * 2**30 <= max(host, 2**30)
+
+
 def test_all_tables_readable(spark, sf_dir):
     for name in TABLES:
         df = load_table(spark, name, sf_dir)

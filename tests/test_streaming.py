@@ -3,12 +3,14 @@ stateful sessionization, sliding windows, and the foreachBatch
 upsert sink."""
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Window
 
 from ndvi_etl_pipeline_spark.plans.queries import (
     q_events_hourly_rollup,
     q_events_sessionize,
 )
+from ndvi_etl_pipeline_spark.sources.lake import lake_read
 from ndvi_etl_pipeline_spark.streaming.events import (
     click_purchase_join,
     dedup_within_watermark,
@@ -111,6 +113,37 @@ def test_foreachbatch_upsert_sink(spark, sf_dir, tmp_path):
         batch, ["window_start", "event_type"], "full_outer"
     )
     assert j.filter(F.col("n_s") != F.col("n")).count() == 0
+
+
+def test_failed_upsert_write_keeps_the_previous_product(spark, sf_dir, tmp_path):
+    """A micro-batch whose write fails leaves the product the batch
+    before it committed intact and readable: the sink replaces the
+    table in one commit, it does not clear it first. The injected
+    fault: the parquet output committer is an abstract class, so the
+    write job fails when it sets up its committer."""
+    out, keys = str(tmp_path / "rollup"), ("window_start", "event_type")
+    events = f"{sf_dir}/events.parquet"
+    first = sorted(
+        run_stream_with_upsert_sink(
+            spark, events, hourly_rollup, out, keys=keys, query_name="t_first"
+        ).collect()
+    )
+    conf = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(conf, "org.apache.hadoop.mapreduce.OutputCommitter")
+    try:
+        with pytest.raises(Exception, match="InstantiationException"):
+            run_stream_with_upsert_sink(
+                spark, events, hourly_rollup, out, keys=keys, query_name="t_failed"
+            )
+    finally:
+        spark.conf.unset(conf)
+    # read the product back through the sink: a run whose batch carries
+    # no rows rewrites the stored product unchanged and returns it
+    after = run_stream_with_upsert_sink(
+        spark, events, lambda e: hourly_rollup(e.filter(F.lit(False))), out,
+        keys=keys, query_name="t_after",
+    )
+    assert first and sorted(after.collect()) == first
 
 
 def test_session_windows_run(spark, sf_dir):
@@ -342,7 +375,7 @@ def test_stream_composite_equals_batch_composite(spark, tmp_path):
     stream_scene_composite(spark, str(in_dir), str(tmp_path / "work"))
 
     got = raster.tiles_to_pixels(
-        spark.read.parquet(str(tmp_path / "work" / "composite")), "v"
+        lake_read(spark, str(tmp_path / "work" / "composite")), "v"
     )
     want = raster.tiles_to_pixels(
         raster.tile_composite(raster.scan_scene_ndvi(spark, str(in_dir))), "v"
@@ -350,71 +383,6 @@ def test_stream_composite_equals_batch_composite(spark, tmp_path):
     g = {(r.y, r.x): r.v for r in got.collect()}
     w = {(r.y, r.x): r.v for r in want.collect()}
     assert g == w and len(g) > 0
-
-
-def test_tws_sessionize_matches_applyinpandas_twin(spark, sf_dir):
-    """transformWithState and applyInPandasWithState run the same
-    session-merge kernel — their final session inventories must agree
-    exactly. RocksDB provider is required by transformWithState (and
-    is the at-scale choice anyway); restored after the run. Skipped
-    where protobuf (the TWS wire protocol) isn't installed — the
-    operator itself refuses cleanly there."""
-    import pytest
-
-    from ndvi_etl_pipeline_spark.streaming.events import tws_sessionize
-
-    pytest.importorskip("google.protobuf")
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_stream_over_parquet(
-            spark, f"{sf_dir}/events.parquet", tws_sessionize,
-            query_name="t_tws", output_mode="update",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    twin = run_stream_over_parquet(
-        spark, f"{sf_dir}/events.parquet", stateful_sessionize,
-        query_name="t_tws_twin", output_mode="update",
-    )
-
-    def finalize(df):
-        w = F.row_number().over(
-            Window.partitionBy("user_id", "session_start").orderBy(
-                F.col("session_end").desc()
-            )
-        )
-        return df.withColumn("rn", w).filter("rn = 1").drop("rn")
-
-    a, b = finalize(out), finalize(twin)
-    assert a.count() > 0
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_tws_sessionize_gates_on_missing_protobuf(spark, sf_dir):
-    """Without protobuf the operator must refuse with a clear pointer
-    to the applyInPandasWithState twin, not crash mid-query."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf installed; gate not exercisable here")
-    except ImportError:
-        pass
-    from ndvi_etl_pipeline_spark.streaming.events import tws_sessionize
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    with pytest.raises(ImportError, match="protobuf"):
-        tws_sessionize(events)
 
 
 def test_stream_static_enrich_matches_batch(spark, sf_dir):

@@ -59,7 +59,7 @@ def test_timeseries_plans_are_pure_agg(spark, sf_dir):
     """Plan-shape regression: the composite is a pure hash-agg cascade
     (3 exchanges: pairing, composite cells, year summary) and neither
     query plans any Python evaluation node."""
-    from ndvi_etl_pipeline_spark.operators.scale import explain_str
+    from tools.audit_plans import explain_str
     from ndvi_etl_pipeline_spark.plans.queries import REGISTRY
 
     comp_plan = explain_str(REGISTRY["ndvi_annual_composite"].builder(spark, sf_dir))

@@ -109,6 +109,13 @@ def plan_as_run(df) -> str:
     return "\n".join(lines)
 
 
+def explain_str(df) -> str:
+    """Spark's formatted physical plan as a string: the operator tree
+    plus each operator's details (PushedFilters, ReadSchema, Condition),
+    for plan assertions that read those details."""
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
 def _bracket_groups(s: str) -> list[str]:
     """Top-level [...] groups of a plan line tail (expr groups nest)."""
     groups: list[str] = []
